@@ -14,6 +14,17 @@ Writes, under one directory:
 
 The same seed gives byte-identical files. `generate` returns the shares it
 realised, which run.py prints.
+
+What the sizes and shares rest on. A history file holds 5000 events, the
+file size of the history prototype the benchmark was specified from
+(120k events in 24 files), so micro-batches are that prototype's size; there
+are 4 files, not 24, to fit the run budget. FIXTURES.md (A2) names the edge
+rows each input must hold (null titles, the default description, reply
+chains at least 3 deep, missing titleUrl, exact duplicates) but not how
+often they occur, and neither yark nor the repository records real shares.
+The catalog size and every share below are therefore illustrative: small
+enough that each edge case occurs many times in every run, and not a model
+of any real archive.
 """
 import json
 import os
@@ -33,7 +44,7 @@ NEW = 40              # first seen in the re-archive pass
 CHANNELS = 40
 USERS = 300
 HISTORY_FILES = 4
-EVENTS_PER_FILE = 2000
+EVENTS_PER_FILE = 5000  # the prototype's 120k events / 24 files
 UNARCHIVE = 24
 EPOCH = datetime(2024, 3, 1, tzinfo=timezone.utc)
 

@@ -15,16 +15,16 @@ metric is printed as `metric <name> <value> <unit>`, then the last line is
 one JSON object: {"correct", "attempted", "failed", "metrics"}. The exit
 code is 1 when any output was wrong.
 
---validate compares every read query's result with its DuckDB oracle SQL
-over the benchmark data and, if all agree, records the result fingerprints
-that every read run is checked against (perfbench/fingerprints.json).
+--validate runs graft.Verify and tools/check.py (the repository's oracle
+gate) over the benchmark data for every read query and, if all agree with
+their DuckDB oracle SQL, records the result fingerprints that every read
+run is checked against (perfbench/fingerprints.json).
 
 See perfbench/NOTES.md for what each workload and metric is for.
 """
 import argparse
 import hashlib
 import json
-import math
 import os
 import shutil
 import signal
@@ -189,49 +189,45 @@ def check_fingerprints(res):
     return checked, wrong, msgs
 
 
-def _norm(v):
-    if v is None:
-        return (0, "")
-    if isinstance(v, float) and math.isnan(v):
-        return (1, "NaN")
-    return (1, v)
-
-
 def validate(cp):
-    import duckdb
+    """Re-derives fingerprints.json with the repository's own oracle gate:
+    graft.Verify dumps every read query's result over the benchmark data,
+    tools/check.py compares each dump with its DuckDB oracle SQL, and the
+    harness fingerprints each query and its verified dump. The prints are
+    recorded only if every comparison agrees."""
     work = os.path.join(BUILD, "work", "validate")
+    dump = os.path.join(work, "verify")
     shutil.rmtree(work, ignore_errors=True)
-    res, _ = launch(cp, "validate", 0, 0, False, work)
-    out = os.path.join(work, "validate")
-    oracle = json.load(open(os.path.join(out, "oracle_sql.json")))
+    os.makedirs(os.path.join(work, "tmp"))
+    try:
+        names = launch(cp, "names", 0, 0, False, work)[0]["names"]
+        env = dict(os.environ, SPARK_GRAFT_ONLY=",".join(names),
+                   SPARK_GRAFT_CPUS=str(os.cpu_count()))
+        subprocess.run(["java", *ADD_OPENS, f"-Xmx{HEAP}",
+                        f"-Djava.io.tmpdir={work}/tmp", "-cp", cp,
+                        "graft.Verify", DATA, dump],
+                       cwd=work, env=env, check=True, timeout=600,
+                       stdout=subprocess.DEVNULL, stderr=subprocess.DEVNULL)
+        # Verify writes the oracle SQL of the whole registry; check.py is
+        # to compare the benchmark's queries, every one of them
+        path = os.path.join(dump, "oracle_sql.json")
+        oracle = json.load(open(path))
+        if any(oracle.get(n) is None for n in names):
+            fail(f"no oracle SQL for {[n for n in names if oracle.get(n) is None]}")
+        with open(path, "w") as f:
+            json.dump({n: oracle[n] for n in names}, f)
+        check = subprocess.run(
+            [sys.executable, os.path.join(ROOT, "tools", "check.py"), DATA,
+             dump, "--no-verify"], timeout=600)
+        if check.returncode != 0:
+            fail("tools/check.py: results differ from the oracle")
+        res, _ = launch(cp, "validate", 0, 0, False, work)
+    finally:
+        shutil.rmtree(work, ignore_errors=True)
     prints = json.loads(res["notes"]["fingerprints"])
-    con = duckdb.connect()
-    for t in TABLES:
-        con.execute(f"CREATE VIEW {t} AS SELECT * FROM '{DATA}/{t}.parquet'")
-    bad = list(res["errors"])
-    for name, sql in sorted(oracle.items()):
-        if sql is None:
-            bad.append(f"{name}: no oracle SQL")
-            continue
-        exp = con.execute(sql)
-        ecols = [d[0] for d in exp.description]
-        erows = exp.fetchall()
-        got = con.execute(f"SELECT * FROM '{out}/{name}/*.parquet'")
-        gcols = [d[0] for d in got.description]
-        grows = got.fetchall()
-        if sorted(ecols) != sorted(gcols):
-            bad.append(f"{name}: columns {sorted(gcols)} != oracle {sorted(ecols)}")
-            continue
-        e = sorted(tuple(_norm(r[ecols.index(c)]) for c in sorted(ecols)) for r in erows)
-        g = sorted(tuple(_norm(r[gcols.index(c)]) for c in sorted(gcols)) for r in grows)
-        if e != g:
-            bad.append(f"{name}: {len(g)} rows differ from the oracle's {len(e)}")
-        else:
-            print(f"ok   {name} ({len(e)} rows) fingerprint {prints.get(name)}")
-    shutil.rmtree(work, ignore_errors=True)
-    if bad:
-        print("\n".join("FAIL " + b for b in bad))
-        sys.exit(1)
+    if res["errors"] or sorted(prints) != sorted(names):
+        fail("harness fingerprints disagree with the verified dumps: "
+             + "; ".join(res["errors"]))
     with open(FINGERPRINTS, "w") as f:
         json.dump({"data": _data_digest(), "queries": prints}, f, indent=1,
                   sort_keys=True)

@@ -84,6 +84,15 @@ object Ingest {
       t -> JdbcUpsertSink(url, t, keys) }.toMap
   }
 
+  /** Wall times of one cycle's phases, and its micro-batches' durations. */
+  final case class Times(catalogS: Double, historyS: Double, cascadeS: Double,
+      batchMs: Seq[Double], progressEvents: Int) {
+    def cycleS: Double = catalogS + historyS + cascadeS
+  }
+
+  /** Rows the merge sinks gained or changed, and rows they were handed. */
+  final class Useful { var changed, staged = 0L }
+
   def run(spark: SparkSession, o: Opts, res: Result): Unit = {
     Reads.warmUp(spark, o, res)
     val in = s"${o.work}/inputs"
@@ -95,19 +104,11 @@ object Ingest {
       sc.addSparkListener(counters)
       spark.streams.addListener(stream)
     }
-    val ryd = spark.createDataFrame(sc.emptyRDD[Row], Schemas.ryd)
-    val histFiles = Files.list(Paths.get(s"$in/history")).iterator().asScala
-      .map(_.toString).toSeq.sorted
-    val histRows = histFiles.map(f => Files.readAllLines(Paths.get(f)).size).sum
-    val unarchiveIds = Files.readAllLines(Paths.get(s"$in/unarchive.txt"))
-      .asScala.map(_.trim).filter(_.nonEmpty).toSeq
+    val inputs = Inputs(in, spark.createDataFrame(sc.emptyRDD[Row], Schemas.ryd))
 
-    val cycleS, catalogS, historyS, cascadeS = mutable.ArrayBuffer[Double]()
-    val batchMs = mutable.ArrayBuffer[Seq[Double]]()
-    val tracedCycles = mutable.ArrayBuffer[(Int, Double)]()
-    val liveAfter = mutable.ArrayBuffer[Double]()
-    val useful = Array(0L, 0L) // rows gained or changed, rows staged
-    var tracedBatches = 0
+    val untraced = mutable.ArrayBuffer[Times]()
+    val tracedCycles = mutable.ArrayBuffer[(Int, Times)]()
+    val liveAfter = mutable.Map[Int, Double]()
     var last: Cycle = null
     val t0 = System.nanoTime()
     var k = 0
@@ -116,94 +117,22 @@ object Ingest {
       val tracing = o.trace && k % 2 == 1
       Trace.on = tracing
       if (last != null) drop(last.url)
-      val c = new Cycle(s"jdbc:derby:memory:pb$k")
-      DriverManager.getConnection(s"${c.url};create=true").close()
-      Ddl.foreach { case (t, _, cols) =>
-        c.sinks(t).execDdl(s"CREATE TABLE $t ($cols)") }
-      last = c
+      last = create(k)
       val before = sc.getPersistentRDDs.keySet
-      val c0 = System.nanoTime()
-
-      // catalog: first archive, then the re-archive pass
-      Seq("initial", "rearchive").foreach { f =>
-        Trace.span(s"catalog/$f", "pipelines", s"c$k/catalog") {
-          val info = Sources.ytdlpJsonl(spark, s"$in/catalog/$f.jsonl")
-          derive(info, ryd).foreach { case (t, df) =>
-            res.attempted += 1
-            try write(spark, c, t, df, tracing, useful)
-            catch { case e: Throwable => res.fail(s"catalog $f $t", e) }
-          }
-        }
-      }
-      val c1 = System.nanoTime()
-
-      // history: one file drop per AvailableNow run
-      val watch = Paths.get(s"${o.work}/cycle$k/watch")
-      val batches = mutable.ArrayBuffer[Double]()
-      Files.createDirectories(watch)
-      val hist = c.sinks("history")
-      val merge = hist.foreachBatchStagedMerge()
-      val sink: (DataFrame, Long) => Unit = (batch, id) =>
-        if (!tracing) merge(batch, id)
-        else {
-          val n0 = hist.queryCount()
-          Trace.span("sink.merge/history", "sinks")(merge(batch, id))
-          useful(0) += hist.queryCount() - n0
-          useful(1) += batch.count()
-        }
-      Trace.span("history", "streaming", s"c$k/history") {
-        histFiles.foreach { f =>
-          Files.copy(Paths.get(f), watch.resolve(Paths.get(f).getFileName),
-            StandardCopyOption.REPLACE_EXISTING)
-          res.attempted += 1
-          try {
-            val q = HistoryPipeline.stream(
-                Sources.takeoutHistoryStream(spark, watch.toString))
-              .writeStream
-              .option("checkpointLocation", s"${o.work}/cycle$k/ckpt")
-              .outputMode("append")
-              .trigger(Trigger.AvailableNow())
-              .foreachBatch(sink)
-              .start()
-            if (tracing) stream.runs.add(q.runId)
-            q.awaitTermination()
-            if (!tracing) batches ++= q.recentProgress.filter(_.numInputRows > 0)
-              .map(_.durationMs.get("triggerExecution").toDouble)
-            else tracedBatches += q.recentProgress.length
-          } catch { case e: Throwable => res.fail(s"history $f", e) }
-        }
-      }
-      val c2 = System.nanoTime()
-
-      // unarchive: cascade over the stored comment tree, then deletes
-      Trace.span("unarchive", "operators", s"c$k/unarchive") {
-        res.attempted += 1
-        try unarchive(spark, c, unarchiveIds)
-        catch { case e: Throwable => res.fail("unarchive", e) }
-      }
-      val c3 = System.nanoTime()
+      val t = cycle(spark, o, res, inputs, last, k, tracing, stream)
       Trace.on = false
-      liveAfter += (sc.getPersistentRDDs.keySet -- before).size.toDouble
-      val secs = (c3 - c0) / 1e9
-      if (tracing) tracedCycles += k -> secs
-      else {
-        batchMs += batches.toSeq
-        cycleS += secs
-        catalogS += (c1 - c0) / 1e9
-        historyS += (c2 - c1) / 1e9
-        cascadeS += (c3 - c2) / 1e9
-      }
+      liveAfter(k) = (sc.getPersistentRDDs.keySet -- before).size.toDouble
+      if (tracing) tracedCycles += k -> t else untraced += t
       k += 1
     }
     res.peakRssMb = Main.peakRssMb()
-    def warm[T](xs: collection.Seq[T]): Seq[T] =
-      Warm.filter(_ < xs.size).map(xs(_))
-    res.passes ++= warm(cycleS)
-    res.ops ++= warm(batchMs).flatten.map(_ / 1000.0)
+    val warm = Warm.filter(_ < untraced.size).map(untraced(_))
+    res.passes ++= warm.map(_.cycleS)
+    res.ops ++= warm.flatMap(_.batchMs).map(_ / 1000.0)
 
     // correctness, outside the timed cycles: the last cycle's tables
     // against the batch forms computed in Spark
-    val (expected, catalogRows) = expect(spark, in, histFiles, unarchiveIds, ryd)
+    val (expected, catalogRows) = expect(spark, inputs)
     expected.foreach { case (t, df) =>
       try {
         val got = readTable(spark, last.url, t)
@@ -218,78 +147,168 @@ object Ingest {
     }
     drop(last.url)
 
-    res.report("history_rows_per_s") = (Stats.median(warm(historyS).map(histRows / _)), "rows/s")
+    val histRows = inputs.histRows
+    res.report("history_rows_per_s") = (Stats.median(warm.map(histRows / _.historyS)), "rows/s")
     res.report("batch_ms.p50") = (Stats.median(res.ops.toSeq) * 1000, "ms")
     res.notes("batch_ms.samples") = res.ops.size.toString
     res.report("catalog_rows_per_s") =
-      (Stats.median(warm(catalogS).map(catalogRows / _)), "rows/s")
-    res.report("cascade_s") = (Stats.median(warm(cascadeS)), "s")
+      (Stats.median(warm.map(catalogRows / _.catalogS)), "rows/s")
+    res.report("cascade_s") = (Stats.median(warm.map(_.cascadeS)), "s")
     res.report("pass_s") = (Stats.median(res.passes.toSeq), "s")
-    res.notes("cycles") = s"${cycleS.size} untraced, reported: ${res.passes.size} after the cold one"
+    res.notes("cycles") = s"${untraced.size} untraced, ${tracedCycles.size} traced; " +
+      s"reported: the ${warm.size} after the cold one"
     res.notes("durability") = Durability
     res.notes("history_rows") = histRows.toString
     res.notes("catalog_rows") = catalogRows.toString
 
-    if (o.trace) traced(spark, o, res, counters, stream, in, histFiles, ryd,
-      tracedCycles.toSeq, liveAfter.toSeq, useful, histRows, cycleS.toSeq,
-      historyS.toSeq, tracedBatches)
+    if (o.trace) traced(spark, o, res, counters, stream, inputs, k,
+      tracedCycles.toSeq, liveAfter.toMap, untraced.drop(1).toSeq)
+  }
+
+  /** The run's input files, listed once. */
+  final case class Inputs(dir: String, ryd: DataFrame) {
+    val catalog: Seq[String] = Seq(s"$dir/catalog/initial.jsonl", s"$dir/catalog/rearchive.jsonl")
+    val history: Seq[String] = Files.list(Paths.get(s"$dir/history")).iterator().asScala
+      .map(_.toString).toSeq.sorted
+    val histRows: Long = history.map(f => Files.readAllLines(Paths.get(f)).size.toLong).sum
+    val unarchive: Seq[String] = Files.readAllLines(Paths.get(s"$dir/unarchive.txt"))
+      .asScala.map(_.trim).filter(_.nonEmpty).toSeq
+  }
+
+  /** A fresh in-memory database holding the empty catalog and history. */
+  private def create(k: Int): Cycle = {
+    val c = new Cycle(s"jdbc:derby:memory:pb$k")
+    DriverManager.getConnection(s"${c.url};create=true").close()
+    Ddl.foreach { case (t, _, cols) => c.sinks(t).execDdl(s"CREATE TABLE $t ($cols)") }
+    c
+  }
+
+  /** One catalog → history → unarchive cycle into `c`. Traced and
+    * untraced cycles do the same engine work; with `useful` set (an extra
+    * cycle of traced runs, outside the timed ones) the merge sinks also
+    * count what they changed. */
+  private def cycle(spark: SparkSession, o: Opts, res: Result, in: Inputs,
+      c: Cycle, k: Int, tracing: Boolean, stream: StreamCounters,
+      useful: Option[Useful] = None): Times = {
+    val c0 = System.nanoTime()
+
+    // catalog: first archive, then the re-archive pass
+    in.catalog.foreach { f =>
+      Trace.span(s"catalog/${Paths.get(f).getFileName}", "pipelines", s"c$k/catalog") {
+        val info = Sources.ytdlpJsonl(spark, f)
+        derive(info, in.ryd).foreach { case (t, df) =>
+          res.attempted += 1
+          try write(spark, c, t, df, useful)
+          catch { case e: Throwable => res.fail(s"catalog $f $t", e) }
+        }
+      }
+    }
+    val c1 = System.nanoTime()
+
+    // history: one file drop per AvailableNow run
+    val watch = Paths.get(s"${o.work}/cycle$k/watch")
+    val batches = mutable.ArrayBuffer[Double]()
+    var progressEvents = 0
+    Files.createDirectories(watch)
+    val hist = c.sinks("history")
+    val merge = hist.foreachBatchStagedMerge()
+    val sink: (DataFrame, Long) => Unit = (batch, id) => useful match {
+      case None => Trace.span("sink.merge/history", "sinks")(merge(batch, id))
+      case Some(u) =>
+        val n0 = hist.queryCount()
+        merge(batch, id)
+        u.changed += hist.queryCount() - n0
+        u.staged += batch.count()
+    }
+    Trace.span("history", "streaming", s"c$k/history") {
+      in.history.foreach { f =>
+        Files.copy(Paths.get(f), watch.resolve(Paths.get(f).getFileName),
+          StandardCopyOption.REPLACE_EXISTING)
+        res.attempted += 1
+        try {
+          val q = HistoryPipeline.stream(
+              Sources.takeoutHistoryStream(spark, watch.toString))
+            .writeStream
+            .option("checkpointLocation", s"${o.work}/cycle$k/ckpt")
+            .outputMode("append")
+            .trigger(Trigger.AvailableNow())
+            .foreachBatch(sink)
+            .start()
+          if (tracing) stream.runs.add(q.runId)
+          q.awaitTermination()
+          progressEvents += q.recentProgress.length
+          batches ++= q.recentProgress.filter(_.numInputRows > 0)
+            .map(_.durationMs.get("triggerExecution").toDouble)
+        } catch { case e: Throwable => res.fail(s"history $f", e) }
+      }
+    }
+    val c2 = System.nanoTime()
+
+    // unarchive: cascade over the stored comment tree, then deletes
+    Trace.span("unarchive", "operators", s"c$k/unarchive") {
+      res.attempted += 1
+      try unarchive(spark, c, in.unarchive)
+      catch { case e: Throwable => res.fail("unarchive", e) }
+    }
+    val c3 = System.nanoTime()
+    Times((c1 - c0) / 1e9, (c2 - c1) / 1e9, (c3 - c2) / 1e9, batches.toSeq,
+      progressEvents)
   }
 
   /** One relation into its sink: the per-row guarded upsert for videos,
     * the set-based staged MERGE for comments, insert-or-ignore for the
     * rest (cmds/archive.py:133-192). */
   private def write(spark: SparkSession, c: Cycle, t: String, df: DataFrame,
-      tracing: Boolean, useful: Array[Long]): Unit = {
+      useful: Option[Useful]): Unit = {
     val sink = c.sinks(t)
     t match {
       case "videos" =>
         Trace.span("sink.upsert/videos", "sinks")(sink.upsert(df, guard))
-      case "comments" =>
-        if (!tracing) sink.upsertStagedMerge(df)
-        else {
-          val before = readTable(spark, c.url, t).cache()
-          before.count()
-          Trace.span("sink.merge/comments", "sinks")(sink.upsertStagedMerge(df))
-          useful(0) += df.select(before.columns.map(col).toIndexedSeq: _*)
+      case "comments" => useful match {
+        case None => Trace.span("sink.merge/comments", "sinks")(sink.upsertStagedMerge(df))
+        case Some(u) =>
+          val before = snapshot(spark, readTable(spark, c.url, t))
+          sink.upsertStagedMerge(df)
+          u.changed += df.select(before.columns.map(col).toIndexedSeq: _*)
             .except(before).count()
-          useful(1) += df.count()
-          before.unpersist(blocking = true)
-        }
+          u.staged += df.count()
+      }
       case _ =>
         Trace.span(s"sink.insert/$t", "sinks")(sink.insertIfAbsent(df))
     }
   }
 
+  /** The rows of a small `df`, held on the driver: the harness's own
+    * materializations, kept out of Spark's persisted RDDs so that
+    * `operators.checkpoints` counts only the engine's. */
+  private def snapshot(spark: SparkSession, df: DataFrame): DataFrame =
+    spark.createDataFrame(df.collect().toSeq.asJava, df.schema)
+
   private def unarchive(spark: SparkSession, c: Cycle, ids: Seq[String]): Unit = {
     import spark.implicits._
     val vids = ids.toDF("video_id")
-    // the harness's own materializations are cached, and released below,
-    // so `operators.checkpoints_live_after` counts only the engine's
-    def pin(df: DataFrame) = { val p = df.cache(); p.count(); p }
-    val comments = pin(readTable(spark, c.url, "comments"))
-    val videoTags = pin(readTable(spark, c.url, "video_tags"))
+    val comments = snapshot(spark, readTable(spark, c.url, "comments"))
+    val videoTags = snapshot(spark, readTable(spark, c.url, "video_tags"))
+    // the keys to delete are fixed before the first delete changes the tables
     val (gone, goneTags) = Trace.span("integrity.cascade", "operators") {
       val (survC, survT) = Integrity.unarchiveVideo(vids, "video_id", comments, videoTags)
-      (pin(comments.select("comment_id").except(survC.select("comment_id"))),
-        pin(videoTags.select("id").except(survT.select("id"))))
+      (snapshot(spark, comments.select("comment_id").except(survC.select("comment_id"))),
+        snapshot(spark, videoTags.select("id").except(survT.select("id"))))
     }
     Trace.span("sink.delete", "sinks") {
       c.sinks("comments").deleteByKeys(gone)
       c.sinks("video_tags").deleteByKeys(goneTags)
       c.sinks("videos").deleteByKeys(vids)
     }
-    Seq(comments, videoTags, gone, goneTags).foreach(_.unpersist(blocking = true))
   }
 
   /** Final tables as the batch forms compute them: the Upsert algebra over
     * both catalog files, `HistoryPipeline.batch` over every history file,
     * then `Integrity.unarchiveVideo`. Also returns the number of rows the
     * catalog phase derives and upserts. */
-  private def expect(spark: SparkSession, in: String, histFiles: Seq[String],
-      ids: Seq[String], ryd: DataFrame): (Seq[(String, DataFrame)], Long) = {
+  private def expect(spark: SparkSession, in: Inputs): (Seq[(String, DataFrame)], Long) = {
     import spark.implicits._
-    val first = derive(Sources.ytdlpJsonl(spark, s"$in/catalog/initial.jsonl"), ryd).toMap
-    val again = derive(Sources.ytdlpJsonl(spark, s"$in/catalog/rearchive.jsonl"), ryd).toMap
+    val Seq(first, again) = in.catalog.map(f => derive(Sources.ytdlpJsonl(spark, f), in.ryd).toMap)
     val rows = (first.values ++ again.values).map(_.count()).sum
     val keys = Ddl.map(d => d._1 -> d._2).toMap
     val merged = first.keys.map { t =>
@@ -302,12 +321,12 @@ object Ingest {
         case _ => Upsert.insertIfAbsent(first(t), again(t), keys(t))
       })
     }.toMap
-    val vids = ids.toDF("video_id")
+    val vids = in.unarchive.toDF("video_id")
     val (survC, survT) = Integrity.unarchiveVideo(vids, "video_id",
       merged("comments"), merged("video_tags"))
     val videos = merged("videos").join(vids, Seq("video_id"), "left_anti")
     val history = HistoryPipeline.batch(
-      spark.read.schema(Schemas.takeoutHistory).json(histFiles: _*))
+      spark.read.schema(Schemas.takeoutHistory).json(in.history: _*))
     (Seq("users" -> merged("users"), "channels" -> merged("channels"),
       "videos" -> videos, "comments" -> survC, "tags" -> merged("tags"),
       "video_tags" -> survT, "history" -> history), rows)
@@ -329,26 +348,30 @@ object Ingest {
     try DriverManager.getConnection(s"$url;drop=true").close()
     catch { case _: SQLException => () } // Derby reports a drop as 08006
 
-  /** Layer isolation after the timed cycles: each layer's call on inputs
-    * already decoded (or, for sources, on the raw files), plus the counters
-    * and stream progress the traced cycles recorded. */
+  /** The traced run's report, after the timed cycles: the counters and
+    * stream progress the traced cycles recorded; each layer's call on its
+    * own, on inputs already decoded (or, for sources, on the raw files);
+    * and one more cycle, untimed, whose merge sinks count what they change
+    * (`sink.merge_useful_ratio`). */
   private def traced(spark: SparkSession, o: Opts, res: Result,
-      counters: SparkCounters, stream: StreamCounters, in: String,
-      histFiles: Seq[String], ryd: DataFrame, cycles: Seq[(Int, Double)],
-      liveAfter: Seq[Double], useful: Array[Long], histRows: Long,
-      untracedCycles: Seq[Double], untracedHistory: Seq[Double],
-      batches: Int): Unit = {
+      counters: SparkCounters, stream: StreamCounters, in: Inputs, k: Int,
+      cycles: Seq[(Int, Times)], liveAfter: Map[Int, Double],
+      untraced: Seq[Times]): Unit = {
+    val useful = new Useful
+    val c = create(k)
+    cycle(spark, o, res, in, c, k, tracing = false, stream, Some(useful))
+    drop(c.url)
+
     Trace.on = true
-    val files = Seq(s"$in/catalog/initial.jsonl", s"$in/catalog/rearchive.jsonl")
     Trace.span("sources.decode", "sources", "layers/sources") {
-      files.foreach(f => Reads.consume(Sources.ytdlpJsonl(spark, f)))
-      Reads.consume(spark.read.schema(Schemas.takeoutHistory).json(histFiles: _*))
+      in.catalog.foreach(f => Reads.consume(Sources.ytdlpJsonl(spark, f)))
+      Reads.consume(spark.read.schema(Schemas.takeoutHistory).json(in.history: _*))
     }
-    val infos = files.map(f => Sources.ytdlpJsonl(spark, f).localCheckpoint())
+    val infos = in.catalog.map(f => Sources.ytdlpJsonl(spark, f).localCheckpoint())
     Trace.span("pipelines.derive", "pipelines", "layers/pipelines") {
-      infos.foreach(info => derive(info, ryd).foreach(d => Reads.consume(d._2)))
+      infos.foreach(info => derive(info, in.ryd).foreach(d => Reads.consume(d._2)))
     }
-    val raw = spark.read.schema(Schemas.takeoutHistory).json(histFiles: _*)
+    val raw = spark.read.schema(Schemas.takeoutHistory).json(in.history: _*)
       .localCheckpoint()
     Trace.span("streaming.refine", "streaming", "layers/streaming")(
       Reads.consume(HistoryPipeline.batch(raw)))
@@ -358,7 +381,8 @@ object Ingest {
     val cycleGroups = cycles.map(_._1).toSet
     val inCycles = spans.filter(s => s.group.startsWith("c") &&
       cycleGroups(s.group.drop(1).takeWhile(_.isDigit).toInt))
-    Layers.perPass(res, counters, inCycles, cycles.size, cycles.map(_._2).sum, o.cores)
+    Layers.perPass(res, counters, inCycles, cycles.size,
+      cycles.map(_._2.cycleS).sum, o.cores)
     val n = cycles.size.max(1).toDouble
     def total(prefix: String) =
       inCycles.filter(_.name.startsWith(prefix)).map(_.seconds).sum / n
@@ -373,13 +397,14 @@ object Ingest {
     res.layers("sink.insert_s") = (total("sink.insert"), "s")
     res.layers("sink.delete_s") = (total("sink.delete"), "s")
     res.layers("sink.merge_useful_ratio") =
-      (useful(0).toDouble / useful(1).max(1L), "ratio")
+      (useful.changed.toDouble / useful.staged.max(1L), "ratio")
     res.layers("integrity.cascade_s") = (total("integrity.cascade"), "s")
     res.layers("integrity.cascade_jobs") = (counters.sum(
       inCycles.filter(_.name == "integrity.cascade").map(_.id)).jobs / n, "count")
 
     // micro-batch phases, as Spark's progress reports them
-    val progress = stream.of(batches).filter(_.numInputRows > 0)
+    val progress = stream.of(cycles.map(_._2.progressEvents).sum)
+      .filter(_.numInputRows > 0)
     Seq("addBatch", "queryPlanning", "walCommit", "commitOffsets",
         "latestOffset", "getBatch").foreach { ph =>
       val ms = progress.flatMap(p => Option(p.durationMs.get(ph)).map(_.toDouble))
@@ -394,13 +419,12 @@ object Ingest {
     res.layers("stream.rows_dropped_by_watermark") =
       (ops.map(_.numRowsDroppedByWatermark).sum / n, "count")
 
-    val tracedHist = inCycles.filter(_.name == "history").map(_.seconds)
-    Layers.overhead(res, "pass_s", Stats.median(cycles.map(_._2)),
-      Stats.median(untracedCycles.drop(if (untracedCycles.size > 1) 1 else 0)), "s")
+    // traced cycles against the untraced ones after the cold cycle
+    Layers.overhead(res, "pass_s", Stats.median(cycles.map(_._2.cycleS)),
+      Stats.median(untraced.map(_.cycleS)), "s")
     Layers.overhead(res, "history_rows_per_s",
-      Stats.median(tracedHist.map(histRows / _)),
-      Stats.median(untracedHistory.drop(if (untracedHistory.size > 1) 1 else 0)
-        .map(histRows / _)), "rows/s")
+      Stats.median(cycles.map(in.histRows / _._2.historyS)),
+      Stats.median(untraced.map(in.histRows / _.historyS)), "rows/s")
     Layers.tree(res, spans)
   }
 }

@@ -103,6 +103,11 @@ object Main {
 
   def main(args: Array[String]): Unit = {
     val o = parse(args)
+    if (o.workload == "names") { // the read queries, for run.py --validate
+      val names = (Reads.base50 ++ Reads.fixpoint).map(Json.str)
+      println(Marker + names.mkString("{\"names\":[", ",", "]}"))
+      return
+    }
     Files.createDirectories(Paths.get(o.work))
     System.setProperty("derby.system.home", s"${o.work}/derby")
     val spark = session(o.cores, o.work)
