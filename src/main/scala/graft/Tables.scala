@@ -84,7 +84,8 @@ object Tables {
     * `scan` (pre-r13: no repartition), `divN` (all bytes/(N KB)). */
   private def residentPartitions(spark: SparkSession, sfDir: String,
       name: String): Int = {
-    val policy = sys.env.getOrElse("SPARK_GRAFT_RESIDENT_LAYOUT", "compute")
+    val policy = residentLayout(
+      sys.env.getOrElse("SPARK_GRAFT_RESIDENT_LAYOUT", "compute"))
     def spreadBy(divKb: Long): Int = {
       val f = new java.io.File(s"$sfDir/$name.parquet")
       val bytes =
@@ -102,6 +103,20 @@ object Tables {
       case s if s.startsWith("div") => spreadBy(s.drop(3).toLong)
       case _ => if (payloadTables.contains(name)) spreadBy(32L) else 0
     }
+  }
+
+  /** `value` if it is a valid SPARK_GRAFT_RESIDENT_LAYOUT policy, else an
+    * error naming the variable and the accepted values. */
+  private[graft] def residentLayout(value: String): String = {
+    val valid = value match {
+      case "compute" | "spread" | "scan" => true
+      case s if s.startsWith("div") => s.drop(3).toLongOption.exists(_ > 0)
+      case _ => false
+    }
+    require(valid, s"SPARK_GRAFT_RESIDENT_LAYOUT=$value is not a layout: " +
+      "expected compute, spread, scan or divN with N a positive integer " +
+      "(KB of parquet per partition)")
+    value
   }
 
   private def loadCold(spark: SparkSession, sfDir: String,

@@ -97,9 +97,6 @@ object Refine {
   def stripAnsi(c: Column): Column =
     regexp_replace(c, "\u001B(?:[@-Z\\\\-_]|\\[[0-?]*[ -/]*[@-~])", "")
 
-  /** F14 — INTEGER flag → Boolean (schema.sql:35-36). */
-  def boolFlag(c: Column): Column = c.cast("boolean")
-
   /** F16 — yes/maybe/no confirm classification with the reference's exact
     * word lists (utils.py:14-16,45-50): 1 = YES (confirm returns True),
     * -1 = MAYBE ("I'll let you think about it"), 0 = NO, -2 = anything

@@ -1731,55 +1731,52 @@ object Analytics {
     * |pairs|-row state, never from historical contests). */
   def bradleyTerryFromCounts(d0: DataFrame, iters: Int): DataFrame = {
     require(iters >= 1 && iters <= 16, s"iters must be in [1,16]: $iters")
-    val d = d0.select(col("i"), col("j"), col("w"))
-    // per-orientation win counts: one row per (i, j) that ever met,
-    // w_ij = i's wins over j (0 rows materialized for the losing seat)
-    val sym = d.union(d.select(col("j"), col("i"), lit(0L)))
-      .groupBy("i", "j").agg(sum(col("w")).as("w_ij"))
-    val nGames = sym.as("a").join(sym.as("b"),
-        col("a.i") === col("b.j") && col("a.j") === col("b.i"))
-      .select(col("a.i").as("i"), col("a.j").as("j"),
-        col("a.w_ij").as("w_ij"),
-        (col("a.w_ij") + col("b.w_ij")).as("n_ij"))
-      .localCheckpoint(true)
-    val wins = nGames.groupBy(col("i"))
-      .agg(sum(col("w_ij")).as("wins"), sum(col("n_ij")).as("games"))
-      .localCheckpoint(true)
-    var s = wins.select(col("i"), lit(1000000L).as("s"))
-    for (_ <- 1 to iters) {
-      val prevS = s
-      val t = nGames
-        .join(s.select(col("i"), col("s").as("s_i")), Seq("i"))
-        .join(s.select(col("i").as("j"), col("s").as("s_j")), Seq("j"))
-        .withColumn("t", expr(
-          "CASE WHEN s_i + s_j > 0 THEN " +
-            "cast(n_ij as decimal(38,0)) * 1000000000000 div (s_i + s_j) " +
-            "ELSE cast(0 as decimal(38,0)) END"))
-        .groupBy(col("i"))
-        .agg(sum(col("t")).as("den"))
-      val raw = wins.join(t, Seq("i"))
-        .withColumn("s_raw", expr(
-          "CASE WHEN den > 0 THEN " +
-            "cast(wins as decimal(38,0)) * 1000000000000 div den " +
-            "ELSE cast(0 as decimal(38,0)) END"))
-        .select(col("i"), col("s_raw"))
-      val norm = raw.agg(sum(col("s_raw")).as("s_tot"),
-        count(lit(1)).as("n_items"))
-      s = raw.crossJoin(broadcast(norm))
-        .withColumn("s", expr(
-          "CASE WHEN s_tot > 0 THEN " +
-            "cast(cast(s_raw as decimal(38,0)) * n_items * 1000000 " +
-            "div s_tot as bigint) ELSE cast(0 as bigint) END"))
-        .select(col("i"), col("s"))
-        .localCheckpoint(true)
-      // no-op on round 1 (the init frame is not a checkpoint)
-      org.apache.spark.sql.graftbridge.Bridge.dropCheckpoint(prevS)
+    Stage("Analytics.bradleyTerry") { implicit st =>
+      val d = d0.select(col("i"), col("j"), col("w"))
+      // per-orientation win counts: one row per (i, j) that ever met,
+      // w_ij = i's wins over j (0 rows materialized for the losing seat)
+      val sym = d.union(d.select(col("j"), col("i"), lit(0L)))
+        .groupBy("i", "j").agg(sum(col("w")).as("w_ij"))
+      val nGames = st.checkpoint(sym.as("a").join(sym.as("b"),
+          col("a.i") === col("b.j") && col("a.j") === col("b.i"))
+        .select(col("a.i").as("i"), col("a.j").as("j"),
+          col("a.w_ij").as("w_ij"),
+          (col("a.w_ij") + col("b.w_ij")).as("n_ij")), "games")
+      val wins = st.checkpoint(nGames.groupBy(col("i"))
+        .agg(sum(col("w_ij")).as("wins"), sum(col("n_ij")).as("games")),
+        "wins")
+      val s = Fixpoint.iterate(wins.select(col("i"), lit(1000000L).as("s")),
+          iters) { (s, _) =>
+        val t = nGames
+          .join(s.select(col("i"), col("s").as("s_i")), Seq("i"))
+          .join(s.select(col("i").as("j"), col("s").as("s_j")), Seq("j"))
+          .withColumn("t", expr(
+            "CASE WHEN s_i + s_j > 0 THEN " +
+              "cast(n_ij as decimal(38,0)) * 1000000000000 div (s_i + s_j) " +
+              "ELSE cast(0 as decimal(38,0)) END"))
+          .groupBy(col("i"))
+          .agg(sum(col("t")).as("den"))
+        val raw = wins.join(t, Seq("i"))
+          .withColumn("s_raw", expr(
+            "CASE WHEN den > 0 THEN " +
+              "cast(wins as decimal(38,0)) * 1000000000000 div den " +
+              "ELSE cast(0 as decimal(38,0)) END"))
+          .select(col("i"), col("s_raw"))
+        val norm = raw.agg(sum(col("s_raw")).as("s_tot"),
+          count(lit(1)).as("n_items"))
+        raw.crossJoin(broadcast(norm))
+          .withColumn("s", expr(
+            "CASE WHEN s_tot > 0 THEN " +
+              "cast(cast(s_raw as decimal(38,0)) * n_items * 1000000 " +
+              "div s_tot as bigint) ELSE cast(0 as bigint) END"))
+          .select(col("i"), col("s"))
+      }(Fixpoint.AllRounds).state
+      val rkw = Window.orderBy(col("strength_ppm").desc, col("item").asc)
+      wins.join(s, Seq("i"))
+        .select(col("i").as("item"), col("wins"), col("games"),
+          col("s").as("strength_ppm"))
+        .withColumn("rk", row_number().over(rkw).cast("long"))
     }
-    val rkw = Window.orderBy(col("strength_ppm").desc, col("item").asc)
-    wins.join(s, Seq("i"))
-      .select(col("i").as("item"), col("wins"), col("games"),
-        col("s").as("strength_ppm"))
-      .withColumn("rk", row_number().over(rkw).cast("long"))
   }
 
   /** [NS] — exact two-sample Kolmogorov–Smirnov statistic: the maximum
@@ -2718,83 +2715,79 @@ object Analytics {
     require(rounds >= 1 && rounds <= 12, s"rounds in [1,12]: $rounds")
     require(touchTypes.nonEmpty && !touchTypes.contains(conversionType),
       s"touchTypes=$touchTypes conversionType=$conversionType")
-    val sp = events.sparkSession
-    import sp.implicits._
-    val ord = Window.partitionBy(col("_u"))
-      .orderBy(col("_ts"), col("_tie"))
-    val kept = events
-      .filter(col(typeCol).isin(conversionType +: touchTypes: _*))
-      .select(col(userCol).as("_u"), col(tsCol).as("_ts"),
-        col(tieCol).as("_tie"),
-        when(col(typeCol) === conversionType, lit("__conv__"))
-          .otherwise(col(typeCol)).as("state"))
-      .withColumn("_prevConv", coalesce(
-        sum(when(col("state") === "__conv__", 1L).otherwise(0L))
-          .over(ord.rowsBetween(Window.unboundedPreceding, -1)),
-        lit(0L)))
-      .filter(col("_prevConv") === 0L)
-      .withColumn("_prev", lag(col("state"), 1).over(ord))
-      .withColumn("_rnDesc", row_number().over(
-        Window.partitionBy(col("_u"))
-          .orderBy(col("_ts").desc, col("_tie").desc)))
-      .localCheckpoint(true)
-    val stepEdges = kept.select(
-      coalesce(col("_prev"), lit("__start__")).as("from"),
-      col("state").as("to"))
-    val termEdges = kept
-      .filter(col("_rnDesc") === 1 && col("state") =!= "__conv__")
-      .select(col("state").as("from"), lit("__null__").as("to"))
-    val probs = stepEdges.unionAll(termEdges)
-      .groupBy(col("from"), col("to")).agg(count(lit(1)).as("c"))
-      .withColumn("tot",
-        sum(col("c")).over(Window.partitionBy(col("from"))))
-      .withColumn("p", expr("(1000000 * c) div tot"))
-      .select(col("from"), col("to"), col("p"))
-    val variants = (touchTypes.sorted :+ "__full__").toDF("variant")
-    val varEdges = probs.crossJoin(broadcast(variants))
-      .withColumn("to", when(col("to") === col("variant"),
-        lit("__null__")).otherwise(col("to")))
-      .select(col("variant"), col("from"), col("to"), col("p"))
-      .localCheckpoint(true)
-    val absorbing = variants
-      .select(col("variant"), lit("__conv__").as("state"),
-        lit(1000000L).as("v"))
-      .unionAll(variants.select(col("variant"),
-        lit("__null__").as("state"), lit(0L).as("v")))
-    var v = absorbing
-    for (_ <- 1 to rounds) {
-      val prevV = v
-      v = varEdges
-        .join(v.select(col("variant"), col("state").as("to"),
-          col("v")), Seq("variant", "to"))
-        .groupBy(col("variant"), col("from"))
-        .agg(expr("cast(sum(cast(p as decimal(38,0)) * v) " +
-          "div 1000000 as bigint)").as("v"))
-        .select(col("variant"), col("from").as("state"), col("v"))
-        .unionAll(absorbing)
-        .localCheckpoint(true)
-      org.apache.spark.sql.graftbridge.Bridge.dropCheckpoint(prevV)
+    Stage("Analytics.markovAttribution") { implicit st =>
+      val sp = events.sparkSession
+      import sp.implicits._
+      val ord = Window.partitionBy(col("_u"))
+        .orderBy(col("_ts"), col("_tie"))
+      val kept = st.checkpoint(events
+        .filter(col(typeCol).isin(conversionType +: touchTypes: _*))
+        .select(col(userCol).as("_u"), col(tsCol).as("_ts"),
+          col(tieCol).as("_tie"),
+          when(col(typeCol) === conversionType, lit("__conv__"))
+            .otherwise(col(typeCol)).as("state"))
+        .withColumn("_prevConv", coalesce(
+          sum(when(col("state") === "__conv__", 1L).otherwise(0L))
+            .over(ord.rowsBetween(Window.unboundedPreceding, -1)),
+          lit(0L)))
+        .filter(col("_prevConv") === 0L)
+        .withColumn("_prev", lag(col("state"), 1).over(ord))
+        .withColumn("_rnDesc", row_number().over(
+          Window.partitionBy(col("_u"))
+            .orderBy(col("_ts").desc, col("_tie").desc))), "journeys")
+      val stepEdges = kept.select(
+        coalesce(col("_prev"), lit("__start__")).as("from"),
+        col("state").as("to"))
+      val termEdges = kept
+        .filter(col("_rnDesc") === 1 && col("state") =!= "__conv__")
+        .select(col("state").as("from"), lit("__null__").as("to"))
+      val probs = stepEdges.unionAll(termEdges)
+        .groupBy(col("from"), col("to")).agg(count(lit(1)).as("c"))
+        .withColumn("tot",
+          sum(col("c")).over(Window.partitionBy(col("from"))))
+        .withColumn("p", expr("(1000000 * c) div tot"))
+        .select(col("from"), col("to"), col("p"))
+      val variants = (touchTypes.sorted :+ "__full__").toDF("variant")
+      val varEdges = st.checkpoint(probs.crossJoin(broadcast(variants))
+        .withColumn("to", when(col("to") === col("variant"),
+          lit("__null__")).otherwise(col("to")))
+        .select(col("variant"), col("from"), col("to"), col("p")), "edges")
+      val absorbing = variants
+        .select(col("variant"), lit("__conv__").as("state"),
+          lit(1000000L).as("v"))
+        .unionAll(variants.select(col("variant"),
+          lit("__null__").as("state"), lit(0L).as("v")))
+      val v = Fixpoint.iterate(absorbing, rounds) { (v, _) =>
+        varEdges
+          .join(v.select(col("variant"), col("state").as("to"),
+            col("v")), Seq("variant", "to"))
+          .groupBy(col("variant"), col("from"))
+          .agg(expr("cast(sum(cast(p as decimal(38,0)) * v) " +
+            "div 1000000 as bigint)").as("v"))
+          .select(col("variant"), col("from").as("state"), col("v"))
+          .unionAll(absorbing)
+      }(Fixpoint.AllRounds).state
+      val conv = v.filter(col("state") === "__start__")
+        .select(col("variant"), col("v"))
+      val full = conv.filter(col("variant") === "__full__")
+        .select(col("v").as("conv_full_ppm"))
+      val removed = conv.filter(col("variant") =!= "__full__")
+        .crossJoin(broadcast(full))
+        .withColumn("removal_ppm", expr(
+          "CASE WHEN conv_full_ppm > 0 THEN " +
+            "1000000 - (1000000 * v) div conv_full_ppm " +
+            "ELSE CAST(0 AS BIGINT) END"))
+        .withColumn("_rtot", sum(col("removal_ppm")).over(
+          Window.partitionBy(lit(1)).rowsBetween(
+            Window.unboundedPreceding, Window.unboundedFollowing)))
+        .withColumn("share_ppm", expr(
+          "CASE WHEN _rtot > 0 THEN " +
+            "(1000000 * removal_ppm) div _rtot END"))
+      removed.select(col("variant").as("channel"), col("conv_full_ppm"),
+          col("v").as("conv_removed_ppm"), col("removal_ppm"),
+          col("share_ppm"))
+        .orderBy(col("channel"))
     }
-    val conv = v.filter(col("state") === "__start__")
-      .select(col("variant"), col("v"))
-    val full = conv.filter(col("variant") === "__full__")
-      .select(col("v").as("conv_full_ppm"))
-    val removed = conv.filter(col("variant") =!= "__full__")
-      .crossJoin(broadcast(full))
-      .withColumn("removal_ppm", expr(
-        "CASE WHEN conv_full_ppm > 0 THEN " +
-          "1000000 - (1000000 * v) div conv_full_ppm " +
-          "ELSE CAST(0 AS BIGINT) END"))
-      .withColumn("_rtot", sum(col("removal_ppm")).over(
-        Window.partitionBy(lit(1)).rowsBetween(
-          Window.unboundedPreceding, Window.unboundedFollowing)))
-      .withColumn("share_ppm", expr(
-        "CASE WHEN _rtot > 0 THEN " +
-          "(1000000 * removal_ppm) div _rtot END"))
-    removed.select(col("variant").as("channel"), col("conv_full_ppm"),
-        col("v").as("conv_removed_ppm"), col("removal_ppm"),
-        col("share_ppm"))
-      .orderBy(col("channel"))
   }
 
   /** [NS] — exact central moments per group: the distribution-SHAPE

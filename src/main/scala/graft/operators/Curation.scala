@@ -772,14 +772,13 @@ object Curation {
     * construction instead of a sequential fold.
     *
     * Windows partition by WORD (per-word arrays are tiny), so the apply
-    * step is embarrassingly parallel; per-round `localCheckpoint`
-    * truncates the iterative lineage (the codebase's fixpoint
-    * convention). No end-of-word marker: merges never cross words here,
-    * and the marker only matters for detokenization — documented
-    * simplification. Output: (merge_rank, left_sym, right_sym,
+    * step is embarrassingly parallel; per-round checkpoints truncate
+    * the iterative lineage. No end-of-word marker: merges never cross
+    * words here, and the marker only matters for detokenization —
+    * documented simplification. Output: (merge_rank, left_sym, right_sym,
     * pair_count), `rounds` rows. */
   def bpeMerges(df: DataFrame, textCol: String, rounds: Int): DataFrame =
-    bpeCore(df, textCol, rounds)._1
+    Stage("Curation.bpeMerges")(st => bpeCore(st, df, textCol, rounds)._1)
 
   /** [NS] — BPE ENCODE, the serving half of [[bpeMerges]]: tokenize the
     * corpus under the first `rounds` trained merges and return per-doc
@@ -790,8 +789,8 @@ object Curation {
     * Token counts depend on every greedy apply round, so an oracle match
     * here certifies the full encode path, not just the rule ranks. */
   def bpeTokenCounts(df: DataFrame, idCol: String, textCol: String,
-      rounds: Int): DataFrame = {
-    val perWord = bpeCore(df, textCol, rounds)._2
+      rounds: Int): DataFrame = Stage("Curation.bpeTokenCounts") { st =>
+    val perWord = bpeCore(st, df, textCol, rounds)._2
       .groupBy(col("w")).agg(count(lit(1)).as("n_sym"))
     df.select(col(idCol), explode(split(col(textCol), " ")).as("w"))
       .filter(length(col("w")) > 0)
@@ -800,8 +799,12 @@ object Curation {
   }
 
   /** Shared trainer: returns (merge rules, final per-word symbol
-    * positions). See [[bpeMerges]] for semantics and scale notes. */
-  private def bpeCore(df: DataFrame, textCol: String,
+    * positions), materialized in the caller's stage — the state is two
+    * frames (the symbol table and each round's rule), so the loop runs in
+    * the [[Stage]] directly, and the caller's scope keeps only what the
+    * half it returns reads. See [[bpeMerges]] for semantics and scale
+    * notes. */
+  private def bpeCore(st: Stage, df: DataFrame, textCol: String,
       rounds: Int): (DataFrame, DataFrame) = {
     import org.apache.spark.sql.expressions.Window
     val vocab = df.select(explode(split(col(textCol), " ")).as("w"))
@@ -811,20 +814,18 @@ object Curation {
     // Java's zero-width split leaves a trailing "" element (it matches at
     // end-of-input with limit -1) — strip it or the empty symbol pairs up
     // in later rounds; DuckDB's string_split(w, '') never emits one.
-    var pos = vocab.select(col("w"), col("freq"),
+    var pos = st.checkpoint(vocab.select(col("w"), col("freq"),
         posexplode(filter(split(col("w"), "(?!^)"), _ =!= ""))
-          .as(Seq("i", "sym")))
-      .localCheckpoint()
+          .as(Seq("i", "sym"))), "symbols")
     val wn = Window.partitionBy(col("w")).orderBy(col("i"))
     var rules: DataFrame = null
     for (r <- 1 to rounds) {
       val withNext = pos.withColumn("ns", lead(col("sym"), 1).over(wn))
-      val best = withNext.filter(col("ns").isNotNull)
+      val best = st.checkpoint(withNext.filter(col("ns").isNotNull)
         .groupBy(col("sym").as("a"), col("ns").as("b"))
         .agg(sum(col("freq")).as("cnt"))
         .orderBy(col("cnt").desc, col("a").asc, col("b").asc)
-        .limit(1)
-        .localCheckpoint(true)
+        .limit(1), s"round$r/rule")
       val rule = best.select(lit(r).as("merge_rank"), col("a").as("left_sym"),
         col("b").as("right_sym"), col("cnt").as("pair_count"))
       rules = if (rules == null) rule else rules.unionAll(rule)
@@ -840,15 +841,14 @@ object Curation {
           .otherwise(lit(false)))
         .withColumn("cons", coalesce(lag(col("mg"), 1).over(wn), lit(false)))
       val prevPos = pos
-      pos = m.filter(!col("cons"))
+      pos = st.checkpoint(m.filter(!col("cons"))
         .select(col("w"), col("freq"),
           (row_number().over(wn) - 1).as("i"),
           when(col("mg"), concat(col("sym"), col("ns")))
-            .otherwise(col("sym")).as("sym"))
-        .localCheckpoint()
+            .otherwise(col("sym")).as("sym")), s"round$r/symbols")
       // drop the superseded symbol table; each round's 1-row `best`
-      // stays persisted deliberately — `rules` reads it lazily at return
-      org.apache.spark.sql.graftbridge.Bridge.dropCheckpoint(prevPos)
+      // stays — `rules` reads it lazily at return
+      st.release(prevPos)
     }
     (rules.orderBy(col("merge_rank")), pos)
   }

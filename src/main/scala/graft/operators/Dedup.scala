@@ -2,7 +2,6 @@ package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.graftbridge.Bridge
 
 /** Deduplication operators for training-data pipelines (SURVEY §2.8 D1-D5):
   * exact content-hash dedup, n-gram Jaccard, MinHash+LSH banding, SimHash.
@@ -534,6 +533,19 @@ object Dedup {
       .filter(col("containment") >= minContain)
   }
 
+  /** How [[connectedComponents]] steps its labels each round. */
+  sealed trait CcStrategy
+  object CcStrategy {
+    /** Plain hash-min: one shuffle per round, rounds = diameter. */
+    case object HashMin extends CcStrategy
+    /** Hash-min plus a pointer-doubling hop: two shuffles per round,
+      * O(log diameter) rounds ([[connectedComponentsDoubling]]). */
+    case object Doubling extends CcStrategy
+    /** Hash-min until the changed-count decay stalls for `stallRounds`
+      * rounds, then doubling ([[connectedComponentsHybrid]]). */
+    final case class Hybrid(stallRounds: Int) extends CcStrategy
+  }
+
   /** D5 closure — connected components over an undirected near-dup pair
     * list by HASH-MIN label propagation: every node starts labeled with
     * itself; each round a node takes the minimum label in its closed
@@ -543,12 +555,11 @@ object Dedup {
     * (a~b, b~c but a!~c), this closes them.
     *
     * Scale shape: per round ONE shuffle (neighbor-label groupBy-min with
-    * map-side combine) and one driver-synchronous job whose changed-label
-    * count rides the same action (observe + eager checkpoint, as in the
-    * cascade fixpoint). Rounds = component diameter — small for near-dup
-    * clusters (dup groups are dense); use pointer-doubling-style
-    * shortcutting only if diameters grow. Labels checkpoint per round so
-    * plans stay flat.
+    * map-side combine) and one driver-synchronous job: labels iterate as a
+    * [[Fixpoint]] whose changed-label count is observed on the round's
+    * checkpoint action. Rounds = component diameter — small for near-dup
+    * clusters (dup groups are dense); `strategy` picks pointer doubling
+    * (or the hybrid's automatic escalation to it) when diameters grow.
     *
     * Input: (aCol, bCol) pairs. Output: (node, rep). `maxRounds` caps
     * pathological diameters (a chain of length > maxRounds would return
@@ -556,21 +567,61 @@ object Dedup {
     * cap, or pre-shortcut with pointer doubling, for adversarial graphs;
     * convergence is exact whenever the fixpoint is reached, which the
     * changed-count detects). */
-  /** One hash-min round: labels′ = min over the closed neighborhood,
-    * changed-count riding the caller's Observation (one driver job per
-    * round — the eager checkpoint is the only action). */
-  private def hashMinNext(edges: DataFrame, labels: DataFrame,
-      obs: org.apache.spark.sql.Observation): DataFrame =
+  def connectedComponents(pairs: DataFrame, aCol: String,
+      bCol: String, maxRounds: Int = 100,
+      strategy: CcStrategy = CcStrategy.HashMin): DataFrame =
+    Stage("Dedup.connectedComponents") { implicit st =>
+      // symmetrized, deduped edge list, read every round → pinned.
+      // (Measured, not assumed: pre-partitioning edges on the join key is
+      // a LOSS here — AQE broadcasts the label side of the per-round join,
+      // so edges never shuffle and the upfront repartition is pure
+      // overhead.)
+      val fwd = pairs.select(col(aCol).as("_a"), col(bCol).as("_b"))
+      val edges = st.pin(fwd.unionByName(
+          fwd.select(col("_b").as("_a"), col("_a").as("_b")))
+        .distinct())
+      val init = st.checkpoint(edges.select(col("_a").as("_n")).distinct()
+        .select(col("_n"), col("_n").as("_lbl")), "init")
+      var doubling = strategy == CcStrategy.Doubling
+      var prev = Long.MaxValue // the hybrid's previous changed-count
+      var stall = 0
+      val res = Fixpoint.iterate(init, maxRounds) { (labels, changed) =>
+        strategy match {
+          // changed == MaxValue before round 1: nothing observed yet
+          case CcStrategy.Hybrid(stallRounds)
+              if !doubling && changed != Long.MaxValue =>
+            // prev == MaxValue: no earlier count to measure decay against
+            // (prev*3 would also overflow there)
+            if (prev != Long.MaxValue && changed * 4 >= prev * 3) stall += 1
+            else stall = 0
+            prev = changed
+            if (stall >= stallRounds) {
+              doubling = true
+              org.slf4j.LoggerFactory.getLogger(getClass).info(
+                s"connectedComponents/$strategy: changed-count stalled " +
+                  s"at $changed for $stall rounds — escalating to pointer " +
+                  "doubling")
+            }
+          case _ => ()
+        }
+        if (doubling) doublingNext(edges, labels)
+        else hashMinNext(edges, labels)
+      }(Fixpoint.Observed(coalesce(sum(when(col("_lbl") < col("_old"), 1L)
+        .otherwise(0L)), lit(0L))))
+      warnIfUnconverged(s"connectedComponents/$strategy", res.live, maxRounds)
+      res.state.select(col("_n").as("node"), col("_lbl").as("rep"))
+    }
+
+  /** One hash-min round: labels′ = min over the closed neighborhood, the
+    * previous label kept as `_old` for the changed-count. */
+  private def hashMinNext(edges: DataFrame, labels: DataFrame): DataFrame =
     edges
       .join(labels, edges("_b") === labels("_n"))
       .select(edges("_a").as("_n"), col("_lbl"))
       .unionByName(labels)
       .groupBy(col("_n")).agg(min(col("_lbl")).as("_lbl2"))
       .join(labels, Seq("_n"))
-      .observe(obs, coalesce(sum(when(col("_lbl2") < col("_lbl"), 1L)
-        .otherwise(0L)), lit(0L)).as("changed"))
-      .select(col("_n"), col("_lbl2").as("_lbl"))
-      .localCheckpoint(true)
+      .select(col("_n"), col("_lbl2").as("_lbl"), col("_lbl").as("_old"))
 
   /** One hash-min + pointer-doubling round: the candidate min label is
     * followed one more hop (its own current label) before adoption —
@@ -586,8 +637,7 @@ object Dedup {
     * 2 shuffles), not per-round cost — which is why Bench now has the
     * SPARK_GRAFT_BENCH_N median mode. Neither the eager checkpoint nor
     * the byLabel self-join is a measured bottleneck at bench scale. */
-  private def doublingNext(edges: DataFrame, labels: DataFrame,
-      obs: org.apache.spark.sql.Observation): DataFrame = {
+  private def doublingNext(edges: DataFrame, labels: DataFrame): DataFrame = {
     val cand = edges
       .join(labels, edges("_b") === labels("_n"))
       .select(edges("_a").as("_n"), col("_lbl"))
@@ -599,52 +649,9 @@ object Dedup {
       .select(col("_n").as("_p"), col("_lbl").as("_plbl"))
     cand
       .join(byLabel, cand("_m") === byLabel("_p"), "left")
-      .select(col("_n"), col("_lbl"),
-        least(col("_m"), coalesce(col("_plbl"), col("_m")))
-          .as("_lbl2"))
-      .observe(obs, coalesce(sum(when(col("_lbl2") < col("_lbl"), 1L)
-        .otherwise(0L)), lit(0L)).as("changed"))
-      .select(col("_n"), col("_lbl2").as("_lbl"))
-      .localCheckpoint(true)
-  }
-
-  /** Symmetrized, deduped edge list + identity labels for the fixpoint
-    * loops. The edge table is read every round → persisted; callers
-    * unpersist in `finally`. (Measured, not assumed: pre-partitioning
-    * edges on the join key is a LOSS here — AQE broadcasts the
-    * label side of the per-round join, so edges never shuffle and the
-    * upfront repartition is pure overhead.) */
-  private def edgesAndInit(pairs: DataFrame, aCol: String,
-      bCol: String): (DataFrame, DataFrame) = {
-    val fwd = pairs.select(col(aCol).as("_a"), col(bCol).as("_b"))
-    val edges = fwd.unionByName(
-        fwd.select(col("_b").as("_a"), col("_a").as("_b")))
-      .distinct()
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val init = edges.select(col("_a").as("_n")).distinct()
-      .select(col("_n"), col("_n").as("_lbl"))
-      .localCheckpoint(true)
-    (edges, init)
-  }
-
-  def connectedComponents(pairs: DataFrame, aCol: String,
-      bCol: String, maxRounds: Int = 100): DataFrame = {
-    val (edges, init) = edgesAndInit(pairs, aCol, bCol)
-    try {
-      var labels = init
-      var changed = 1L
-      var rounds = 0
-      while (changed > 0 && rounds < maxRounds) {
-        val obs = org.apache.spark.sql.Observation()
-        val prevLabels = labels
-        labels = hashMinNext(edges, labels, obs)
-        Bridge.dropCheckpoint(prevLabels) // superseded; new labels eager
-        changed = obs.get("changed").asInstanceOf[Long]
-        rounds += 1
-      }
-      warnIfUnconverged("connectedComponents", changed, maxRounds)
-      labels.select(col("_n").as("node"), col("_lbl").as("rep"))
-    } finally edges.unpersist(blocking = false)
+      .select(col("_n"),
+        least(col("_m"), coalesce(col("_plbl"), col("_m"))).as("_lbl"),
+        col("_lbl").as("_old"))
   }
 
   /** Loud signal when a fixpoint loop exits on the round cap instead of
@@ -673,27 +680,10 @@ object Dedup {
     * per round × O(log d) rounds vs 1 × O(d). For near-dup clusters
     * (dense, shallow) plain hash-min wins; for chain-shaped or
     * adversarial graphs this variant is the one that terminates. Same
-    * convergence detection (changed-count rides the eager checkpoint
-    * action), same output contract: (node, rep). */
+    * convergence detection, same output contract: (node, rep). */
   def connectedComponentsDoubling(pairs: DataFrame, aCol: String,
-      bCol: String, maxRounds: Int = 50): DataFrame = {
-    val (edges, init) = edgesAndInit(pairs, aCol, bCol)
-    try {
-      var labels = init
-      var changed = 1L
-      var rounds = 0
-      while (changed > 0 && rounds < maxRounds) {
-        val obs = org.apache.spark.sql.Observation()
-        val prevLabels = labels
-        labels = doublingNext(edges, labels, obs)
-        Bridge.dropCheckpoint(prevLabels) // superseded; new labels eager
-        changed = obs.get("changed").asInstanceOf[Long]
-        rounds += 1
-      }
-      warnIfUnconverged("connectedComponentsDoubling", changed, maxRounds)
-      labels.select(col("_n").as("node"), col("_lbl").as("rep"))
-    } finally edges.unpersist(blocking = false)
-  }
+      bCol: String, maxRounds: Int = 50): DataFrame =
+    connectedComponents(pairs, aCol, bCol, maxRounds, CcStrategy.Doubling)
 
   /** D5 closure, ONE entry point for both graph shapes: start with plain
     * hash-min (1 shuffle/round — optimal for the dense, shallow clusters
@@ -712,43 +702,9 @@ object Dedup {
     * (node, rep), exact on convergence, warning on cap. */
   def connectedComponentsHybrid(pairs: DataFrame, aCol: String,
       bCol: String, maxRounds: Int = 100,
-      stallRounds: Int = 3): DataFrame = {
-    val (edges, init) = edgesAndInit(pairs, aCol, bCol)
-    try {
-      var labels = init
-      var changed = 1L
-      var prev = Long.MaxValue
-      var rounds = 0
-      var stall = 0
-      var doubling = false
-      while (changed > 0 && rounds < maxRounds) {
-        val obs = org.apache.spark.sql.Observation()
-        val prevLabels = labels
-        labels =
-          if (doubling) doublingNext(edges, labels, obs)
-          else hashMinNext(edges, labels, obs)
-        Bridge.dropCheckpoint(prevLabels) // superseded; new labels eager
-        changed = obs.get("changed").asInstanceOf[Long]
-        if (!doubling && changed > 0) {
-          // prev == MaxValue marks round 1 (no decay to measure yet);
-          // prev*3 would also overflow there
-          if (prev != Long.MaxValue && changed * 4 >= prev * 3) stall += 1
-          else stall = 0
-          if (stall >= stallRounds) {
-            doubling = true
-            org.slf4j.LoggerFactory.getLogger(getClass).info(
-              s"connectedComponentsHybrid: changed-count stalled at " +
-                s"$changed for $stall rounds (round $rounds) — " +
-                "escalating to pointer doubling")
-          }
-        }
-        prev = changed
-        rounds += 1
-      }
-      warnIfUnconverged("connectedComponentsHybrid", changed, maxRounds)
-      labels.select(col("_n").as("node"), col("_lbl").as("rep"))
-    } finally edges.unpersist(blocking = false)
-  }
+      stallRounds: Int = 3): DataFrame =
+    connectedComponents(pairs, aCol, bCol, maxRounds,
+      CcStrategy.Hybrid(stallRounds))
 
   /** D5 — 32-bit SimHash signature per doc from distinct-word md5 bits:
     * (idCol, simhash: "0/1" string, msb first). One per-row codegen'd

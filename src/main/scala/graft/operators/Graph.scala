@@ -2,7 +2,6 @@ package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.graftbridge.Bridge
 import org.apache.spark.storage.StorageLevel
 
 /** [NS] Distributed graph analytics over edge lists — the graph-shaped
@@ -48,8 +47,7 @@ object Graph {
     * once; each iteration is edges-join-ranks on the source key, a
     * groupBy(dst) partial-aggregated sum, and two 1-row broadcast
     * cross-joins for the N / dangling scalars — no driver collect. Ranks
-    * localCheckpoint per round (fixpoint-loop convention, see
-    * [[Dedup.connectedComponents]]) so lineage stays flat.
+    * iterate as a [[Fixpoint]] with flat lineage.
     *
     * Returns (node, od, pr): every node with its out-degree and final
     * scaled rank.
@@ -60,15 +58,14 @@ object Graph {
     require(iters >= 1, s"iters must be >= 1, got $iters")
     require(dampPct >= 0 && dampPct <= 100, s"dampPct 0..100, got $dampPct")
     val telePct = 100 - dampPct
-    // the edge list is usually derived (joins/explodes over the corpus) —
-    // persist it FIRST so out-degree / node-set / per-iteration reads all
-    // hit the materialized copy instead of replaying the upstream lineage
-    val edges0 = edgePairs
-      .select(col(srcCol).as("_src"), col(dstCol).as("_dst"))
-      .filter(col("_src").isNotNull && col("_dst").isNotNull)
-      .distinct()
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    try {
+    Stage("Graph.pageRankExact") { implicit st =>
+      // the edge list is usually derived (joins/explodes over the corpus) —
+      // pin it FIRST so out-degree / node-set / per-iteration reads all
+      // hit the materialized copy instead of replaying the upstream lineage
+      val edges0 = st.pin(edgePairs
+        .select(col(srcCol).as("_src"), col(dstCol).as("_dst"))
+        .filter(col("_src").isNotNull && col("_dst").isNotNull)
+        .distinct())
       val outdeg = edges0.groupBy(col("_src"))
         .agg(count(lit(1)).as("_od"))
       // Eagerly checkpoint the degree-annotated edge table ONCE (r13
@@ -81,49 +78,37 @@ object Graph {
       // pure shuffle cost; the per-iteration join broadcasts the small
       // ranks side anyway, and the one real exchange per iteration is
       // groupBy(_dst)'s partial-aggregated one.)
-      val edges = edges0.join(outdeg, "_src").localCheckpoint(true)
+      val edges = st.checkpoint(edges0.join(outdeg, "_src"), "edges")
       val nodes = edges0.select(col("_src").as("_n"))
         .union(edges0.select(col("_dst").as("_n")))
         .distinct()
         .join(outdeg.select(col("_src").as("_n"), col("_od")), Seq("_n"),
           "left")
         .select(col("_n"), coalesce(col("_od"), lit(0L)).as("_od"))
-      // N is a 1-row aggregate consumed only as a scalar: read it ONCE
-      // to the driver (the audited 1-row-collect category) instead of
-      // re-broadcasting a crossJoin(nRow) whose lineage re-runs the
-      // union-distinct node derivation EVERY iteration (guide §2.4).
-      // Loop-invariant scalars (N, the dangling-node flag) ride the
-      // node-set checkpoint action as observe metrics (the audited
-      // 1-row-collect category, minus even the collect job).
-      val obs0 = org.apache.spark.sql.Observation()
-      val ranks0 = nodes.observe(obs0, count(lit(1)).as("_nn"),
+      // Loop-invariant scalars (N, the dangling-node flag) are 1-row
+      // aggregates consumed only as literals: they ride the node-set
+      // checkpoint action as observed metrics instead of re-broadcasting
+      // a crossJoin(nRow) whose lineage re-runs the union-distinct node
+      // derivation EVERY iteration (guide §2.4).
+      val (ranks0, m) = st.observed(nodes, "nodes")(
+        count(lit(1)).as("_nn"),
         coalesce(max(when(col("_od") === 0, 1).otherwise(0)), lit(0))
           .as("_hd"))
-        .localCheckpoint(true)
-      val nn = math.max(obs0.get("_nn").asInstanceOf[Long], 1L)
+      val nn = math.max(m("_nn").asInstanceOf[Long], 1L)
       // empty graph → empty result; the clamp only keeps the scalar
       // arithmetic defined on that path
-      val hasDangling = obs0.get("_hd").asInstanceOf[Int] == 1
+      val hasDangling = m("_hd").asInstanceOf[Int] == 1
       val base = scale / nn // floor div, positive longs — as `div`
-      var ranks = ranks0.select(col("_n"), col("_od"),
-        lit(base).as("_pr"))
       val teleTerm = (telePct * base) / 100 // loop-invariant scalar
-      // Dangling-free graphs with small iteration counts unroll into ONE
-      // lazy plan closed by a single checkpoint: ranks_{i} is referenced
-      // twice by ranks_{i+1} (contrib arm + join arm), but the repeated
-      // subtrees are canonically identical, so Exchange reuse executes
-      // each shuffle once — the whole fixpoint is one action instead of
-      // iters checkpoint actions (guide §2.4 / §1.2: remove passes
-      // before tuning them; measured r13: q133 32→29 jobs). With
-      // dangling mass the per-iteration scalar defeats the reuse, so
-      // that path keeps per-iteration checkpoints; the NEXT round's
-      // dangling sum rides each checkpoint action as an `observe`
-      // metric (the Integrity.materializeCounted convention) instead of
-      // costing its own per-iteration probe job (guide §2.4; measured
-      // r14: the probe was 1–2 of q130's ~7 jobs per iteration).
-      val lazyUnroll = iters <= 4
-      for (_ <- 1 to iters) {
-        val prevRanks = ranks
+      // Small iteration counts unroll into ONE lazy plan closed by the
+      // single `out` checkpoint: ranks_{i} is referenced by ranks_{i+1}'s
+      // contrib arm, join arm and (with dangling nodes) dangling arm, but
+      // the repeated subtrees are canonically identical, so exchange reuse
+      // executes each shuffle once — the whole fixpoint is one action
+      // instead of iters checkpoint actions (guide §2.4 / §1.2: remove
+      // passes before tuning them; measured r13: q133 32→29 jobs).
+      val ranks = Fixpoint.iterate(ranks0.select(col("_n"), col("_od"),
+          lit(base).as("_pr")), iters, unrollBelow = 5) { (ranks, _) =>
         val contrib = edges
           .join(ranks.select(col("_n").as("_src"), col("_pr")), "_src")
           .select(col("_dst"), expr("_pr div _od").as("_c"))
@@ -132,46 +117,29 @@ object Graph {
         val joined = ranks.select(col("_n"), col("_od"))
           .join(contrib.select(col("_dst").as("_n"), col("_contrib")),
             Seq("_n"), "left")
-        val next =
-          if (!hasDangling)
-            joined.select(col("_n"), col("_od"),
+        if (!hasDangling)
+          joined.select(col("_n"), col("_od"),
+            expr(s"CAST($teleTerm AS BIGINT) + " +
+              s"($dampPct * coalesce(_contrib, CAST(0 AS BIGINT)))" +
+              " div 100").as("_pr"))
+        else {
+          // dangling mass as an in-plan 1-row broadcast aggregate off
+          // the previous ranks — same floor-div operands as a collected
+          // literal (sum over _od=0 of _pr, div N), but no job of its own
+          val dangRow = ranks
+            .agg(coalesce(sum(when(col("_od") === 0, col("_pr"))),
+              lit(0L)).as("_dangsum"))
+          joined.crossJoin(broadcast(dangRow))
+            .select(col("_n"), col("_od"),
               expr(s"CAST($teleTerm AS BIGINT) + " +
-                s"($dampPct * coalesce(_contrib, CAST(0 AS BIGINT)))" +
-                " div 100").as("_pr"))
-          else {
-            // dangling mass as an in-plan 1-row broadcast aggregate off
-            // the previous ranks — same floor-div operands as the old
-            // collected literal (sum over _od=0 of _pr, div N), but the
-            // whole fixpoint stays ONE lazy plan: ranks_{i-1}'s three
-            // references (contrib arm, join arm, dangling arm) are
-            // canonically identical subtrees over checkpoint scans, so
-            // exchange reuse executes each shuffle once (guide §2.4)
-            val dangRow = ranks
-              .agg(coalesce(sum(when(col("_od") === 0, col("_pr"))),
-                lit(0L)).as("_dangsum"))
-            joined.crossJoin(broadcast(dangRow))
-              .select(col("_n"), col("_od"),
-                expr(s"CAST($teleTerm AS BIGINT) + " +
-                  s"($dampPct * (coalesce(_contrib, CAST(0 AS BIGINT))" +
-                  s" + (_dangsum div CAST($nn AS BIGINT)))) div 100")
-                  .as("_pr"))
-          }
-        if (!lazyUnroll) {
-          ranks = next.localCheckpoint(true)
-          // the new checkpoint is materialized — the superseded one would
-          // otherwise sit in storage until the ContextCleaner ran (r10
-          // q181 adjudication: late-session storage pressure from this)
-          Bridge.dropCheckpoint(prevRanks)
-        } else ranks = next
-      }
-      // materialize before `finally` drops the edge pins
-      val out = ranks.select(col("_n").as("node"), col("_od").as("od"),
-        col("_pr").as("pr")).localCheckpoint(true)
-      if (!lazyUnroll) Bridge.dropCheckpoint(ranks) // folded into `out`
-      Bridge.dropCheckpoint(ranks0)
-      Bridge.dropCheckpoint(edges)
-      out
-    } finally edges0.unpersist(blocking = false)
+                s"($dampPct * (coalesce(_contrib, CAST(0 AS BIGINT))" +
+                s" + (_dangsum div CAST($nn AS BIGINT)))) div 100")
+                .as("_pr"))
+        }
+      }(Fixpoint.AllRounds).state
+      st.checkpoint(ranks.select(col("_n").as("node"), col("_od").as("od"),
+        col("_pr").as("pr")), "out")
+    }
   }
 
   /** Per-node triangle counts over an undirected edge list, by degree
@@ -265,10 +233,10 @@ object Graph {
     * oracle can only match on inputs that happen to converge in time.)
     *
     * Shape per round: one groupBy(degree) shuffle + two semi-joins to
-    * restrict the edge list — the [[Dedup.connectedComponents]] fixpoint
-    * conventions (localCheckpoint per round to truncate lineage, one
-    * driver-side count per round as the stop probe, peeled edge set
-    * shrinks monotonically so rounds get cheaper).
+    * restrict the edge list, both checkpointed in a [[Stage]]; the
+    * survivor count (the stop test) is observed on the survivors'
+    * checkpoint action. The peeled edge set shrinks monotonically, so
+    * rounds get cheaper.
     *
     * Returns (node, deg): round-R survivors with the qualifying degree
     * (their degree inside the round-R subgraph).
@@ -277,37 +245,37 @@ object Graph {
       maxRounds: Int): DataFrame = {
     require(k >= 1, s"k must be >= 1, got $k")
     require(maxRounds >= 1, s"maxRounds must be >= 1, got $maxRounds")
-    val und = pairs.select(
-        least(col(aCol), col(bCol)).as("_a"),
-        greatest(col(aCol), col(bCol)).as("_b"))
-      .filter(col("_a") < col("_b"))
-      .distinct()
-    var edges = und.select(col("_a").as("_u"), col("_b").as("_v"))
-      .union(und.select(col("_b").as("_u"), col("_a").as("_v")))
-      .localCheckpoint(true)
-    var survivors: DataFrame = null
-    var prevNodes = -1L
-    var r = 0
-    while (r < maxRounds && prevNodes != 0) {
-      r += 1
-      val deg = edges.groupBy(col("_u")).agg(count(lit(1)).as("_d"))
-      val keep = deg.filter(col("_d") >= k).localCheckpoint(true)
-      if (survivors != null) Bridge.dropCheckpoint(survivors) // superseded
-      survivors = keep
-      val n = keep.count()
-      if (n == prevNodes) prevNodes = 0 // fixpoint: rounds are identities now
-      else if (r < maxRounds) {
-        prevNodes = n
-        val prevEdges = edges
-        edges = edges
-          .join(keep.select(col("_u")), Seq("_u"), "left_semi")
-          .join(keep.select(col("_u").as("_v")), Seq("_v"), "left_semi")
-          .localCheckpoint(true)
-        Bridge.dropCheckpoint(prevEdges)
+    Stage("Graph.kCore") { st =>
+      val und = pairs.select(
+          least(col(aCol), col(bCol)).as("_a"),
+          greatest(col(aCol), col(bCol)).as("_b"))
+        .filter(col("_a") < col("_b"))
+        .distinct()
+      var edges = st.checkpoint(und.select(col("_a").as("_u"),
+          col("_b").as("_v"))
+        .union(und.select(col("_b").as("_u"), col("_a").as("_v"))), "edges")
+      var survivors: DataFrame = null
+      var prevNodes = -1L
+      var r = 0
+      while (r < maxRounds && prevNodes != 0) {
+        r += 1
+        val deg = edges.groupBy(col("_u")).agg(count(lit(1)).as("_d"))
+        val (keep, n) = st.counted(deg.filter(col("_d") >= k), s"round$r")
+        st.release(survivors) // superseded
+        survivors = keep
+        if (n == prevNodes) prevNodes = 0 // fixpoint: rounds are identities now
+        else if (r < maxRounds) {
+          prevNodes = n
+          val prevEdges = edges
+          edges = st.checkpoint(edges
+            .join(keep.select(col("_u")), Seq("_u"), "left_semi")
+            .join(keep.select(col("_u").as("_v")), Seq("_v"), "left_semi"),
+            s"round$r/edges")
+          st.release(prevEdges)
+        }
       }
+      survivors.select(col("_u").as("node"), col("_d").as("deg"))
     }
-    Bridge.dropCheckpoint(edges) // result reads survivors only
-    survivors.select(col("_u").as("node"), col("_d").as("deg"))
   }
 
   /** [NS] — bounded-round BFS levels: hop distance from a SOURCE SET
@@ -317,44 +285,42 @@ object Graph {
     * as [[kCore]]: rounds are deterministic, so an unrolled-CTE oracle
     * is exact on ANY input; early-stops when a frontier empties. Scale
     * per round: one equi-join frontier⋈edges + one anti-join against
-    * the settled set — frontier-sized, not graph-sized; per-round
-    * localCheckpoint truncates the iterative lineage (the CC fixpoint
-    * convention). */
+    * the settled set — frontier-sized, not graph-sized; the frontier and
+    * the settled set checkpoint per round in a [[Stage]], the frontier's
+    * size observed on its own checkpoint action. */
   def bfsLevels(pairs: DataFrame, aCol: String, bCol: String,
       sources: DataFrame, maxRounds: Int): DataFrame = {
     require(maxRounds >= 0, s"maxRounds must be >= 0, got $maxRounds")
-    val und = pairs.select(
-        least(col(aCol), col(bCol)).as("_a"),
-        greatest(col(aCol), col(bCol)).as("_b"))
-      .filter(col("_a") < col("_b"))
-      .distinct()
-    val edges = und.select(col("_a").as("_u"), col("_b").as("_v"))
-      .union(und.select(col("_b").as("_u"), col("_a").as("_v")))
-      .localCheckpoint(true)
-    var dist = sources.toDF("_u")
-      .distinct().withColumn("dist", lit(0L)).localCheckpoint(true)
-    var frontier = dist.select(col("_u"))
-    var prevNext: DataFrame = null
-    var r = 0
-    var frontierSize = frontier.count()
-    while (r < maxRounds && frontierSize > 0) {
-      r += 1
-      val next = frontier.join(edges, Seq("_u"))
-        .select(col("_v").as("_u")).distinct()
-        .join(dist.select(col("_u")), Seq("_u"), "left_anti")
-        .withColumn("dist", lit(r.toLong))
-        .localCheckpoint(true)
-      if (prevNext != null) Bridge.dropCheckpoint(prevNext) // frontier consumed
-      val prevDist = dist
-      dist = dist.unionByName(next).localCheckpoint(true)
-      Bridge.dropCheckpoint(prevDist)
-      prevNext = next
-      frontier = next.select(col("_u"))
-      frontierSize = next.count()
+    Stage("Graph.bfsLevels") { st =>
+      val und = pairs.select(
+          least(col(aCol), col(bCol)).as("_a"),
+          greatest(col(aCol), col(bCol)).as("_b"))
+        .filter(col("_a") < col("_b"))
+        .distinct()
+      val edges = st.checkpoint(und.select(col("_a").as("_u"),
+          col("_b").as("_v"))
+        .union(und.select(col("_b").as("_u"), col("_a").as("_v"))), "edges")
+      var (dist, frontierSize) = st.counted(sources.toDF("_u")
+        .distinct().withColumn("dist", lit(0L)), "sources")
+      var frontier = dist.select(col("_u"))
+      var prevNext: DataFrame = null
+      var r = 0
+      while (r < maxRounds && frontierSize > 0) {
+        r += 1
+        val (next, n) = st.counted(frontier.join(edges, Seq("_u"))
+          .select(col("_v").as("_u")).distinct()
+          .join(dist.select(col("_u")), Seq("_u"), "left_anti")
+          .withColumn("dist", lit(r.toLong)), s"round$r")
+        st.release(prevNext) // frontier consumed
+        val prevDist = dist
+        dist = st.checkpoint(dist.unionByName(next), s"round$r/dist")
+        st.release(prevDist)
+        prevNext = next
+        frontier = next.select(col("_u"))
+        frontierSize = n
+      }
+      dist.select(col("_u").as("node"), col("dist"))
     }
-    if (prevNext != null) Bridge.dropCheckpoint(prevNext)
-    Bridge.dropCheckpoint(edges) // result reads dist only
-    dist.select(col("_u").as("node"), col("dist"))
   }
 
   /** [NS] — deterministic HASH WALKS: one `steps`-hop random walk from
@@ -420,7 +386,7 @@ object Graph {
     * }}}
     * Same distribution shape as the global variant: one edges⋈ranks +
     * one groupBy shuffle per iteration, 1-row broadcast scalars, ranks
-    * localCheckpoint per round. Seeds ride a broadcast semi-join into
+    * iterating as a [[Fixpoint]]. Seeds ride a broadcast semi-join into
     * the node table once. */
   def personalizedPageRank(edgePairs: DataFrame, srcCol: String,
       dstCol: String, seeds: DataFrame, iters: Int,
@@ -428,15 +394,14 @@ object Graph {
     require(iters >= 1, s"iters must be >= 1, got $iters")
     require(dampPct >= 0 && dampPct <= 100, s"dampPct 0..100, got $dampPct")
     val telePct = 100 - dampPct
-    val edges0 = edgePairs
-      .select(col(srcCol).as("_src"), col(dstCol).as("_dst"))
-      .filter(col("_src").isNotNull && col("_dst").isNotNull)
-      .distinct()
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    try {
+    Stage("Graph.personalizedPageRank") { implicit st =>
+      val edges0 = st.pin(edgePairs
+        .select(col(srcCol).as("_src"), col(dstCol).as("_dst"))
+        .filter(col("_src").isNotNull && col("_dst").isNotNull)
+        .distinct())
       // eager edge-table checkpoint — see pageRankExact
       val outdeg = edges0.groupBy(col("_src")).agg(count(lit(1)).as("_od"))
-      val edges = edges0.join(outdeg, "_src").localCheckpoint(true)
+      val edges = st.checkpoint(edges0.join(outdeg, "_src"), "edges")
       val seedSet = seeds.select(seeds.columns.head).toDF("_n").distinct()
       val nodes = edges0.select(col("_src").as("_n"))
         .union(edges0.select(col("_dst").as("_n")))
@@ -447,28 +412,21 @@ object Graph {
           "left")
         .select(col("_n"), coalesce(col("_od"), lit(0L)).as("_od"),
           coalesce(col("_seed"), lit(0L)).as("_seed"))
-      // seed count is a loop-invariant 1-row scalar: read it ONCE (the
-      // audited 1-row-collect category) — the crossJoin(broadcast(sRow))
-      // it replaces re-ran the node-set derivation every iteration
-      // (guide §2.4; measured r13: q181 ran 59 jobs before this)
-      // loop-invariant scalars ride the checkpoint action as observe
-      // metrics (see pageRankExact)
-      val obs0 = org.apache.spark.sql.Observation()
-      val nodes0 = nodes.observe(obs0,
+      // loop-invariant scalars (seed count, dangling flag) ride the node-set
+      // checkpoint action as observed metrics (see pageRankExact; measured
+      // r13: q181 ran 59 jobs with a per-iteration crossJoin(sRow) instead)
+      val (nodes0, m) = st.observed(nodes, "nodes")(
         coalesce(sum(col("_seed")), lit(0L)).as("_ns"),
         coalesce(max(when(col("_od") === 0, 1).otherwise(0)), lit(0))
           .as("_hd"))
-        .localCheckpoint(true)
-      val ns = obs0.get("_ns").asInstanceOf[Long]
+      val ns = m("_ns").asInstanceOf[Long]
       require(ns > 0, "personalizedPageRank: empty seed set")
-      val hasDangling = obs0.get("_hd").asInstanceOf[Int] == 1
+      val hasDangling = m("_hd").asInstanceOf[Int] == 1
       val seedBase = scale / ns // floor div, positive longs — as `div`
       val teleTerm = (telePct * seedBase) / 100
-      var ranks = nodes0.select(col("_n"), col("_od"), col("_seed"),
-        (col("_seed") * lit(seedBase)).as("_pr"))
-      val lazyUnroll = iters <= 4 // see pageRankExact
-      for (_ <- 1 to iters) {
-        val prevRanks = ranks
+      val ranks = Fixpoint.iterate(nodes0.select(col("_n"), col("_od"),
+          col("_seed"), (col("_seed") * lit(seedBase)).as("_pr")), iters,
+          unrollBelow = 5) { (ranks, _) => // unrolled as in pageRankExact
         val contrib = edges
           .join(ranks.select(col("_n").as("_src"), col("_pr")), "_src")
           .select(col("_dst"), expr("_pr div _od").as("_c"))
@@ -477,37 +435,27 @@ object Graph {
         val joined = ranks.select(col("_n"), col("_od"), col("_seed"))
           .join(contrib.select(col("_dst").as("_n"), col("_contrib")),
             Seq("_n"), "left")
-        val next =
-          if (!hasDangling)
-            joined.select(col("_n"), col("_od"), col("_seed"),
+        if (!hasDangling)
+          joined.select(col("_n"), col("_od"), col("_seed"),
+            expr(s"_seed * CAST($teleTerm AS BIGINT)" +
+              s" + ($dampPct * coalesce(_contrib, CAST(0 AS BIGINT)))" +
+              " div 100").as("_pr"))
+        else {
+          // in-plan 1-row dangling aggregate — see pageRankExact
+          val dangRow = ranks
+            .agg(coalesce(sum(when(col("_od") === 0, col("_pr"))),
+              lit(0L)).as("_dangsum"))
+          joined.crossJoin(broadcast(dangRow))
+            .select(col("_n"), col("_od"), col("_seed"),
               expr(s"_seed * CAST($teleTerm AS BIGINT)" +
-                s" + ($dampPct * coalesce(_contrib, CAST(0 AS BIGINT)))" +
+                s" + ($dampPct * (coalesce(_contrib, CAST(0 AS BIGINT))" +
+                s" + _seed * (_dangsum div CAST($ns AS BIGINT))))" +
                 " div 100").as("_pr"))
-          else {
-            // in-plan 1-row dangling aggregate — see pageRankExact
-            val dangRow = ranks
-              .agg(coalesce(sum(when(col("_od") === 0, col("_pr"))),
-                lit(0L)).as("_dangsum"))
-            joined.crossJoin(broadcast(dangRow))
-              .select(col("_n"), col("_od"), col("_seed"),
-                expr(s"_seed * CAST($teleTerm AS BIGINT)" +
-                  s" + ($dampPct * (coalesce(_contrib, CAST(0 AS BIGINT))" +
-                  s" + _seed * (_dangsum div CAST($ns AS BIGINT))))" +
-                  " div 100").as("_pr"))
-          }
-        if (!lazyUnroll) {
-          ranks = next.localCheckpoint(true)
-          Bridge.dropCheckpoint(prevRanks) // superseded; new ranks eager
-        } else ranks = next
-      }
-      // materialize before `finally` drops the edge pins
-      val out = ranks.select(col("_n").as("node"), col("_od").as("od"),
-        col("_seed").as("is_seed"), col("_pr").as("pr")).localCheckpoint(true)
-      if (!lazyUnroll) Bridge.dropCheckpoint(ranks) // folded into `out`
-      Bridge.dropCheckpoint(nodes0)
-      Bridge.dropCheckpoint(edges)
-      out
-    } finally edges0.unpersist(blocking = false)
+        }
+      }(Fixpoint.AllRounds).state
+      st.checkpoint(ranks.select(col("_n").as("node"), col("_od").as("od"),
+        col("_seed").as("is_seed"), col("_pr").as("pr")), "out")
+    }
   }
 
   /** [NS] — deterministic NEGATIVE sampling for link prediction: per
@@ -635,37 +583,30 @@ object Graph {
     *
     * Per round: one edges⋈labels join + one (node, label) count
     * aggregate + one argmax aggregate — the PageRank iteration shape;
-    * labels localCheckpoint per round (fixpoint-loop convention).
+    * labels iterate as a [[Fixpoint]].
     * `rounds` is a bounded parameter: LPA is used at a fixed small
     * depth, not to convergence. Returns (node, label). */
   def labelPropagation(pairs: DataFrame, aCol: String, bCol: String,
       rounds: Int): DataFrame = {
     require(rounds >= 1 && rounds <= 16, s"bounded rounds, got $rounds")
-    val edges = pairs.select(col(aCol).cast("long").as("src"),
-        col(bCol).cast("long").as("dst"))
-      .unionByName(pairs.select(col(bCol).cast("long").as("src"),
-        col(aCol).cast("long").as("dst")))
-      .distinct()
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    try {
-      var labels = edges.select(col("src").as("node")).distinct()
-        .withColumn("label", col("node"))
-        .localCheckpoint(true)
-      for (_ <- 1 to rounds) {
-        val prev = labels
-        labels = edges
+    Stage("Graph.labelPropagation") { implicit st =>
+      val edges = st.pin(pairs.select(col(aCol).cast("long").as("src"),
+          col(bCol).cast("long").as("dst"))
+        .unionByName(pairs.select(col(bCol).cast("long").as("src"),
+          col(aCol).cast("long").as("dst")))
+        .distinct())
+      val labels0 = st.checkpoint(edges.select(col("src").as("node"))
+        .distinct().withColumn("label", col("node")), "init")
+      Fixpoint.iterate(labels0, rounds) { (labels, _) =>
+        edges
           .join(labels.withColumnRenamed("node", "dst"), Seq("dst"))
           .groupBy(col("src"), col("label"))
           .agg(count(lit(1)).as("_c"))
           .groupBy(col("src"))
-          .agg(max(struct(col("_c"), (-col("label")).as("_nl")))
-            .as("_w"))
+          .agg(max(struct(col("_c"), (-col("label")).as("_nl"))).as("_w"))
           .select(col("src").as("node"), (-col("_w._nl")).as("label"))
-          .localCheckpoint(true)
-        Bridge.dropCheckpoint(prev) // superseded; new labels materialized
-      }
-      labels
-    } finally edges.unpersist(blocking = false)
+      }(Fixpoint.AllRounds).state
+    }
   }
 
   /** [NS] — common-neighbor link prediction: for every NON-adjacent
@@ -731,93 +672,77 @@ object Graph {
     *
     * Plan shape per iteration: two edge⋈score equi-joins + two groupBy
     * aggregates + two 1-row broadcast totals — the same per-round cost
-    * envelope as PageRank, frontier never materialized driver-side.
-    * Scores are localCheckpointed per round to cut the growing lineage.
+    * envelope as PageRank, frontier never materialized driver-side. The
+    * per-round state is four frames (two grouped sums, auth, scores), so
+    * the loop runs in a [[Stage]] directly.
     */
   def hitsExact(edgePairs: DataFrame, srcCol: String, dstCol: String,
       iters: Int, scale: Long = 1000000000L): DataFrame = {
     require(iters >= 1, s"iters must be >= 1, got $iters")
-    val edges0 = edgePairs
-      .select(col(srcCol).cast("long").as("_src"),
-        col(dstCol).cast("long").as("_dst"))
-      .filter(col("_src").isNotNull && col("_dst").isNotNull)
-      .distinct()
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    try {
-      val nodes = edges0.select(col("_src").as("_n"))
+    Stage("Graph.hitsExact") { st =>
+      val edges0 = st.pin(edgePairs
+        .select(col(srcCol).cast("long").as("_src"),
+          col(dstCol).cast("long").as("_dst"))
+        .filter(col("_src").isNotNull && col("_dst").isNotNull)
+        .distinct())
+      val nodes = st.checkpoint(edges0.select(col("_src").as("_n"))
         .union(edges0.select(col("_dst").as("_n")))
-        .distinct()
-        .localCheckpoint(true)
+        .distinct(), "nodes")
       // L1-normalize a raw score column against its total. The total is
-      // a loop-variant 1-row scalar consumed only as a literal: it rides
-      // the grouped-sums checkpoint action as an `observe` metric (the
-      // Integrity.materializeCounted convention — zeros added by the
+      // a loop-variant 1-row scalar consumed only as a literal: it is
+      // observed on the grouped-sums checkpoint action (zeros added by the
       // later left join to the node set cannot change the total, so
       // summing the grouped rows is exact), instead of costing a
       // separate collect job per half-step (guide §2.4; measured r14:
       // the two collects were 2 of q241's ~13 jobs per iteration).
-      def normLit(tot: java.math.BigDecimal, rawCol: String,
-          outCol: String): Column =
+      def total(rawCol: String): Column =
+        coalesce(sum(col(rawCol)).cast("decimal(38,0)"),
+          lit(0).cast("decimal(38,0)")).as("_tot")
+      def normLit(m: Map[String, Any], rawCol: String,
+          outCol: String): Column = {
+        val tot = m("_tot").asInstanceOf[java.math.BigDecimal]
         if (tot.signum() == 0) lit(0L).as(outCol)
         else expr(s"CAST($scale AS DECIMAL(38,0)) * " +
           s"CAST($rawCol AS DECIMAL(38,0)) div CAST('${tot.toPlainString}'" +
           s" AS DECIMAL(38,0))").as(outCol)
-      def totalObs(rawCol: String): (org.apache.spark.sql.Observation,
-          Column) = {
-        val obs = org.apache.spark.sql.Observation()
-        (obs, coalesce(sum(col(rawCol)).cast("decimal(38,0)"),
-          lit(0).cast("decimal(38,0)")).as("_tot"))
       }
-      var scores = nodes.select(col("_n"),
-        lit(scale).as("_auth"), lit(scale).as("_hub"))
-        .localCheckpoint(true)
-      for (_ <- 1 to iters) {
-        val prevScores = scores
+      var scores = st.checkpoint(nodes.select(col("_n"),
+        lit(scale).as("_auth"), lit(scale).as("_hub")), "init")
+      for (i <- 1 to iters) {
         // grouped in-edge sums: checkpoint once — feeds both the total
         // and the normalized join, so the shuffle runs exactly once
-        val (obsA, totColA) = totalObs("_ra")
-        val gAuth = edges0
+        val (gAuth, totA) = st.observed(edges0
           .join(scores.select(col("_n").as("_src"), col("_hub")), "_src")
           .groupBy(col("_dst"))
           .agg(sum(col("_hub")).as("_ra"))
-          .select(col("_dst").as("_n"), col("_ra"))
-          .observe(obsA, totColA)
-          .localCheckpoint(true)
-        val totA = obsA.get("_tot").asInstanceOf[java.math.BigDecimal]
+          .select(col("_dst").as("_n"), col("_ra")), s"iter$i/authSums")(
+          total("_ra"))
         // auth(t) feeds both the hub half-step and the final join —
         // checkpoint so each consumer reads the materialized rows (the
         // lazy variant re-derived it per consumer and measured SLOWER
         // in both r13 and r14: 4.6 s vs 3.5 s on q241)
-        val auth = nodes.join(gAuth, Seq("_n"), "left")
+        val auth = st.checkpoint(nodes.join(gAuth, Seq("_n"), "left")
           .select(col("_n"), coalesce(col("_ra"), lit(0L)).as("_ra"))
-          .select(col("_n"), normLit(totA, "_ra", "_auth"))
-          .localCheckpoint(true)
-        Bridge.dropCheckpoint(gAuth)
-        val (obsH, totColH) = totalObs("_rh")
-        val gHub = edges0
+          .select(col("_n"), normLit(totA, "_ra", "_auth")), s"iter$i/auth")
+        st.release(gAuth)
+        val (gHub, totH) = st.observed(edges0
           .join(auth.select(col("_n").as("_dst"), col("_auth")), "_dst")
           .groupBy(col("_src"))
           .agg(sum(col("_auth")).as("_rh"))
-          .select(col("_src").as("_n"), col("_rh"))
-          .observe(obsH, totColH)
-          .localCheckpoint(true)
-        val totH = obsH.get("_tot").asInstanceOf[java.math.BigDecimal]
+          .select(col("_src").as("_n"), col("_rh")), s"iter$i/hubSums")(
+          total("_rh"))
         val hub = nodes.join(gHub, Seq("_n"), "left")
           .select(col("_n"), coalesce(col("_rh"), lit(0L)).as("_rh"))
           .select(col("_n"), normLit(totH, "_rh", "_hub"))
-        scores = auth.join(hub, Seq("_n")).localCheckpoint(true)
-        Bridge.dropCheckpoint(gHub)
-        Bridge.dropCheckpoint(auth)        // folded into the new scores
-        Bridge.dropCheckpoint(prevScores)  // superseded
+        val prevScores = scores
+        scores = st.checkpoint(auth.join(hub, Seq("_n")), s"iter$i/scores")
+        st.release(gHub)
+        st.release(auth)       // folded into the new scores
+        st.release(prevScores) // superseded
       }
-      // the returned frame reads only the final scores checkpoint — the
-      // node-set checkpoint was loop-only state (pre-r13 it lingered
-      // until the ContextCleaner got to it, which is why the hygiene
-      // test for this op was order-dependent)
-      Bridge.dropCheckpoint(nodes)
       scores.select(col("_n").as("node"), col("_auth").as("auth"),
         col("_hub").as("hub"))
-    } finally edges0.unpersist(blocking = false)
+    }
   }
 
   /** [NS] — root-to-node path linearization over a parent-pointer
@@ -839,8 +764,8 @@ object Graph {
     * the first 2^i ancestors; each round joins the state to itself on
     * `anc = id` and prepends the ancestor row's (already 2^i-long)
     * path. ceil(log2 maxDepth) self-joins total — a depth-10⁴
-    * provenance chain costs 14 rounds, not 10⁴ — with per-round
-    * localCheckpoint keeping lineage flat. No driver collect; state is
+    * provenance chain costs 14 rounds, not 10⁴ — iterating as a
+    * [[Fixpoint]] with flat lineage. No driver collect; state is
     * node-partitioned throughout. Fails loudly (require) if any chain
     * exceeds `maxDepth` after the final round rather than returning a
     * truncated conversation. Cost note: path bytes grow with depth —
@@ -848,69 +773,59 @@ object Graph {
     * (ids/snippets), not whole documents. */
   def pathLinearize(nodes: DataFrame, idCol: String, parentCol: String,
       contentCol: String, sep: String = " | ",
-      maxDepth: Int = 64): DataFrame = {
-    val base = nodes.select(col(idCol).as("_id"),
-      col(parentCol).as("_p"), col(contentCol).cast("string").as("_c"))
-    // normalize: parent → null when missing or self (those are roots)
-    val ids = base.select(col("_id").as("_pid"))
-    val e = base.join(ids,
-        base("_p") === col("_pid") && base("_p") =!= base("_id"), "left")
-      .select(col("_id"),
-        when(col("_pid").isNull, lit(null)).otherwise(col("_p")).as("_anc"),
-        col("_c"))
-      .localCheckpoint(true)
-    // the live-count (rows whose chain is still unresolved) rides every
-    // checkpoint action as an `observe` metric — the per-round isEmpty
-    // probe job and the final require's re-probe are both folded into
-    // the actions the loop already runs (guide §2.4; the predicate is
-    // two null checks per row, so the metric pass costs nothing next to
-    // the doubling join itself)
-    def ckptLive(df: DataFrame): (DataFrame, Long) = {
-      val obs = org.apache.spark.sql.Observation()
-      val chk = df.observe(obs,
-        coalesce(sum(when(col("_anc").isNotNull, 1L).otherwise(0L)),
-          lit(0L)).as("_live"))
-        .localCheckpoint(true)
-      (chk, obs.get("_live").asInstanceOf[Long])
-    }
-    var (state, liveN) = ckptLive(
-      e.select(col("_id"), col("_anc"), col("_c").as("_path"),
-        lit(1L).as("_depth"),
-        when(col("_anc").isNull, col("_id")).as("_root")))
-    var span = 1L
-    while (liveN > 0 && span < maxDepth) {
-      val prevState = state
-      val j = state.select(col("_id").as("_jid"), col("_anc").as("_janc"),
-        col("_path").as("_jpath"), col("_depth").as("_jdepth"),
-        col("_root").as("_jroot"))
-      val (next, n) = ckptLive(state.join(j, state("_anc") === j("_jid"),
-          "left")
+      maxDepth: Int = 64): DataFrame =
+    Stage("Graph.pathLinearize") { implicit st =>
+      val base = nodes.select(col(idCol).as("_id"),
+        col(parentCol).as("_p"), col(contentCol).cast("string").as("_c"))
+      // normalize: parent → null when missing or self (those are roots)
+      val ids = base.select(col("_id").as("_pid"))
+      val e = st.checkpoint(base.join(ids,
+          base("_p") === col("_pid") && base("_p") =!= base("_id"), "left")
         .select(col("_id"),
-          when(col("_anc").isNull, col("_anc"))
-            .otherwise(col("_janc")).as("_na"),
-          when(col("_anc").isNull, col("_path"))
-            .otherwise(concat(col("_jpath"), lit(sep), col("_path")))
-            .as("_path"),
-          when(col("_anc").isNull, col("_depth"))
-            .otherwise(col("_depth") + col("_jdepth")).as("_depth"),
-          when(col("_anc").isNull, col("_root"))
-            .otherwise(col("_jroot")).as("_root"))
-        .withColumnRenamed("_na", "_anc")
-        .select(col("_id"), col("_anc"), col("_path"), col("_depth"),
-          col("_root")))
-      state = next
-      liveN = n
-      Bridge.dropCheckpoint(prevState) // superseded; new state materialized
-      span *= 2
+          when(col("_pid").isNull, lit(null)).otherwise(col("_p")).as("_anc"),
+          col("_c")), "edges")
+      // the live-count (rows whose chain is still unresolved) is observed
+      // on every checkpoint action — no per-round isEmpty probe job and no
+      // re-probe for the final require (guide §2.4; the predicate is two
+      // null checks per row, so the metric pass costs nothing next to the
+      // doubling join itself)
+      val liveRows = coalesce(sum(when(col("_anc").isNotNull, 1L)
+        .otherwise(0L)), lit(0L))
+      val (state0, live0) = st.observed(
+        e.select(col("_id"), col("_anc"), col("_c").as("_path"),
+          lit(1L).as("_depth"),
+          when(col("_anc").isNull, col("_id")).as("_root")), "init")(
+        liveRows.as("_live"))
+      val res =
+        if (live0("_live") == 0L) Fixpoint.Result(state0, 0L)
+        else Fixpoint.iterate(state0,
+            Fixpoint.doublingRounds(maxDepth)) { (state, _) =>
+          val j = state.select(col("_id").as("_jid"), col("_anc").as("_janc"),
+            col("_path").as("_jpath"), col("_depth").as("_jdepth"),
+            col("_root").as("_jroot"))
+          state.join(j, state("_anc") === j("_jid"), "left")
+            .select(col("_id"),
+              when(col("_anc").isNull, col("_anc"))
+                .otherwise(col("_janc")).as("_na"),
+              when(col("_anc").isNull, col("_path"))
+                .otherwise(concat(col("_jpath"), lit(sep), col("_path")))
+                .as("_path"),
+              when(col("_anc").isNull, col("_depth"))
+                .otherwise(col("_depth") + col("_jdepth")).as("_depth"),
+              when(col("_anc").isNull, col("_root"))
+                .otherwise(col("_jroot")).as("_root"))
+            .withColumnRenamed("_na", "_anc")
+            .select(col("_id"), col("_anc"), col("_path"), col("_depth"),
+              col("_root"))
+        }(Fixpoint.Observed(liveRows))
+      require(res.live == 0,
+        s"pathLinearize: ancestor chain deeper than maxDepth=$maxDepth")
+      val parents = e.filter(col("_anc").isNotNull)
+        .select(col("_anc").as("_id")).distinct()
+        .withColumn("_hasChild", lit(true))
+      res.state.join(parents, Seq("_id"), "left")
+        .select(col("_id").as(idCol), col("_root").as("root"),
+          col("_path").as("conversation"), col("_depth").as("n_turns"),
+          col("_hasChild").isNull.as("is_leaf"))
     }
-    require(liveN == 0,
-      s"pathLinearize: ancestor chain deeper than maxDepth=$maxDepth")
-    val parents = e.filter(col("_anc").isNotNull)
-      .select(col("_anc").as("_id")).distinct()
-      .withColumn("_hasChild", lit(true))
-    state.join(parents, Seq("_id"), "left")
-      .select(col("_id").as(idCol), col("_root").as("root"),
-        col("_path").as("conversation"), col("_depth").as("n_turns"),
-        col("_hasChild").isNull.as("is_leaf"))
-  }
 }

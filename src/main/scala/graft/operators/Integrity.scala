@@ -1,8 +1,7 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.graftbridge.Bridge
 
 /** Referential-integrity algebra — Spark has no FKs, so the reference's
   * SQLite constraint semantics (schema.sql:1,14,25-26,39-41,67,91) become
@@ -16,7 +15,7 @@ import org.apache.spark.sql.graftbridge.Bridge
   * Scale: parent key-sets are projections of dimension tables → broadcast;
   * the only shuffles are on the FK columns themselves. The recursive
   * fixpoint iterates driver-side over *plans* (no collect of data rows —
-  * only an isEmpty check per round).
+  * only a row count observed on each round's checkpoint action).
   */
 object Integrity {
 
@@ -51,55 +50,45 @@ object Integrity {
     * deleted key set. `maxDepth` caps pathological chains.
     *
     * Each round: frontier = rows whose `parentCol` semi-joins the current
-    * frontier keys, minus already-deleted. Plans accumulate; `localCheckpoint`
-    * every round truncates lineage so depth-k trees don't build k-deep
-    * plan stacks (important for deep threads at scale). */
+    * frontier keys, minus already-deleted; the frontier and the grown
+    * deleted set each checkpoint per round (a [[Stage]]), so depth-k trees
+    * don't build k-deep plan stacks. The frontier's row count is observed
+    * on its own checkpoint action instead of costing an isEmpty job per
+    * level (the per-level driver round-trips dominate deep cascades, not
+    * data). */
   def cascadeRecursive(table: DataFrame, pk: String, parentCol: String,
-      seedKeys: DataFrame, maxDepth: Int = 100): DataFrame = {
-    // synthetic column names avoid self-join attribute ambiguity; the
-    // edge projection is probed once per round, so pin it (memory,
-    // spilling to disk) instead of re-running the scan each level —
-    // unpinned after the fixpoint
-    val edges = table.select(col(pk).as("_k"), col(parentCol).as("_p"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
-      var (deleted, seedN) =
-        materializeCounted(seedKeys.select(col(pk).as("_k")).distinct())
+      seedKeys: DataFrame, maxDepth: Int = 100): DataFrame =
+    Stage("Integrity.cascadeRecursive") { st =>
+      // synthetic column names avoid self-join attribute ambiguity; the
+      // edge projection is probed once per round, so pin it instead of
+      // re-running the scan each level
+      val edges = st.pin(
+        table.select(col(pk).as("_k"), col(parentCol).as("_p")))
+      var (deleted, frontierN) =
+        st.counted(seedKeys.select(col(pk).as("_k")).distinct(), "seeds")
       var frontier = deleted
-      var frontierN = seedN
       var depth = 0
       while (depth < maxDepth && frontierN > 0) {
-        val (next, n) = materializeCounted(edges
+        depth += 1
+        val (next, n) = st.counted(edges
           .join(broadcast(frontier.select(col("_k").as("_p"))), Seq("_p"),
             "left_semi")
           .select("_k")
-          .join(deleted, Seq("_k"), "left_anti"))
+          .join(deleted, Seq("_k"), "left_anti"), s"level$depth")
         // round 1's frontier IS deleted (the seed checkpoint) — guard the
-        // drop by identity so the live accumulator is never unpersisted
-        if (!(frontier eq deleted)) Bridge.dropCheckpoint(frontier)
+        // release by identity so the live accumulator is never dropped
+        if (!(frontier eq deleted)) st.release(frontier)
         frontier = next
         frontierN = n
         if (n > 0) {
           val prevDeleted = deleted
-          deleted = deleted.unionByName(next).localCheckpoint(true)
-          Bridge.dropCheckpoint(prevDeleted) // superseded; union eager
+          deleted = st.checkpoint(deleted.unionByName(next),
+            s"level$depth/deleted")
+          st.release(prevDeleted)
         }
-        depth += 1
       }
-      if (!(frontier eq deleted)) Bridge.dropCheckpoint(frontier)
       deleted.select(col("_k").as(pk))
-    } finally edges.unpersist(blocking = false)
-  }
-
-  /** Eager localCheckpoint that also returns the row count, captured via
-    * `observe` from the SAME action the checkpoint runs — one driver-
-    * synchronous job per fixpoint level instead of checkpoint + isEmpty
-    * (the per-level driver round-trips dominate deep cascades, not data). */
-  private def materializeCounted(df: DataFrame): (DataFrame, Long) = {
-    val obs = org.apache.spark.sql.Observation()
-    val chk = df.observe(obs, count(lit(1)).as("n")).localCheckpoint(true)
-    (chk, obs.get("n").asInstanceOf[Long])
-  }
+    }
 
   /** J3 at scale — the same fixpoint via POINTER DOUBLING (path doubling
     * over the parent functional graph, the classic PRAM transitive-closure
@@ -117,44 +106,40 @@ object Integrity {
     * least `maxDepth`, rounded up to the next power of two.
     */
   def cascadeRecursiveDoubling(table: DataFrame, pk: String, parentCol: String,
-      seedKeys: DataFrame, maxDepth: Int = 100): DataFrame = {
-    val seedSet = seedKeys.select(col(pk).as("_k")).distinct()
-      .localCheckpoint(true)
-    val seeds = seedSet.withColumn("_seed", lit(true))
-    // state: (_k, _ptr = 2^i-th ancestor | null past chain end,
-    //         _hit = seed among first 2^i chain nodes)
-    var state = table.select(col(pk).as("_k"), col(parentCol).as("_ptr"))
-      .join(seeds, Seq("_k"), "left")
-      .select(col("_k"), col("_ptr"),
-        coalesce(col("_seed"), lit(false)).as("_hit"))
-      .localCheckpoint(true)
-    var span = 1L
-    var live = true
-    while (live && span < maxDepth) {
-      val j = state.select(col("_k").as("_jk"), col("_ptr").as("_jptr"),
-        col("_hit").as("_jhit"))
-      val prevState = state
-      state = state.join(j, state("_ptr") === j("_jk"), "left")
-        .select(col("_k"), col("_jptr").as("_ptr"),
-          (col("_hit") || coalesce(col("_jhit"), lit(false))).as("_hit"))
-        .localCheckpoint(true)
-      Bridge.dropCheckpoint(prevState) // superseded; new state eager
-      span *= 2
+      seedKeys: DataFrame, maxDepth: Int = 100): DataFrame =
+    Stage("Integrity.cascadeRecursiveDoubling") { implicit st =>
+      val seedSet = st.checkpoint(
+        seedKeys.select(col(pk).as("_k")).distinct(), "seeds")
+      val seeds = seedSet.withColumn("_seed", lit(true))
+      // state: (_k, _ptr = 2^i-th ancestor | null past chain end,
+      //         _hit = seed among first 2^i chain nodes)
+      val state0 = st.checkpoint(
+        table.select(col(pk).as("_k"), col(parentCol).as("_ptr"))
+          .join(seeds, Seq("_k"), "left")
+          .select(col("_k"), col("_ptr"),
+            coalesce(col("_seed"), lit(false)).as("_hit")), "init")
       // done when nothing can still flip: every row is hit or chain-ended.
-      // Deliberately a separate isEmpty, NOT an observe() on the checkpoint:
-      // state is the FULL node table, and a CollectMetrics pass over it per
-      // round costs more than this early-exiting probe (measured; the
-      // observe trick pays off only on small frontier tables — see
-      // cascadeRecursive / connectedComponents, where the counted set is
-      // the frontier/labels, not the corpus).
-      live = !state.filter(col("_ptr").isNotNull && !col("_hit")).isEmpty
+      // Deliberately a separate probe, NOT an observed aggregate: state is
+      // the FULL node table, and a CollectMetrics pass over it per round
+      // costs more than this early-exiting isEmpty (measured; observing
+      // pays off only on small frontier tables — see cascadeRecursive /
+      // connectedComponents, where the counted set is the frontier/labels,
+      // not the corpus).
+      val state = Fixpoint.iterate(state0,
+          Fixpoint.doublingRounds(maxDepth)) { (state, _) =>
+        val j = state.select(col("_k").as("_jk"), col("_ptr").as("_jptr"),
+          col("_hit").as("_jhit"))
+        state.join(j, state("_ptr") === j("_jk"), "left")
+          .select(col("_k"), col("_jptr").as("_ptr"),
+            (col("_hit") || coalesce(col("_jhit"), lit(false))).as("_hit"))
+      }(Fixpoint.Probe(s =>
+        !s.filter(col("_ptr").isNotNull && !col("_hit")).isEmpty)).state
+      // union the seed set itself: a seed with no row in `table` is still
+      // deleted (the level-wise form starts `deleted` from the seeds)
+      state.filter(col("_hit")).select(col("_k"))
+        .unionByName(seedSet).distinct()
+        .select(col("_k").as(pk))
     }
-    // union the seed set itself: a seed with no row in `table` is still
-    // deleted (the level-wise form starts `deleted` from the seeds)
-    state.filter(col("_hit")).select(col("_k"))
-      .unionByName(seedSet).distinct()
-      .select(col("_k").as(pk))
-  }
 
   /** W5 composite — delete a video with its cascades (schema.sql:25,39,41;
     * exercised by Unarchive, cmds/archive.py:408). Returns the surviving

@@ -1123,18 +1123,16 @@ object Similarity {
   def topDirection(df: DataFrame, vecCol: String, iters: Int,
       scale: Long = 1000000L): DataFrame = {
     require(iters >= 1, s"iters must be >= 1, got $iters")
-    val e = df
-      .filter(col(vecCol).isNotNull)
-      .withColumn("_rid", monotonically_increasing_id())
-      .select(col("_rid"), posexplode(vecD(col(vecCol))).as(Seq("dim", "x")))
-      .select(col("_rid"), col("dim").cast("long").as("dim"),
-        expr("CAST(round(x * 1000) AS BIGINT)").as("e"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
-      var v = e.select(col("dim")).distinct()
-        .withColumn("v", lit(scale))
-        .localCheckpoint(true)
-      for (_ <- 1 to iters) {
+    Stage("Similarity.topDirection") { implicit st =>
+      val e = st.pin(df
+        .filter(col(vecCol).isNotNull)
+        .withColumn("_rid", monotonically_increasing_id())
+        .select(col("_rid"), posexplode(vecD(col(vecCol))).as(Seq("dim", "x")))
+        .select(col("_rid"), col("dim").cast("long").as("dim"),
+          expr("CAST(round(x * 1000) AS BIGINT)").as("e")))
+      val v0 = st.checkpoint(e.select(col("dim")).distinct()
+        .withColumn("v", lit(scale)), "init")
+      Fixpoint.iterate(v0, iters) { (v, _) =>
         val y = e.join(broadcast(v), Seq("dim"))
           .groupBy(col("_rid"))
           .agg(sum(expr("e * v")).as("y"))
@@ -1143,13 +1141,11 @@ object Similarity {
           .agg(sum(expr("CAST(e AS DECIMAL(38,0)) * " +
             "CAST(y AS DECIMAL(38,0))")).as("w"))
         val t = w.agg(sum(abs(col("w"))).as("t"))
-        v = w.crossJoin(broadcast(t))
+        w.crossJoin(broadcast(t))
           .select(col("dim"), expr(
             s"CASE WHEN t = 0 THEN CAST(0 AS BIGINT) " +
               s"ELSE CAST($scale AS DECIMAL(38,0)) * w div t END").as("v"))
-          .localCheckpoint(true)
-      }
-      v.select(col("dim"), col("v"))
-    } finally e.unpersist(blocking = false)
+      }(Fixpoint.AllRounds).state
+    }
   }
 }

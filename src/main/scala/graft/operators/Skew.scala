@@ -4,7 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 /** Skew mitigation (SURVEY §4 / 100 TB stance): salted two-phase
-  * aggregation and salted broadcast join.
+  * aggregation and a skew pre-flight report.
   *
   * A hot grouping key (one key holding a large fraction of rows) turns
   * one reducer into the straggler. Salting splits each key into
@@ -29,20 +29,6 @@ object Skew {
     val finalAggs = sumCols.map(c => sum(col(s"_p_$c")).as(s"sum_$c")) :+
       sum(col("_p_cnt")).as("n")
     partial.groupBy(col(key)).agg(finalAggs.head, finalAggs.tail: _*)
-  }
-
-  /** Salted broadcast join for a skewed fact⋈dim: replicate each dim row
-    * `saltBuckets` times with a salt column, salt the fact rows, join on
-    * (key, salt). Only needed when the dim is too big to broadcast whole
-    * AND the fact keys are skewed; with AQE skew-join this is rarely
-    * required — provided for explicit control. */
-  def saltedBroadcastJoin(fact: DataFrame, dim: DataFrame, key: String,
-      saltBuckets: Int = 16): DataFrame = {
-    val saltedFact = fact.withColumn("_salt",
-      pmod(xxhash64(monotonically_increasing_id()), lit(saltBuckets)))
-    val saltedDim = dim.withColumn("_salt",
-      explode(sequence(lit(0), lit(saltBuckets - 1))).cast("long"))
-    saltedFact.join(broadcast(saltedDim), Seq(key, "_salt")).drop("_salt")
   }
 
   /** [NS] — skew pre-flight report: the numbers that decide WHETHER to

@@ -186,34 +186,29 @@ object Temporal {
       bCol: String, tsCol: String, seeds: DataFrame,
       rounds: Int): DataFrame = {
     require(rounds >= 1, s"rounds must be >= 1, got $rounds")
-    val und = contacts.select(col(aCol).cast("long").as("_u"),
-        col(bCol).cast("long").as("_v"), col(tsCol).cast("long").as("_ct"))
-      .unionByName(contacts.select(col(bCol).cast("long").as("_u"),
-        col(aCol).cast("long").as("_v"), col(tsCol).cast("long").as("_ct")))
-      .distinct()
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
-      var arr = seeds.select(col("node").cast("long").as("_n"))
+    Stage("Temporal.timeRespectingReach") { implicit st =>
+      val und = st.pin(contacts.select(col(aCol).cast("long").as("_u"),
+          col(bCol).cast("long").as("_v"), col(tsCol).cast("long").as("_ct"))
+        .unionByName(contacts.select(col(bCol).cast("long").as("_u"),
+          col(aCol).cast("long").as("_v"), col(tsCol).cast("long").as("_ct")))
+        .distinct())
+      val arr0 = st.checkpoint(seeds.select(col("node").cast("long").as("_n"))
         .distinct()
-        .withColumn("_at", lit(0L))
-        .localCheckpoint(true)
-      for (_ <- 1 to rounds) {
-        val prevArr = arr
+        .withColumn("_at", lit(0L)), "seeds")
+      Fixpoint.iterate(arr0, rounds) { (arr, _) =>
         val prop = und
           .join(arr.select(col("_n").as("_u"), col("_at")), "_u")
           .filter(col("_ct") >= col("_at"))
           .groupBy(col("_v"))
           .agg(min(col("_ct")).as("_cand"))
           .select(col("_v").as("_n"), col("_cand"))
-        arr = arr.join(prop, Seq("_n"), "full")
+        arr.join(prop, Seq("_n"), "full")
           .select(col("_n"), expr(
             "CASE WHEN _at IS NULL THEN _cand " +
               "WHEN _cand IS NULL THEN _at " +
               "ELSE least(_at, _cand) END").as("_at"))
-          .localCheckpoint(true)
-        org.apache.spark.sql.graftbridge.Bridge.dropCheckpoint(prevArr)
-      }
-      arr.select(col("_n").as("node"), col("_at").as("arrival_us"))
-    } finally und.unpersist(blocking = false)
+      }(Fixpoint.AllRounds).state
+        .select(col("_n").as("node"), col("_at").as("arrival_us"))
+    }
   }
 }

@@ -72,16 +72,4 @@ object PlaylistIngest {
       .withColumn("pl", row_number().over(w).cast("long"))
       .select(col("pl"), col("playlist"), col("video"), col("added"))
   }
-
-  /** API branch: refine a flat-playlist info record into the header row
-    * (timestamps via F7, cmds/archive.py:277-278). */
-  def playlistFromApi(info: DataFrame): DataFrame =
-    info.select(
-      col("id").as("playlist_id"),
-      col("channel_id").as("channel"),
-      Refine.parseIsoTs(col("created")).as("created"),
-      Refine.parseIsoTs(col("modified_date")).as("updated"),
-      col("title"),
-      col("description"),
-      col("availability").as("visibility"))
 }

@@ -113,10 +113,4 @@ object VideoIngest {
       .distinct()
       .withColumn("id", xxhash64(col("video"), col("tag")))
       .select(col("id"), col("video"), col("tag"))
-
-  /** Lost-video stub (cmds/archive.py:133): unrecoverable ids become
-    * availability='lost' placeholder rows. */
-  def lostStub(ids: DataFrame, idCol: String): DataFrame =
-    ids.select(col(idCol).as("video_id"))
-      .withColumn("availability", lit("lost"))
 }

@@ -40,6 +40,15 @@ object Bridge {
       case _ => ()
     }
 
+  /** Ids of the RDDs behind every local-checkpoint scan (LogicalRDD) that
+    * `df`'s plan reads, subqueries included — the checkpoints a lazy frame
+    * still needs when it runs. */
+  def checkpointRddIds(df: org.apache.spark.sql.Dataset[_]): Set[Int] =
+    df.asInstanceOf[org.apache.spark.sql.classic.Dataset[_]]
+      .queryExecution.logical.collectWithSubqueries {
+        case lr: org.apache.spark.sql.execution.LogicalRDD => lr.rdd.id
+      }.toSet
+
   /** DataFrame from a LogicalPlan (Dataset.ofRows is private[sql]) — used
     * by specs to execute a plan after applying an optimizer rule by hand. */
   def ofRows(spark: org.apache.spark.sql.SparkSession,

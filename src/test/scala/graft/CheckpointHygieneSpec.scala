@@ -20,14 +20,17 @@ import graft.operators.{Dedup, Graph, Integrity}
 class CheckpointHygieneSpec extends AnyFunSuite {
   lazy val spark = TestSpark.spark
 
-  /** Run `op`, consume its result, and return the growth in the session's
-    * persistent-RDD map (result frames included — callers pass the bound
-    * they expect for those). */
+  /** Run `op`, consume its result, and return how many of the RDDs it
+    * persisted are still persisted (result frames included — callers pass
+    * the bound they expect for those). Counting the ids that are new since
+    * the call, not the size of the session-wide map, keeps the figure
+    * independent of what earlier suites left behind and of when the
+    * ContextCleaner removes it. */
   private def rddDelta(op: => DataFrame): Long = {
-    val before = spark.sparkContext.getPersistentRDDs.size
+    val before = spark.sparkContext.getPersistentRDDs.keySet
     val out = op
     out.count() // consume like a query would
-    spark.sparkContext.getPersistentRDDs.size.toLong - before
+    (spark.sparkContext.getPersistentRDDs.keySet -- before).size.toLong
   }
 
   // a 40-node graph: one 20-cycle (high diameter, keeps BFS/CC iterating)
@@ -125,6 +128,16 @@ class CheckpointHygieneSpec extends AnyFunSuite {
       duels, "w", "l", iters = 6))
     // wins + the final strengths stay referenced by the returned join
     assert(d2 <= 2, s"bradleyTerry leaked $d2 (want <= 2)")
+  }
+
+  test("topDirection drops superseded per-iteration directions") {
+    import spark.implicits._
+    val vecs = (0L until 30L).map(i =>
+      Tuple1(Array.tabulate(6)(j => ((i % 5) + j * (i % 3)).toFloat)))
+      .toDF("embedding")
+    val d = rddDelta(graft.operators.Similarity.topDirection(
+      vecs, "embedding", iters = 6))
+    assert(d <= 1, s"topDirection leaked $d (want <= 1)")
   }
 
   test("cascadeRecursive (level-wise and doubling) drop superseded state") {
