@@ -1,8 +1,9 @@
 package graft.sinks
 
-import java.sql.{Connection, DriverManager, PreparedStatement, SQLException}
+import java.sql.{Connection, DatabaseMetaData, DriverManager, PreparedStatement,
+  SQLException}
+import java.util.Locale
 import org.apache.spark.sql.{DataFrame, Row}
-import org.apache.spark.sql.types.StructType
 
 /** The sink of record (north star: Structured Streaming + JDBC): the
   * reference's write semantics executed transactionally against a JDBC
@@ -60,35 +61,45 @@ final case class JdbcUpsertSink(
     } finally c.close()
   }
 
-  private def setParams(ps: PreparedStatement, row: Row, cols: Seq[String],
-      schema: StructType, offset: Int = 0): Unit =
-    cols.zipWithIndex.foreach { case (c, i) =>
-      val v = row.get(row.fieldIndex(c))
-      ps.setObject(offset + i + 1, v match {
-        case t: java.sql.Timestamp => t
-        case other => other
-      })
-    }
+  /** Bind `row`'s values at `ordinals` (resolved once per write: the
+    * schema is fixed) to parameters `offset + 1` onward. */
+  private def setParams(ps: PreparedStatement, row: Row, ordinals: Array[Int],
+      offset: Int = 0): Unit =
+    ordinals.indices.foreach(i =>
+      ps.setObject(offset + i + 1, row.get(ordinals(i))))
+
+  /** Run `write`'s per-partition body as the Spark job
+    * `JdbcUpsertSink.<write>/<table>`, then restore the caller's job
+    * description (a streaming batch keeps its own). */
+  private def runPartitions(write: String, df: DataFrame)(
+      body: Iterator[Row] => Unit): Unit = {
+    val sc = df.sparkSession.sparkContext
+    val prevDesc = sc.getLocalProperty(JdbcUpsertSink.JobDescription)
+    sc.setJobDescription(s"JdbcUpsertSink.$write/$table")
+    try df.foreachPartition(body)
+    finally sc.setLocalProperty(JdbcUpsertSink.JobDescription, prevDesc)
+  }
 
   /** W1 — INSERT OR IGNORE: try each insert, swallow key violations. */
-  def insertIfAbsent(df: DataFrame): Unit = upsert(df, guard = _ => false)
+  def insertIfAbsent(df: DataFrame): Unit =
+    guardedUpsert("insertIfAbsent", df, _ => false, None)
 
   /** W3 — plain append (fails on key violation, like the reference's
     * unguarded inserts). */
   def append(df: DataFrame): Unit = {
-    val schema = df.schema
-    val cols = schema.fieldNames.toSeq
+    val cols = df.schema.fieldNames.toSeq
+    val all = cols.indices.toArray
     val insertSql = s"INSERT INTO $table (${cols.mkString(",")}) VALUES " +
       s"(${cols.map(_ => "?").mkString(",")})"
     val u = url; val bs = batchSize
-    df.foreachPartition { (rows: Iterator[Row]) =>
+    runPartitions("append", df) { rows =>
       val c = DriverManager.getConnection(u)
       c.setAutoCommit(false)
       try {
         val ps = c.prepareStatement(insertSql)
         var n = 0
         rows.foreach { r =>
-          setParams(ps, r, cols, schema); ps.addBatch(); n += 1
+          setParams(ps, r, all); ps.addBatch(); n += 1
           if (n % bs == 0) ps.executeBatch()
         }
         ps.executeBatch()
@@ -102,11 +113,18 @@ final case class JdbcUpsertSink(
     * when `guard(row)` holds (never-downgrade, cmds/archive.py:162).
     * Default guard accepts every row (plain upsert). */
   def upsert(df: DataFrame, guard: Row => Boolean = _ => true,
-      setColsOpt: Option[Seq[String]] = None): Unit = {
+      setColsOpt: Option[Seq[String]] = None): Unit =
+    guardedUpsert("upsert", df, guard, setColsOpt)
+
+  private def guardedUpsert(write: String, df: DataFrame, guard: Row => Boolean,
+      setColsOpt: Option[Seq[String]]): Unit = {
     val schema = df.schema
     val cols = schema.fieldNames.toSeq
     val keys = keyCols
     val setCols = setColsOpt.getOrElse(cols.filterNot(keys.contains))
+    val all = cols.indices.toArray
+    val setOrd = setCols.map(schema.fieldIndex).toArray
+    val keyOrd = keys.map(schema.fieldIndex).toArray
     val insertSql = s"INSERT INTO $table (${cols.mkString(",")}) VALUES " +
       s"(${cols.map(_ => "?").mkString(",")})"
     val updateSql =
@@ -115,14 +133,14 @@ final case class JdbcUpsertSink(
         setCols.map(c => s"$c = ?").mkString(", ") +
         " WHERE " + keys.map(k => s"$k = ?").mkString(" AND ")
     val u = url
-    df.foreachPartition { (rows: Iterator[Row]) =>
+    runPartitions(write, df) { rows =>
       val c = DriverManager.getConnection(u)
       c.setAutoCommit(false)
       try {
         val ins = c.prepareStatement(insertSql)
         val upd = c.prepareStatement(updateSql)
         rows.foreach { r =>
-          setParams(ins, r, cols, schema)
+          setParams(ins, r, all)
           try ins.executeUpdate()
           catch {
             // Only the integrity-constraint class (SQLState 23xxx) is the
@@ -133,8 +151,8 @@ final case class JdbcUpsertSink(
             case e: SQLException if isIntegrityViolation(e) =>
               // all-key tables have nothing to update → dup is a no-op
               if (setCols.nonEmpty && guard(r)) {
-                setParams(upd, r, setCols, schema)
-                setParams(upd, r, keys, schema, offset = setCols.length)
+                setParams(upd, r, setOrd)
+                setParams(upd, r, keyOrd, offset = setOrd.length)
                 upd.executeUpdate()
               } // else: keep the existing row (never downgrade)
           }
@@ -165,8 +183,8 @@ final case class JdbcUpsertSink(
     * statements — the JDBC twin of a mergeable-sketch Aggregator. */
   def upsertStagedMerge(df: DataFrame, guardSql: String = "1=1",
       setExprs: Map[String, String] = Map.empty): Unit = {
-    val schema = df.schema
-    val cols = schema.fieldNames.toSeq
+    val cols = df.schema.fieldNames.toSeq
+    val all = cols.indices.toArray
     val keys = keyCols
     val setCols = cols.filterNot(keys.contains)
     val unknown = setExprs.keySet -- setCols
@@ -174,7 +192,7 @@ final case class JdbcUpsertSink(
       s"setExprs for non-updatable columns (not in the batch, or key " +
         s"columns, which MERGE cannot update): ${unknown.mkString(", ")}")
     val u = url; val tbl = table; val bs = batchSize
-    df.foreachPartition { (rows: Iterator[Row]) =>
+    runPartitions("upsertStagedMerge", df) { rows =>
       if (rows.hasNext) {
         // staging name must be unique per task ATTEMPT, not per partition:
         // a speculative duplicate or retry of the same partition must not
@@ -191,7 +209,9 @@ final case class JdbcUpsertSink(
           // on DBs with non-transactional DDL a failed attempt's table
           // would otherwise be orphaned forever.
           try {
-            val rs = c.getMetaData.getTables(null, null, prefix + "%", null)
+            val md = c.getMetaData
+            val rs = md.getTables(null, null,
+              JdbcUpsertSink.prefixPattern(md, prefix), null)
             val leftovers = Iterator.continually(rs)
               .takeWhile(_.next()).map(_.getString("TABLE_NAME")).toList
             leftovers.foreach { t =>
@@ -208,7 +228,7 @@ final case class JdbcUpsertSink(
               s"(${cols.map(_ => "?").mkString(",")})")
           var n = 0
           rows.foreach { r =>
-            setParams(ins, r, cols, schema); ins.addBatch(); n += 1
+            setParams(ins, r, all); ins.addBatch(); n += 1
             if (n % bs == 0) ins.executeBatch()
           }
           ins.executeBatch()
@@ -237,19 +257,19 @@ final case class JdbcUpsertSink(
     * absent key is a no-op, so micro-batch replays after failure are
     * harmless). `df` needs only the key columns. */
   def deleteByKeys(df: DataFrame): Unit = {
-    val schema = df.schema
     val keys = keyCols
+    val keyOrd = keys.map(df.schema.fieldIndex).toArray
     val delSql = s"DELETE FROM $table WHERE " +
       keys.map(k => s"$k = ?").mkString(" AND ")
     val u = url; val bs = batchSize
-    df.foreachPartition { (rows: Iterator[Row]) =>
+    runPartitions("deleteByKeys", df) { rows =>
       val c = DriverManager.getConnection(u)
       c.setAutoCommit(false)
       try {
         val ps = c.prepareStatement(delSql)
         var n = 0
         rows.foreach { r =>
-          setParams(ps, r, keys, schema); ps.addBatch(); n += 1
+          setParams(ps, r, keyOrd); ps.addBatch(); n += 1
           if (n % bs == 0) ps.executeBatch()
         }
         ps.executeBatch()
@@ -293,12 +313,38 @@ final case class JdbcUpsertSink(
     (batch: DataFrame, _: Long) => upsert(batch, guard)
 
   /** Streaming hookup for the set-based scale path: each epoch runs the
-    * staged MERGE (one transaction per partition). Replayed epochs are
-    * idempotent — MERGE keyed on the PK re-matches instead of duplicating.
-    * Rows must be key-unique within an epoch (watermarked dedup upstream
-    * guarantees this for the history pipeline). */
+    * staged MERGE (one transaction per partition). A MERGE source is a
+    * set, so the epoch is staged distinct: its exact duplicate rows
+    * collapse, and duplicates of earlier epochs or replays re-match the
+    * keyed MERGE instead of inserting twice (the reference's one key
+    * probe, cmds/archive.py:339-342). Streams need no dedup state of
+    * their own. The epoch is clustered by key first, so rows that share
+    * a key but differ elsewhere meet in one partition's MERGE and fail
+    * it, as the key-unique contract of [[upsertStagedMerge]] requires. */
   def foreachBatchStagedMerge(guardSql: String = "1=1",
       setExprs: Map[String, String] = Map.empty)
       : (DataFrame, Long) => Unit =
-    (batch: DataFrame, _: Long) => upsertStagedMerge(batch, guardSql, setExprs)
+    (batch: DataFrame, _: Long) => upsertStagedMerge(
+      batch.repartition(keyCols.map(batch(_)): _*).distinct(),
+      guardSql, setExprs)
+}
+
+object JdbcUpsertSink {
+  private val JobDescription = "spark.job.description"
+
+  /** `getTables` pattern for the tables named `prefix`…: folded to the
+    * case the database stores unquoted identifiers in (Derby: upper),
+    * with `_` and `%` escaped so they match only themselves. */
+  private def prefixPattern(md: DatabaseMetaData, prefix: String): String = {
+    val folded =
+      if (md.storesUpperCaseIdentifiers) prefix.toUpperCase(Locale.ROOT)
+      else if (md.storesLowerCaseIdentifiers) prefix.toLowerCase(Locale.ROOT)
+      else prefix
+    val esc = Option(md.getSearchStringEscape).getOrElse("")
+    val escaped =
+      if (esc.isEmpty) folded
+      else folded.replace(esc, esc + esc).replace("_", esc + "_")
+        .replace("%", esc + "%")
+    escaped + "%"
+  }
 }

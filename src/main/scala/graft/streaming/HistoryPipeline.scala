@@ -7,14 +7,15 @@ import graft.functions.Refine
 /** The reference's watch-history ingest (E3, cmds/archive.py:317-352) as a
   * Structured Streaming pipeline: Takeout JSON events (titleUrl, time) →
   * id extraction (F10) → validity filter (F1) → timestamp parse (F7) →
-  * dedup on (video, watched) (D2) → append sink.
+  * dedup on (video, watched) (D2).
   *
-  * Works identically on a batch or streaming DataFrame (same transform
-  * function — Structured Streaming's unified API). The streaming form adds
-  * a watermark + dropDuplicatesWithinWatermark so operator state stays
-  * bounded: the reference accepts arbitrarily late rows into an idempotent
-  * PK-guarded sink, which maps to a generous watermark + idempotent
-  * foreachBatch merge (SURVEY §2.9).
+  * The batch form dedups in Spark. The streaming form is the stateless
+  * refine chain only: the reference dedups with one probe of the table's
+  * (video, watched) key and keeps events however late they arrive, and
+  * the keyed sink does the same —
+  * [[graft.sinks.JdbcUpsertSink.foreachBatchStagedMerge]] stages each
+  * epoch distinct and its MERGE absorbs rows already stored. No operator
+  * state, no watermark, no late row dropped (SURVEY §2.9).
   */
 object HistoryPipeline {
 
@@ -34,12 +35,8 @@ object HistoryPipeline {
   def batch(raw: DataFrame): DataFrame =
     refine(raw).dropDuplicates("video", "watched")
 
-  /** Streaming form: watermarked dedup keeps state bounded while matching
-    * the reference's accept-late-rows behavior within the watermark. */
-  def stream(raw: DataFrame, watermark: String = "7 days"): DataFrame =
-    refine(raw)
-      .withWatermark("watched", watermark)
-      .dropDuplicatesWithinWatermark("video", "watched")
+  /** Streaming form: the refine chain, deduplicated by a keyed sink. */
+  def stream(raw: DataFrame): DataFrame = refine(raw)
 
   /** A2 — the unavailable-entry counter (cmds/archive.py:330-335). */
   def unavailableCount(raw: DataFrame): DataFrame =

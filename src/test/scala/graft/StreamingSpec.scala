@@ -5,8 +5,8 @@ import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import graft.streaming.{EventStream, HistoryPipeline}
 
-/** SURVEY §2.9 — streaming semantics: watch-history dedup within
-  * watermark, windowed aggregation, custom stateful totals; MemoryStream
+/** SURVEY §2.9 — streaming semantics: watch-history dedup at the keyed
+  * sink, windowed aggregation, custom stateful totals; MemoryStream
   * driven, processAllAvailable for deterministic assertions. */
 class StreamingSpec extends AnyFunSuite {
   lazy val spark = TestSpark.spark
@@ -26,30 +26,34 @@ class StreamingSpec extends AnyFunSuite {
     assert(counts.getAs[Long]("n_total") === 5L)
   }
 
-  test("E3 history stream: dropDuplicatesWithinWatermark over MemoryStream") {
+  test("E3 history stream: keyed MERGE absorbs a cross-epoch duplicate") {
     import spark.implicits._
+    import graft.sinks.JdbcUpsertSink
     implicit val sq = spark.sqlContext
+    val sink = JdbcUpsertSink("jdbc:derby:memory:hist_mem;create=true",
+      "history", Seq("video", "watched"))
+    sink.execDdl("""CREATE TABLE history (
+      video VARCHAR(16) NOT NULL, watched TIMESTAMP NOT NULL,
+      PRIMARY KEY (video, watched))""")
     val mem = MemoryStream[(String, String)]
     val raw = mem.toDF().toDF("titleUrl", "time")
-    val q = HistoryPipeline.stream(raw).writeStream
-      .format("memory").queryName("hist_out").outputMode("append").start()
+    val q = HistoryPipeline.stream(raw).writeStream.outputMode("append")
+      .foreachBatch(sink.foreachBatchStagedMerge()).start()
     try {
       mem.addData(
         ("https://www.youtube.com/watch?v=dQw4w9WgXcQ", "2024-01-01T10:00:00Z"),
         ("https://www.youtube.com/watch?v=dQw4w9WgXcQ", "2024-01-01T10:00:00Z"))
       q.processAllAvailable()
-      // duplicate arriving in a later micro-batch is still dropped
+      // duplicate arriving in a later micro-batch matches the stored key
       mem.addData(
         ("https://www.youtube.com/watch?v=dQw4w9WgXcQ", "2024-01-01T10:00:00Z"),
         ("https://www.youtube.com/watch?v=aaaaaaaaaaa", "2024-01-01T10:05:00Z"))
       q.processAllAvailable()
-      val rows = spark.table("hist_out").collect()
-      assert(rows.length === 2)
+      assert(sink.queryCount() === 2)
     } finally q.stop()
   }
 
-  test("E3 end-to-end: history JSONL files -> watermark dedup -> Derby " +
-      "staged MERGE, exactly-once across a checkpoint restart") {
+  test("E3 end-to-end: JSONL files -> staged MERGE, exactly-once across restart") {
     import java.nio.file.{Files, Paths}
     import org.apache.spark.sql.streaming.Trigger
     import graft.sinks.JdbcUpsertSink
@@ -89,17 +93,58 @@ class StreamingSpec extends AnyFunSuite {
     assert(sink.queryCount() === 2)
 
     // second epoch after a full query restart from the same checkpoint:
-    // a replayed duplicate (must be dropped by checkpointed dedup state —
-    // and even past the watermark the keyed MERGE stays idempotent), a
-    // late-but-within-watermark event, and a fresh one
+    // a replayed duplicate (absorbed by the keyed MERGE), a late event
+    // and a fresh one
     writeJsonl("batch2.json", Seq(
       ev("dQw4w9WgXcQ", "2024-01-02T10:00:00Z"), // replay of batch 1
-      ev("aaaaaaaaaaa", "2024-01-01T09:00:00Z"), // late, within 7d watermark
+      ev("aaaaaaaaaaa", "2024-01-01T09:00:00Z"), // late
       ev("bbbbbbbbbbb", "2024-01-02T12:00:00Z")))
     runOnce()
     assert(sink.queryCount() === 4)
     // per-key: the replayed pair exists exactly once
     assert(sink.queryCount("video = 'dQw4w9WgXcQ'") === 1)
+  }
+
+  test("E3 out-of-order export: an event 7+ days older than the last file is kept") {
+    import java.nio.file.{Files, Paths}
+    import org.apache.spark.sql.streaming.Trigger
+    import graft.sinks.JdbcUpsertSink
+    import graft.sources.Sources
+
+    val dir = Files.createTempDirectory("hist_ooo").toString
+    val ckpt = Files.createTempDirectory("hist_ooo_ckpt").toString
+    val url = "jdbc:derby:memory:ooo_hist;create=true"
+    val sink = JdbcUpsertSink(url, "history", Seq("video", "watched"))
+    sink.execDdl("""CREATE TABLE history (
+      video VARCHAR(16) NOT NULL, watched TIMESTAMP NOT NULL,
+      PRIMARY KEY (video, watched))""")
+    def ev(id: String, t: String): String =
+      s"""{"titleUrl":"https://www.youtube.com/watch?v=$id","time":"$t"}"""
+    def drop(name: String, lines: String*): Unit = {
+      Files.write(Paths.get(dir, name), lines.mkString("\n").getBytes("UTF-8"))
+      HistoryPipeline.stream(Sources.takeoutHistoryStream(spark, dir))
+        .writeStream
+        .option("checkpointLocation", ckpt)
+        .outputMode("append")
+        .trigger(Trigger.AvailableNow())
+        .foreachBatch(sink.foreachBatchStagedMerge())
+        .start()
+        .awaitTermination()
+    }
+    drop("export1.json",
+      ev("dQw4w9WgXcQ", "2024-03-20T10:00:00Z"),
+      ev("aaaaaaaaaaa", "2024-03-01T10:00:00Z"))
+    // an older export arrives second: its new event is 19 days older than
+    // the newest event already stored
+    drop("export2.json",
+      ev("bbbbbbbbbbb", "2024-03-01T09:00:00Z"),
+      ev("aaaaaaaaaaa", "2024-03-01T10:00:00Z"))
+    val stored = spark.read.format("jdbc").option("url", url)
+      .option("dbtable", "history").load()
+    val want = HistoryPipeline.batch(
+      spark.read.schema(Schemas.takeoutHistory).json(dir))
+    assert(stored.collect().toSet === want.collect().toSet)
+    assert(stored.count() === 3)
   }
 
   test("streaming CDC loop: q95's changelog through a file stream + " +
