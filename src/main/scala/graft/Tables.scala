@@ -2,16 +2,17 @@ package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions.{col, expr, timestamp_micros}
-import org.apache.spark.sql.types.{LongType, TimestampNTZType}
+import org.apache.spark.sql.types.{LongType, StructType, TimestampNTZType}
 
 /** Loaders for the driver-generated parquet tables (TESTDATA.md).
   *
   * Scale notes (100 TB design stance): every loader is a plain parquet scan
   * so Catalyst's column pruning + predicate pushdown reach the file source;
-  * no caching or collect here. Dimension tables (`region`, `nation`,
-  * `supplier`, `part`, `customer` at small SF) are broadcast-joined by the
-  * queries; fact tables (`lineitem`, `orders`, `events`) shuffle on join
-  * keys only when the join is fact-to-fact.
+  * schema metadata is resolved once per file; rows are never cached on the
+  * cold path. Dimension tables (`region`, `nation`, `supplier`, `part`,
+  * `customer` at small SF) are broadcast-joined by the queries; fact tables
+  * (`lineitem`, `orders`, `events`) shuffle on join keys only when the join
+  * is fact-to-fact.
   */
 object Tables {
   val star: Seq[String] =
@@ -131,7 +132,8 @@ object Tables {
     //    TIMESTAMP under the UTC session zone — bit-identical micros, and
     //    the same values DuckDB (naive timestamps throughout) computes on.
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    val df = spark.read.parquet(s"$sfDir/$name.parquet")
+    val path = s"$sfDir/$name.parquet"
+    val df = spark.read.schema(parquetSchema(spark, path)).parquet(path)
     df.schema.find(_.name == "ts").map(_.dataType) match {
       case Some(LongType) =>
         df.withColumn("ts", timestamp_micros(expr("ts div 1000")))
@@ -139,6 +141,37 @@ object Tables {
         df.withColumn("ts", col("ts").cast("timestamp"))
       case _ => df
     }
+  }
+
+  /** Spark's inferred schema per (file listing, parquet read settings).
+    * Inference is a Spark job of its own, and a table's files do not change
+    * between the queries that read them, so each listing is inferred once.
+    * The key holds every listed file's path, length and modification time
+    * from the Hadoop FileSystem (a table rewritten at the same path is
+    * inferred again) and the session's explicitly set settings that steer
+    * parquet inference (a session that reads parquet differently never gets
+    * another's schema). Only the StructType is kept, never rows. */
+  private val schemaCache = scala.collection.concurrent.TrieMap[
+    (Seq[(String, Long, Long)], Seq[(String, String)]), StructType]()
+
+  private def steersInference(key: String): Boolean =
+    key.contains("parquet") || key == "spark.sql.caseSensitive" ||
+      key.startsWith("spark.sql.files.ignore")
+
+  private def parquetSchema(spark: SparkSession, path: String): StructType = {
+    val p = new org.apache.hadoop.fs.Path(path)
+    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    // a missing path keys an empty listing: inference then raises Spark's
+    // own error and nothing is cached
+    val files =
+      if (!fs.exists(p)) Seq.empty
+      else fs.listStatus(p).toSeq
+        .map(s => (s.getPath.toString, s.getLen, s.getModificationTime))
+        .sorted
+    val settings = spark.conf.getAll.toSeq.filter(kv => steersInference(kv._1))
+      .sorted
+    schemaCache.getOrElseUpdate((files, settings),
+      spark.read.parquet(path).schema)
   }
 
   def region(s: SparkSession, d: String): DataFrame    = load(s, d, "region")

@@ -70,6 +70,9 @@ object RecModel {
     val (g, _) = current(dir)
     s"${genDir(dir, g.max(0L))}/anchors"
   }
+  /** The current generation's stored anchors (userCol, anchor, ...). */
+  def storedAnchors(spark: SparkSession, dir: String): DataFrame =
+    spark.read.parquet(anchorsPath(dir))
 
   private def writeGen(sims: DataFrame, anchors: DataFrame, dir: String,
       gen: Long): Unit = {
@@ -239,7 +242,7 @@ object RecModel {
   def serveTopK(spark: SparkSession, dir: String, userCol: String,
       k: Int): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    val anchors = spark.read.parquet(anchorsPath(dir))
+    val anchors = storedAnchors(spark, dir)
     val sims = spark.read.parquet(simsPath(dir))
     anchors.join(sims, Seq("anchor"))
       .withColumn("rk", row_number().over(

@@ -962,8 +962,7 @@ object GraphQueries {
       graft.operators.RecModel.buildIfAbsent(train, "user_id", "item",
         10, 1L, dir, d + "#cooc10-v1")
       val recs = graft.operators.RecModel.serveTopK(s, dir, "user_id", 10)
-      val anchors = s.read
-        .parquet(graft.operators.RecModel.anchorsPath(dir))
+      val anchors = graft.operators.RecModel.storedAnchors(s, dir)
         .select($"user_id")
       val evalUsers = test.join(anchors, Seq("user_id"), "left_semi")
         .localCheckpoint(true)
@@ -1012,8 +1011,7 @@ object GraphQueries {
           10, 1L, dir, epoch = 0L)
       }
       val recs = graft.operators.RecModel.serveTopK(s, dir, "user_id", 10)
-      val anchors = s.read
-        .parquet(graft.operators.RecModel.anchorsPath(dir))
+      val anchors = graft.operators.RecModel.storedAnchors(s, dir)
         .select($"user_id")
       val evalUsers = test.join(anchors, Seq("user_id"), "left_semi")
         .localCheckpoint(true)
@@ -1063,8 +1061,7 @@ object GraphQueries {
           10, 1L, dir, epoch = 0L)
       }
       val recs = graft.operators.RecModel.serveTopK(s, dir, "user_id", 10)
-      val anchors = s.read
-        .parquet(graft.operators.RecModel.anchorsPath(dir))
+      val anchors = graft.operators.RecModel.storedAnchors(s, dir)
         .select($"user_id")
       val evalUsers = test.join(anchors, Seq("user_id"), "left_semi")
         .localCheckpoint(true)
@@ -1120,8 +1117,7 @@ object GraphQueries {
           epoch = 0L)
       }
       val recs = graft.operators.RecModel.serveTopK(s, dir, "user_id", 10)
-      val anchors = s.read
-        .parquet(graft.operators.RecModel.anchorsPath(dir))
+      val anchors = graft.operators.RecModel.storedAnchors(s, dir)
         .select($"user_id")
       val evalUsers = test.join(anchors, Seq("user_id"), "left_semi")
         .localCheckpoint(true)

@@ -1,7 +1,9 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{DataType, IntegerType, LongType, StringType,
+  StructField, StructType}
 
 /** [NS] Durable mergeable-sketch state for streaming — the heavy-hitter
   * twin of [[graft.operators.DedupIndex.foreachBatchIngest]]'s durable
@@ -43,19 +45,24 @@ object SketchState {
       .sorted.lastOption.getOrElse(-1L)
   }
 
+  /** The stored state at the newest version < beforeBatch, read under its
+    * declared schema (no schema-inference job per micro-batch); the empty
+    * frame of that schema when no epoch has landed. */
+  private def readVersion(spark: SparkSession, dir: String,
+      beforeBatch: Long, schema: StructType): DataFrame = {
+    val v = latestVersion(spark, dir, beforeBatch)
+    if (v < 0) spark.createDataFrame(spark.sparkContext.emptyRDD[Row], schema)
+    else spark.read.schema(schema).parquet(s"$dir/v$v")
+  }
+
+  private def columns(cs: (String, DataType)*): StructType =
+    StructType(cs.map { case (n, t) => StructField(n, t) })
+
   /** The stored sketch rows (token, cnt) at the newest version < beforeBatch. */
   def readState(spark: SparkSession, dir: String,
-      beforeBatch: Long = Long.MaxValue): DataFrame = {
-    val v = latestVersion(spark, dir, beforeBatch)
-    if (v < 0)
-      spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-        org.apache.spark.sql.types.StructType(Seq(
-          org.apache.spark.sql.types.StructField("token",
-            org.apache.spark.sql.types.StringType),
-          org.apache.spark.sql.types.StructField("cnt",
-            org.apache.spark.sql.types.LongType))))
-    else spark.read.parquet(s"$dir/v$v")
-  }
+      beforeBatch: Long = Long.MaxValue): DataFrame =
+    readVersion(spark, dir, beforeBatch,
+      columns("token" -> StringType, "cnt" -> LongType))
 
   /** foreachBatch hook: fold each epoch's `tokenCol` values into the
     * stored summary under the versioned-replay protocol above. */
@@ -116,15 +123,8 @@ object SketchState {
 
   /** The stored KMV hashes (hv) at the newest version < beforeBatch. */
   def readKmvState(spark: SparkSession, dir: String,
-      beforeBatch: Long = Long.MaxValue): DataFrame = {
-    val v = latestVersion(spark, dir, beforeBatch)
-    if (v < 0)
-      spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-        org.apache.spark.sql.types.StructType(Seq(
-          org.apache.spark.sql.types.StructField("hv",
-            org.apache.spark.sql.types.LongType))))
-    else spark.read.parquet(s"$dir/v$v")
-  }
+      beforeBatch: Long = Long.MaxValue): DataFrame =
+    readVersion(spark, dir, beforeBatch, columns("hv" -> LongType))
 
   /** [NS] — the VALUE-CARRYING streaming sketch: each micro-batch's
     * (hash, value) pairs fold into the stored bottom-k SAMPLE
@@ -158,17 +158,9 @@ object SketchState {
 
   /** The stored (hv, v) sample at the newest version < beforeBatch. */
   def readKmvSampleState(spark: SparkSession, dir: String,
-      beforeBatch: Long = Long.MaxValue): DataFrame = {
-    val v = latestVersion(spark, dir, beforeBatch)
-    if (v < 0)
-      spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-        org.apache.spark.sql.types.StructType(Seq(
-          org.apache.spark.sql.types.StructField("hv",
-            org.apache.spark.sql.types.LongType),
-          org.apache.spark.sql.types.StructField("v",
-            org.apache.spark.sql.types.LongType))))
-    else spark.read.parquet(s"$dir/v$v")
-  }
+      beforeBatch: Long = Long.MaxValue): DataFrame =
+    readVersion(spark, dir, beforeBatch,
+      columns("hv" -> LongType, "v" -> LongType))
 
   /** [NS] — streaming MODEL-QUALITY monitor: each epoch's scored
     * predictions fold into durable per-band calibration state
@@ -198,21 +190,10 @@ object SketchState {
   /** The stored (band, n, pos, conf_sum) fold at the newest version
     * < beforeBatch. */
   def readCalibrationState(spark: SparkSession, dir: String,
-      beforeBatch: Long = Long.MaxValue): DataFrame = {
-    val v = latestVersion(spark, dir, beforeBatch)
-    if (v < 0)
-      spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-        org.apache.spark.sql.types.StructType(Seq(
-          org.apache.spark.sql.types.StructField("band",
-            org.apache.spark.sql.types.IntegerType),
-          org.apache.spark.sql.types.StructField("n",
-            org.apache.spark.sql.types.LongType),
-          org.apache.spark.sql.types.StructField("pos",
-            org.apache.spark.sql.types.LongType),
-          org.apache.spark.sql.types.StructField("conf_sum",
-            org.apache.spark.sql.types.LongType))))
-    else spark.read.parquet(s"$dir/v$v")
-  }
+      beforeBatch: Long = Long.MaxValue): DataFrame =
+    readVersion(spark, dir, beforeBatch,
+      columns("band" -> IntegerType, "n" -> LongType, "pos" -> LongType,
+        "conf_sum" -> LongType))
 
   /** Current reliability table + ECE from the stored fold — identical
     * to [[graft.operators.Analytics.calibrationFixedBands]] over the
@@ -267,19 +248,9 @@ object SketchState {
   /** The stored (band, n, accepted) fold at the newest version <
     * beforeBatch; empty frame when no epoch has landed. */
   def readImportanceState(spark: SparkSession, dir: String,
-      beforeBatch: Long = Long.MaxValue): DataFrame = {
-    val v = latestVersion(spark, dir, beforeBatch)
-    if (v < 0)
-      spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-        org.apache.spark.sql.types.StructType(Seq(
-          org.apache.spark.sql.types.StructField("band",
-            org.apache.spark.sql.types.IntegerType),
-          org.apache.spark.sql.types.StructField("n",
-            org.apache.spark.sql.types.LongType),
-          org.apache.spark.sql.types.StructField("accepted",
-            org.apache.spark.sql.types.LongType))))
-    else spark.read.parquet(s"$dir/v$v")
-  }
+      beforeBatch: Long = Long.MaxValue): DataFrame =
+    readVersion(spark, dir, beforeBatch,
+      columns("band" -> IntegerType, "n" -> LongType, "accepted" -> LongType))
 
   /** [NS] — streaming DISTRIBUTION-DRIFT monitor: each micro-batch's
     * (side, value) rows fold into durable per-(side, bucket) counts —
@@ -317,19 +288,9 @@ object SketchState {
   /** The stored (side, bk, n) fold at the newest version <
     * beforeBatch; empty frame when no epoch has landed. */
   def readDriftState(spark: SparkSession, dir: String,
-      beforeBatch: Long = Long.MaxValue): DataFrame = {
-    val v = latestVersion(spark, dir, beforeBatch)
-    if (v < 0)
-      spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-        org.apache.spark.sql.types.StructType(Seq(
-          org.apache.spark.sql.types.StructField("side",
-            org.apache.spark.sql.types.StringType),
-          org.apache.spark.sql.types.StructField("bk",
-            org.apache.spark.sql.types.LongType),
-          org.apache.spark.sql.types.StructField("n",
-            org.apache.spark.sql.types.LongType))))
-    else spark.read.parquet(s"$dir/v$v")
-  }
+      beforeBatch: Long = Long.MaxValue): DataFrame =
+    readVersion(spark, dir, beforeBatch,
+      columns("side" -> StringType, "bk" -> LongType, "n" -> LongType))
 
   /** [NS] — streaming PREFERENCE-RATING state: each micro-batch of
     * decided duels (RLHF preference pairs, A/B outcomes) folds into a
@@ -360,19 +321,9 @@ object SketchState {
   /** The stored (i, j, w) duel fold at the newest version <
     * beforeBatch; empty frame when no epoch has landed. */
   def readDuelsState(spark: SparkSession, dir: String,
-      beforeBatch: Long = Long.MaxValue): DataFrame = {
-    val v = latestVersion(spark, dir, beforeBatch)
-    if (v < 0)
-      spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-        org.apache.spark.sql.types.StructType(Seq(
-          org.apache.spark.sql.types.StructField("i",
-            org.apache.spark.sql.types.StringType),
-          org.apache.spark.sql.types.StructField("j",
-            org.apache.spark.sql.types.StringType),
-          org.apache.spark.sql.types.StructField("w",
-            org.apache.spark.sql.types.LongType))))
-    else spark.read.parquet(s"$dir/v$v")
-  }
+      beforeBatch: Long = Long.MaxValue): DataFrame =
+    readVersion(spark, dir, beforeBatch,
+      columns("i" -> StringType, "j" -> StringType, "w" -> LongType))
 
   /** Current Bradley–Terry ratings from the stored duel fold —
     * identical to [[graft.operators.Analytics.bradleyTerry]] over the

@@ -26,6 +26,17 @@ class PlanQualitySpec extends AnyFunSuite {
     assert(!p.contains("l_comment"), "scan reads pruned column:\n" + p)
   }
 
+  test("q02 built twice: the cached table schema keeps pushdown and pruning") {
+    def scanLines(p: String) = p.linesIterator
+      .filter(l => l.contains("PushedFilters") || l.contains("ReadSchema"))
+      .map(_.trim).toSeq
+    val first = plan("q02_filtered_scan")
+    val p = plan("q02_filtered_scan") // lineitem's schema now from the cache
+    assert(p.matches("(?s).*PushedFilters: \\[[^\\]]*GreaterThan.*"), p)
+    assert(scanLines(p).nonEmpty && scanLines(p) === scanLines(first), p)
+    assert(!p.contains("l_comment"), "scan reads pruned column:\n" + p)
+  }
+
   test("q06 dim join broadcasts the dimension side, not the fact") {
     val p = plan("q06_revenue_join")
     assert(p.contains("BroadcastHashJoin"), p)
