@@ -1,39 +1,14 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Benchmark main: runs every registered query on SPARK_GRAFT_SF_DIR and
   * prints one JSON line {"metric":...,"queries":{...}}. The driver runs
-  * this per round at sf0.1 → BENCH_r{N}.json.
-  *
-  * Config mirrors the 100 TB stance scaled to local mode: AQE on (runtime
-  * coalescing + skew splitting), shuffle partitions = cores (not 200 —
-  * local mode has no cluster to fan out to), broadcast threshold generous
-  * because every dim table is broadcast-size at bench SF.
+  * this per round at sf0.1 → BENCH_r{N}.json. Session config:
+  * [[Session.start]].
   */
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-      .config("spark.sql.autoBroadcastJoinThreshold", 64 * 1024 * 1024)
-      // runtime bloom filters: prune the fact side of selective shuffle
-      // joins (no-op when the dim side broadcasts; load-bearing at scale)
-      .config("spark.sql.optimizer.runtime.bloomFilter.enabled", "true")
-      // 161 queries × multiple codegen stages each blow through the
-      // default 100-entry janino cache, so every pass recompiles nearly
-      // everything (measured: pass totals 285→245→165 s — the later
-      // passes are warmer, not faster code). One full registry fits
-      // comfortably in a few thousand entries.
-      .config("spark.sql.codegen.cache.maxEntries", "5000")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Session.start()
 
     // Warm the JVM + parquet footers once so per-query timings measure the
     // query, not first-touch classloading (driver baseline parity).
@@ -41,21 +16,7 @@ object Bench {
       try fn(spark, sfDir).count() catch { case _: Throwable => () }
     }
 
-    // Resident-table posture (DISCLOSED — see ARCHITECTURE.md "Bench
-    // configuration"): a long-running engine serves hot base tables from
-    // memory, so the bench pins each base table once per session
-    // (localCheckpoint) and every query reads the resident blocks
-    // instead of re-decoding parquet. Correctness gates (Verify, all
-    // ScalaTest incl. the pushdown/pruning plan pins) run COLD — the
-    // flag is set only here. Opt out with SPARK_GRAFT_RESIDENT=0 to
-    // reproduce the cold-scan numbers.
-    if (sys.env.getOrElse("SPARK_GRAFT_RESIDENT", "1") != "0") {
-      Tables.residentMode = true
-      Tables.all.foreach { t =>
-        try Tables.load(spark, sfDir, t).count()
-        catch { case _: Throwable => () } // scale10 carries fewer tables
-      }
-    }
+    Session.pinResidentTables(spark, sfDir)
 
     // Optional comma-separated query filter (profiling aid), and a repeat
     // count: with SPARK_GRAFT_BENCH_N > 1 every query runs N times inside
@@ -80,19 +41,7 @@ object Bench {
         val t0 = System.nanoTime()
         try { fn(spark, sfDir).count() } catch { case _: Throwable => -1L }
         val dt = (System.nanoTime() - t0) / 1e9
-        // queries persist intermediates (self-join inputs); drop them so
-        // later timings don't pay eviction/recompute for earlier caches.
-        // clearCache() misses eager localCheckpoint blocks (they are
-        // persisted RDDs, not cached plans) — across 160+ queries × 3
-        // passes those accumulate until storage eviction forces
-        // RECOMPUTE of truncated lineage, inflating late iterative
-        // queries ~2× (measured: q130 7.6 s isolated vs 17.2 s at the
-        // end of a leaky full pass). The finished query holds no live
-        // reference, so dropping them is free.
-        spark.catalog.clearCache()
-        spark.sparkContext.getPersistentRDDs.valuesIterator
-          .filterNot(r => Tables.residentRddIds.contains(r.id))
-          .foreach(_.unpersist(blocking = false))
+        Session.releaseQueryState(spark)
         name -> dt
       }
     }.groupBy(_._1).map { case (k, vs) => k -> vs.map(_._2).toVector }

@@ -128,11 +128,7 @@ object Cli {
 
   /** REPL loop (yark.py:15-45). */
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder().master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Session.start()
     println(help)
     Iterator.continually(scala.io.StdIn.readLine("graft> "))
       .takeWhile(l => l != null && l != "exit")

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import graft.operators.{Dedup, Shard}
 
@@ -30,13 +29,7 @@ object ColocationProbe {
     val caps = sys.env.get("SPARK_GRAFT_COLOC_CAPS")
       .map(_.split(",").map(_.trim.toLong).toSeq)
       .getOrElse(Seq(2L, 10000L, Long.MaxValue))
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Session.start()
     import spark.implicits._
 
     // q380's labeled frame: star-edge LSH candidates -> CC labels,

@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Plan-inspection tool: dump the optimized/physical plan of any
   * registered query (pushdown, broadcast direction, exchange count —
   * the things PlanQualitySpec asserts, readable by a human).
@@ -9,24 +7,13 @@ import org.apache.spark.sql.SparkSession
   * Usage: runMain graft.Explain [queryName ...] [sfDir]
   * With no args, dumps a representative trio.
   *
-  * Session config mirrors graft.Bench (same cpus env, same AQE/broadcast
-  * thresholds) so the captured plan is the one the bench actually runs —
-  * a local[4]/10MB-threshold plan can pick different join strategies than
-  * the gate config and would misrepresent before/after claims.
+  * The session is [[Session.start]]'s, so the captured plan is the one
+  * the bench actually runs.
   * SPARK_GRAFT_EXPLAIN_MODE=simple|formatted (default formatted).
   */
 object Explain {
   def main(args: Array[String]): Unit = {
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder().master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-      .config("spark.sql.autoBroadcastJoinThreshold", 64 * 1024 * 1024)
-      .config("spark.sql.optimizer.runtime.bloomFilter.enabled", "true")
-      .config("spark.sql.codegen.cache.maxEntries", "5000")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false").getOrCreate()
+    val spark = Session.start()
     spark.sparkContext.setLogLevel("ERROR")
     val mode = sys.env.getOrElse("SPARK_GRAFT_EXPLAIN_MODE", "formatted") match {
       case "simple" => org.apache.spark.sql.execution.SimpleMode

@@ -2,11 +2,10 @@ package graft
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart,
   SparkListenerStageCompleted, SparkListenerTaskEnd}
-import org.apache.spark.sql.SparkSession
 import java.util.concurrent.atomic.{AtomicInteger, AtomicLong}
 
 /** Measurement tool (optimization guide §1: measure first): run named
-  * queries under the exact Bench session config and report, per run,
+  * queries under Bench's session ([[Session.start]]) and report, per run,
   * wall seconds plus the scheduler-level shape — jobs, stages, tasks,
   * shuffle bytes read/written — that explains WHERE the time goes at
   * local-mode scale (tiny inputs make job/stage count, not bytes, the
@@ -25,20 +24,8 @@ object Profile {
     val (qs, dirs) = args.partition(a => !a.startsWith("/"))
     val sfDir = dirs.headOption.getOrElse(
       sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1"))
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val n = sys.env.get("SPARK_GRAFT_BENCH_N").map(_.toInt).getOrElse(3)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-      .config("spark.sql.autoBroadcastJoinThreshold", 64 * 1024 * 1024)
-      .config("spark.sql.optimizer.runtime.bloomFilter.enabled", "true")
-      .config("spark.sql.codegen.cache.maxEntries", "5000")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Session.start()
 
     val jobs = new AtomicInteger(0)
     val stages = new AtomicInteger(0)
@@ -65,13 +52,7 @@ object Profile {
     }
     spark.sparkContext.addSparkListener(listener)
 
-    if (sys.env.getOrElse("SPARK_GRAFT_RESIDENT", "1") != "0") {
-      Tables.residentMode = true
-      Tables.all.foreach { t =>
-        try Tables.load(spark, sfDir, t).count()
-        catch { case _: Throwable => () }
-      }
-    }
+    Session.pinResidentTables(spark, sfDir)
 
     val names = if (qs.nonEmpty) qs.toSeq else Seq("q06_revenue_join")
     for (name <- names) {
@@ -89,10 +70,7 @@ object Profile {
               case e: Throwable => System.err.println(s"$name: $e"); -1L }
             val dt = (System.nanoTime() - t0) / 1e9
             Thread.sleep(300)
-            spark.catalog.clearCache()
-            spark.sparkContext.getPersistentRDDs.valuesIterator
-              .filterNot(r => Tables.residentRddIds.contains(r.id))
-              .foreach(_.unpersist(blocking = false))
+            Session.releaseQueryState(spark)
             (dt, jobs.get, stages.get, tasks.get, shufRead.get, shufWrite.get,
               cnt)
           }

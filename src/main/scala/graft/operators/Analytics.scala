@@ -993,14 +993,13 @@ object Analytics {
     * input. Shares in exact ppm of the total. */
   def topNOther(df: DataFrame, keyCol: String, n: Int): DataFrame = {
     require(n > 0, s"need a positive key budget, got $n")
-    val counts = df.filter(col(keyCol).isNotNull)
-      .groupBy(col(keyCol)).agg(count(lit(1)).as("cnt"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
+    Stage("Analytics.topNOther") { st =>
+      val counts = st.pin(df.filter(col(keyCol).isNotNull)
+        .groupBy(col(keyCol)).agg(count(lit(1)).as("cnt")))
       val top = counts.orderBy(col("cnt").desc, col(keyCol)).limit(n)
         .select(col(keyCol).as("_topk"))
       val tot = counts.agg(sum(col("cnt")).as("_tot"))
-      counts
+      st.checkpoint(counts
         .join(broadcast(top), col(keyCol) === col("_topk"), "left")
         .withColumn("key_label",
           when(col("_topk").isNotNull, col(keyCol).cast("string"))
@@ -1009,9 +1008,8 @@ object Analytics {
         .agg(sum(col("cnt")).as("n_rows"))
         .crossJoin(broadcast(tot))
         .withColumn("share_ppm", expr("(n_rows * 1000000) div _tot"))
-        .drop("_tot")
-        .localCheckpoint(true) // ≤ n+1 rows; outlives the counts pin
-    } finally counts.unpersist(blocking = false)
+        .drop("_tot"), "report")
+    }
   }
 
   /** [NS] — CDC generation FROM SNAPSHOTS: when a source publishes full

@@ -203,67 +203,58 @@ object Curation {
     }
 
   /** The shared five-gate stage chain behind [[curationFunnel]] and
-    * [[curationExport]]: builds the stage frames under scoped persist
-    * pins, hands them to `assemble`, and eagerly checkpoints the (small)
-    * result so it outlives the pins. */
+    * [[curationExport]]: builds the stage frames in one [[Stage]] scope
+    * (the gates' shared inputs pinned), hands them to `assemble`, and
+    * checkpoints the (small) result. */
   private def funnelStages(docs: DataFrame, minChars: Long,
       minWords: Long, testBucketFrom: Int, budgetChars: Long, gramN: Int,
       minShared: Long, dfMax: Long)(
       assemble: (DataFrame, DataFrame, DataFrame, DataFrame, DataFrame,
-        DataFrame, DataFrame) => DataFrame): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    val d0 = docs.select(col("doc_id"), col("text"), col("source"),
-      col("n_chars"))
-    val quality = d0.filter(col("n_chars") >= minChars &&
-      size(split(col("text"), " ")) >= minWords)
-    val unique = quality
-      .withColumn("_rn", row_number().over(
-        Window.partitionBy(md5(substring(col("text"), 1, 100)))
-          .orderBy(col("doc_id"))))
-      .filter(col("_rn") === 1).drop("_rn")
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
+        DataFrame, DataFrame) => DataFrame): DataFrame =
+    Stage("Curation.funnelStages") { st =>
+      import org.apache.spark.sql.expressions.Window
+      val d0 = docs.select(col("doc_id"), col("text"), col("source"),
+        col("n_chars"))
+      val quality = d0.filter(col("n_chars") >= minChars &&
+        size(split(col("text"), " ")) >= minWords)
+      val unique = st.pin(quality
+        .withColumn("_rn", row_number().over(
+          Window.partitionBy(md5(substring(col("text"), 1, 100)))
+            .orderBy(col("doc_id"))))
+        .filter(col("_rn") === 1).drop("_rn"))
       val admitted = Dedup.nearDupGateBatch(unique, "doc_id", "text",
         tsCol = "doc_id").select(col("id").as("doc_id"))
-      val survivors = unique.join(admitted, Seq("doc_id"), "left_semi")
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      try {
-        val bucket = hashBucket(col("doc_id"), 100)
-        val train = survivors.filter(bucket < testBucketFrom)
-        val test = d0.filter(bucket >= testBucketFrom)
-        def grams(df: DataFrame, as: String) =
-          df.select(col("doc_id").as(as),
-            explode(graft.functions.ShingleExpression
-              .wordShingleHashes(col("text"), gramN)).as("gh"))
-        val tg = grams(train, "t_doc")
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        try {
-          val rare = tg.groupBy(col("gh")).agg(count(lit(1)).as("tdf"))
-            .filter(col("tdf") <= dfMax).select(col("gh"))
-          // leaky doc-ids are read by `clean` (count readout) AND by the
-          // budget chain below — materialize the rare-gram decontam join
-          // once (ids only; guide §2.4), not once per consumer
-          val leaky = grams(test, "test_doc")
-            .join(rare, Seq("gh"), "left_semi")
-            .join(tg, Seq("gh"))
-            .groupBy(col("test_doc"), col("t_doc"))
-            .agg(count(lit(1)).as("shared"))
-            .filter(col("shared") >= minShared)
-            .select(col("t_doc").as("doc_id")).distinct()
-            .localCheckpoint(true)
-          val clean = train.join(leaky, Seq("doc_id"), "left_anti")
-          val wb = Window.partitionBy(col("source")).orderBy(col("doc_id"))
-            .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-          val budget = clean
-            .withColumn("_cum", sum(col("n_chars")).over(wb))
-            .filter(col("_cum") <= budgetChars)
-          assemble(d0, quality, unique, survivors, train, clean,
-              budget)
-            .localCheckpoint(true) // small result; outlives the pins
-        } finally tg.unpersist(blocking = false)
-      } finally survivors.unpersist(blocking = false)
-    } finally unique.unpersist(blocking = false)
-  }
+      val survivors = st.pin(unique.join(admitted, Seq("doc_id"),
+        "left_semi"))
+      val bucket = hashBucket(col("doc_id"), 100)
+      val train = survivors.filter(bucket < testBucketFrom)
+      val test = d0.filter(bucket >= testBucketFrom)
+      def grams(df: DataFrame, as: String) =
+        df.select(col("doc_id").as(as),
+          explode(graft.functions.ShingleExpression
+            .wordShingleHashes(col("text"), gramN)).as("gh"))
+      val tg = st.pin(grams(train, "t_doc"))
+      val rare = tg.groupBy(col("gh")).agg(count(lit(1)).as("tdf"))
+        .filter(col("tdf") <= dfMax).select(col("gh"))
+      // leaky doc-ids are read by `clean` (count readout) AND by the
+      // budget chain below — materialize the rare-gram decontam join
+      // once (ids only; guide §2.4), not once per consumer
+      val leaky = st.checkpoint(grams(test, "test_doc")
+        .join(rare, Seq("gh"), "left_semi")
+        .join(tg, Seq("gh"))
+        .groupBy(col("test_doc"), col("t_doc"))
+        .agg(count(lit(1)).as("shared"))
+        .filter(col("shared") >= minShared)
+        .select(col("t_doc").as("doc_id")).distinct(), "leaky")
+      val clean = train.join(leaky, Seq("doc_id"), "left_anti")
+      val wb = Window.partitionBy(col("source")).orderBy(col("doc_id"))
+        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
+      val budget = clean
+        .withColumn("_cum", sum(col("n_chars")).over(wb))
+        .filter(col("_cum") <= budgetChars)
+      st.checkpoint(assemble(d0, quality, unique, survivors, train, clean,
+        budget), "result")
+    }
 
   /** Fixed-size character chunks with stride (overlap = size − stride):
     * one row per (doc, chunk_idx). The offsets array is tiny (len/stride
@@ -384,18 +375,13 @@ object Curation {
     * join is linear in true cross-corpus overlap. */
   def crossCorpusLeakage(train: DataFrame, test: DataFrame,
       idCol: String, textCol: String, n: Int = 5,
-      minShared: Int = 3, dfMax: Long = 100): DataFrame = {
-    // persist, not bare plan: both the rare-gram aggregate and the pair
-    // join read the train shingles (an unpinned plan would run the
-    // shingling twice). The pin is scoped to this call: the (small —
-    // flagged docs only) result is materialized eagerly, then the shingle
-    // blocks are released in `finally` — no MEMORY_AND_DISK blocks leak
-    // into a long-lived session (same pattern as Integrity's cascades).
-    val tg = train.select(col(idCol).as("t_doc"),
-      explode(graft.functions.ShingleExpression
-        .wordShingleHashes(col(textCol), n)).as("gh"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
+      minShared: Int = 3, dfMax: Long = 100): DataFrame =
+    Stage("Curation.crossCorpusLeakage") { st =>
+      // pinned: both the rare-gram aggregate and the pair join read the
+      // train shingles (an unpinned plan would run the shingling twice)
+      val tg = st.pin(train.select(col(idCol).as("t_doc"),
+        explode(graft.functions.ShingleExpression
+          .wordShingleHashes(col(textCol), n)).as("gh")))
       val rare = tg.groupBy(col("gh"))
         .agg(count(lit(1)).as("tdf"))
         .filter(col("tdf") <= dfMax)
@@ -403,16 +389,15 @@ object Curation {
       val sg = test.select(col(idCol).as("test_doc"),
         explode(graft.functions.ShingleExpression
           .wordShingleHashes(col(textCol), n)).as("gh"))
-      sg.join(rare, Seq("gh"), "left_semi")
+      st.checkpoint(sg.join(rare, Seq("gh"), "left_semi")
         .join(tg, Seq("gh"))
         .groupBy(col("test_doc"), col("t_doc"))
         .agg(count(lit(1)).as("shared"))
         .filter(col("shared") >= minShared)
         .groupBy(col("test_doc"))
-        .agg(count(lit(1)).as("n_partners"), max(col("shared")).as("max_shared"))
-        .localCheckpoint(true)
-    } finally tg.unpersist(blocking = false)
-  }
+        .agg(count(lit(1)).as("n_partners"),
+          max(col("shared")).as("max_shared")), "flagged")
+    }
 
   /** [NS] — duplicate-SPAN removal (the C4/Dolma intra-corpus op:
     * repeated boilerplate spans are cut from every place but their first

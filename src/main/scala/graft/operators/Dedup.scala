@@ -1126,19 +1126,18 @@ object Dedup {
       gram: Int): DataFrame = {
     require(gram >= 2, s"gram must be >= 2, got $gram")
     import org.apache.spark.sql.expressions.Window
-    val g = df
-      .select(col(idCol), split(col(textCol), " ").as("_w"))
-      .select(col(idCol),
-        explode(expr(
-          s"""transform(sequence(1, greatest(size(_w) - ${gram - 1}, 1)),
-              i -> struct(i AS s,
-                CAST(conv(substring(md5(concat_ws(' ',
-                  slice(_w, i, $gram))), 1, 15), 16, 10) AS BIGINT)
-                  AS h))"""))
-          .as("p"))
-      .select(col(idCol), col("p.s").as("s"), col("p.h").as("h"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
+    Stage("Dedup.dupSpanCoverage") { st =>
+      val g = st.pin(df
+        .select(col(idCol), split(col(textCol), " ").as("_w"))
+        .select(col(idCol),
+          explode(expr(
+            s"""transform(sequence(1, greatest(size(_w) - ${gram - 1}, 1)),
+                i -> struct(i AS s,
+                  CAST(conv(substring(md5(concat_ws(' ',
+                    slice(_w, i, $gram))), 1, 15), 16, 10) AS BIGINT)
+                    AS h))"""))
+            .as("p"))
+        .select(col(idCol), col("p.s").as("s"), col("p.h").as("h")))
       val shared = g.groupBy(col("h"))
         .agg(countDistinct(col(idCol)).as("_nd"))
         .filter(col("_nd") > 1)
@@ -1157,7 +1156,7 @@ object Dedup {
       val cov = islands.groupBy(col(idCol))
         .agg(sum(col("hi") - col("lo")).as("covered"),
           count(lit(1)).as("n_islands"))
-      df.select(col(idCol),
+      st.checkpoint(df.select(col(idCol),
           size(split(col(textCol), " ")).cast("long").as("len_words"))
         .join(cov, Seq(idCol), "left")
         .select(col(idCol), col("len_words"),
@@ -1166,9 +1165,8 @@ object Dedup {
           expr("CASE WHEN len_words > 0 THEN " +
             "(1000000 * least(coalesce(covered, 0), len_words))" +
             " div len_words ELSE CAST(0 AS BIGINT) END")
-            .as("coverage_ppm"))
-        .localCheckpoint(true) // result only; outlives the g pin
-    } finally g.unpersist(blocking = false)
+            .as("coverage_ppm")), "coverage")
+    }
   }
 
   /** [NS] — sorted-neighborhood blocking (Hernández & Stolfo 1995):

@@ -2,7 +2,6 @@ package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
-import org.apache.spark.storage.StorageLevel
 
 /** [NS] Distributed graph analytics over edge lists — the graph-shaped
   * half of a training-data curation stack: PageRank for source/keyword
@@ -162,20 +161,18 @@ object Graph {
     * included (left join back to the node set).
     */
   def triangleCounts(pairs: DataFrame, aCol: String,
-      bCol: String): DataFrame = {
+      bCol: String): DataFrame = Stage("Graph.triangleCounts") { st =>
     // normalized edges are read 3× (degree union + orientation join);
-    // persist so a derived pair source (e.g. a SimHash band join) runs once
-    val und = pairs.select(
+    // pinned so a derived pair source (e.g. a SimHash band join) runs once
+    val und = st.pin(pairs.select(
         least(col(aCol), col(bCol)).as("_a"),
         greatest(col(aCol), col(bCol)).as("_b"))
       .filter(col("_a") < col("_b"))
-      .distinct()
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    val deg = und.select(col("_a").as("_n"))
+      .distinct())
+    val deg = st.pin(und.select(col("_a").as("_n"))
       .union(und.select(col("_b").as("_n")))
-      .groupBy(col("_n")).agg(count(lit(1)).as("_d"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    val oriented = und
+      .groupBy(col("_n")).agg(count(lit(1)).as("_d")))
+    val oriented = st.pin(und
       .join(deg.select(col("_n").as("_a"), col("_d").as("_da")), "_a")
       .join(deg.select(col("_n").as("_b"), col("_d").as("_db")), "_b")
       .select(
@@ -186,35 +183,28 @@ object Graph {
           .otherwise(struct(col("_b").as("u"), col("_a").as("v"),
             col("_da").as("dv"))).as("e"))
       .select(col("e.u").as("_u"), col("e.v").as("_v"),
-        col("e.dv").as("_dv"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    try {
-      val e1 = oriented.select(col("_u"), col("_v").as("_y"),
-        col("_dv").as("_dy"))
-      val e2 = oriented.select(col("_u"), col("_v").as("_z"),
-        col("_dv").as("_dz"))
-      val wedges = e1.join(e2, Seq("_u"))
-        .filter(col("_dy") < col("_dz")
-          || (col("_dy") === col("_dz") && col("_y") < col("_z")))
-        .select(col("_u").as("_x"), col("_y"), col("_z"))
-      val closing = oriented.select(col("_u").as("_y"),
-        col("_v").as("_z"))
-      val tris = wedges.join(closing, Seq("_y", "_z"), "left_semi")
-        .localCheckpoint(true) // corners explode below re-reads it 3x
-      val corners = tris.select(col("_x").as("_n"))
-        .union(tris.select(col("_y").as("_n")))
-        .union(tris.select(col("_z").as("_n")))
-        .groupBy(col("_n")).agg(count(lit(1)).as("_t"))
-      deg.select(col("_n"))
-        .join(corners, Seq("_n"), "left")
-        .select(col("_n").as("node"),
-          coalesce(col("_t"), lit(0L)).as("n_tri"))
-        .localCheckpoint(true) // materialize before deg/oriented unpersist
-    } finally {
-      und.unpersist(blocking = false)
-      deg.unpersist(blocking = false)
-      oriented.unpersist(blocking = false)
-    }
+        col("e.dv").as("_dv")))
+    val e1 = oriented.select(col("_u"), col("_v").as("_y"),
+      col("_dv").as("_dy"))
+    val e2 = oriented.select(col("_u"), col("_v").as("_z"),
+      col("_dv").as("_dz"))
+    val wedges = e1.join(e2, Seq("_u"))
+      .filter(col("_dy") < col("_dz")
+        || (col("_dy") === col("_dz") && col("_y") < col("_z")))
+      .select(col("_u").as("_x"), col("_y"), col("_z"))
+    val closing = oriented.select(col("_u").as("_y"),
+      col("_v").as("_z"))
+    // the corner explode below re-reads the triangles 3x
+    val tris = st.checkpoint(
+      wedges.join(closing, Seq("_y", "_z"), "left_semi"), "triangles")
+    val corners = tris.select(col("_x").as("_n"))
+      .union(tris.select(col("_y").as("_n")))
+      .union(tris.select(col("_z").as("_n")))
+      .groupBy(col("_n")).agg(count(lit(1)).as("_t"))
+    st.checkpoint(deg.select(col("_n"))
+      .join(corners, Seq("_n"), "left")
+      .select(col("_n").as("node"),
+        coalesce(col("_t"), lit(0L)).as("n_tri")), "counts")
   }
 
   /** Bounded k-core peel (Seidman 1983; Batagelj–Zaveršnik peeling): drop
@@ -482,12 +472,11 @@ object Graph {
       k: Int, overgen: Int = 3): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     require(k > 0 && overgen >= 1, "bad sampling params")
-    val edges = edgePairs
-      .select(col(srcCol).as("src"), col(dstCol).as("dst"))
-      .filter(col("src").isNotNull && col("dst").isNotNull)
-      .distinct()
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    try {
+    Stage("Graph.negativeSamples") { st =>
+      val edges = st.pin(edgePairs
+        .select(col(srcCol).as("src"), col(dstCol).as("dst"))
+        .filter(col("src").isNotNull && col("dst").isNotNull)
+        .distinct())
       // candidates come from the OBSERVED destination population (every
       // negative is a real node — an id-space draw can produce ids that
       // exist in no row, which are worthless as training negatives),
@@ -509,13 +498,13 @@ object Graph {
         .withColumn("_dup", row_number().over(
           Window.partitionBy(col("src"), col("dst")).orderBy(col("i"))))
         .filter(col("_dup") === 1)
-      nonEdges
+      st.checkpoint(nonEdges
         .withColumn("slot", row_number().over(
           Window.partitionBy(col("src")).orderBy(col("i"))))
         .filter(col("slot") <= k)
-        .select(col("src"), col("dst").as("neg_dst"), col("slot"))
-        .localCheckpoint(true) // materialize before the edge pin drops
-    } finally edges.unpersist(blocking = false)
+        .select(col("src"), col("dst").as("neg_dst"), col("slot")),
+        "negatives")
+    }
   }
 
   /** [NS] — degree-capped bipartite co-occurrence (the item-item
@@ -541,14 +530,13 @@ object Graph {
     require(capM > 1, s"cap must allow pairs, got $capM")
     val inter = df.select(col(userCol).as("u"), col(itemCol).as("i"))
       .groupBy(col("u"), col("i")).agg(count(lit(1)).as("w"))
-    val capped = inter
-      .withColumn("_rn", row_number().over(
-        Window.partitionBy(col("u"))
-          .orderBy(col("w").desc, col("i").asc)))
-      .filter(col("_rn") <= capM)
-      .select(col("u"), col("i"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    try {
+    Stage("Graph.coOccurrence") { st =>
+      val capped = st.pin(inter
+        .withColumn("_rn", row_number().over(
+          Window.partitionBy(col("u"))
+            .orderBy(col("w").desc, col("i").asc)))
+        .filter(col("_rn") <= capM)
+        .select(col("u"), col("i")))
       val deg = capped.groupBy(col("i")).agg(count(lit(1)).as("deg"))
       val pairs = capped.as("a")
         .join(capped.as("b"), Seq("u"))
@@ -556,7 +544,7 @@ object Graph {
         .groupBy(col("a.i").as("item_a"), col("b.i").as("item_b"))
         .agg(count(lit(1)).as("n_users"))
         .filter(col("n_users") >= minCount)
-      pairs
+      st.checkpoint(pairs
         .join(broadcast(deg.select(col("i").as("item_a"),
           col("deg").as("_da"))), Seq("item_a"))
         .join(broadcast(deg.select(col("i").as("item_b"),
@@ -564,9 +552,8 @@ object Graph {
         .withColumn("containment_ppm",
           expr("(n_users * 1000000) div least(_da, _db)"))
         .select(col("item_a"), col("item_b"), col("n_users"),
-          col("containment_ppm"))
-        .localCheckpoint(true) // pairs only; outlives the capped pin
-    } finally capped.unpersist(blocking = false)
+          col("containment_ppm")), "pairs")
+    }
   }
 
   /** [NS] — deterministic synchronous label propagation (Raghavan et
@@ -622,33 +609,29 @@ object Graph {
     * already be linked), two broadcast degree joins, and a
     * TakeOrderedAndProject for the top-n. */
   def linkPrediction(pairs: DataFrame, aCol: String, bCol: String,
-      topN: Int): DataFrame = {
-    val und = pairs.select(
+      topN: Int): DataFrame = Stage("Graph.linkPrediction") { st =>
+    val und = st.pin(pairs.select(
         least(col(aCol), col(bCol)).cast("long").as("_a"),
         greatest(col(aCol), col(bCol)).cast("long").as("_b"))
       .filter(col("_a") < col("_b"))
-      .distinct()
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    try {
-      val adj = und.select(col("_a").as("n"), col("_b").as("m"))
-        .unionByName(und.select(col("_b").as("n"), col("_a").as("m")))
-      val deg = adj.groupBy(col("n")).agg(count(lit(1)).as("d"))
-      val cand = adj.as("x").join(adj.as("y"), Seq("n"))
-        .filter(col("x.m") < col("y.m"))
-        .groupBy(col("x.m").as("u"), col("y.m").as("v"))
-        .agg(count(lit(1)).as("common"))
-        .join(und.select(col("_a").as("u"), col("_b").as("v")),
-          Seq("u", "v"), "left_anti")
-      cand
-        .join(deg.select(col("n").as("u"), col("d").as("du")), Seq("u"))
-        .join(deg.select(col("n").as("v"), col("d").as("dv")), Seq("v"))
-        .withColumn("jaccard_ppm",
-          expr("(1000000 * common) div (du + dv - common)"))
-        .select(col("u"), col("v"), col("common"), col("jaccard_ppm"))
-        .orderBy(col("jaccard_ppm").desc, col("u"), col("v"))
-        .limit(topN)
-        .localCheckpoint(true) // result only; outlives the und pin
-    } finally und.unpersist(blocking = false)
+      .distinct())
+    val adj = und.select(col("_a").as("n"), col("_b").as("m"))
+      .unionByName(und.select(col("_b").as("n"), col("_a").as("m")))
+    val deg = adj.groupBy(col("n")).agg(count(lit(1)).as("d"))
+    val cand = adj.as("x").join(adj.as("y"), Seq("n"))
+      .filter(col("x.m") < col("y.m"))
+      .groupBy(col("x.m").as("u"), col("y.m").as("v"))
+      .agg(count(lit(1)).as("common"))
+      .join(und.select(col("_a").as("u"), col("_b").as("v")),
+        Seq("u", "v"), "left_anti")
+    st.checkpoint(cand
+      .join(deg.select(col("n").as("u"), col("d").as("du")), Seq("u"))
+      .join(deg.select(col("n").as("v"), col("d").as("dv")), Seq("v"))
+      .withColumn("jaccard_ppm",
+        expr("(1000000 * common) div (du + dv - common)"))
+      .select(col("u"), col("v"), col("common"), col("jaccard_ppm"))
+      .orderBy(col("jaccard_ppm").desc, col("u"), col("v"))
+      .limit(topN), "top")
   }
 
   /** Exact-integer HITS (Kleinberg 1999): hub and authority scores over

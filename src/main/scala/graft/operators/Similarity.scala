@@ -469,21 +469,20 @@ object Similarity {
     * (sum exact in any order, then two IEEE divisions) so centroids are
     * bit-identical across engines and partitionings; assignment rounds
     * cosine to 6 with min-id tie-break. Empty clusters drop out (both
-    * engines agree). Centroids localCheckpoint per iteration: k rows, and
-    * the plan would otherwise nest `iters` deep. */
+    * engines agree). The k centroids live on the driver between
+    * iterations, so no round's plan nests the previous one. */
   def kmeans(df: DataFrame, idCol: String, vecCol: String, k: Int,
-      iters: Int, init: Option[DataFrame] = None): DataFrame = {
-    val spark = df.sparkSession
-    // persist, not localCheckpoint: the vector corpus is re-read every
-    // iteration but persist keeps the lineage (executor loss = recompute,
-    // not job failure) and the blocks are released in `finally`
-    val e = df.select(col(idCol), vecD(col(vecCol)).as("v"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    def localCents(rows: Array[(Long, Array[Double])]): DataFrame =
-      spark.createDataFrame(rows.toIndexedSeq
-          .map { case (id, cv) => (id, cv.toSeq) })
-        .toDF("c_id", "cv")
-    try {
+      iters: Int, init: Option[DataFrame] = None): DataFrame =
+    Stage("Similarity.kmeans") { st =>
+      val spark = df.sparkSession
+      // pinned, not checkpointed: the vector corpus is re-read every
+      // iteration but a pin keeps the lineage (executor loss = recompute,
+      // not job failure)
+      val e = st.pin(df.select(col(idCol), vecD(col(vecCol)).as("v")))
+      def localCents(rows: Array[(Long, Array[Double])]): DataFrame =
+        spark.createDataFrame(rows.toIndexedSeq
+            .map { case (id, cv) => (id, cv.toSeq) })
+          .toDF("c_id", "cv")
       // `init` (c_id, cv) overrides the min-id seed set: when ids
       // correlate with content (sharded / time-ordered corpora, e.g. the
       // scale10 fixture) the k smallest ids all land in one region and
@@ -542,8 +541,7 @@ object Similarity {
         }.sortBy(_._1)
       }
       localCents(cents)
-    } finally e.unpersist(blocking = false)
-  }
+    }
 
   /** Deterministic stratified seed set for [[kmeans]]'s `init`: rank the
     * corpus by id, cut into k equal-frequency tiles, take each tile's
@@ -589,26 +587,25 @@ object Similarity {
   def kCenterCoreset(df: DataFrame, idCol: String, vecCol: String,
       k: Int): DataFrame = {
     require(k > 0, s"coreset size must be positive, got $k")
-    val e = df.select(col(idCol).as("id"),
-        transform(vecD(col(vecCol)),
-          x => round(x * 1e6).cast("long")).as("v"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     def d2(a: Column, b: Column): Column =
       aggregate(zip_with(a, b, (x, y) => (x - y) * (x - y)),
         lit(0L), (acc, x) => acc + x)
-    try {
-      val seed = e.orderBy(col("id")).limit(1)
-        .select(col("id").as("c_id"), col("v").as("cv"))
-        .localCheckpoint(true)
+    Stage("Similarity.kCenterCoreset") { st =>
+      val e = st.pin(df.select(col(idCol).as("id"),
+        transform(vecD(col(vecCol)),
+          x => round(x * 1e6).cast("long")).as("v")))
+      val seed = st.checkpoint(e.orderBy(col("id")).limit(1)
+        .select(col("id").as("c_id"), col("v").as("cv")), "seed")
       var out = seed.select(col("c_id"), lit(1).as("sel_order"),
         lit(0L).as("d2_sel"))
       var state = e.crossJoin(broadcast(seed.select(col("cv"))))
         .select(col("id"), col("v"), d2(col("v"), col("cv")).as("md"))
       for (r <- 2 to k) {
-        val next = state.orderBy(col("md").desc, col("id")).limit(1)
+        // 1 row; truncates the round's lineage
+        val next = st.checkpoint(state.orderBy(col("md").desc, col("id"))
+          .limit(1)
           .select(col("id").as("c_id"), col("v").as("cv"),
-            col("md").as("d2_sel"))
-          .localCheckpoint(true) // 1 row; truncates the round's lineage
+            col("md").as("d2_sel")), s"round$r")
         out = out.unionByName(
           next.select(col("c_id"), lit(r).as("sel_order"), col("d2_sel")))
         state = state.crossJoin(broadcast(next.select(col("cv"))))
@@ -616,7 +613,7 @@ object Similarity {
             least(col("md"), d2(col("v"), col("cv"))).as("md"))
       }
       out.orderBy(col("sel_order"))
-    } finally e.unpersist(blocking = false)
+    }
   }
 
   /** [NS] — MMR diversified re-ranking (Maximal Marginal Relevance;
@@ -647,35 +644,37 @@ object Similarity {
       round(round(cosine(a, b), 6) * 1e6).cast("long")
     def score(rel: Column, ms: Column): Column =
       lit(lambdaPct.toLong) * rel - lit((100 - lambdaPct).toLong) * ms
-    val e = cands.select(col(idCol).as("id"), col(vecCol).as("v"),
-      col(relCol).cast("long").as("rel"))
-    val seed = e.orderBy(col("rel").desc, col("id")).limit(1)
-      .select(col("id").as("c_id"), col("v").as("cv"), col("rel"))
-      .localCheckpoint(true)
-    var out = seed.select(col("c_id"), lit(1).as("sel_order"),
-      score(col("rel"), lit(0L)).as("mmr100"))
-    var state = e.join(broadcast(seed.select(col("c_id"))),
-        col("id") === col("c_id"), "left_anti")
-      .crossJoin(broadcast(seed.select(col("cv"))))
-      .select(col("id"), col("v"), col("rel"),
-        simI6(col("v"), col("cv")).as("ms"))
-    for (r <- 2 to k) {
-      val next = state
-        .orderBy(score(col("rel"), col("ms")).desc, col("id"))
+    Stage("Similarity.mmrRerank") { st =>
+      val e = cands.select(col(idCol).as("id"), col(vecCol).as("v"),
+        col(relCol).cast("long").as("rel"))
+      val seed = st.checkpoint(e.orderBy(col("rel").desc, col("id"))
         .limit(1)
-        .select(col("id").as("c_id"), col("v").as("cv"),
-          score(col("rel"), col("ms")).as("mmr100"))
-        .localCheckpoint(true) // 1 row; truncates the round's lineage
-      out = out.unionByName(
-        next.select(col("c_id"), lit(r).as("sel_order"), col("mmr100")))
-      state = state
-        .join(broadcast(next.select(col("c_id"))),
+        .select(col("id").as("c_id"), col("v").as("cv"), col("rel")), "seed")
+      var out = seed.select(col("c_id"), lit(1).as("sel_order"),
+        score(col("rel"), lit(0L)).as("mmr100"))
+      var state = e.join(broadcast(seed.select(col("c_id"))),
           col("id") === col("c_id"), "left_anti")
-        .crossJoin(broadcast(next.select(col("cv"))))
+        .crossJoin(broadcast(seed.select(col("cv"))))
         .select(col("id"), col("v"), col("rel"),
-          greatest(col("ms"), simI6(col("v"), col("cv"))).as("ms"))
+          simI6(col("v"), col("cv")).as("ms"))
+      for (r <- 2 to k) {
+        // 1 row; truncates the round's lineage
+        val next = st.checkpoint(state
+          .orderBy(score(col("rel"), col("ms")).desc, col("id"))
+          .limit(1)
+          .select(col("id").as("c_id"), col("v").as("cv"),
+            score(col("rel"), col("ms")).as("mmr100")), s"round$r")
+        out = out.unionByName(
+          next.select(col("c_id"), lit(r).as("sel_order"), col("mmr100")))
+        state = state
+          .join(broadcast(next.select(col("c_id"))),
+            col("id") === col("c_id"), "left_anti")
+          .crossJoin(broadcast(next.select(col("cv"))))
+          .select(col("id"), col("v"), col("rel"),
+            greatest(col("ms"), simI6(col("v"), col("cv"))).as("ms"))
+      }
+      out.orderBy(col("sel_order"))
     }
-    out.orderBy(col("sel_order"))
   }
 
   /** D5 [NS] — SEMANTIC dedup (SemDedup; Abbas et al. 2023, public
@@ -695,33 +694,30 @@ object Similarity {
   def semanticDedup(df: DataFrame, idCol: String, vecCol: String,
       k: Int, iters: Int, minCos: Double): DataFrame = {
     val cents = kmeans(df, idCol, vecCol, k, iters)
-    // both sides of the centroid self-join read this; pin it once with
-    // persist (lineage kept — recoverable on executor loss, unlike a
-    // localCheckpoint of the full vector corpus) and release it in
-    // `finally` after the SMALL drop set (ids only) is eagerly
-    // materialized — the crossCorpusLeakage pattern. Assignment is a
-    // per-row map now (ivfAssign keepCols) — no join back on idCol.
-    val e = ivfAssign(
-        df.select(col(idCol), vecD(col(vecCol)).as("v")),
-        idCol, "v", cents, keepCols = true)
-      .drop("cos")
-      .withColumn("nrm", sqrt(dot(col("v"), col("v"))))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
+    Stage("Similarity.semanticDedup") { st =>
+      // both sides of the centroid self-join read this; pinned (lineage
+      // kept — recoverable on executor loss, unlike a checkpoint of the
+      // full vector corpus) while only the SMALL drop set (ids only) is
+      // checkpointed. Assignment is a per-row map (ivfAssign keepCols) —
+      // no join back on idCol.
+      val e = st.pin(ivfAssign(
+          df.select(col(idCol), vecD(col(vecCol)).as("v")),
+          idCol, "v", cents, keepCols = true)
+        .drop("cos")
+        .withColumn("nrm", sqrt(dot(col("v"), col("v")))))
       val a = e.select(col(idCol).as("_ia"), col("v").as("va"),
         col("centroid"), col("nrm").as("na"))
       val b = e.select(col(idCol).as("_ib"), col("v").as("vb"),
         col("centroid"), col("nrm").as("nb"))
-      val dropped = a.join(b, Seq("centroid"))
+      val dropped = st.checkpoint(a.join(b, Seq("centroid"))
         .filter(col("_ia") < col("_ib"))
         .withColumn("cos",
           round(when(col("na") * col("nb") === 0.0, 0.0)
             .otherwise(dot(col("va"), col("vb")) / (col("na") * col("nb"))), 6))
         .filter(col("cos") >= minCos)
-        .select(col("_ib").as("_drop")).distinct()
-        .localCheckpoint(true)
+        .select(col("_ib").as("_drop")).distinct(), "dropped")
       df.join(dropped, col(idCol) === col("_drop"), "left_anti")
-    } finally e.unpersist(blocking = false)
+    }
   }
 
   /** Squared L2 distance rounded to 6 — the PQ quantization metric, in
@@ -818,20 +814,19 @@ object Similarity {
       s"pqTrain: m=$m subDim=$subDim ksub=$ksub iters=$iters " +
         "(m·subDim must equal the vector dimension; a short final slice " +
         "silently quantizes a truncated subspace)")
-    val spark = df.sparkSession
-    // self-dots hoisted: ‖sv‖² once per (row, sub); checkpoint measured
-    // faster than persist here (see git history). The m·ksub codebook
-    // lives on the DRIVER between rounds and inlines into each round's
-    // argmin expression, so one Lloyd round = ONE map + aggregate job
-    // with a single exchange — the old shape paid a broadcast join, an
-    // argmin exchange and TWO mean exchanges per round (guide §2.4).
-    val subs = df.select(col(idCol), posexplode(array((0 until m).map(s =>
-        slice(dimChecked(vecD(col(vecCol)), m, subDim),
-          s * subDim + 1, subDim)): _*))
-        .as(Seq("sub", "sv")))
-      .withColumn("sv2", dot(col("sv"), col("sv")))
-      .localCheckpoint()
-    try {
+    Stage("Similarity.pqTrain") { st =>
+      val spark = df.sparkSession
+      // self-dots hoisted: ‖sv‖² once per (row, sub); checkpoint measured
+      // faster than persist here (see git history). The m·ksub codebook
+      // lives on the DRIVER between rounds and inlines into each round's
+      // argmin expression, so one Lloyd round = ONE map + aggregate job
+      // with a single exchange — the old shape paid a broadcast join, an
+      // argmin exchange and TWO mean exchanges per round (guide §2.4).
+      val subs = st.checkpoint(df.select(col(idCol),
+          posexplode(array((0 until m).map(s =>
+            slice(dimChecked(vecD(col(vecCol)), m, subDim),
+              s * subDim + 1, subDim)): _*)).as(Seq("sub", "sv")))
+        .withColumn("sv2", dot(col("sv"), col("sv"))), "subs")
       val initIds = df.select(col(idCol)).orderBy(col(idCol)).limit(ksub)
       // (sub, c_id, cv) rows on the driver; cv2 recomputed per round by
       // the same Spark `dot` used before (bit parity)
@@ -870,7 +865,7 @@ object Similarity {
         }
       }
       centsDf(cents)
-    } finally subs.unpersist(blocking = false)
+    }
   }
 
   /** PQ encoding: each vector → m small codes, the L2-nearest codeword
