@@ -130,11 +130,10 @@ object Analytics {
     * single-partition window; N falls out of the same per-range counts.
     * Output per bucket: row count and the [lo, hi] value span. */
   def equiDepth(df: DataFrame, valueCol: String, tiebreak: Seq[String],
-      buckets: Int): DataFrame = {
+      buckets: Int): DataFrame = Stage("Analytics.equiDepth") { implicit st =>
     val order = col(valueCol).asc +: tiebreak.map(col(_).asc)
-    val ranked = Curation.withGlobalRank(
+    val (ranked, n) = Curation.withGlobalRank(
       df.select(col(valueCol) +: tiebreak.map(col(_)): _*), order, "_rk")
-    val n = ranked.agg(max(col("_rk"))).collect()(0).getLong(0) + 1L
     ranked
       .withColumn("bucket", expr(s"(_rk * $buckets) div ${n}L"))
       .groupBy(col("bucket"))
@@ -559,13 +558,14 @@ object Analytics {
     * contribution `(n·gap) div N` — Σ contrib over the table IS the
     * ECE, all exact integer ppm. */
   def calibrationTable(df: DataFrame, scoreCol: String, tieCol: String,
-      labelCol: String, buckets: Int): DataFrame = {
+      labelCol: String, buckets: Int)
+      : DataFrame = Stage("Analytics.calibrationTable") { implicit st =>
     require(buckets > 0, s"need positive buckets, got $buckets")
     val in = df.filter(col(scoreCol).isNotNull)
       .select(col(scoreCol).cast("long").as("_s"), col(tieCol).as("_t"),
         col(labelCol).cast("boolean").as("_y"))
-    val ranked = Curation.withGlobalRank(in, Seq(col("_s"), col("_t")),
-      "_rk")
+    val (ranked, _) = Curation.withGlobalRank(in,
+      Seq(col("_s"), col("_t")), "_rk")
     val stats = in.agg(count(lit(1)).as("_N"), min(col("_s")).as("_mn"),
       max(col("_s")).as("_mx"))
     ranked.crossJoin(broadcast(stats))
@@ -692,13 +692,14 @@ object Analytics {
     * cumPos@k at each positive row; a join on the tie id lines them
     * up. Output: 1 row (n, n_pos, ap_ppm); NULL ap on zero positives. */
   def averagePrecision(df: DataFrame, scoreCol: String, tieCol: String,
-      labelCol: String): DataFrame = {
+      labelCol: String)
+      : DataFrame = Stage("Analytics.averagePrecision") { implicit st =>
     val v = df.filter(col(scoreCol).isNotNull && col(labelCol).isNotNull)
       .select(col(scoreCol).cast("long").as("_s"), col(tieCol).as("_t"),
         col(labelCol).cast("boolean").as("_y"))
-    val ranked = Curation.withGlobalRank(v,
+    val (ranked, _) = Curation.withGlobalRank(v,
       Seq(col("_s").desc, col("_t")), "_rk")
-    val posRanked = Curation.withGlobalRank(v.filter(col("_y")),
+    val (posRanked, _) = Curation.withGlobalRank(v.filter(col("_y")),
       Seq(col("_s").desc, col("_t")), "_pk")
     // withGlobalRank is 0-based; AP's precision@k wants 1-based ranks
     val terms = ranked.join(posRanked.select(col("_t"), col("_pk")),
@@ -859,12 +860,13 @@ object Analytics {
     * denominators; the cumulative window runs over `buckets` aggregate
     * rows (bounded by the parameter, never the data). */
   def gainsTable(df: DataFrame, scoreCol: String, tieCol: String,
-      labelCol: String, buckets: Int): DataFrame = {
+      labelCol: String, buckets: Int)
+      : DataFrame = Stage("Analytics.gainsTable") { implicit st =>
     require(buckets > 0, s"need positive buckets, got $buckets")
     val in = df.filter(col(scoreCol).isNotNull)
       .select(col(scoreCol).cast("long").as("_s"), col(tieCol).as("_t"),
         col(labelCol).cast("boolean").as("_y"))
-    val ranked = Curation.withGlobalRank(in,
+    val (ranked, _) = Curation.withGlobalRank(in,
       Seq(col("_s").desc, col("_t")), "_rk")
     val stats = in.agg(count(lit(1)).as("_N"),
       sum(when(col("_y"), 1L).otherwise(0L)).as("_P"))
@@ -934,11 +936,12 @@ object Analytics {
     * window); the lookup is an equi-join on the computed index. Adds
     * `<valCol>_qn`. */
   def quantileNormalize(df: DataFrame, groupCol: String, valCol: String,
-      tieCol: String): DataFrame = {
+      tieCol: String)
+      : DataFrame = Stage("Analytics.quantileNormalize") { implicit st =>
     val in = df.filter(col(valCol).isNotNull)
     val global = Curation.withGlobalRank(
       in.select(col(valCol).as("_gv"), col(tieCol).as("_gt")),
-      Seq(col("_gv"), col("_gt")), "_gidx")
+      Seq(col("_gv"), col("_gt")), "_gidx")._1
       .select(col("_gidx"), col("_gv"))
     val nRow = global.agg(count(lit(1)).as("_N"))
     val ranked = in
@@ -1274,12 +1277,13 @@ object Analytics {
     * row per unit with integer pred/actual and a 0/1 split flag
     * (1 = calibration, 0 = test). */
   def splitConformal(df: DataFrame, predCol: String, actualCol: String,
-      calCol: String, alphaPct: Int): DataFrame = {
+      calCol: String, alphaPct: Int)
+      : DataFrame = Stage("Analytics.splitConformal") { implicit st =>
     require(alphaPct > 0 && alphaPct < 100, s"alphaPct in (0,100): $alphaPct")
     val res = df.select(col(calCol).as("_cal"),
       abs(col(actualCol) - col(predCol)).cast("long").as("_r"))
     val cal = res.filter(col("_cal") === 1).select(col("_r"))
-    val ranked = Curation.withGlobalRank(cal,
+    val (ranked, _) = Curation.withGlobalRank(cal,
       Seq(col("_r").asc), "_rk")
     val nCal = ranked.agg(count(lit(1)).as("n_cal"))
     // k = ceil((100-alpha)/100 * (n+1)), 1-based; rank col is 0-based
@@ -1579,10 +1583,10 @@ object Analytics {
     * (power sums need the mean) + one quartile window — group-parallel
     * throughout. */
   def shapeProfile(df: DataFrame, keyCol: String,
-      valCol: String): DataFrame = {
-    val in = df.filter(col(keyCol).isNotNull && col(valCol).isNotNull)
-      .select(col(keyCol), col(valCol).cast("long").as("_v"))
-      .localCheckpoint(true)
+      valCol: String): DataFrame = Stage("Analytics.shapeProfile") { st =>
+    val in = st.checkpoint(
+      df.filter(col(keyCol).isNotNull && col(valCol).isNotNull)
+        .select(col(keyCol), col(valCol).cast("long").as("_v")), "in")
     val w = Window.partitionBy(col(keyCol))
     val quart = in
       .withColumn("_rn", row_number().over(w.orderBy(col("_v"))))
@@ -1798,7 +1802,8 @@ object Analytics {
     * Output: one row (n_a, n_b, d_ppm, at_value, drift) — at_value the
     * smallest value attaining D; drift = D ≥ thresholdPpm. */
   def ksTwoSample(a: DataFrame, b: DataFrame, valCol: String,
-      bucketWidth: Double, thresholdPpm: Long): DataFrame = {
+      bucketWidth: Double, thresholdPpm: Long)
+      : DataFrame = Stage("Analytics.ksTwoSample") { st =>
     require(bucketWidth > 0, s"bucketWidth must be positive: $bucketWidth")
     val tagged = a.select(col(valCol).as("v"), lit(1L).as("ia"),
         lit(0L).as("ib"))
@@ -1820,7 +1825,7 @@ object Analytics {
       .withColumn("oa", sum(col("ta")).over(overBuckets) - col("ta"))
       .withColumn("ob", sum(col("tb")).over(overBuckets) - col("tb"))
       .select(col("bk"), col("oa"), col("ob"))
-    val diffs = local.join(broadcast(offsets), Seq("bk"))
+    val diffs = st.checkpoint(local.join(broadcast(offsets), Seq("bk"))
       .withColumn("ca", col("oa") + col("la"))
       .withColumn("cb", col("ob") + col("lb"))
       .crossJoin(broadcast(tagged.agg(sum(col("ia")).as("n_a"),
@@ -1831,8 +1836,7 @@ object Analytics {
           "cast(cb as decimal(38,0)) * n_a) * 1000000 " +
           "div (cast(n_a as decimal(38,0)) * n_b) as bigint) " +
           "ELSE cast(0 as bigint) END"))
-      .select(col("v"), col("n_a"), col("n_b"), col("d"))
-      .localCheckpoint(true)
+      .select(col("v"), col("n_a"), col("n_b"), col("d")), "diffs")
     val dmax = diffs.agg(max(col("d")).as("d_ppm"))
     diffs.join(broadcast(dmax), col("d") === col("d_ppm"))
       .groupBy(col("n_a"), col("n_b"), col("d_ppm"))
@@ -1916,7 +1920,7 @@ object Analytics {
     * then |groups|-row arithmetic. Output: one row (n_total, n_groups,
     * h_ppm, tie_c_ppm, h_corrected_ppm). */
   def kruskalWallis(df: DataFrame, groupCol: String, valCol: String,
-      bucketWidth: Double): DataFrame = {
+      bucketWidth: Double): DataFrame = Stage("Analytics.kruskalWallis") { st =>
     require(bucketWidth > 0, s"bucketWidth must be positive")
     val base = df
       .filter(col(valCol).isNotNull && col(groupCol).isNotNull)
@@ -1931,12 +1935,11 @@ object Analytics {
       .agg(sum(col("cnt")).as("tc"))
       .withColumn("oc", sum(col("tc")).over(overBuckets) - col("tc"))
       .select(col("bk"), col("oc"))
-    val mid = byV.withColumn("lc", sum(col("cnt")).over(inBucket))
+    val mid = st.checkpoint(byV.withColumn("lc", sum(col("cnt")).over(inBucket))
       .join(broadcast(offsets), Seq("bk"))
       .withColumn("mid2", lit(2L) * (col("oc") + col("lc") -
         col("cnt")) + col("cnt") + lit(1L))
-      .select(col("v"), col("cnt"), col("mid2"))
-      .localCheckpoint(true)
+      .select(col("v"), col("cnt"), col("mid2")), "mid")
     val perGroup = base.groupBy(col("v"), col("g"))
       .agg(count(lit(1)).as("cgv"))
       .join(mid.select(col("v"), col("mid2")), Seq("v"))
@@ -1983,14 +1986,14 @@ object Analytics {
     * truncating ppm. Input: one row per pair. Output: one row
     * (n_pairs, n_zero, w2_plus, w2_minus, rbc_ppm). */
   def wilcoxonSignedRank(df: DataFrame, xCol: String, yCol: String,
-      bucketWidth: Double): DataFrame = {
+      bucketWidth: Double)
+      : DataFrame = Stage("Analytics.wilcoxonSignedRank") { st =>
     require(bucketWidth > 0, s"bucketWidth must be positive")
     val d0 = df
       .filter(col(xCol).isNotNull && col(yCol).isNotNull)
       .select((col(xCol).cast("long") - col(yCol).cast("long")).as("d"))
-    val base = d0.withColumn("a", abs(col("d")))
-      .withColumn("pos", col("d") > 0)
-      .localCheckpoint(true)
+    val base = st.checkpoint(d0.withColumn("a", abs(col("d")))
+      .withColumn("pos", col("d") > 0), "base")
     val nz = base.filter(col("d") === 0)
       .agg(count(lit(1)).as("n_zero"))
     val nonzero = base.filter(col("d") =!= 0)
@@ -2184,21 +2187,21 @@ object Analytics {
     * (N² − Σ n_g²)/2 exactly. Output: one row
     * (n_total, k, j2, e_j2, trend_agrees). */
   def jonckheereTerpstra(df: DataFrame, groupCol: String,
-      valCol: String, order: Seq[String]): DataFrame = {
+      valCol: String, order: Seq[String])
+      : DataFrame = Stage("Analytics.jonckheereTerpstra") { st =>
     require(order.size >= 2 && order.distinct.size == order.size,
       "jonckheereTerpstra needs >= 2 ordered distinct groups")
     val sp = df.sparkSession
     import sp.implicits._
     val ord = order.zipWithIndex.map { case (g, i) => (g, i + 1L) }
       .toDF("_g", "_o")
-    val hist = df
+    val hist = st.checkpoint(df
       .filter(col(groupCol).isNotNull && col(valCol).isNotNull)
       .select(col(groupCol).cast("string").as("_g"),
         col(valCol).cast("long").as("_v"))
       .join(broadcast(ord), Seq("_g"))
       .groupBy(col("_g"), col("_o"), col("_v"))
-      .agg(count(lit(1)).as("_c"))
-      .localCheckpoint(true)
+      .agg(count(lit(1)).as("_c")), "hist")
     val allv = hist.select(col("_v")).distinct()
     val grid = allv.crossJoin(broadcast(ord))
       .join(hist.select(col("_g"), col("_v"), col("_c")),
@@ -2347,12 +2350,11 @@ object Analytics {
     *
     * Output: (key, n_points, n_pairs, slope_ppm, intercept_ppm). */
   def theilSen(df: DataFrame, keyCol: String, xCol: String,
-      yCol: String): DataFrame = {
-    val pts = df
+      yCol: String): DataFrame = Stage("Analytics.theilSen") { st =>
+    val pts = st.checkpoint(df
       .filter(col(xCol).isNotNull && col(yCol).isNotNull)
       .select(col(keyCol).as("k"), col(xCol).cast("long").as("x"),
-        col(yCol).cast("long").as("y"))
-      .localCheckpoint(true)
+        col(yCol).cast("long").as("y")), "pts")
     val slopes = pts.as("a").join(pts.as("b"),
         col("a.k") === col("b.k") && col("a.x") < col("b.x"))
       .select(col("a.k").as("k"), col("a.x").as("x1"),
@@ -2400,12 +2402,13 @@ object Analytics {
     * Output: one row (n, total, gini_ppm, bottom50_ppm, top10_ppm,
     * top1_ppm). */
   def giniConcentration(df: DataFrame, valCol: String,
-      tieCol: String): DataFrame = {
+      tieCol: String)
+      : DataFrame = Stage("Analytics.giniConcentration") { implicit st =>
     val vals = df
       .filter(col(valCol).isNotNull && col(valCol) >= 0)
       .select(col(valCol).cast("long").as("x"), col(tieCol).as("_tie"))
     val ranked = Curation.withGlobalRank(vals,
-        Seq(col("x"), col("_tie")), "_r0")
+        Seq(col("x"), col("_tie")), "_r0")._1
       .withColumn("r", col("_r0") + 1L)
     val tot = ranked.agg(count(lit(1)).as("n"),
       sum(col("x").cast("decimal(38,0)")).as("sx"))
@@ -2465,22 +2468,22 @@ object Analytics {
     * sum_t, sum_c, diff_ppm) ordered by stratum name (the `__`-prefixed
     * summary rows sort ahead of lowercase strata). */
   def stratifiedEffect(df: DataFrame, stratumCol: String,
-      treatCol: String, outcomeCol: String): DataFrame = {
+      treatCol: String, outcomeCol: String)
+      : DataFrame = Stage("Analytics.stratifiedEffect") { st =>
     val base = df
       .filter(col(treatCol).isNotNull && col(outcomeCol).isNotNull &&
         col(stratumCol).isNotNull)
       .select(col(stratumCol).cast("string").as("stratum"),
         col(treatCol).cast("boolean").as("_tr"),
         col(outcomeCol).cast("long").as("_y"))
-    val byStratum = base.groupBy(col("stratum"))
+    val byStratum = st.checkpoint(base.groupBy(col("stratum"))
       .agg(
         sum(when(col("_tr"), 1L).otherwise(0L)).as("n_t"),
         sum(when(!col("_tr"), 1L).otherwise(0L)).as("n_c"),
         sum(when(col("_tr"), col("_y")).otherwise(0L)
           .cast("decimal(38,0)")).as("_st"),
         sum(when(!col("_tr"), col("_y")).otherwise(0L)
-          .cast("decimal(38,0)")).as("_sc"))
-      .localCheckpoint(true)
+          .cast("decimal(38,0)")).as("_sc")), "byStratum")
     def withDiff(d: DataFrame): DataFrame = d
       .withColumn("diff_ppm", expr(
         "CASE WHEN n_t > 0 AND n_c > 0 THEN " +
@@ -2614,12 +2617,12 @@ object Analytics {
     * Input: one row per common key with both ranks. Output: one row
     * (n_keys, n_pairs, concordant, discordant, tied, gamma_ppm). */
   def goodmanKruskalGamma(df: DataFrame, keyCol: String,
-      raCol: String, rbCol: String): DataFrame = {
-    val m = df.select(col(keyCol).cast("string").as("k"),
+      raCol: String, rbCol: String)
+      : DataFrame = Stage("Analytics.goodmanKruskalGamma") { st =>
+    val m = st.checkpoint(df.select(col(keyCol).cast("string").as("k"),
         col(raCol).cast("long").as("ra"),
         col(rbCol).cast("long").as("rb"))
-      .filter(col("ra").isNotNull && col("rb").isNotNull)
-      .localCheckpoint(true)
+      .filter(col("ra").isNotNull && col("rb").isNotNull), "m")
     m.as("x").join(m.as("y"), col("x.k") < col("y.k"))
       .select((col("x.ra") - col("y.ra")).as("da"),
         (col("x.rb") - col("y.rb")).as("db"))
@@ -2656,13 +2659,13 @@ object Analytics {
     * rank window runs per group over per-USER rows (aggregate-sized),
     * and the clip pass reuses the same frame. */
   def contributionBound(df: DataFrame, groupCol: String,
-      userCol: String, pct: Int): DataFrame = {
+      userCol: String, pct: Int)
+      : DataFrame = Stage("Analytics.contributionBound") { st =>
     require(pct >= 1 && pct <= 100, s"pct in [1,100]: $pct")
-    val perUser = df
+    val perUser = st.checkpoint(df
       .filter(col(userCol).isNotNull)
       .groupBy(col(groupCol).as("grp"), col(userCol).as("usr"))
-      .agg(count(lit(1)).as("n_u"))
-      .localCheckpoint(true)
+      .agg(count(lit(1)).as("n_u")), "perUser")
     val w = Window.partitionBy(col("grp"))
       .orderBy(col("n_u").asc, col("usr").asc)
     val caps = perUser

@@ -51,6 +51,21 @@ object AnnIndex {
 
   def centroidsPath(dir: String) = s"$dir/centroids"
   def codebooksPath(dir: String) = s"$dir/codebooks"
+
+  /** The stored coarse centroids and PQ codebooks, read under the schema
+    * [[build]] wrote (no footer inference per call). */
+  private def storedQuantizers(spark: SparkSession,
+      dir: String): (DataFrame, DataFrame) = {
+    import org.apache.spark.sql.types._
+    val vec = ArrayType(DoubleType)
+    (spark.read.schema(StructType(Seq(
+        StructField("c_id", LongType), StructField("cv", vec))))
+      .parquet(centroidsPath(dir)),
+    spark.read.schema(StructType(Seq(
+        StructField("sub", IntegerType), StructField("c_id", LongType),
+        StructField("cv", vec))))
+      .parquet(codebooksPath(dir)))
+  }
   def codesPath(dir: String)     = s"$dir/codes"
   private def metaPath(dir: String) = s"$dir/_graft_index_meta.json"
   private def batchesPath(dir: String) = s"$dir/_graft_applied_batches.json"
@@ -134,7 +149,6 @@ object AnnIndex {
   def appendBatch(spark: SparkSession, dir: String, delta: DataFrame,
       idCol: String, vecCol: String, m: Int, subDim: Int,
       metaCols: Seq[String] = Nil): Unit = {
-    import org.apache.spark.sql.types._
     val metaFile = java.nio.file.Paths.get(metaPath(dir))
     if (java.nio.file.Files.exists(metaFile)) {
       val fp = java.nio.file.Files.readString(metaFile)
@@ -153,14 +167,7 @@ object AnnIndex {
         s"appendBatch metaCols $metaCols do not match the stored index's " +
           s"$storedMeta (${metaPath(dir)})")
     }
-    val vec = ArrayType(DoubleType)
-    val cents = spark.read.schema(StructType(Seq(
-        StructField("c_id", LongType), StructField("cv", vec))))
-      .parquet(centroidsPath(dir))
-    val cbs = spark.read.schema(StructType(Seq(
-        StructField("sub", IntegerType), StructField("c_id", LongType),
-        StructField("cv", vec))))
-      .parquet(codebooksPath(dir))
+    val (cents, cbs) = storedQuantizers(spark, dir)
     val assigned = Similarity.ivfAssign(delta, idCol, vecCol, cents)
       .select(col(idCol), col("centroid"))
     val meta =
@@ -237,14 +244,7 @@ object AnnIndex {
       subDim: Int, nProbe: Int, shortlist: Int, k: Int): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     import org.apache.spark.sql.types._
-    val vec = ArrayType(DoubleType)
-    val cents = spark.read.schema(StructType(Seq(
-        StructField("c_id", LongType), StructField("cv", vec))))
-      .parquet(centroidsPath(dir))
-    val cbs = spark.read.schema(StructType(Seq(
-        StructField("sub", IntegerType), StructField("c_id", LongType),
-        StructField("cv", vec))))
-      .parquet(codebooksPath(dir))
+    val (cents, cbs) = storedQuantizers(spark, dir)
     val codes = spark.read.schema(StructType(Seq(
         StructField(idCol, LongType), StructField("sub", IntegerType),
         StructField("code", LongType), StructField("centroid", LongType))))
@@ -332,14 +332,7 @@ object AnnIndex {
     // EXPLICIT schemas. At scale this skips per-query footer reads for
     // inference, and it pins the partition column's type (long) so the
     // probe filter below stays a partition filter (no cast demotion).
-    val vec = ArrayType(DoubleType)
-    val cents = spark.read.schema(StructType(Seq(
-        StructField("c_id", LongType), StructField("cv", vec))))
-      .parquet(centroidsPath(dir))
-    val cbs = spark.read.schema(StructType(Seq(
-        StructField("sub", IntegerType), StructField("c_id", LongType),
-        StructField("cv", vec))))
-      .parquet(codebooksPath(dir))
+    val (cents, cbs) = storedQuantizers(spark, dir)
     val codes = spark.read.schema(StructType(Seq(
         StructField(idCol, LongType), StructField("sub", IntegerType),
         StructField("code", LongType), StructField("centroid", LongType))
@@ -413,12 +406,11 @@ object AnnIndex {
     * no-op after a removal, not resurrect the batch). Certified
     * removal ≡ metadata-filter serving by q268's oracle. */
   def removeVectors(spark: SparkSession, dir: String, ids: DataFrame,
-      idCol: String): Unit = {
+      idCol: String): Unit = Stage("AnnIndex.removeVectors") { st =>
     val codes = spark.read.parquet(codesPath(dir))
-    val kept = codes
+    val kept = st.checkpoint(codes
       .join(broadcast(ids.select(col(idCol)).distinct()), Seq(idCol),
-        "left_anti")
-      .localCheckpoint(true)
+        "left_anti"), "kept")
     kept.write.mode("overwrite").partitionBy("centroid")
       .parquet(codesPath(dir))
   }

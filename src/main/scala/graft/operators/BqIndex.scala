@@ -113,11 +113,11 @@ object BqIndex {
     * remove ≡ rebuild on the remaining set, certified by q330's
     * remaining-only oracle). */
   def removeIds(spark: SparkSession, dir: String,
-      ids: DataFrame): Unit = {
-    val keep = codes(spark, dir)
+      ids: DataFrame): Unit = Stage("BqIndex.removeIds") { st =>
+    // materialize before overwriting the source
+    val keep = st.checkpoint(codes(spark, dir)
       .join(broadcast(ids.select(col(ids.columns.head).as("vec_id"))),
-        Seq("vec_id"), "left_anti")
-      .localCheckpoint(true) // materialize before overwriting the source
+        Seq("vec_id"), "left_anti"), "keep")
     keep.write.mode("overwrite").parquet(codesPath(dir))
     dropAuditVerdicts(dir)
   }

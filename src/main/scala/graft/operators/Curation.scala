@@ -211,7 +211,7 @@ object Curation {
       minShared: Long, dfMax: Long)(
       assemble: (DataFrame, DataFrame, DataFrame, DataFrame, DataFrame,
         DataFrame, DataFrame) => DataFrame): DataFrame =
-    Stage("Curation.funnelStages") { st =>
+    Stage("Curation.funnelStages") { implicit st =>
       import org.apache.spark.sql.expressions.Window
       val d0 = docs.select(col("doc_id"), col("text"), col("source"),
         col("n_chars"))
@@ -844,8 +844,8 @@ object Curation {
     * verbatim-parallel to the trainer's block so stored-rule encoding
     * and in-query encoding are the same algorithm (TokenizerSpec pins
     * the equivalence end-to-end). */
-  private def applyStoredMerge(pos: DataFrame, a: String,
-      b: String): DataFrame = {
+  private def applyStoredMerge(pos: DataFrame, a: String, b: String)(
+      implicit st: Stage): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     val wn = Window.partitionBy(col("w")).orderBy(col("i"))
     val m = pos.withColumn("ns", lead(col("sym"), 1).over(wn))
@@ -857,11 +857,10 @@ object Curation {
           Window.partitionBy(col("w"), col("grp")))) % 2 === 0)
         .otherwise(lit(false)))
       .withColumn("cons", coalesce(lag(col("mg"), 1).over(wn), lit(false)))
-    m.filter(!col("cons"))
+    st.checkpoint(m.filter(!col("cons"))
       .select(col("w"), (row_number().over(wn) - 1).as("i"),
         when(col("mg"), concat(col("sym"), col("ns")))
-          .otherwise(col("sym")).as("sym"))
-      .localCheckpoint()
+          .otherwise(col("sym")).as("sym")), "merge")
   }
 
   /** [NS] — BPE encode under a STORED rule table — the serving half of
@@ -875,17 +874,21 @@ object Curation {
     * vocab-sized per rule: the corpus pays one explode + one join at
     * the end, never per rule. */
   def bpeEncodeStored(df: DataFrame, idCol: String, textCol: String,
-      rules: DataFrame): DataFrame = {
+      rules: DataFrame)
+      : DataFrame = Stage("Curation.bpeEncodeStored") { implicit st =>
     val ruleSeq = rules.orderBy(col("merge_rank"))
       .select(col("left_sym"), col("right_sym"))
       .collect().map(r => (r.getString(0), r.getString(1)))
     val vocab = df.select(explode(split(col(textCol), " ")).as("w"))
       .filter(length(col("w")) > 0).distinct()
-    var pos = vocab.select(col("w"),
+    var pos = st.checkpoint(vocab.select(col("w"),
         posexplode(filter(split(col("w"), "(?!^)"), _ =!= ""))
-          .as(Seq("i", "sym")))
-      .localCheckpoint()
-    for ((a, b) <- ruleSeq) pos = applyStoredMerge(pos, a, b)
+          .as(Seq("i", "sym"))), "pos")
+    for ((a, b) <- ruleSeq) {
+      val prev = pos
+      pos = applyStoredMerge(pos, a, b)
+      st.release(prev)
+    }
     val perWord = pos.groupBy(col("w")).agg(count(lit(1)).as("n_sym"))
     df.select(col(idCol), explode(split(col(textCol), " ")).as("w"))
       .filter(length(col("w")) > 0)
@@ -1001,7 +1004,8 @@ object Curation {
     * aggregate); the ranked result is a TakeOrderedAndProject of ≤ N
     * scored docs, never a global sort of the corpus. */
   def bm25TopK(df: DataFrame, idCol: String, textCol: String,
-      terms: Seq[String], k: Int): DataFrame = {
+      terms: Seq[String], k: Int)
+      : DataFrame = Stage("Curation.bm25TopK") { st =>
     val words = split(col(textCol), " ")
     val dl = df.select(col(idCol),
       size(filter(words, w => length(w) > 0)).cast("long").as("dl"))
@@ -1009,11 +1013,10 @@ object Curation {
       count(lit(1)).as("_N"))
     // tf AND df both read this ≤ N·|terms|-row table; eager checkpoint so
     // the corpus explode runs once, not once per consumer (q83's pattern)
-    val hits = df.select(col(idCol), explode(words).as("term"))
+    val hits = st.checkpoint(df.select(col(idCol), explode(words).as("term"))
       .filter(col("term").isin(terms: _*))
       .groupBy(col(idCol), col("term"))
-      .agg(count(lit(1)).as("tf"))
-      .localCheckpoint(true)
+      .agg(count(lit(1)).as("tf")), "hits")
     val dfreq = hits.groupBy(col("term"))
       .agg(count(lit(1)).as("df"))
     bm25Rank(hits.join(broadcast(dfreq), Seq("term"))
@@ -1058,17 +1061,18 @@ object Curation {
     * then rank = broadcast cumulative offset of the range + the
     * row_number WITHIN the range. Only (id, size) ever shuffles — the
     * document payload joins back by id afterwards if needed. The ranked
-    * frame is localCheckpoint'd so the range boundaries (sampled once)
+    * frame is checkpointed so the range boundaries (sampled once)
     * can't drift between the count pass and the rank pass. */
   def packShards(df: DataFrame, idCol: String, sizeCol: String,
-      nShards: Int): DataFrame =
+      nShards: Int): DataFrame = Stage("Curation.packShards") { implicit st =>
     withGlobalRank(df.select(col(idCol), col(sizeCol)),
-      Seq(col(sizeCol).desc, col(idCol).asc), "_rk0")
+      Seq(col(sizeCol).desc, col(idCol).asc), "_rk0")._1
       .withColumn("shard",
         when(expr(s"(_rk0 div $nShards) % 2") === 0,
           col("_rk0") % nShards)
           .otherwise(lit(nShards - 1) - col("_rk0") % nShards))
       .drop("_rk0")
+  }
 
   /** Inference-batching padding-waste audit: fixed-size micro-batches
     * (`batchSize` sequences each, padded to the batch max) cost
@@ -1083,9 +1087,10 @@ object Curation {
     * ([[withGlobalRank]] — no single-partition window) + a batch
     * aggregate + a 1-row fold; batch ids never leave the executors. */
   def paddingWaste(df: DataFrame, idCol: String, tokCol: String,
-      batchSize: Int): DataFrame = {
+      batchSize: Int)
+      : DataFrame = Stage("Curation.paddingWaste") { implicit st =>
     def arm(order: Seq[Column], strategy: String): DataFrame =
-      withGlobalRank(df.select(col(idCol), col(tokCol)), order, "_rk")
+      withGlobalRank(df.select(col(idCol), col(tokCol)), order, "_rk")._1
         .withColumn("_batch", expr(s"_rk div $batchSize"))
         .groupBy(col("_batch"))
         .agg(count(lit(1)).as("_c"), max(col(tokCol)).as("_m"),
@@ -1106,20 +1111,20 @@ object Curation {
     * single-partition window — range-repartition on the rank keys,
     * count rows per range (a `parts`-row driver read), rank = broadcast
     * cumulative range offset + row_number within the range. The ranked
-    * frame is localCheckpoint'd so the sampled range boundaries cannot
-    * drift between the count pass and the rank pass. `order` must be a
-    * total order (include a unique tiebreak) or ranks at boundary ties
-    * are partition-dependent. */
-  private[operators] def withGlobalRank(df: DataFrame,
-      order: Seq[Column], rankCol: String): DataFrame = {
+    * frame is checkpointed in the caller's Stage so the sampled range
+    * boundaries cannot drift between the count pass and the rank pass.
+    * Returns the ranked frame and its row count N (the last offset).
+    * `order` must be a total order (include a unique tiebreak) or ranks
+    * at boundary ties are partition-dependent. */
+  private[operators] def withGlobalRank(df: DataFrame, order: Seq[Column],
+      rankCol: String)(implicit st: Stage): (DataFrame, Long) = {
     import org.apache.spark.sql.expressions.Window
     val parts =
       df.sparkSession.conf.get("spark.sql.shuffle.partitions").toInt
-    val sorted = df
+    val sorted = st.checkpoint(df
       .repartitionByRange(parts, order: _*)
       .sortWithinPartitions(order: _*)
-      .withColumn("_pid", spark_partition_id())
-      .localCheckpoint(true)
+      .withColumn("_pid", spark_partition_id()), s"rank$rankCol")
     val counts = sorted.groupBy(col("_pid")).count()
       .collect().map(r => r.getInt(0) -> r.getLong(1)).sortBy(_._1)
     val offsets = counts.scanLeft(0L)(_ + _._2)
@@ -1128,9 +1133,9 @@ object Curation {
         when(col("_pid") === pid, lit(off)).otherwise(acc)
       }
     val w = Window.partitionBy(col("_pid")).orderBy(order: _*)
-    sorted
+    (sorted
       .withColumn(rankCol, row_number().over(w).cast("long") + offExpr - 1L)
-      .drop("_pid")
+      .drop("_pid"), offsets.last)
   }
 
   /** [NS] — attach an exact equi-depth bucket column: bucket of a row =
@@ -1139,13 +1144,13 @@ object Curation {
     * away). This is the binning step of every score-stratified mixture:
     * quality/perplexity quartiles, difficulty tiers, curriculum stages —
     * downstream samplers then draw per bucket. Rank is the two-pass
-    * [[withGlobalRank]] (no single-partition window); N falls out of a
-    * 1-row max-rank read. `order` must include a unique tiebreak. */
+    * [[withGlobalRank]] (no single-partition window); N is the sum of its
+    * per-range counts. `order` must include a unique tiebreak. */
   def withEquiBuckets(df: DataFrame, order: Seq[Column], buckets: Int,
-      binCol: String): DataFrame = {
+      binCol: String)
+      : DataFrame = Stage("Curation.withEquiBuckets") { implicit st =>
     require(buckets >= 1, s"buckets must be >= 1, got $buckets")
-    val ranked = withGlobalRank(df, order, "_rkb")
-    val n = ranked.agg(max(col("_rkb"))).collect()(0).getLong(0) + 1L
+    val (ranked, n) = withGlobalRank(df, order, "_rkb")
     ranked.withColumn(binCol, expr(s"(_rkb * $buckets) div ${n}L"))
       .drop("_rkb")
   }
@@ -1662,12 +1667,12 @@ object Curation {
     * Output: (idCol, clean_text, kept_lines, dropped_lines) — the
     * [[extractText]] shape, so the two stages chain. */
   def dedupCorpusLines(df: DataFrame, idCol: String, textCol: String,
-      maxDocs: Long): DataFrame = {
+      maxDocs: Long): DataFrame = Stage("Curation.dedupCorpusLines") { st =>
     require(maxDocs >= 1, s"maxDocs must be >= 1, got $maxDocs")
     // both the frequency aggregate and the verdict join read this —
     // pin it once, or the (possibly expensive — q227 chains extraction)
     // upstream recomputes per branch (bm25TopK's q83 pattern)
-    val lines = lineFrame(df, idCol, textCol).localCheckpoint(true)
+    val lines = st.checkpoint(lineFrame(df, idCol, textCol), "lines")
     val freq = lines.groupBy(col("_h"))
       .agg(countDistinct(col(idCol)).as("_nd"))
     cleanFromLineFreq(lines, freq, idCol, maxDocs)
@@ -1772,11 +1777,11 @@ object Curation {
       impDir: String, maxLineDocs: Long, minScorePpm: Long,
       lmDir: Option[String] = None,
       minLmPpm: Long = 0L,
-      lmSmoothing: String = "sb"): Seq[(String, DataFrame)] = {
+      lmSmoothing: String = "sb")(
+      implicit st: Stage): Seq[(String, DataFrame)] = {
     val raw = pages.select(col(idCol))
-    val ex = extractText(pages, idCol, htmlCol)
-      .filter(length(col("clean_text")) > 0)
-      .localCheckpoint(true)
+    val ex = st.checkpoint(extractText(pages, idCol, htmlCol)
+      .filter(length(col("clean_text")) > 0), "ex")
     // Every stage frame below is eagerly checkpointed: each one is read
     // by the NEXT gate AND by its own funnel readout (the per-stage
     // count/xor aggregates the q333/q344/q353 queries emit), and
@@ -1785,20 +1790,18 @@ object Curation {
     // r14: encodingAudit ran 4×, gopherRules 3×, the stored-LM scorer
     // 2× inside one q353 run — 80 scheduler jobs for an 8-row result).
     // One materialization per stage, batch-sized rows (guide §2.4).
-    val enc = ex.join(
+    val enc = st.checkpoint(ex.join(
       encodingAudit(ex, idCol, "clean_text")
         .filter(col("pass_encoding")).select(col(idCol)),
-      Seq(idCol))
-      .localCheckpoint(true)
+      Seq(idCol)), "enc")
     // the gates tokenize on single spaces; the extracted text is
     // line-joined by \n — flatten for the token-level gates only
     def flat(df: DataFrame) = df.withColumn("_flat",
       regexp_replace(col("clean_text"), "\n", " "))
-    val gop = enc.join(
+    val gop = st.checkpoint(enc.join(
       gopherRules(flat(enc), idCol, "_flat")
         .filter(col("pass_all")).select(col(idCol)),
-      Seq(idCol))
-      .localCheckpoint(true)
+      Seq(idCol)), "gop")
     // optional LM-fluency stage (the CCNet gate): trigram score from
     // the STORED LmIndex table trained on the archive's extracted
     // pages — docs scoring under the floor die; docs with no trigrams
@@ -1819,22 +1822,21 @@ object Curation {
         case other => throw new IllegalArgumentException(
           s"crawlStages: unknown lmSmoothing '$other' (sb | kn)")
       }
-      "lm_fluency" -> gop.join(
+      // stored-LM scoring runs once, not per consumer
+      "lm_fluency" -> st.checkpoint(gop.join(
         scored.filter(col("_lm") >= minLmPpm).select(col(idCol)),
-        Seq(idCol))
-        .localCheckpoint(true) // stored-LM scoring runs once, not per consumer
+        Seq(idCol)), "lm_fluency")
     }
     val afterLm = lmStage.map(_._2).getOrElse(gop)
-    val cleaned = LineIndex.serve(spark, afterLm, idCol, "clean_text",
-        lineDir, maxLineDocs)
+    val cleaned = st.checkpoint(LineIndex.serve(spark, afterLm, idCol,
+        "clean_text", lineDir, maxLineDocs)
       .filter(col("kept_lines") > 0)
-      .select(col(idCol), col("clean_text"))
-      .localCheckpoint(true)
-    val deduped = cleaned.join(
+      .select(col(idCol), col("clean_text")), "cleaned")
+    // stored-index probing runs once, not per consumer
+    val deduped = st.checkpoint(cleaned.join(
       DedupIndex.gate(spark, dedupDir, cleaned, idCol, "clean_text")
         .select(col(idCol)),
-      Seq(idCol))
-      .localCheckpoint(true) // stored-index probing runs once, not per consumer
+      Seq(idCol)), "deduped")
     val admitted = deduped.join(
       Importance.score(
           Importance.docBuckets(flat(deduped), idCol, "_flat", 64),

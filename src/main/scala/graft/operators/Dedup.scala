@@ -71,18 +71,14 @@ object Dedup {
     * zero shuffles before the band self-join — the only exchange in the
     * whole operator is on the band key. */
   def minhashLshCandidates(df: DataFrame, idCol: String, textCol: String,
-      shingleN: Int = 3, k: Int = 8, bands: Int = 4): DataFrame = {
+      shingleN: Int = 3, k: Int = 8, bands: Int = 4)
+      : DataFrame = Stage("Dedup.minhashLshCandidates") { st =>
     val rows = k / bands
-    val sig = df.select(col(idCol),
-      graft.functions.MinHashExpression
-        .minhashSignature(col(textCol), shingleN, k).as("_sig"))
-      .filter(col("_sig").isNotNull)
-      .select(col(idCol) +: (0 until k).map(i =>
-        element_at(col("_sig"), i + 1).as(s"s$i")): _*)
     // both sides of the band self-join read the band table; eager
     // localCheckpoint materializes it ONCE before the join (a lazy
     // persist lets both branches race to compute every partition twice)
-    val bds = lshBands(sig, idCol, k, bands).localCheckpoint()
+    val bds =
+      st.checkpoint(bandTable(df, idCol, textCol, shingleN, k, bands), "bds")
     val keyCols = "band" +: (0 until rows).map(r => s"v$r")
     val a = bds.withColumnRenamed(idCol, "doc_a")
     val b = bds.withColumnRenamed(idCol, "doc_b")
@@ -118,16 +114,12 @@ object Dedup {
     * the join. */
   def minhashLshStarEdges(df: DataFrame, idCol: String, textCol: String,
       shingleN: Int = 3, k: Int = 8, bands: Int = 4,
-      hotThreshold: Int = 64): DataFrame = {
+      hotThreshold: Int = 64)
+      : DataFrame = Stage("Dedup.minhashLshStarEdges") { st =>
     require(hotThreshold >= 1, s"hotThreshold >= 1, got $hotThreshold")
     val rows = k / bands
-    val sig = df.select(col(idCol),
-      graft.functions.MinHashExpression
-        .minhashSignature(col(textCol), shingleN, k).as("_sig"))
-      .filter(col("_sig").isNotNull)
-      .select(col(idCol) +: (0 until k).map(i =>
-        element_at(col("_sig"), i + 1).as(s"s$i")): _*)
-    val bds = lshBands(sig, idCol, k, bands).localCheckpoint()
+    val bds =
+      st.checkpoint(bandTable(df, idCol, textCol, shingleN, k, bands), "bds")
     val keyCols = "band" +: (0 until rows).map(r => s"v$r")
     val stats = bds.groupBy(keyCols.map(col): _*)
       .agg(count(lit(1)).as("_m"), min(col(idCol)).as("_hub"))
@@ -160,14 +152,8 @@ object Dedup {
       shingleN: Int = 3, k: Int = 8, bands: Int = 4,
       hotThreshold: Int = 64): DataFrame = {
     val rows = k / bands
-    val sig = df.select(col(idCol),
-      graft.functions.MinHashExpression
-        .minhashSignature(col(textCol), shingleN, k).as("_sig"))
-      .filter(col("_sig").isNotNull)
-      .select(col(idCol) +: (0 until k).map(i =>
-        element_at(col("_sig"), i + 1).as(s"s$i")): _*)
     val keyCols = "band" +: (0 until rows).map(r => s"v$r")
-    lshBands(sig, idCol, k, bands)
+    bandTable(df, idCol, textCol, shingleN, k, bands)
       .groupBy(keyCols.map(col): _*)
       .agg(count(lit(1)).as("m"))
       .groupBy(col("m"))
@@ -197,23 +183,18 @@ object Dedup {
     * (group_a, group_b, pair_volume, cross_group, share_ppm). */
   def lshGroupPairVolume(df: DataFrame, idCol: String, textCol: String,
       meta: DataFrame, groupCol: String,
-      shingleN: Int = 3, k: Int = 8, bands: Int = 4): DataFrame = {
+      shingleN: Int = 3, k: Int = 8, bands: Int = 4)
+      : DataFrame = Stage("Dedup.lshGroupPairVolume") { st =>
     import org.apache.spark.sql.expressions.Window
     val rows = k / bands
-    val sig = df.select(col(idCol),
-      graft.functions.MinHashExpression
-        .minhashSignature(col(textCol), shingleN, k).as("_sig"))
-      .filter(col("_sig").isNotNull)
-      .select(col(idCol) +: (0 until k).map(i =>
-        element_at(col("_sig"), i + 1).as(s"s$i")): _*)
     val keyCols = "band" +: (0 until rows).map(r => s"v$r")
     // per (bucket, group) member counts — the whole corpus collapses to
-    // ≤ |buckets|·|groups| rows before anything pair-shaped happens
-    val gc = lshBands(sig, idCol, k, bands)
+    // ≤ |buckets|·|groups| rows before anything pair-shaped happens;
+    // checkpointed for both sides of the tiny self-join below
+    val gc = st.checkpoint(bandTable(df, idCol, textCol, shingleN, k, bands)
       .join(meta.select(col(idCol), col(groupCol).as("_g")), Seq(idCol))
       .groupBy(keyCols.map(col) :+ col("_g"): _*)
-      .agg(count(lit(1)).as("_c"))
-      .localCheckpoint() // both sides of the tiny self-join below
+      .agg(count(lit(1)).as("_c")), "gc")
     val a = gc.select(keyCols.map(col) :+ col("_g").as("_ga") :+
       col("_c").as("_ca"): _*)
     val b = gc.select(keyCols.map(col) :+ col("_g").as("_gb") :+
@@ -299,7 +280,8 @@ object Dedup {
     * (doc_a, doc_b, shared, jaccard). Jaccard is an int/int division →
     * deterministic double. */
   def ngramJaccardPairs(df: DataFrame, idCol: String, textCol: String,
-      shingleN: Int = 3, minJaccard: Double = 0.5): DataFrame = {
+      shingleN: Int = 3, minJaccard: Double = 0.5)
+      : DataFrame = Stage("Dedup.ngramJaccardPairs") { st =>
     // Count-join form: candidates via shared-gram equi-join, shared counts
     // by aggregation. The per-doc gram set and its size are computed
     // map-side (native array expression; grams travel as 64-bit hashes,
@@ -307,8 +289,8 @@ object Dedup {
     // count. Measured faster than the prefix-filtered variant on
     // dense/small-vocabulary corpora; see ngramJaccardPairsPrefixFiltered
     // for the sparse-vocabulary scale path (identical output).
-    val base = hashedShingleSets(df, idCol, textCol, shingleN)
-      .localCheckpoint()
+    val base = st.checkpoint(
+      hashedShingleSets(df, idCol, textCol, shingleN), "base")
     val ta = base.select(col(idCol).as("doc_a"), col("n").as("na"),
       explode(col("ghs")).as("gh"))
     val tb = base.select(col(idCol).as("doc_b"), col("n").as("nb"),
@@ -333,14 +315,14 @@ object Dedup {
     * small dense vocabularies where prefixes barely prune. */
   def ngramJaccardPairsPrefixFiltered(df: DataFrame, idCol: String,
       textCol: String, shingleN: Int = 3,
-      minJaccard: Double = 0.5): DataFrame = {
+      minJaccard: Double = 0.5)
+      : DataFrame = Stage("Dedup.ngramJaccardPairsPrefixFiltered") { st =>
     // per-doc gram sets map-side; the exploded view feeds document
     // frequency, the array view feeds verification — no collect_set
     // re-aggregation anywhere. ghs ascending-sorted so verification is a
     // linear primitive merge (graft_sorted_isect), not a per-pair hash set.
-    val base = hashedShingleSets(df, idCol, textCol, shingleN)
-      .withColumn("ghs", sort_array(col("ghs")))
-      .localCheckpoint()
+    val base = st.checkpoint(hashedShingleSets(df, idCol, textCol, shingleN)
+      .withColumn("ghs", sort_array(col("ghs"))), "base")
     import org.apache.spark.sql.expressions.Window
     // document frequency WITHOUT a dfreq aggregate + join back: one
     // explicit repartition on the gram hash, then a count window whose
@@ -417,8 +399,8 @@ object Dedup {
     * nodes re-pointed through the delta closure (untouched components
     * keep their rep), new nodes labeled by the delta CC. */
   def ccIncremental(labels: DataFrame, newPairs: DataFrame, aCol: String,
-      bCol: String): DataFrame = {
-    val l = labels.select(col("node"), col("rep")).localCheckpoint()
+      bCol: String): DataFrame = Stage("Dedup.ccIncremental") { st =>
+    val l = st.checkpoint(labels.select(col("node"), col("rep")), "l")
     val mapped = newPairs
       .join(l.select(col("node").as(aCol), col("rep").as("_ra")),
         Seq(aCol), "left")
@@ -426,8 +408,7 @@ object Dedup {
         Seq(bCol), "left")
       .select(coalesce(col("_ra"), col(aCol)).as("_ca"),
         coalesce(col("_rb"), col(bCol)).as("_cb"))
-    val comp = connectedComponents(mapped, "_ca", "_cb")
-      .localCheckpoint()
+    val comp = st.checkpoint(connectedComponents(mapped, "_ca", "_cb"), "comp")
     val updatedOld = l
       .join(comp.select(col("node").as("rep"), col("rep").as("_fr")),
         Seq("rep"), "left")
@@ -497,11 +478,11 @@ object Dedup {
     *
     * Returns (doc_src, doc_dst, shared, containment), src ≠ dst. */
   def containmentPairs(df: DataFrame, idCol: String, textCol: String,
-      shingleN: Int = 3, minContain: Double = 0.8): DataFrame = {
+      shingleN: Int = 3, minContain: Double = 0.8)
+      : DataFrame = Stage("Dedup.containmentPairs") { st =>
     require(minContain > 0 && minContain <= 1, s"bad threshold $minContain")
-    val base = hashedShingleSets(df, idCol, textCol, shingleN)
-      .withColumn("ghs", sort_array(col("ghs")))
-      .localCheckpoint()
+    val base = st.checkpoint(hashedShingleSets(df, idCol, textCol, shingleN)
+      .withColumn("ghs", sort_array(col("ghs"))), "base")
     import org.apache.spark.sql.expressions.Window
     val tg = base.select(col(idCol), explode(col("ghs")).as("gh"))
       .repartition(col("gh"))
@@ -732,17 +713,16 @@ object Dedup {
     * exchange is the (band, key) join; signatures travel as single
     * longs. */
   def hammingPairs64(sigs: DataFrame, idCol: String, sigCol: String,
-      maxDist: Int = 3): DataFrame = {
+      maxDist: Int = 3): DataFrame = Stage("Dedup.hammingPairs64") { st =>
     require(maxDist >= 0 && maxDist < 4,
       s"4 bands are only lossless for Hamming <= 3, got $maxDist")
     // both sides of the band self-join read this; materialize ONCE (the
     // signature kernel is the expensive map stage — an unpinned plan
     // computes it per side, same rationale as minhashLshCandidates)
-    val bands = sigs.select(col(idCol), col(sigCol),
+    val bands = st.checkpoint(sigs.select(col(idCol), col(sigCol),
       posexplode(array((0 until 4).map(b =>
         expr(s"shiftrightunsigned(`$sigCol`, ${48 - 16 * b}) & 65535")): _*))
-        .as(Seq("band", "key")))
-      .localCheckpoint()
+        .as(Seq("band", "key"))), "bands")
     // verification (a per-row bit_count, codegen'd) runs BEFORE the
     // distinct: a pair colliding in several bands is verified that many
     // times for a few cycles each, but the dedup exchange then carries
@@ -786,16 +766,15 @@ object Dedup {
     * unique (or co-batched) timestamps and no TTL eviction inside the
     * window — the funnel's exact contract. Output: admitted (id, ts). */
   def nearDupGateBatch(df: DataFrame, idCol: String, textCol: String,
-      tsCol: String): DataFrame = {
-    val bands = df.select(col(idCol).cast("long").as("id"),
+      tsCol: String)(implicit st: Stage): DataFrame = {
+    val bands = st.checkpoint(df.select(col(idCol).cast("long").as("id"),
         col(tsCol).as("ts"),
         graft.functions.SimHashExpression.simhash64(col(textCol))
           .as("sig"))
       .select(col("id"), col("ts"),
         posexplode(array((0 until 4).map(b =>
           expr(s"shiftrightunsigned(sig, ${48 - 16 * b}) & 65535")): _*))
-          .as(Seq("band", "key")))
-      .localCheckpoint()
+          .as(Seq("band", "key"))), "bands")
     val claims = bands.groupBy(col("band"), col("key"))
       .agg(min(struct(col("ts"), col("id"))).as("w"))
     bands.join(claims, Seq("band", "key"))
@@ -846,8 +825,8 @@ object Dedup {
   }
 
   /** The per-doc MinHash band-key table (idCol, band, v0..v{rows-1}) —
-    * the near-dup probe unit shared by [[dedupIncremental]] and the
-    * stored [[DedupIndex]]. Docs too short to shingle emit no rows. */
+    * the unit the LSH band joins above, [[dedupIncremental]] and the
+    * stored [[DedupIndex]] share. Docs too short to shingle emit no rows. */
   def bandTable(df: DataFrame, idCol: String, textCol: String,
       shingleN: Int, k: Int, bands: Int): DataFrame = lshBands(
     df.select(col(idCol),
@@ -866,7 +845,7 @@ object Dedup {
   def dedupIncrementalProbe(archiveHashes: DataFrame,
       archiveBands: DataFrame, incoming: DataFrame, idCol: String,
       textCol: String, shingleN: Int = 3, k: Int = 8,
-      bands: Int = 4): DataFrame = {
+      bands: Int = 4): DataFrame = Stage("Dedup.dedupIncrementalProbe") { st =>
     val rows = k / bands
     val keyCols = "band" +: (0 until rows).map(r => s"v$r")
     // 1. within-batch exact: min-id claimant per content hash
@@ -878,12 +857,12 @@ object Dedup {
     // 2. archive exact: hash-set probe only — no archive text moves
     val inc1 = inc0.join(archiveHashes, Seq("_h"), "left_anti")
     // 3. archive near: band-key probe
-    val iBands = bandTable(inc1, idCol, textCol, shingleN, k, bands)
-      .localCheckpoint()
+    val iBands = st.checkpoint(
+      bandTable(inc1, idCol, textCol, shingleN, k, bands), "iBands")
     val archiveHit = iBands.join(archiveBands, keyCols, "left_semi")
       .select(col(idCol)).distinct()
-    val inc2 = inc1.join(archiveHit, Seq(idCol), "left_anti")
-      .localCheckpoint()
+    val inc2 = st.checkpoint(
+      inc1.join(archiveHit, Seq(idCol), "left_anti"), "inc2")
     // 4. within-batch near: first-sight band claims over the survivors
     val iB2 = iBands.join(inc2.select(col(idCol)), Seq(idCol), "left_semi")
     val claims = iB2.groupBy(keyCols.map(col): _*)
@@ -1186,14 +1165,14 @@ object Dedup {
     * next-bucket, distance-filtered) — never a theta-join. Output:
     * (a_id, b_id, rank_dist) with a before b in sort order. */
   def sortedNeighborhoodPairs(df: DataFrame, idCol: String,
-      sortCols: Seq[Column], w: Int): DataFrame = {
+      sortCols: Seq[Column], w: Int)
+      : DataFrame = Stage("Dedup.sortedNeighborhoodPairs") { implicit st =>
     require(w >= 2 && w <= 1000, s"window w in [2,1000]: $w")
-    val ranked = Curation.withGlobalRank(
+    val ranked = st.checkpoint(Curation.withGlobalRank(
         df.select(col(idCol).as("_snId") +: sortCols: _*),
-        sortCols, "_rk")
+        sortCols, "_rk")._1
       .select(col("_snId"), col("_rk"))
-      .withColumn("_bk", expr(s"_rk div $w"))
-      .localCheckpoint(true)
+      .withColumn("_bk", expr(s"_rk div $w")), "ranked")
     val right = ranked.select(col("_snId").as("b_id"),
       col("_rk").as("_rb"), col("_bk").as("_bkb"))
     def arm(shift: Int) = ranked

@@ -198,11 +198,11 @@ object DedupIndex {
   def foreachBatchIngest(spark: SparkSession, dir: String, idCol: String,
       textCol: String, shingleN: Int = 3, k: Int = 8, bands: Int = 4)(
       commit: DataFrame => Unit): (DataFrame, Long) => Unit =
-    (batch, _) => {
+    (batch, _) => Stage("DedupIndex.foreachBatchIngest") { st =>
       // one eager materialization: commit and append must see the SAME
       // admitted set (a lazy plan could re-read the index mid-epoch)
-      val admitted = gate(spark, dir, batch, idCol, textCol, shingleN,
-        k, bands).localCheckpoint()
+      val admitted = st.checkpoint(gate(spark, dir, batch, idCol, textCol,
+        shingleN, k, bands), "admitted")
       commit(admitted)
       append(admitted, idCol, textCol, shingleN, k, bands, dir)
     }
@@ -235,13 +235,15 @@ object DedupIndex {
     val lastEpoch = TextIndex.fenceOf(dir, fenceTag)
     require(gen >= 0, s"compact: no index at $dir — build() first")
     if (epoch >= 0 && epoch <= lastEpoch) return // replayed: no-op
-    requireGeometry(spark, dir, k, bands, "compact")
-    val (hashes, bandKeys) = readStored(spark, dir, k, bands)
-    TextIndex.withGenClaim(dir, gen) {
-      writeGen(hashes.distinct().localCheckpoint(true),
-        bandKeys.distinct().localCheckpoint(true), dir, gen + 1)
-      TextIndex.advance(dir, gen + 1, epoch.max(lastEpoch), fenceTag,
-        basedOnGen = gen)
+    Stage("DedupIndex.compact") { st =>
+      requireGeometry(spark, dir, k, bands, "compact")
+      val (hashes, bandKeys) = readStored(spark, dir, k, bands)
+      TextIndex.withGenClaim(dir, gen) {
+        writeGen(st.checkpoint(hashes.distinct(), "hashes"),
+          st.checkpoint(bandKeys.distinct(), "bandKeys"), dir, gen + 1)
+        TextIndex.advance(dir, gen + 1, epoch.max(lastEpoch), fenceTag,
+          basedOnGen = gen)
+      }
     }
   }
 
@@ -263,17 +265,19 @@ object DedupIndex {
     val lastEpoch = TextIndex.fenceOf(dir, fenceTag)
     require(gen >= 0, s"removeDocs: no index at $dir — build() first")
     if (epoch >= 0 && epoch <= lastEpoch) return // replayed: no-op
-    requireGeometry(spark, dir, k, bands, "removeDocs")
-    val (hashes, bandKeys) = readStored(spark, dir, k, bands)
-    val rm = ids.select(col(idCol).cast("long").as("_id")).distinct()
-      .localCheckpoint(true)
-    TextIndex.withGenClaim(dir, gen) {
-      writeGen(
-        hashes.join(broadcast(rm), Seq("_id"), "left_anti"),
-        bandKeys.join(broadcast(rm), Seq("_id"), "left_anti"),
-        dir, gen + 1)
-      TextIndex.advance(dir, gen + 1, epoch.max(lastEpoch), fenceTag,
-        basedOnGen = gen)
+    Stage("DedupIndex.removeDocs") { st =>
+      requireGeometry(spark, dir, k, bands, "removeDocs")
+      val (hashes, bandKeys) = readStored(spark, dir, k, bands)
+      val rm = st.checkpoint(
+        ids.select(col(idCol).cast("long").as("_id")).distinct(), "rm")
+      TextIndex.withGenClaim(dir, gen) {
+        writeGen(
+          hashes.join(broadcast(rm), Seq("_id"), "left_anti"),
+          bandKeys.join(broadcast(rm), Seq("_id"), "left_anti"),
+          dir, gen + 1)
+        TextIndex.advance(dir, gen + 1, epoch.max(lastEpoch), fenceTag,
+          basedOnGen = gen)
+      }
     }
   }
 
@@ -514,17 +518,19 @@ object DedupIndex {
     require(gen >= 0,
       s"removeDocsSharded: no index at $dir — buildSharded() first")
     if (epoch >= 0 && epoch <= lastEpoch) return // replayed: no-op
-    val nShards = storedShards(dir)
-    val (hashes, bandKeys) = readStoredSharded(spark, dir, k, bands)
-    val rm = ids.select(col(idCol).cast("long").as("_id")).distinct()
-      .localCheckpoint(true)
-    TextIndex.withGenClaim(dir, gen) {
-      writeGenSharded(
-        hashes.join(broadcast(rm), Seq("_id"), "left_anti"),
-        bandKeys.join(broadcast(rm), Seq("_id"), "left_anti"),
-        dir, gen + 1, nShards)
-      TextIndex.advance(dir, gen + 1, epoch.max(lastEpoch), fenceTag,
-        basedOnGen = gen)
+    Stage("DedupIndex.removeDocsSharded") { st =>
+      val nShards = storedShards(dir)
+      val (hashes, bandKeys) = readStoredSharded(spark, dir, k, bands)
+      val rm = st.checkpoint(
+        ids.select(col(idCol).cast("long").as("_id")).distinct(), "rm")
+      TextIndex.withGenClaim(dir, gen) {
+        writeGenSharded(
+          hashes.join(broadcast(rm), Seq("_id"), "left_anti"),
+          bandKeys.join(broadcast(rm), Seq("_id"), "left_anti"),
+          dir, gen + 1, nShards)
+        TextIndex.advance(dir, gen + 1, epoch.max(lastEpoch), fenceTag,
+          basedOnGen = gen)
+      }
     }
   }
 
@@ -538,7 +544,8 @@ object DedupIndex {
     * already sits in a correctly-named partition of the new
     * generation. */
   def reshardSharded(spark: SparkSession, dir: String, nTo: Int,
-      k: Int = 8, bands: Int = 4): DataFrame = {
+      k: Int = 8, bands: Int = 4)
+      : DataFrame = Stage("DedupIndex.reshardSharded") { st =>
     val (gen, _) = TextIndex.current(dir)
     require(gen >= 0, s"reshardSharded: no index at $dir")
     val nFrom = storedShards(dir)
@@ -547,11 +554,10 @@ object DedupIndex {
     val (hashes0, bandKeys0) = readStoredSharded(spark, dir, k, bands)
     val hashes = hashes0.withColumnRenamed("shard", "shard_from")
     val bandKeys = bandKeys0.withColumnRenamed("shard", "shard_from")
-    val h2 = Shard.rendezvousAssign(hashes, "_h", nTo)
-      .localCheckpoint(true)
-    val b2 = Shard.rendezvousAssign(
+    val h2 = st.checkpoint(Shard.rendezvousAssign(hashes, "_h", nTo), "h2")
+    val b2 = st.checkpoint(Shard.rendezvousAssign(
         bandKeys.withColumn("_sk", bandShardKey(k, bands)), "_sk", nTo)
-      .drop("_sk").localCheckpoint(true)
+      .drop("_sk"), "b2")
     def cert(df: DataFrame, name: String): DataFrame = {
       val moved = col("shard_from") =!= col("shard")
       df.agg(count(lit(1)).as("n_total"),
@@ -564,9 +570,8 @@ object DedupIndex {
           lit(1000000L * (maxN - minN) / maxN).as("expected_moved_ppm"),
           col("illegal_moves"))
     }
-    val certificate = cert(h2, "hashes")
-      .unionByName(cert(b2, "bands"))
-      .localCheckpoint(true)
+    val certificate = st.checkpoint(cert(h2, "hashes")
+      .unionByName(cert(b2, "bands")), "certificate")
     TextIndex.withGenClaim(dir, gen) {
       writeGenSharded(h2.drop("shard_from"), b2.drop("shard_from"),
         dir, gen + 1, nTo)

@@ -120,11 +120,11 @@ object Forget {
     * embedding share one id; ids absent from a store are no-ops. */
   def purgeDocs(spark: SparkSession, forgotten: DataFrame,
       idCol: String, targets: Seq[Target], epoch: Long = -1L,
-      fenceTag: String = "purge"): Unit = {
+      fenceTag: String = "purge"): Unit = Stage("Forget.purgeDocs") { st =>
     // one eager materialization: every artifact must subtract the SAME
     // rows even if the input plan is nondeterministic under retry
-    val f = forgotten.localCheckpoint(true)
-    val ids = f.select(col(idCol)).distinct().localCheckpoint(true)
+    val f = st.checkpoint(forgotten, "f")
+    val ids = st.checkpoint(f.select(col(idCol)).distinct(), "ids")
     targets.foreach {
       case TextTarget(dir, tid) =>
         TextIndex.removeDocs(spark, ids.select(col(idCol).as(tid)),

@@ -329,7 +329,7 @@ object Graph {
     * (per-node degree partitions, never global). Output: one row per
     * start node with columns n1..nSteps. */
   def hashWalks(pairs: DataFrame, aCol: String, bCol: String,
-      steps: Int): DataFrame = {
+      steps: Int): DataFrame = Stage("Graph.hashWalks") { st =>
     require(steps >= 1, s"steps must be >= 1, got $steps")
     import org.apache.spark.sql.expressions.Window
     val und = pairs.select(
@@ -337,9 +337,8 @@ object Graph {
         greatest(col(aCol), col(bCol)).as("_b"))
       .filter(col("_a") < col("_b"))
       .distinct()
-    val sym = und.select(col("_a").as("_u"), col("_b").as("_v"))
-      .union(und.select(col("_b").as("_u"), col("_a").as("_v")))
-      .localCheckpoint(true)
+    val sym = st.checkpoint(und.select(col("_a").as("_u"), col("_b").as("_v"))
+      .union(und.select(col("_b").as("_u"), col("_a").as("_v"))), "sym")
     val deg = sym.groupBy(col("_u")).agg(count(lit(1)).as("_d"))
     val adj = sym.withColumn("_rk",
       row_number().over(Window.partitionBy(col("_u"))
@@ -472,7 +471,7 @@ object Graph {
       k: Int, overgen: Int = 3): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     require(k > 0 && overgen >= 1, "bad sampling params")
-    Stage("Graph.negativeSamples") { st =>
+    Stage("Graph.negativeSamples") { implicit st =>
       val edges = st.pin(edgePairs
         .select(col(srcCol).as("src"), col(dstCol).as("dst"))
         .filter(col("src").isNotNull && col("dst").isNotNull)
@@ -481,11 +480,10 @@ object Graph {
       // negative is a real node — an id-space draw can produce ids that
       // exist in no row, which are worthless as training negatives),
       // numbered by the two-pass distributed rank; the population size
-      // is a 1-row driver scalar (the probe-parameterizes-the-plan
-      // pattern, like AnnIndex's probe list)
-      val dstIdx = Curation.withGlobalRank(
+      // is a driver scalar the rank already sums (the
+      // probe-parameterizes-the-plan pattern, like AnnIndex's probe list)
+      val (dstIdx, nD) = Curation.withGlobalRank(
         edges.select(col("dst")).distinct(), Seq(col("dst")), "_idx")
-      val nD: Long = dstIdx.count()
       val probes = edges.select(col("src")).distinct()
         .withColumn("i", explode(sequence(lit(1), lit(k * overgen))))
         .withColumn("_idx", expr(

@@ -185,32 +185,33 @@ object Importance {
     val lastEpoch = TextIndex.fenceOf(dir, fenceTag)
     require(gen >= 0, s"removeBatch: no model at $dir — buildModel() first")
     if (epoch >= 0 && epoch <= lastEpoch) return // replayed: no-op
-    val braw = buckets.groupBy(col("bucket")).agg(sum(col("c")).as("_br"))
-    val btgt = buckets.filter(targetPred)
-      .groupBy(col("bucket")).agg(sum(col("c")).as("_bt"))
-    val bsub = braw.join(btgt, Seq("bucket"), "left")
-      .select(col("bucket").cast("long").as("bucket"), col("_br"),
-        coalesce(col("_bt"), lit(0L)).as("_bt"))
-      .localCheckpoint(true)
-    val merged = storedCounts(spark, dir)
-      .join(bsub, Seq("bucket"), "full_outer")
-      .select(col("bucket"),
-        (coalesce(col("cr"), lit(0L)) - coalesce(col("_br"), lit(0L)))
-          .as("cr"),
-        (coalesce(col("ct"), lit(0L)) - coalesce(col("_bt"), lit(0L)))
-          .as("ct"),
-        col("nb"))
-      .localCheckpoint(true)
-    val bad = merged.filter(col("cr") < 0 || col("ct") < 0 ||
-      col("nb").isNull).count()
-    require(bad == 0,
-      s"Importance.removeBatch: $bad bucket counts would go negative " +
-        "(or hit buckets the model never saw) — the removal batch is " +
-        "not a subset of the trained corpus")
-    TextIndex.withGenClaim(dir, gen) {
-      writeCounts(merged.filter(col("cr") > 0), dir, gen + 1)
-      TextIndex.advance(dir, gen + 1, epoch.max(lastEpoch), fenceTag,
-        basedOnGen = gen)
+    Stage("Importance.removeBatch") { st =>
+      val braw = buckets.groupBy(col("bucket")).agg(sum(col("c")).as("_br"))
+      val btgt = buckets.filter(targetPred)
+        .groupBy(col("bucket")).agg(sum(col("c")).as("_bt"))
+      val bsub = st.checkpoint(braw.join(btgt, Seq("bucket"), "left")
+        .select(col("bucket").cast("long").as("bucket"), col("_br"),
+          coalesce(col("_bt"), lit(0L)).as("_bt")), "bsub")
+      val (merged, m) = st.observed(storedCounts(spark, dir)
+        .join(bsub, Seq("bucket"), "full_outer")
+        .select(col("bucket"),
+          (coalesce(col("cr"), lit(0L)) - coalesce(col("_br"), lit(0L)))
+            .as("cr"),
+          (coalesce(col("ct"), lit(0L)) - coalesce(col("_bt"), lit(0L)))
+            .as("ct"),
+          col("nb")), "merged")(
+        count(when(col("cr") < 0 || col("ct") < 0 || col("nb").isNull, 1))
+          .as("bad"))
+      val bad = m("bad").asInstanceOf[Long]
+      require(bad == 0,
+        s"Importance.removeBatch: $bad bucket counts would go negative " +
+          "(or hit buckets the model never saw) — the removal batch is " +
+          "not a subset of the trained corpus")
+      TextIndex.withGenClaim(dir, gen) {
+        writeCounts(merged.filter(col("cr") > 0), dir, gen + 1)
+        TextIndex.advance(dir, gen + 1, epoch.max(lastEpoch), fenceTag,
+          basedOnGen = gen)
+      }
     }
   }
 }

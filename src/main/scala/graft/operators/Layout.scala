@@ -138,10 +138,11 @@ object Layout {
     * paying for it. */
   def pruningEfficiency(df: DataFrame, sortCols: Seq[Column],
       valCol: String, bucketRows: Long, lo: Long, hi: Long,
-      label: String): DataFrame = {
+      label: String)
+      : DataFrame = Stage("Layout.pruningEfficiency") { implicit st =>
     require(bucketRows >= 1 && lo <= hi,
       s"bad advisor config: bucketRows=$bucketRows range=[$lo,$hi]")
-    val ranked = Curation.withGlobalRank(
+    val (ranked, _) = Curation.withGlobalRank(
       df.select(col(valCol).cast("long").as("_v") +:
         sortCols.zipWithIndex.map { case (c, i) => c.as(s"_s$i") }: _*),
       sortCols.indices.map(i => col(s"_s$i")) :+ col("_v"), "_rk")

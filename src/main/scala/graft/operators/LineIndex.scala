@@ -81,22 +81,23 @@ object LineIndex {
     require(gen >= 0,
       s"LineIndex.mergeBatch: no index at $dir — build() first")
     if (epoch >= 0 && epoch <= lastEpoch) return
-    val bc = Curation.lineFrame(batch, idCol, textCol)
-      .groupBy(col("_h")).agg(countDistinct(col(idCol)).as("_bnd"))
-      .localCheckpoint(true)
-    val stored = storedFreq(spark, dir)
-    val merged = stored
-      .join(bc, Seq("_h"), "left")
-      .select(col("_h"),
-        (col("_nd") + coalesce(col("_bnd"), lit(0L))).as("_nd"))
-      .unionByName(bc
-        .join(stored.select(col("_h"), lit(1).as("_seen")),
-          Seq("_h"), "left_anti")
-        .select(col("_h"), col("_bnd").as("_nd")))
-    TextIndex.withGenClaim(dir, gen) {
-      writeGen(merged, dir, gen + 1)
-      TextIndex.advance(dir, gen + 1, epoch.max(lastEpoch), fenceTag,
-        basedOnGen = gen)
+    Stage("LineIndex.mergeBatch") { st =>
+      val bc = st.checkpoint(Curation.lineFrame(batch, idCol, textCol)
+        .groupBy(col("_h")).agg(countDistinct(col(idCol)).as("_bnd")), "bc")
+      val stored = storedFreq(spark, dir)
+      val merged = stored
+        .join(bc, Seq("_h"), "left")
+        .select(col("_h"),
+          (col("_nd") + coalesce(col("_bnd"), lit(0L))).as("_nd"))
+        .unionByName(bc
+          .join(stored.select(col("_h"), lit(1).as("_seen")),
+            Seq("_h"), "left_anti")
+          .select(col("_h"), col("_bnd").as("_nd")))
+      TextIndex.withGenClaim(dir, gen) {
+        writeGen(merged, dir, gen + 1)
+        TextIndex.advance(dir, gen + 1, epoch.max(lastEpoch), fenceTag,
+          basedOnGen = gen)
+      }
     }
   }
 
@@ -116,22 +117,23 @@ object LineIndex {
     require(gen >= 0,
       s"LineIndex.removeBatch: no index at $dir — build() first")
     if (epoch >= 0 && epoch <= lastEpoch) return
-    val bc = Curation.lineFrame(batch, idCol, textCol)
-      .groupBy(col("_h")).agg(countDistinct(col(idCol)).as("_bnd"))
-      .localCheckpoint(true)
-    val stored = storedFreq(spark, dir)
-    val merged = stored
-      .join(bc, Seq("_h"), "left")
-      .select(col("_h"),
-        (col("_nd") - coalesce(col("_bnd"), lit(0L))).as("_nd"))
-    val bad = merged.filter(col("_nd") < 0).count()
-    require(bad == 0,
-      s"LineIndex.removeBatch: $bad line counts would go negative — " +
-        "the removal batch is not a subset of the indexed corpus")
-    TextIndex.withGenClaim(dir, gen) {
-      writeGen(merged.filter(col("_nd") > 0), dir, gen + 1)
-      TextIndex.advance(dir, gen + 1, epoch.max(lastEpoch), fenceTag,
-        basedOnGen = gen)
+    Stage("LineIndex.removeBatch") { st =>
+      val bc = st.checkpoint(Curation.lineFrame(batch, idCol, textCol)
+        .groupBy(col("_h")).agg(countDistinct(col(idCol)).as("_bnd")), "bc")
+      val stored = storedFreq(spark, dir)
+      val merged = stored
+        .join(bc, Seq("_h"), "left")
+        .select(col("_h"),
+          (col("_nd") - coalesce(col("_bnd"), lit(0L))).as("_nd"))
+      val bad = merged.filter(col("_nd") < 0).count()
+      require(bad == 0,
+        s"LineIndex.removeBatch: $bad line counts would go negative — " +
+          "the removal batch is not a subset of the indexed corpus")
+      TextIndex.withGenClaim(dir, gen) {
+        writeGen(merged.filter(col("_nd") > 0), dir, gen + 1)
+        TextIndex.advance(dir, gen + 1, epoch.max(lastEpoch), fenceTag,
+          basedOnGen = gen)
+      }
     }
   }
 

@@ -82,22 +82,23 @@ object LmIndex {
     val lastEpoch = TextIndex.fenceOf(dir, fenceTag)
     require(gen >= 0, s"LmIndex.mergeBatch: no model at $dir — build() first")
     if (epoch >= 0 && epoch <= lastEpoch) return
-    val bc = Curation.bigramFrame(batch, idCol, textCol)
-      .groupBy(col("w1"), col("w2")).agg(count(lit(1)).as("bc2"))
-      .localCheckpoint(true)
-    val stored = storedModel(spark, dir)
-    val merged = stored
-      .join(bc, Seq("w1", "w2"), "left")
-      .select(col("w1"), col("w2"),
-        (col("c2") + coalesce(col("bc2"), lit(0L))).as("c2"))
-      .unionByName(bc
-        .join(stored.select(col("w1"), col("w2"), lit(1).as("_seen")),
-          Seq("w1", "w2"), "left_anti")
-        .select(col("w1"), col("w2"), col("bc2").as("c2")))
-    TextIndex.withGenClaim(dir, gen) {
-      writeGen(merged, dir, gen + 1)
-      TextIndex.advance(dir, gen + 1, epoch.max(lastEpoch), fenceTag,
-        basedOnGen = gen)
+    Stage("LmIndex.mergeBatch") { st =>
+      val bc = st.checkpoint(Curation.bigramFrame(batch, idCol, textCol)
+        .groupBy(col("w1"), col("w2")).agg(count(lit(1)).as("bc2")), "bc")
+      val stored = storedModel(spark, dir)
+      val merged = stored
+        .join(bc, Seq("w1", "w2"), "left")
+        .select(col("w1"), col("w2"),
+          (col("c2") + coalesce(col("bc2"), lit(0L))).as("c2"))
+        .unionByName(bc
+          .join(stored.select(col("w1"), col("w2"), lit(1).as("_seen")),
+            Seq("w1", "w2"), "left_anti")
+          .select(col("w1"), col("w2"), col("bc2").as("c2")))
+      TextIndex.withGenClaim(dir, gen) {
+        writeGen(merged, dir, gen + 1)
+        TextIndex.advance(dir, gen + 1, epoch.max(lastEpoch), fenceTag,
+          basedOnGen = gen)
+      }
     }
   }
 
@@ -164,23 +165,24 @@ object LmIndex {
     require(gen >= 0,
       s"LmIndex.mergeTrigramBatch: no model at $dir — buildTrigram() first")
     if (epoch >= 0 && epoch <= lastEpoch) return
-    val bc = Curation.trigramFrame(batch, idCol, textCol)
-      .groupBy(col("w1"), col("w2"), col("w3"))
-      .agg(count(lit(1)).as("bc3"))
-      .localCheckpoint(true)
-    val stored = storedTrigram(spark, dir)
-    val merged = stored
-      .join(bc, Seq("w1", "w2", "w3"), "left")
-      .select(col("w1"), col("w2"), col("w3"),
-        (col("c3") + coalesce(col("bc3"), lit(0L))).as("c3"))
-      .unionByName(bc
-        .join(stored.select(col("w1"), col("w2"), col("w3"),
-          lit(1).as("_seen")), Seq("w1", "w2", "w3"), "left_anti")
-        .select(col("w1"), col("w2"), col("w3"), col("bc3").as("c3")))
-    TextIndex.withGenClaim(dir, gen) {
-      writeGen3(merged, dir, gen + 1)
-      TextIndex.advance(dir, gen + 1, epoch.max(lastEpoch), fenceTag,
-        basedOnGen = gen)
+    Stage("LmIndex.mergeTrigramBatch") { st =>
+      val bc = st.checkpoint(Curation.trigramFrame(batch, idCol, textCol)
+        .groupBy(col("w1"), col("w2"), col("w3"))
+        .agg(count(lit(1)).as("bc3")), "bc")
+      val stored = storedTrigram(spark, dir)
+      val merged = stored
+        .join(bc, Seq("w1", "w2", "w3"), "left")
+        .select(col("w1"), col("w2"), col("w3"),
+          (col("c3") + coalesce(col("bc3"), lit(0L))).as("c3"))
+        .unionByName(bc
+          .join(stored.select(col("w1"), col("w2"), col("w3"),
+            lit(1).as("_seen")), Seq("w1", "w2", "w3"), "left_anti")
+          .select(col("w1"), col("w2"), col("w3"), col("bc3").as("c3")))
+      TextIndex.withGenClaim(dir, gen) {
+        writeGen3(merged, dir, gen + 1)
+        TextIndex.advance(dir, gen + 1, epoch.max(lastEpoch), fenceTag,
+          basedOnGen = gen)
+      }
     }
   }
 
@@ -218,25 +220,26 @@ object LmIndex {
     require(gen >= 0,
       s"LmIndex.removeTrigramBatch: no model at $dir — buildTrigram() first")
     if (epoch >= 0 && epoch <= lastEpoch) return
-    val bc = Curation.trigramFrame(batch, idCol, textCol)
-      .groupBy(col("w1"), col("w2"), col("w3"))
-      .agg(count(lit(1)).as("bc3"))
-      .localCheckpoint(true)
-    val stored = storedTrigram(spark, dir)
-    val merged = stored
-      .join(bc, Seq("w1", "w2", "w3"), "left")
-      .select(col("w1"), col("w2"), col("w3"),
-        (col("c3") - coalesce(col("bc3"), lit(0L))).as("c3"))
-    // a negative count means the batch was NOT a training subset —
-    // fail loudly rather than persist a corrupt model
-    val bad = merged.filter(col("c3") < 0).count()
-    require(bad == 0,
-      s"removeTrigramBatch: $bad trigram counts would go negative — " +
-        "the removal batch is not a subset of the trained corpus")
-    TextIndex.withGenClaim(dir, gen) {
-      writeGen3(merged.filter(col("c3") > 0), dir, gen + 1)
-      TextIndex.advance(dir, gen + 1, epoch.max(lastEpoch), fenceTag,
-        basedOnGen = gen)
+    Stage("LmIndex.removeTrigramBatch") { st =>
+      val bc = st.checkpoint(Curation.trigramFrame(batch, idCol, textCol)
+        .groupBy(col("w1"), col("w2"), col("w3"))
+        .agg(count(lit(1)).as("bc3")), "bc")
+      val stored = storedTrigram(spark, dir)
+      val merged = stored
+        .join(bc, Seq("w1", "w2", "w3"), "left")
+        .select(col("w1"), col("w2"), col("w3"),
+          (col("c3") - coalesce(col("bc3"), lit(0L))).as("c3"))
+      // a negative count means the batch was NOT a training subset —
+      // fail loudly rather than persist a corrupt model
+      val bad = merged.filter(col("c3") < 0).count()
+      require(bad == 0,
+        s"removeTrigramBatch: $bad trigram counts would go negative — " +
+          "the removal batch is not a subset of the trained corpus")
+      TextIndex.withGenClaim(dir, gen) {
+        writeGen3(merged.filter(col("c3") > 0), dir, gen + 1)
+        TextIndex.advance(dir, gen + 1, epoch.max(lastEpoch), fenceTag,
+          basedOnGen = gen)
+      }
     }
   }
 

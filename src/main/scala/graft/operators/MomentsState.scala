@@ -160,33 +160,34 @@ object MomentsState {
     val lastEpoch = TextIndex.fenceOf(dir, fenceTag)
     require(gen >= 0, s"removeBatch: no state at $dir — build() first")
     if (epoch >= 0 && epoch <= lastEpoch) return // replayed: no-op
-    val b = sums(batch, keyCol, valCol)
-      .select(col("_k"), col("n").as("_bn"), col("s1").as("_b1"),
-        col("s2").as("_b2"), col("s3").as("_b3"), col("s4").as("_b4"))
-      .localCheckpoint(true)
-    val merged = storedSums(spark, dir)
-      .join(b, Seq("_k"), "full_outer")
-      .select(col("_k"),
-        (coalesce(col("n"), lit(0L)) - coalesce(col("_bn"), lit(0L)))
-          .as("n"),
-        (coalesce(col("s1"), lit(0L)) - coalesce(col("_b1"), lit(0L)))
-          .as("s1"),
-        (coalesce(col("s2"), lit(0L)) - coalesce(col("_b2"), lit(0L)))
-          .cast("decimal(38,0)").as("s2"),
-        (coalesce(col("s3"), lit(0L)) - coalesce(col("_b3"), lit(0L)))
-          .cast("decimal(38,0)").as("s3"),
-        (coalesce(col("s4"), lit(0L)) - coalesce(col("_b4"), lit(0L)))
-          .cast("decimal(38,0)").as("s4"))
-      .localCheckpoint(true)
-    val bad = merged.filter(col("n") < 0 || col("s2") < 0 ||
-      col("s4") < 0).count()
-    require(bad == 0,
-      s"MomentsState.removeBatch: $bad groups would go negative — " +
-        "the removal batch is not a subset of the folded facts")
-    TextIndex.withGenClaim(dir, gen) {
-      writeGen(merged.filter(col("n") > 0), dir, gen + 1)
-      TextIndex.advance(dir, gen + 1, epoch.max(lastEpoch), fenceTag,
-        basedOnGen = gen)
+    Stage("MomentsState.removeBatch") { st =>
+      val b = st.checkpoint(sums(batch, keyCol, valCol)
+        .select(col("_k"), col("n").as("_bn"), col("s1").as("_b1"),
+          col("s2").as("_b2"), col("s3").as("_b3"), col("s4").as("_b4")), "b")
+      val (merged, m) = st.observed(storedSums(spark, dir)
+        .join(b, Seq("_k"), "full_outer")
+        .select(col("_k"),
+          (coalesce(col("n"), lit(0L)) - coalesce(col("_bn"), lit(0L)))
+            .as("n"),
+          (coalesce(col("s1"), lit(0L)) - coalesce(col("_b1"), lit(0L)))
+            .as("s1"),
+          (coalesce(col("s2"), lit(0L)) - coalesce(col("_b2"), lit(0L)))
+            .cast("decimal(38,0)").as("s2"),
+          (coalesce(col("s3"), lit(0L)) - coalesce(col("_b3"), lit(0L)))
+            .cast("decimal(38,0)").as("s3"),
+          (coalesce(col("s4"), lit(0L)) - coalesce(col("_b4"), lit(0L)))
+            .cast("decimal(38,0)").as("s4")), "merged")(
+        count(when(col("n") < 0 || col("s2") < 0 || col("s4") < 0, 1))
+          .as("bad"))
+      val bad = m("bad").asInstanceOf[Long]
+      require(bad == 0,
+        s"MomentsState.removeBatch: $bad groups would go negative — " +
+          "the removal batch is not a subset of the folded facts")
+      TextIndex.withGenClaim(dir, gen) {
+        writeGen(merged.filter(col("n") > 0), dir, gen + 1)
+        TextIndex.advance(dir, gen + 1, epoch.max(lastEpoch), fenceTag,
+          basedOnGen = gen)
+      }
     }
   }
 

@@ -351,8 +351,9 @@ object Multimodal {
     * 64-bit hash (no explode, typically tiny); the decoded side is the
     * usual one-exchange band join. */
   def imageDedup(df: DataFrame, maxDist: Int = 3)(
-      implicit spark: SparkSession): DataFrame = {
-    val hashes = perceptualHash(df).toDF.localCheckpoint()
+      implicit spark: SparkSession)
+      : DataFrame = Stage("Multimodal.imageDedup") { st =>
+    val hashes = st.checkpoint(perceptualHash(df).toDF, "hashes")
     val perceptual = graft.operators.Dedup
       .hammingPairs64(hashes.filter(col("decoded")), "id", "phash", maxDist)
       .withColumn("exact_stub", lit(false))

@@ -199,28 +199,30 @@ object RecModel {
       s"removeBatch requires minCount=1 (got $minCount): subtraction " +
         "is exact only for the unfiltered model (mergeBatch's contract)")
     if (epoch >= 0 && epoch <= lastEpoch) return // replayed: no-op
-    val stored = spark.read.parquet(s"${genDir(dir, gen)}/sims")
-    val sAnchors = spark.read.parquet(s"${genDir(dir, gen)}/anchors")
-    val bSims = symPairs(batch, userCol, itemCol, capM, minCount)
-      .withColumnRenamed("n_users", "_bn")
-      .localCheckpoint(true)
-    val merged = stored
-      .join(bSims, Seq("anchor", "nb"), "full_outer")
-      .select(col("anchor"), col("nb"),
-        (coalesce(col("n_users"), lit(0L)) -
-          coalesce(col("_bn"), lit(0L))).as("n_users"))
-      .localCheckpoint(true)
-    val bad = merged.filter(col("n_users") < 0).count()
-    require(bad == 0,
-      s"RecModel.removeBatch: $bad pair counts would go negative — " +
-        "the removal batch is not a subset of the trained interactions")
-    val newAnchors = sAnchors.join(
-      broadcast(batch.select(col(userCol)).distinct()),
-      Seq(userCol), "left_anti")
-    TextIndex.withGenClaim(dir, gen) {
-      writeGen(merged.filter(col("n_users") > 0), newAnchors, dir, gen + 1)
-      advance(dir, gen + 1, epoch.max(lastEpoch), fenceTag,
-        basedOnGen = gen)
+    Stage("RecModel.removeBatch") { st =>
+      val stored = spark.read.parquet(s"${genDir(dir, gen)}/sims")
+      val sAnchors = spark.read.parquet(s"${genDir(dir, gen)}/anchors")
+      val bSims = st.checkpoint(
+        symPairs(batch, userCol, itemCol, capM, minCount)
+          .withColumnRenamed("n_users", "_bn"), "bSims")
+      val (merged, m) = st.observed(stored
+        .join(bSims, Seq("anchor", "nb"), "full_outer")
+        .select(col("anchor"), col("nb"),
+          (coalesce(col("n_users"), lit(0L)) -
+            coalesce(col("_bn"), lit(0L))).as("n_users")), "merged")(
+        count(when(col("n_users") < 0, 1)).as("bad"))
+      val bad = m("bad").asInstanceOf[Long]
+      require(bad == 0,
+        s"RecModel.removeBatch: $bad pair counts would go negative — " +
+          "the removal batch is not a subset of the trained interactions")
+      val newAnchors = sAnchors.join(
+        broadcast(batch.select(col(userCol)).distinct()),
+        Seq(userCol), "left_anti")
+      TextIndex.withGenClaim(dir, gen) {
+        writeGen(merged.filter(col("n_users") > 0), newAnchors, dir, gen + 1)
+        advance(dir, gen + 1, epoch.max(lastEpoch), fenceTag,
+          basedOnGen = gen)
+      }
     }
   }
 

@@ -208,20 +208,19 @@ object Similarity {
     * margin_ppm) for mutual-best pairs. */
   def marginMining(a: DataFrame, b: DataFrame, idCol: String,
       vecCol: String, k: Int, bits: Int, minCosUm: Long,
-      minMarginPpm: Long): DataFrame = {
+      minMarginPpm: Long): DataFrame = Stage("Similarity.marginMining") { st =>
     def side(df: DataFrame, id: String, v: String, n: String) =
       df.select(col(idCol).as(id), vecD(col(vecCol)).as(v))
         .withColumn("bucket", signBucket(col(v), bits))
         .withColumn(n, sqrt(dot(col(v), col(v))))
-    val scored = side(a, "a_id", "va", "na")
+    val scored = st.checkpoint(side(a, "a_id", "va", "na")
       .join(side(b, "b_id", "vb", "nb"), Seq("bucket"))
       .withColumn("_c", when(col("na") * col("nb") === 0.0, lit(0.0))
         .otherwise(dot(col("va"), col("vb")) / (col("na") * col("nb"))))
       .withColumn("cos_um",
         expr("CAST(round(_c * 1000000) AS BIGINT)"))
       .filter(col("cos_um") >= minCosUm)
-      .select(col("a_id"), col("b_id"), col("cos_um"))
-      .localCheckpoint(true)
+      .select(col("a_id"), col("b_id"), col("cos_um")), "scored")
     marginTail(scored, k, minMarginPpm)
   }
 
@@ -284,11 +283,11 @@ object Similarity {
   def marginMiningServed(spark: SparkSession, dir: String,
       a: DataFrame, b: DataFrame, idCol: String, vecCol: String,
       k: Int, minCosUm: Long, minMarginPpm: Long): DataFrame =
-    marginTail(
-      marginServedCandidates(spark, dir, a, b, idCol, vecCol, minCosUm)
-        // four window branches read the candidates — materialize once
-        .localCheckpoint(true),
-      k, minMarginPpm)
+    Stage("Similarity.marginMiningServed") { st =>
+      // four window branches read the candidates — materialize once
+      marginTail(st.checkpoint(marginServedCandidates(spark, dir, a, b,
+        idCol, vecCol, minCosUm), "candidates"), k, minMarginPpm)
+    }
 
   /** The candidate stage of [[marginMiningServed]], exposed
     * un-materialized so its plan can be pinned (the localCheckpoint in

@@ -2,7 +2,7 @@ package graft.operators
 
 import scala.collection.mutable
 
-import org.apache.spark.sql.{Column, DataFrame, Observation}
+import org.apache.spark.sql.{Column, DataFrame, Dataset, Observation}
 import org.apache.spark.sql.functions.{count, lit}
 import org.apache.spark.sql.graftbridge.Bridge
 import org.apache.spark.storage.StorageLevel
@@ -29,16 +29,22 @@ import org.apache.spark.storage.StorageLevel
   *   - [[release]] drops a checkpoint as soon as a newer one supersedes it,
   *     so a loop holds O(1) checkpoints, not one per round.
   *
-  * When the scope exits, normally or by an exception, it unpersists every
-  * pin and drops every checkpoint it made, except the checkpoints the
-  * returned frame's plan scans, so a lazy result never loses its input
-  * and nothing else waits for the ContextCleaner. Dropping
-  * a checkpoint explicitly matters: a superseded local checkpoint otherwise
-  * stays in block storage until GC runs the cleaner, and storage pressure
-  * late in a long session then depends on GC timing.
+  * The body may return anything. When the scope exits it unpersists every
+  * pin and drops every checkpoint it made, except, when the body returns
+  * a `Dataset`, the checkpoints that frame's plan scans: a lazy result
+  * never loses its input, and nothing else waits for the ContextCleaner.
+  * Any other result (`Unit` from an index write, a set collected to the
+  * driver) and an exception keep nothing. A scope opened inside another
+  * on the same thread (an operator called from an operator) hands what it
+  * keeps to the outer scope, which drops it in turn unless its own result
+  * scans it. Dropping a checkpoint explicitly matters: a superseded local
+  * checkpoint otherwise stays in block storage until GC runs the cleaner,
+  * and storage pressure late in a long session then depends on GC timing.
   *
   * Loops over a one-frame state use [[Fixpoint.iterate]] on top of this;
-  * loops whose state is several frames use a Stage directly.
+  * loops whose state is several frames use a Stage directly. A helper
+  * whose lazy result reads a checkpoint it makes takes the caller's Stage
+  * as `(implicit st: Stage)`, so the caller's scope owns that checkpoint.
   */
 final class Stage private (name: String) {
   private val checkpoints = mutable.ArrayBuffer.empty[DataFrame]
@@ -94,12 +100,16 @@ final class Stage private (name: String) {
     (chk, obs.fold(Map.empty[String, Any])(_.get))
   }
 
-  /** Release everything but the checkpoints `result` reads (all of them
-    * when the body threw: `result` is null). */
-  private def close(result: DataFrame): Unit = {
-    val read = Option(result).fold(Set.empty[Int])(Bridge.checkpointRddIds)
-    checkpoints.filterNot(c => Bridge.checkpointRddIds(c).subsetOf(read))
-      .foreach(Bridge.dropCheckpoint)
+  /** Release everything but the checkpoints `result` reads when it is a
+    * frame (all of them otherwise, and when the body threw: `result` is
+    * None); hand those to `outer`, the scope the caller runs in. */
+  private def close(result: Option[Any], outer: Option[Stage]): Unit = {
+    val read = result.collect { case ds: Dataset[_] => ds }
+      .fold(Set.empty[Int])(Bridge.checkpointRddIds)
+    val (kept, dropped) =
+      checkpoints.partition(c => Bridge.checkpointRddIds(c).subsetOf(read))
+    dropped.foreach(Bridge.dropCheckpoint)
+    outer.foreach(_.checkpoints ++= kept)
     pins.foreach(_.unpersist(blocking = false))
   }
 }
@@ -107,14 +117,22 @@ final class Stage private (name: String) {
 object Stage {
   private val JobDescription = "spark.job.description"
 
+  /** The scopes open on this thread, innermost first. */
+  private val open = ThreadLocal.withInitial[List[Stage]](() => Nil)
+
   /** Run `body` in a new scope named `name` (by convention
     * `Object.operator`); see [[Stage]] for what exit releases. */
-  def apply(name: String)(body: Stage => DataFrame): DataFrame = {
+  def apply[A](name: String)(body: Stage => A): A = {
     val st = new Stage(name)
-    var result: DataFrame = null
+    val outer = open.get
+    open.set(st :: outer)
+    var result: Option[A] = None
     try {
-      result = body(st)
-      result
-    } finally st.close(result)
+      result = Some(body(st))
+      result.get
+    } finally {
+      open.set(outer)
+      st.close(result, outer.headOption)
+    }
   }
 }

@@ -102,22 +102,23 @@ object StatsIndex {
     require(gen >= 0,
       s"StatsIndex.mergeBatch: no index at $dir — build() first")
     if (epoch >= 0 && epoch <= lastEpoch) return
-    val bc = Analytics.cmsSketch(batch, keyCol, depth, width)
-      .withColumnRenamed("cnt", "_bc")
-      .localCheckpoint(true)
-    val stored = storedCells(spark, dir)
-    val merged = stored
-      .join(bc, Seq("h", "cell"), "left")
-      .select(col("h"), col("cell"),
-        (col("cnt") + coalesce(col("_bc"), lit(0L))).as("cnt"))
-      .unionByName(bc
-        .join(stored.select(col("h"), col("cell"), lit(1).as("_seen")),
-          Seq("h", "cell"), "left_anti")
-        .select(col("h"), col("cell"), col("_bc").as("cnt")))
-    TextIndex.withGenClaim(dir, gen) {
-      writeGen(merged, dir, gen + 1)
-      TextIndex.advance(dir, gen + 1, epoch.max(lastEpoch), fenceTag,
-        basedOnGen = gen)
+    Stage("StatsIndex.mergeBatch") { st =>
+      val bc = st.checkpoint(Analytics.cmsSketch(batch, keyCol, depth, width)
+        .withColumnRenamed("cnt", "_bc"), "bc")
+      val stored = storedCells(spark, dir)
+      val merged = stored
+        .join(bc, Seq("h", "cell"), "left")
+        .select(col("h"), col("cell"),
+          (col("cnt") + coalesce(col("_bc"), lit(0L))).as("cnt"))
+        .unionByName(bc
+          .join(stored.select(col("h"), col("cell"), lit(1).as("_seen")),
+            Seq("h", "cell"), "left_anti")
+          .select(col("h"), col("cell"), col("_bc").as("cnt")))
+      TextIndex.withGenClaim(dir, gen) {
+        writeGen(merged, dir, gen + 1)
+        TextIndex.advance(dir, gen + 1, epoch.max(lastEpoch), fenceTag,
+          basedOnGen = gen)
+      }
     }
   }
 
@@ -134,26 +135,27 @@ object StatsIndex {
     require(gen >= 0,
       s"StatsIndex.removeBatch: no index at $dir — build() first")
     if (epoch >= 0 && epoch <= lastEpoch) return
-    val bc = Analytics.cmsSketch(batch, keyCol, depth, width)
-      .withColumnRenamed("cnt", "_bc")
-      .localCheckpoint(true)
-    val merged = storedCells(spark, dir)
-      .join(bc, Seq("h", "cell"), "full_outer")
-      .select(col("h"), col("cell"),
-        (coalesce(col("cnt"), lit(0L)) - coalesce(col("_bc"), lit(0L)))
-          .as("cnt"))
-    TextIndex.withGenClaim(dir, gen) {
-      // subset guard runs INSIDE the claim (r12 ADVICE): the guard's
-      // read of the stored cells and the write below are then pinned to
-      // the same claimed generation — a concurrent mutation between
-      // guard and write is refused up front, not first at flip time
-      val bad = merged.filter(col("cnt") < 0).count()
-      require(bad == 0,
-        s"StatsIndex.removeBatch: $bad cells would go negative — the " +
-          "removal batch is not a subset of the sketched rows")
-      writeGen(merged.filter(col("cnt") > 0), dir, gen + 1)
-      TextIndex.advance(dir, gen + 1, epoch.max(lastEpoch), fenceTag,
-        basedOnGen = gen)
+    Stage("StatsIndex.removeBatch") { st =>
+      val bc = st.checkpoint(Analytics.cmsSketch(batch, keyCol, depth, width)
+        .withColumnRenamed("cnt", "_bc"), "bc")
+      val merged = storedCells(spark, dir)
+        .join(bc, Seq("h", "cell"), "full_outer")
+        .select(col("h"), col("cell"),
+          (coalesce(col("cnt"), lit(0L)) - coalesce(col("_bc"), lit(0L)))
+            .as("cnt"))
+      TextIndex.withGenClaim(dir, gen) {
+        // subset guard runs INSIDE the claim (r12 ADVICE): the guard's
+        // read of the stored cells and the write below are then pinned to
+        // the same claimed generation — a concurrent mutation between
+        // guard and write is refused up front, not first at flip time
+        val bad = merged.filter(col("cnt") < 0).count()
+        require(bad == 0,
+          s"StatsIndex.removeBatch: $bad cells would go negative — the " +
+            "removal batch is not a subset of the sketched rows")
+        writeGen(merged.filter(col("cnt") > 0), dir, gen + 1)
+        TextIndex.advance(dir, gen + 1, epoch.max(lastEpoch), fenceTag,
+          basedOnGen = gen)
+      }
     }
   }
 

@@ -356,6 +356,21 @@ object TextIndex {
   private def fingerprint(corpus: String): String =
     s"""{"version":$FormatVersion,"corpus":"$corpus"}"""
 
+  /** Generation `gen`'s stored postings and stats, under the schema
+    * [[writeGen]] wrote. */
+  private def readGen(spark: SparkSession, dir: String, gen: Long,
+      idCol: String): (DataFrame, DataFrame) = {
+    import org.apache.spark.sql.types._
+    val postings = spark.read.schema(StructType(Seq(
+        StructField("term", StringType), StructField(idCol, LongType),
+        StructField("tf", LongType), StructField("dl", LongType),
+        StructField("df", LongType))))
+      .parquet(s"${genDir(dir, gen)}/postings")
+    (postings, spark.read.schema(StructType(Seq(
+        StructField("_L", LongType), StructField("_N", LongType))))
+      .parquet(s"${genDir(dir, gen)}/stats"))
+  }
+
   private def writeGen(postings: DataFrame, stats: DataFrame, dir: String,
       gen: Long, idCol: String): Unit = {
     postings
@@ -370,16 +385,15 @@ object TextIndex {
     * tokenization with empty tokens dropped, the convention every text
     * operator here shares ([[Curation.invertedIndex]], q83, q104). */
   def build(df: DataFrame, idCol: String, textCol: String,
-      dir: String): Unit = {
+      dir: String): Unit = Stage("TextIndex.build") { st =>
     val words = split(col(textCol), " ")
     val dl = df.select(col(idCol),
       size(filter(words, w => length(w) > 0)).cast("long").as("dl"))
     val stats = dl.agg(sum(col("dl")).as("_L"), count(lit(1)).as("_N"))
-    val hits = df.select(col(idCol), explode(words).as("term"))
+    val hits = st.checkpoint(df.select(col(idCol), explode(words).as("term"))
       .filter(length(col("term")) > 0)
       .groupBy(col(idCol), col("term"))
-      .agg(count(lit(1)).as("tf"))
-      .localCheckpoint(true)
+      .agg(count(lit(1)).as("tf")), "hits")
     val dfreq = hits.groupBy(col("term")).agg(count(lit(1)).as("df"))
     val postings = hits.join(dfreq, Seq("term"))
       .join(dl, Seq(idCol))
@@ -427,53 +441,46 @@ object TextIndex {
   def mergeBatch(spark: SparkSession, batch: DataFrame, idCol: String,
       textCol: String, dir: String, epoch: Long = -1L,
       fenceTag: String = ""): Unit = {
-    import org.apache.spark.sql.types._
     val (gen, _) = current(dir)
     val lastEpoch = fenceOf(dir, fenceTag)
     require(gen >= 0, s"mergeBatch: no index at $dir — build() first")
     if (epoch >= 0 && epoch <= lastEpoch) return // replayed epoch: no-op
+    Stage("TextIndex.mergeBatch") { st =>
+      val (stored, stats) = readGen(spark, dir, gen, idCol)
 
-    val stored = spark.read.schema(StructType(Seq(
-        StructField("term", StringType), StructField(idCol, LongType),
-        StructField("tf", LongType), StructField("dl", LongType),
-        StructField("df", LongType))))
-      .parquet(s"${genDir(dir, gen)}/postings")
-    val stats = spark.read.schema(StructType(Seq(
-        StructField("_L", LongType), StructField("_N", LongType))))
-      .parquet(s"${genDir(dir, gen)}/stats")
+      val words = split(col(textCol), " ")
+      val bdl = batch.select(col(idCol),
+        size(filter(words, w => length(w) > 0)).cast("long").as("dl"))
+      val bhits = st.checkpoint(
+        batch.select(col(idCol), explode(words).as("term"))
+          .filter(length(col("term")) > 0)
+          .groupBy(col(idCol), col("term"))
+          .agg(count(lit(1)).as("tf")), "bhits")
+      val bdf = bhits.groupBy(col("term")).agg(count(lit(1)).as("bdf"))
 
-    val words = split(col(textCol), " ")
-    val bdl = batch.select(col(idCol),
-      size(filter(words, w => length(w) > 0)).cast("long").as("dl"))
-    val bhits = batch.select(col(idCol), explode(words).as("term"))
-      .filter(length(col("term")) > 0)
-      .groupBy(col(idCol), col("term"))
-      .agg(count(lit(1)).as("tf"))
-      .localCheckpoint(true)
-    val bdf = bhits.groupBy(col("term")).agg(count(lit(1)).as("bdf"))
-
-    // stored df per term, read once from the postings themselves (df is
-    // constant within a term by construction — max is just a reader)
-    val sdf = stored.groupBy(col("term")).agg(max(col("df")).as("sdf"))
-    val mergedPostings = stored.drop("df")
-      .join(broadcast(bdf), Seq("term"), "left")
-      .join(sdf, Seq("term")) // vocab-sized: no broadcast hint, AQE picks
-      .select(col("term"), col(idCol), col("tf"), col("dl"),
-        (col("sdf") + coalesce(col("bdf"), lit(0L))).as("df"))
-      .unionByName(bhits
-        .join(bdl, Seq(idCol))
-        .join(broadcast(bdf), Seq("term"))
-        .join(sdf, Seq("term"), "left")
+      // stored df per term, read once from the postings themselves (df is
+      // constant within a term by construction — max is just a reader)
+      val sdf = stored.groupBy(col("term")).agg(max(col("df")).as("sdf"))
+      val mergedPostings = stored.drop("df")
+        .join(broadcast(bdf), Seq("term"), "left")
+        .join(sdf, Seq("term")) // vocab-sized: no broadcast hint, AQE picks
         .select(col("term"), col(idCol), col("tf"), col("dl"),
-          (col("bdf") + coalesce(col("sdf"), lit(0L))).as("df")))
-    val mergedStats = stats.crossJoin(broadcast(
-        bdl.agg(sum(col("dl")).as("_bL"), count(lit(1)).as("_bN"))))
-      .select((col("_L") + col("_bL")).as("_L"),
-        (col("_N") + col("_bN")).as("_N"))
+          (col("sdf") + coalesce(col("bdf"), lit(0L))).as("df"))
+        .unionByName(bhits
+          .join(bdl, Seq(idCol))
+          .join(broadcast(bdf), Seq("term"))
+          .join(sdf, Seq("term"), "left")
+          .select(col("term"), col(idCol), col("tf"), col("dl"),
+            (col("bdf") + coalesce(col("sdf"), lit(0L))).as("df")))
+      val mergedStats = stats.crossJoin(broadcast(
+          bdl.agg(sum(col("dl")).as("_bL"), count(lit(1)).as("_bN"))))
+        .select((col("_L") + col("_bL")).as("_L"),
+          (col("_N") + col("_bN")).as("_N"))
 
-    withGenClaim(dir, gen) {
-      writeGen(mergedPostings, mergedStats, dir, gen + 1, idCol)
-      advance(dir, gen + 1, epoch.max(lastEpoch), fenceTag, basedOnGen = gen)
+      withGenClaim(dir, gen) {
+        writeGen(mergedPostings, mergedStats, dir, gen + 1, idCol)
+        advance(dir, gen + 1, epoch.max(lastEpoch), fenceTag, basedOnGen = gen)
+      }
     }
   }
 
@@ -508,38 +515,31 @@ object TextIndex {
     * rebuild by q267's from-scratch oracle. */
   def removeDocs(spark: SparkSession, ids: DataFrame, idCol: String,
       dir: String, epoch: Long = -1L, fenceTag: String = ""): Unit = {
-    import org.apache.spark.sql.types._
     val (gen, _) = current(dir)
     val lastEpoch = fenceOf(dir, fenceTag)
     require(gen >= 0, s"removeDocs: no index at $dir — build() first")
     if (epoch >= 0 && epoch <= lastEpoch) return // replayed: no-op
+    Stage("TextIndex.removeDocs") { st =>
+      val (stored, stats) = readGen(spark, dir, gen, idCol)
 
-    val stored = spark.read.schema(StructType(Seq(
-        StructField("term", StringType), StructField(idCol, LongType),
-        StructField("tf", LongType), StructField("dl", LongType),
-        StructField("df", LongType))))
-      .parquet(s"${genDir(dir, gen)}/postings")
-    val stats = spark.read.schema(StructType(Seq(
-        StructField("_L", LongType), StructField("_N", LongType))))
-      .parquet(s"${genDir(dir, gen)}/stats")
-
-    val rm = ids.select(col(idCol)).distinct().localCheckpoint(true)
-    val removed = stored.join(broadcast(rm), Seq(idCol), "left_semi")
-      .localCheckpoint(true)
-    val rdf = removed.groupBy(col("term")).agg(count(lit(1)).as("rdf"))
-    val newPostings = stored.join(broadcast(rm), Seq(idCol), "left_anti")
-      .join(rdf, Seq("term"), "left") // forget-vocab-sized; AQE picks
-      .select(col("term"), col(idCol), col("tf"), col("dl"),
-        (col("df") - coalesce(col("rdf"), lit(0L))).as("df"))
-    val rstats = removed.groupBy(col(idCol)).agg(max(col("dl")).as("dl"))
-      .agg(coalesce(sum(col("dl")), lit(0L)).as("_rL"),
-        count(lit(1)).as("_rN"))
-    val newStats = stats.crossJoin(broadcast(rstats))
-      .select((col("_L") - col("_rL")).as("_L"),
-        (col("_N") - col("_rN")).as("_N"))
-    withGenClaim(dir, gen) {
-      writeGen(newPostings, newStats, dir, gen + 1, idCol)
-      advance(dir, gen + 1, epoch.max(lastEpoch), fenceTag, basedOnGen = gen)
+      val rm = st.checkpoint(ids.select(col(idCol)).distinct(), "rm")
+      val removed = st.checkpoint(
+        stored.join(broadcast(rm), Seq(idCol), "left_semi"), "removed")
+      val rdf = removed.groupBy(col("term")).agg(count(lit(1)).as("rdf"))
+      val newPostings = stored.join(broadcast(rm), Seq(idCol), "left_anti")
+        .join(rdf, Seq("term"), "left") // forget-vocab-sized; AQE picks
+        .select(col("term"), col(idCol), col("tf"), col("dl"),
+          (col("df") - coalesce(col("rdf"), lit(0L))).as("df"))
+      val rstats = removed.groupBy(col(idCol)).agg(max(col("dl")).as("dl"))
+        .agg(coalesce(sum(col("dl")), lit(0L)).as("_rL"),
+          count(lit(1)).as("_rN"))
+      val newStats = stats.crossJoin(broadcast(rstats))
+        .select((col("_L") - col("_rL")).as("_L"),
+          (col("_N") - col("_rN")).as("_N"))
+      withGenClaim(dir, gen) {
+        writeGen(newPostings, newStats, dir, gen + 1, idCol)
+        advance(dir, gen + 1, epoch.max(lastEpoch), fenceTag, basedOnGen = gen)
+      }
     }
   }
 

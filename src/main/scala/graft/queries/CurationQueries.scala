@@ -2,7 +2,7 @@ package graft.queries
 
 import org.apache.spark.sql.functions._
 import graft.Tables
-import graft.operators.Curation
+import graft.operators.{Curation, Stage}
 
 /** [NS] training-data curation over `documents` (operators.Curation):
   * deterministic hash splits, sequence chunking, cross-corpus
@@ -3397,7 +3397,7 @@ object CurationQueries {
     * micro-batches and a restart. */
   val q333CrawlE2e = Q(
     "q333_crawl_e2e",
-    (s, d) => {
+    (s, d) => Stage("CurationQueries.q333CrawlE2e") { implicit st =>
       import s.implicits._
       val docs = Tables.documents(s, d)
       val arc = docs.filter($"doc_id" % 10 =!= 0)
@@ -3597,7 +3597,7 @@ object CurationQueries {
     * including the LM and its backoff levels, from scratch. */
   val q344CrawlLmFunnel = Q(
     "q344_crawl_lm_funnel",
-    (s, d) => {
+    (s, d) => Stage("CurationQueries.q344CrawlLmFunnel") { implicit st =>
       import s.implicits._
       val docs = Tables.documents(s, d)
       val arc = docs.filter($"doc_id" % 10 =!= 0)
@@ -3849,7 +3849,7 @@ object CurationQueries {
     * byte-identical. */
   val q353CrawlKnFunnel = Q(
     "q353_crawl_kn_funnel",
-    (s, d) => {
+    (s, d) => Stage("CurationQueries.q353CrawlKnFunnel") { implicit st =>
       import s.implicits._
       val docs = Tables.documents(s, d)
       val arc = docs.filter($"doc_id" % 10 =!= 0)

@@ -3,7 +3,7 @@ package graft.queries
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.Tables
-import graft.operators.Dedup
+import graft.operators.{Dedup, Stage}
 import QueryDsl._
 
 /** [NS] LLM-training-data pipeline operators over `documents`: exact and
@@ -963,7 +963,7 @@ object DocQueries {
     * oracle-expressible and shuffle-bounded at 100 TB. */
   val q109NearDupGate = Q(
     "q109_neardup_gate",
-    (s, d) => {
+    (s, d) => Stage("DocQueries.q109NearDupGate") { implicit st =>
       import s.implicits._
       graft.operators.Dedup.nearDupGateBatch(
           Tables.documents(s, d), "doc_id", "text", tsCol = "doc_id")
@@ -1654,7 +1654,7 @@ object DocQueries {
     * two aggregates for the rest. */
   val q191DatasetCard = Q(
     "q191_dataset_card",
-    (s, d) => {
+    (s, d) => Stage("DocQueries.q191DatasetCard") { implicit st =>
       import s.implicits._
       import org.apache.spark.sql.expressions.Window
       val docs = Tables.documents(s, d)

@@ -1541,12 +1541,16 @@ class AnalyticsSpec extends AnyFunSuite {
     // replayed epoch: no-op
     MomentsState.removeBatch(spark, half2, "g", "v", dirM, epoch = 1L)
     assert(sums(dirM) === sums(h1), "replayed epoch must be a no-op")
-    // a batch with a key the state never folded is not a subset
-    val e = intercept[IllegalArgumentException] {
-      MomentsState.removeBatch(spark, Seq(("z", 1L)).toDF("g", "v"),
-        "g", "v", dirM, epoch = 2L)
+    // a batch with a key the state never folded is not a subset; the
+    // refused removal leaves nothing persisted
+    val left = TestSpark.rddDelta {
+      val e = intercept[IllegalArgumentException] {
+        MomentsState.removeBatch(spark, Seq(("z", 1L)).toDF("g", "v"),
+          "g", "v", dirM, epoch = 2L)
+      }
+      assert(e.getMessage.contains("not a subset"))
     }
-    assert(e.getMessage.contains("not a subset"))
+    assert(left == 0, s"the refused removal left $left persisted RDDs")
   }
 
   test("MomentsState at web-scale values (|v| ~ 1e6): the stored " +

@@ -2,6 +2,7 @@ package graft
 
 import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.DataFrame
+import graft.TestSpark.rddDelta
 import graft.operators.{Curation, Dedup, Graph, Integrity}
 
 /** Iterative-operator storage hygiene (round-10 q181 adjudication): every
@@ -19,19 +20,6 @@ import graft.operators.{Curation, Dedup, Graph, Integrity}
   */
 class CheckpointHygieneSpec extends AnyFunSuite {
   lazy val spark = TestSpark.spark
-
-  /** Run `op`, consume its result, and return how many of the RDDs it
-    * persisted are still persisted (result frames included — callers pass
-    * the bound they expect for those). Counting the ids that are new since
-    * the call, not the size of the session-wide map, keeps the figure
-    * independent of what earlier suites left behind and of when the
-    * ContextCleaner removes it. */
-  private def rddDelta(op: => DataFrame): Long = {
-    val before = spark.sparkContext.getPersistentRDDs.keySet
-    val out = op
-    out.count() // consume like a query would
-    (spark.sparkContext.getPersistentRDDs.keySet -- before).size.toLong
-  }
 
   // a 40-node graph: one 20-cycle (high diameter, keeps BFS/CC iterating)
   // plus a 20-node star and a bridge between them
@@ -118,9 +106,14 @@ class CheckpointHygieneSpec extends AnyFunSuite {
       (i, text, s"s${i % 3}", text.length.toLong)
     }.toDF("doc_id", "text", "source", "n_chars")
     val d = rddDelta(Curation.curationFunnel(docs))
-    // the result + nearDupGateBatch's band checkpoint, which the helper
-    // makes outside the funnel's scope
-    assert(d <= 2, s"curationFunnel leaked $d (want <= 2)")
+    assert(d <= 1, s"curationFunnel leaked $d (want <= 1)")
+  }
+
+  test("negativeSamples drops its global-rank checkpoint") {
+    import spark.implicits._
+    val pairs = edges().union(Seq((5L, 25L), (25L, 7L)).toDF("a", "b"))
+    val d = rddDelta(Graph.negativeSamples(pairs, "a", "b", k = 2))
+    assert(d <= 1, s"negativeSamples leaked $d (want <= 1)")
   }
 
   test("kmeans / pqTrain drop superseded per-iteration centroids") {

@@ -562,10 +562,13 @@ class GraphSpec extends AnyFunSuite {
     // a batch with pairs the model never trained on is not a training
     // subset — the full-outer guard sees the negative count and fires
     val alien = Seq((9L, 7L), (9L, 8L)).toDF("user_id", "item")
-    val e = intercept[IllegalArgumentException] {
-      RecModel.removeBatch(spark2, alien, "user_id", "item", 10, 1L,
-        dirM, epoch = 4L)
+    val left = TestSpark.rddDelta {
+      val e = intercept[IllegalArgumentException] {
+        RecModel.removeBatch(spark2, alien, "user_id", "item", 10, 1L,
+          dirM, epoch = 4L)
+      }
+      assert(e.getMessage.contains("not a subset"))
     }
-    assert(e.getMessage.contains("not a subset"))
+    assert(left == 0, s"the refused removal left $left persisted RDDs")
   }
 }

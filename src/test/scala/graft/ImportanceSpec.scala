@@ -104,11 +104,15 @@ class ImportanceSpec extends AnyFunSuite {
     assert(Importance.storedLambda(spark, dir)
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap === got)
     // removing doc 2 AGAIN (fresh epoch) is not a training subset any
-    // more — counts would go negative; the guard must fire
-    val e = intercept[IllegalArgumentException] {
-      Importance.removeBatch(spark, tb.filter($"doc_id" === 2L),
-        $"lang" === "en", dir, epoch = 1L)
+    // more — counts would go negative; the guard must fire, and its
+    // error path must release the checkpoints the removal made
+    val left = TestSpark.rddDelta {
+      val e = intercept[IllegalArgumentException] {
+        Importance.removeBatch(spark, tb.filter($"doc_id" === 2L),
+          $"lang" === "en", dir, epoch = 1L)
+      }
+      assert(e.getMessage.contains("not a subset"))
     }
-    assert(e.getMessage.contains("not a subset"))
+    assert(left == 0, s"the refused removal left $left persisted RDDs")
   }
 }

@@ -4,6 +4,7 @@ import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import graft.streaming.{EventStream, HistoryPipeline}
+import graft.operators.Stage
 
 /** SURVEY §2.9 — streaming semantics: watch-history dedup at the keyed
   * sink, windowed aggregation, custom stateful totals; MemoryStream
@@ -531,9 +532,10 @@ class StreamingSpec extends AnyFunSuite {
       .select($"doc_id", $"text",
         to_timestamp($"doc_id" + lit(1700000000L)).as("ts"))
     // batch truth: the q109 gate over the same (ts, id) arrival order
-    val batchAdmitted = graft.operators.Dedup
-      .nearDupGateBatch(docs, "doc_id", "text", "ts")
-      .select($"id").as[Long].collect().toSet
+    val batchAdmitted = Stage("q109") { implicit st =>
+      graft.operators.Dedup.nearDupGateBatch(docs, "doc_id", "text", "ts")
+        .select($"id").as[Long].collect().toSet
+    }
 
     // two event-time-ordered epochs, deterministically scrambled WITHIN
     // each (in-batch disorder is what the per-batch (ts, id) argmin must
@@ -609,10 +611,12 @@ class StreamingSpec extends AnyFunSuite {
           keepCols = Seq("ts"))
         .filter(length(col("clean_text")) > 0)
     // batch twin: same extraction, same gate semantics
-    val batchAdmitted = graft.operators.Dedup.nearDupGateBatch(
-        extractNonEmpty(rows.toDF("doc_id", "html", "ts")),
-        "doc_id", "clean_text", "ts")
-      .select($"id").as[Long].collect().toSet
+    val batchAdmitted = Stage("gate") { implicit st =>
+      graft.operators.Dedup.nearDupGateBatch(
+          extractNonEmpty(rows.toDF("doc_id", "html", "ts")),
+          "doc_id", "clean_text", "ts")
+        .select($"id").as[Long].collect().toSet
+    }
     assert(batchAdmitted === Set(1L, 4L))
     val mem = MemoryStream[(Long, String, java.sql.Timestamp)]
     val claims = EventStream.bandFirstSight(
@@ -1772,13 +1776,15 @@ class StreamingSpec extends AnyFunSuite {
       "doc_id", "_flat", lmDir)
     val pages = DocQueries.crawlPage(docs.filter($"doc_id" % 10 === 0))
       .select($"doc_id", $"html")
-    def admitted(dd: String, batch: org.apache.spark.sql.DataFrame) =
+    def admitted(dd: String, batch: org.apache.spark.sql.DataFrame)(
+        implicit st: Stage) =
       Curation.crawlStages(spark, batch, "doc_id", "html", lineDir,
         dd, impDir, maxLineDocs = 30L, minScorePpm = 1000000L,
         lmDir = Some(lmDir), minLmPpm = floor,
         lmSmoothing = smoothing).last._2
-    val batchSet = admitted(ddBatch, pages)
-      .select($"doc_id").as[Long].collect().toSet
+    val batchSet = Stage("batch") { implicit st =>
+      admitted(ddBatch, pages).select($"doc_id").as[Long].collect().toSet
+    }
     assert(batchSet.nonEmpty, "fixture must admit something")
     val srcDir = Files.createTempDirectory("crawl_src").toString
     val ckpt = Files.createTempDirectory("crawl_ckpt").toString
@@ -1793,10 +1799,12 @@ class StreamingSpec extends AnyFunSuite {
         .foreachBatch { (b: org.apache.spark.sql.DataFrame, _: Long) =>
           // commit-before-append (DedupIndex.foreachBatchIngest's rule),
           // composed with the full gate chain instead of the bare gate
-          val adm = admitted(ddStream, b).localCheckpoint()
-          adm.select($"doc_id").write.mode("append").parquet(sink)
-          DedupIndex.append(adm, "doc_id", "clean_text", 3, 8, 4,
-            ddStream)
+          Stage("microBatch") { implicit st =>
+            val adm = st.checkpoint(admitted(ddStream, b), "admitted")
+            adm.select($"doc_id").write.mode("append").parquet(sink)
+            DedupIndex.append(adm, "doc_id", "clean_text", 3, 8, 4,
+              ddStream)
+          }
         }
         .start()
       q.awaitTermination()

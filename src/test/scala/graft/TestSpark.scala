@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{Dataset, SparkSession}
 
 /** One shared local session for the whole test run. */
 object TestSpark {
@@ -16,5 +16,22 @@ object TestSpark {
       .getOrCreate()
     s.sparkContext.setLogLevel("WARN")
     s
+  }
+
+  /** Run `op`, consume a frame it returns the way a query would, and
+    * count the RDDs it persisted that are still persisted afterwards
+    * (result frames included — callers pass the bound they expect for
+    * those). A call expected to throw runs inside an `intercept` in
+    * `op`, so the count covers its error path too. Counting the ids that
+    * are new since the call, not the size of the session-wide map, keeps
+    * the figure independent of what earlier suites left behind and of
+    * when the ContextCleaner removes it. */
+  def rddDelta(op: => Any): Long = {
+    val before = spark.sparkContext.getPersistentRDDs.keySet
+    op match {
+      case ds: Dataset[_] => ds.count()
+      case _ => ()
+    }
+    (spark.sparkContext.getPersistentRDDs.keySet -- before).size.toLong
   }
 }

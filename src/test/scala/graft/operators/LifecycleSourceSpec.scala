@@ -6,12 +6,12 @@ import scala.util.matching.Regex
 
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Operators materialize through [[Stage]]/[[Fixpoint]]: dropping a
-  * checkpoint, creating an Observation or persisting a frame anywhere
-  * else in `graft/operators` means an operator is growing its own
-  * lifecycle again (the hand-rolled loops these primitives replaced
-  * leaked on error paths and made storage depend on ContextCleaner
-  * timing). */
+/** Operators materialize through [[Stage]]/[[Fixpoint]]: checkpointing
+  * or persisting a frame, dropping a checkpoint or creating an
+  * Observation anywhere else in `graft/operators` means an operator is
+  * growing its own lifecycle again (the hand-rolled loops these
+  * primitives replaced leaked on error paths and made storage depend on
+  * ContextCleaner timing). */
 class LifecycleSourceSpec extends AnyFunSuite {
   private val dir = new File("src/main/scala/graft/operators")
 
@@ -36,6 +36,12 @@ class LifecycleSourceSpec extends AnyFunSuite {
     val found = hits(Set("Stage.scala", "Fixpoint.scala"),
       """Bridge\s*\.\s*dropCheckpoint|\bObservation\s*\(""".r)
     assert(found.isEmpty, "use Stage/Fixpoint instead:\n" + found.mkString("\n"))
+  }
+
+  test("only Stage checkpoints a frame") {
+    val found = hits(Set("Stage.scala"), """\.\s*localCheckpoint\s*\(""".r)
+    assert(found.isEmpty, "checkpoint in a Stage instead:\n" +
+      found.mkString("\n"))
   }
 
   test("only Stage persists, unpersists or caches a frame") {

@@ -64,12 +64,16 @@ class StatsIndexSpec extends AnyFunSuite {
     StatsIndex.removeBatch(spark, gone, "k", dir, 4, 16, epoch = 1L,
       fenceTag = "rtbf")
     assert(cellsOf(dir) === before)
-    // non-subset batch fails loudly, store untouched
-    val e = intercept[IllegalArgumentException] {
-      StatsIndex.removeBatch(spark, keysDf(Seq("zz", "zz")), "k", dir,
-        4, 16, epoch = 2L, fenceTag = "rtbf")
+    // non-subset batch fails loudly, store untouched, nothing left
+    // persisted
+    val left = graft.TestSpark.rddDelta {
+      val e = intercept[IllegalArgumentException] {
+        StatsIndex.removeBatch(spark, keysDf(Seq("zz", "zz")), "k", dir,
+          4, 16, epoch = 2L, fenceTag = "rtbf")
+      }
+      assert(e.getMessage.contains("not a subset"))
     }
-    assert(e.getMessage.contains("not a subset"))
+    assert(left == 0, s"the refused removal left $left persisted RDDs")
     assert(cellsOf(dir) === before)
   }
 
