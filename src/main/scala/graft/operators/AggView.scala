@@ -18,33 +18,14 @@ import org.apache.spark.sql.functions._
   * which is what keeps `build ∘ mergeCdc ≡ build` on the net input —
   * twin-certified by the q139 oracle recomputing from scratch.
   *
-  * Storage mirrors [[TextIndex]]'s versioned-generation protocol
-  * (gen=N dirs + an atomically-advanced pointer): a merge writes the
-  * NEXT generation and flips the pointer, so concurrent readers see
-  * old state or new, never a torn mix, and a replayed merge epoch can
-  * be fenced by tag ([[TextIndex.withFingerprint]]).
+  * Storage is the [[Generation]] protocol (gen=N dirs + an
+  * atomically-advanced pointer): a merge writes the NEXT generation and
+  * flips the pointer, so concurrent readers see old state or new, never
+  * a torn mix, and a replayed merge epoch is fenced per writer tag.
   */
 object AggView {
 
-  private def genDir(dir: String, gen: Long) = s"$dir/gen=$gen"
-
-  /** (generation, lastEpoch) from the pointer file; (-1, -1) if none —
-    * SHARED with [[TextIndex.current]]: same `_current` file, same
-    * versioned-generation protocol (crash mid-merge leaves the pointer
-    * at K, half-written K+1 invisible; replayed streaming epoch ≤ the
-    * writer's fence is a no-op), and as of round 10 the same TAGGED
-    * per-writer fences ([[TextIndex.fenceOf]]) so an ingest CDC stream
-    * and a purge stream on one view never collide on epoch counters. */
-  def current(dir: String): (Long, Long) = TextIndex.current(dir)
-
-  def currentGen(dir: String): Long = current(dir)._1
-
-  private def advance(dir: String, gen: Long, epoch: Long,
-      fenceTag: String,
-      basedOnGen: Long = TextIndex.Unguarded): Unit =
-    // pointer flip WITHOUT generation GC: unlike the index stores,
-    // this one keeps every generation readable ([[serveAt]])
-    TextIndex.writePointer(dir, gen, epoch, fenceTag, basedOnGen)
+  def currentGen(dir: String): Long = Generation.current(dir)._1
 
   /** Same per-corpus location contract as [[TextIndex.defaultDir]]. */
   def defaultDir(tag: String): String =
@@ -59,13 +40,13 @@ object AggView {
   private def writeGen(state: DataFrame, dir: String, gen: Long,
       keyCols: Seq[String]): Unit =
     state.repartitionByRange(keyCols.map(col): _*)
-      .write.mode("overwrite").parquet(genDir(dir, gen))
+      .write.mode("overwrite").parquet(Generation.genDir(dir, gen))
 
   /** One base pass → generation 0. */
   def build(df: DataFrame, keyCols: Seq[String], valueScaled: Column,
       dir: String): Unit = {
     writeGen(partials(df, keyCols, valueScaled), dir, 0L, keyCols)
-    advance(dir, 0L, -1L, "")
+    Generation.commitBuild(dir)
   }
 
   /** Fold a CDC delta into the stored state: `opCol` is 'I' (insert) or
@@ -73,48 +54,30 @@ object AggView {
     * NULL — raises instead of silently dropping (the round-5 ADVICE
     * null-op lesson). Cost: one groupBy over the DELTA + one groupBy
     * over (state ∪ delta-partials) — the state is never re-derived from
-    * history. */
+    * history. `epoch` ≥ 0 arms the replay fence: at-least-once
+    * foreachBatch may re-deliver an epoch after a restart, and merging
+    * it twice would double-count (an idempotent MERGE sink absorbs a
+    * replay by the key match; Σ-delta state is NOT idempotent). */
   def mergeCdc(spark: SparkSession, delta: DataFrame, keyCols: Seq[String],
       valueScaled: Column, opCol: String, dir: String,
-      epoch: Long = -1L, fenceTag: String = ""): Unit = {
-    val (gen, _) = current(dir)
-    val lastEpoch = TextIndex.fenceOf(dir, fenceTag)
-    require(gen >= 0, s"no built view at $dir — call build first")
-    // replay fence: at-least-once foreachBatch may re-deliver an epoch
-    // after a restart; state already includes it — merging twice would
-    // double-count (contrast idempotent MERGE sinks, where replays are
-    // absorbed by the key match; Σ-delta state is NOT idempotent)
-    if (epoch >= 0 && epoch <= lastEpoch) return
-    val sign = when(col(opCol) === "I", lit(1L))
-      .when(col(opCol) === "D", lit(-1L))
-      .otherwise(raise_error(concat(
-        lit("aggview: bad CDC op (expected I or D): "),
-        coalesce(col(opCol), lit("NULL")))))
-    val dp = delta
-      .groupBy(keyCols.map(col): _*)
-      .agg(sum(sign).as("cnt"), sum(sign * valueScaled).as("vsum"))
-    val state = spark.read.parquet(genDir(dir, gen))
-    val merged = state.unionByName(dp)
-      .groupBy(keyCols.map(col): _*)
-      .agg(sum(col("cnt")).as("cnt"), sum(col("vsum")).as("vsum"))
-      .filter(col("cnt") =!= 0L)
-    TextIndex.withGenClaim(dir, gen) {
-      writeGen(merged, dir, gen + 1L, keyCols)
-      advance(dir, gen + 1L, math.max(epoch, lastEpoch), fenceTag,
-        basedOnGen = gen)
+      epoch: Long = -1L, fenceTag: String = ""): Unit =
+    Generation.mutate("AggView.mergeCdc", dir, epoch, fenceTag) {
+        (_, gen) =>
+      val sign = when(col(opCol) === "I", lit(1L))
+        .when(col(opCol) === "D", lit(-1L))
+        .otherwise(raise_error(concat(
+          lit("aggview: bad CDC op (expected I or D): "),
+          coalesce(col(opCol), lit("NULL")))))
+      val dp = delta
+        .groupBy(keyCols.map(col): _*)
+        .agg(sum(sign).as("cnt"), sum(sign * valueScaled).as("vsum"))
+      val merged = spark.read.parquet(Generation.genDir(dir, gen))
+        .unionByName(dp)
+        .groupBy(keyCols.map(col): _*)
+        .agg(sum(col("cnt")).as("cnt"), sum(col("vsum")).as("vsum"))
+        .filter(col("cnt") =!= 0L)
+      writeGen(merged, dir, _, keyCols)
     }
-  }
-
-  /** Streaming maintenance: each micro-batch of CDC rows folds into the
-    * stored view under the epoch fence — exactly-once view state over
-    * at-least-once delivery. Usage:
-    * `.writeStream.foreachBatch(AggView.foreachBatchCdc(...))`. */
-  def foreachBatchCdc(spark: SparkSession, keyCols: Seq[String],
-      valueScaled: Column, opCol: String, dir: String,
-      streamTag: String = ""): (DataFrame, Long) => Unit =
-    (batch, epoch) =>
-      mergeCdc(spark, batch, keyCols, valueScaled, opCol, dir, epoch,
-        streamTag)
 
   /** Read the current generation — the serving plan is a bare scan of
     * pre-aggregated state (group-key predicates push to the files the
@@ -122,18 +85,7 @@ object AggView {
   def serve(spark: SparkSession, dir: String): DataFrame = {
     val gen = currentGen(dir)
     require(gen >= 0, s"no built view at $dir")
-    spark.read.parquet(genDir(dir, gen))
-  }
-
-  /** Time travel: read a specific earlier generation. Generations are
-    * immutable once the pointer moves past them and this store keeps
-    * them all (retention is the caller's policy knob) — so "the view as
-    * of epoch K" stays queryable, the audit trail every incremental
-    * pipeline eventually needs. */
-  def serveAt(spark: SparkSession, dir: String, gen: Long): DataFrame = {
-    require(gen >= 0 && gen <= currentGen(dir),
-      s"generation $gen not available at $dir")
-    spark.read.parquet(genDir(dir, gen))
+    spark.read.parquet(Generation.genDir(dir, gen))
   }
 
   /** Delta of an inner-join view under insert-only deltas — the other

@@ -939,22 +939,19 @@ object Analytics {
       tieCol: String)
       : DataFrame = Stage("Analytics.quantileNormalize") { implicit st =>
     val in = df.filter(col(valCol).isNotNull)
-    val global = Curation.withGlobalRank(
+    val (sorted, n) = Curation.withGlobalRank(
       in.select(col(valCol).as("_gv"), col(tieCol).as("_gt")),
-      Seq(col("_gv"), col("_gt")), "_gidx")._1
-      .select(col("_gidx"), col("_gv"))
-    val nRow = global.agg(count(lit(1)).as("_N"))
+      Seq(col("_gv"), col("_gt")), "_gidx")
     val ranked = in
       .withColumn("_rn", row_number().over(
         Window.partitionBy(col(groupCol))
           .orderBy(col(valCol), col(tieCol))))
       .withColumn("_ng", count(lit(1)).over(
         Window.partitionBy(col(groupCol))))
-      .crossJoin(broadcast(nRow))
-      .withColumn("_gidx", expr("((_rn - 1) * _N) div _ng"))
-    ranked.join(global, Seq("_gidx"))
+      .withColumn("_gidx", expr(s"((_rn - 1) * ${n}L) div _ng"))
+    ranked.join(sorted.select(col("_gidx"), col("_gv")), Seq("_gidx"))
       .withColumn(s"${valCol}_qn", col("_gv"))
-      .drop("_rn", "_ng", "_N", "_gidx", "_gv")
+      .drop("_rn", "_ng", "_gidx", "_gv")
   }
 
   /** [NS] — per-group winsorization: clamp a long value column into its
@@ -1283,23 +1280,21 @@ object Analytics {
     val res = df.select(col(calCol).as("_cal"),
       abs(col(actualCol) - col(predCol)).cast("long").as("_r"))
     val cal = res.filter(col("_cal") === 1).select(col("_r"))
-    val (ranked, _) = Curation.withGlobalRank(cal,
+    val (ranked, nCal) = Curation.withGlobalRank(cal,
       Seq(col("_r").asc), "_rk")
-    val nCal = ranked.agg(count(lit(1)).as("n_cal"))
     // k = ceil((100-alpha)/100 * (n+1)), 1-based; rank col is 0-based
-    val qhat = ranked.crossJoin(broadcast(nCal))
+    val qhat = ranked
       .filter(col("_rk") + 1 ===
-        expr(s"((100 - $alphaPct) * (n_cal + 1) + 99) div 100"))
+        expr(s"((100 - $alphaPct) * (${nCal}L + 1) + 99) div 100"))
       .agg(max(col("_r")).as("qhat"))
     val test = res.filter(col("_cal") === 0)
     test.agg(count(lit(1)).as("n_test"))
-      .crossJoin(broadcast(nCal))
       .crossJoin(broadcast(qhat))
       .crossJoin(broadcast(
         test.crossJoin(broadcast(qhat))
           .agg(count(when(col("_r") <= col("qhat"), 1))
             .as("_nc")).select(col("_nc"))))
-      .select(col("n_cal"), col("n_test"), col("qhat"),
+      .select(lit(nCal).as("n_cal"), col("n_test"), col("qhat"),
         when(col("qhat").isNull, col("n_test")).otherwise(col("_nc"))
           .as("n_covered"),
         expr("CASE WHEN n_test > 0 THEN (1000000 * " +

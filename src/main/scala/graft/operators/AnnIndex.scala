@@ -210,18 +210,12 @@ object AnnIndex {
     * queries against the same corpus) skips straight to serving. */
   def buildIfAbsent(df: DataFrame, idCol: String, vecCol: String,
       centroids: DataFrame, m: Int, subDim: Int, ksub: Int, iters: Int,
-      dir: String, corpusTag: String, metaCols: Seq[String] = Nil): Unit = {
-    val fp = fingerprint(corpusTag, m, subDim, ksub, iters, -1, metaCols)
-    val meta = java.nio.file.Paths.get(metaPath(dir))
-    val fresh = java.nio.file.Files.exists(meta) &&
-      java.nio.file.Files.readString(meta) == fp
-    if (!fresh) {
+      dir: String, corpusTag: String, metaCols: Seq[String] = Nil): Unit =
+    Generation.withFingerprint(java.nio.file.Paths.get(metaPath(dir)),
+        fingerprint(corpusTag, m, subDim, ksub, iters, -1, metaCols)) {
       build(df, idCol, vecCol, centroids, m, subDim, ksub, iters, dir,
         metaCols)
-      java.nio.file.Files.createDirectories(meta.getParent)
-      java.nio.file.Files.writeString(meta, fp)
     }
-  }
 
   /** BATCH serving: top-k for MANY query vectors in ONE plan over the
     * stored index — the production vector-store request shape (a batch

@@ -7,7 +7,7 @@ import org.apache.spark.sql.functions._
   * lifecycle (ANN, dedup, text, LM, tokenizer, rec, importance, line —
   * and now the 8-byte vector tier). [[Similarity.binaryQuantize]]'s
   * sign-bit codes are built ONCE under the shared fingerprint protocol
-  * ([[TextIndex.withFingerprint]] — bench repeats and replays never
+  * ([[Generation.withFingerprint]] — bench repeats and replays never
   * re-encode) and persisted as a (vec_id, bq_lo, bq_hi) table 32×
   * smaller than the float corpus; serving answers Hamming-shortlist +
   * exact-re-rank queries from the STORED codes — the query's own code
@@ -54,7 +54,7 @@ object BqIndex {
   /** [[build]] unless a fingerprint-matching index already exists. */
   def buildIfAbsent(spark: SparkSession, dir: String, corpus: DataFrame,
       idCol: String, vecCol: String, tag: String): Unit =
-    TextIndex.withFingerprint(dir, s"bq:$tag") {
+    Generation.withFingerprint(dir, s"bq:$tag") {
       build(spark, dir, corpus, idCol, vecCol)
     }
 
@@ -97,8 +97,8 @@ object BqIndex {
   /** Structured Streaming ingest hook: each id-disjoint micro-batch of
     * new vectors folds into the stored code table via
     * [[appendIfAbsent]] with the batchId as the ledger tag, so
-    * checkpoint-replayed deliveries are no-ops — the
-    * [[LineIndex.foreachBatchMerge]] protocol at the 8-byte tier. */
+    * checkpoint-replayed deliveries are no-ops — the replay fence of
+    * the [[Generation]] stores, kept as a ledger at the 8-byte tier. */
   def foreachBatchAppend(spark: SparkSession, dir: String,
       idCol: String, vecCol: String): (DataFrame, Long) => Unit =
     (batch, batchId) =>

@@ -30,15 +30,23 @@ import org.apache.spark.sql.functions._
   *
   * Fence NAMESPACING (round-10 fix): purge epochs ride a TAGGED fence
   * (`fenceTag`, default "purge") on each artifact's pointer, DISJOINT
-  * from the default fence the artifact's ingest stream advances via
-  * its foreachBatchMerge. Spark epochIds are per-checkpoint counters,
+  * from the default fence the artifact's ingest stream advances through
+  * its merge. Spark epochIds are per-checkpoint counters,
   * so without the namespace a deletion stream restarting at epoch 0
   * against an artifact whose ingest stream had reached epoch 5 would
   * silently no-op every purge (an RTBF request dropped with no
   * error), and a high-epoch purge would silently drop later ingest
   * merges. With tags, each writer replays against its own counter;
   * run multiple deletion streams against one artifact only with
-  * distinct `streamTag`s on [[foreachBatchPurge]].
+  * distinct `fenceTag`s.
+  *
+  * Streaming purge intake: RTBF requests arrive as a stream in
+  * production (the deletion queue); each micro-batch of forgotten-doc
+  * rows fans out through [[purgeDocs]] with Spark's epoch id as
+  * `epoch`, `.foreachBatch((batch, epochId) => purgeDocs(spark, batch,
+  * idCol, targets, epochId))`, so an at-least-once redelivery after a
+  * restart is a no-op on every guarded artifact and an identical
+  * rewrite on the idempotent ones.
   *
   * [[TokenizerIndex]] is deliberately NOT a target: BPE merge rules
   * are an argmax chain, not a sum — no local inverse exists, so its
@@ -161,25 +169,6 @@ object Forget {
           fenceTag)
     }
   }
-
-  /** Streaming purge intake — right-to-be-forgotten requests arrive as
-    * a STREAM in production (the deletion queue), so the orchestrator
-    * has a foreachBatch adapter like every other durable lifecycle
-    * here: each micro-batch of forgotten-doc rows fans out through
-    * [[purgeDocs]] with the Spark epochId as the replay fence, so an
-    * at-least-once redelivery after a restart is a no-op on every
-    * guarded artifact and an identical rewrite on the idempotent ones
-    * (exactly-once purge over at-least-once delivery — the
-    * [[TextIndex.foreachBatchMerge]] protocol pointed at deletion).
-    * The purge epochs ride the `streamTag` fence, NOT the default one
-    * an ingest stream advances (see the object doc on namespacing) —
-    * give each concurrent deletion stream its own tag.
-    * Usage: `.writeStream.foreachBatch(Forget.foreachBatchPurge(...))`. */
-  def foreachBatchPurge(spark: SparkSession, idCol: String,
-      targets: Seq[Target],
-      streamTag: String = "purge"): (DataFrame, Long) => Unit =
-    (batch, epoch) => purgeDocs(spark, batch, idCol, targets, epoch,
-      fenceTag = streamTag)
 
   /** The house 60-bit order-independent digest (q66/q188/q333). */
   private def xor60(sqlExpr: String): String =

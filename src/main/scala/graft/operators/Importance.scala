@@ -93,10 +93,7 @@ object Importance {
   private def fingerprint(tag: String, nBuckets: Int): String =
     s"""{"version":2,"buckets":$nBuckets,"model":"$tag"}"""
 
-  def countsPath(dir: String): String = {
-    val (g, _) = TextIndex.current(dir)
-    s"${TextIndex.genDir(dir, g.max(0L))}/counts"
-  }
+  def countsPath(dir: String): String = Generation.path(dir, "counts")
 
   /** The stored per-bucket count table: target count `ct`, raw count
     * `cr`, and the bucket-count constant `nb` carried as a column so
@@ -125,31 +122,24 @@ object Importance {
   private def writeCounts(counts: DataFrame, dir: String,
       gen: Long): Unit =
     counts.coalesce(1).write.mode("overwrite")
-      .parquet(s"${TextIndex.genDir(dir, gen)}/counts")
+      .parquet(s"${Generation.genDir(dir, gen)}/counts")
 
   /** Persist the B-row count table as generation 0 (coalesced to one
     * file — it is model-sized by construction). */
   def buildModel(buckets: DataFrame, targetPred: Column, nBuckets: Int,
       dir: String): Unit = {
     writeCounts(countTable(buckets, targetPred, nBuckets), dir, 0L)
-    TextIndex.advance(dir, 0L, -1L)
+    Generation.commitBuild(dir)
   }
 
   /** [[buildModel]] unless `dir` already holds a model built with the
     * same tag + geometry — the train-once half of the lifecycle. A
     * tag/bucket mismatch rebuilds (overwrite) rather than mixing. */
   def buildModelIfAbsent(buckets: DataFrame, targetPred: Column,
-      nBuckets: Int, dir: String, tag: String): Unit = {
-    val fp = fingerprint(tag, nBuckets)
-    val meta = metaPath(dir)
-    val fresh = java.nio.file.Files.exists(meta) &&
-      java.nio.file.Files.readString(meta) == fp
-    if (!fresh) {
+      nBuckets: Int, dir: String, tag: String): Unit =
+    Generation.withFingerprint(metaPath(dir), fingerprint(tag, nBuckets)) {
       buildModel(buckets, targetPred, nBuckets, dir)
-      java.nio.file.Files.createDirectories(meta.getParent)
-      java.nio.file.Files.writeString(meta, fp)
     }
-  }
 
   /** The stored model — B rows, broadcast by [[score]]. lam_ppm
     * derives from the stored counts with [[lambdaTable]]'s exact
@@ -180,12 +170,9 @@ object Importance {
     * without it). */
   def removeBatch(spark: SparkSession, buckets: DataFrame,
       targetPred: Column, dir: String, epoch: Long = -1L,
-      fenceTag: String = ""): Unit = {
-    val (gen, _) = TextIndex.current(dir)
-    val lastEpoch = TextIndex.fenceOf(dir, fenceTag)
-    require(gen >= 0, s"removeBatch: no model at $dir — buildModel() first")
-    if (epoch >= 0 && epoch <= lastEpoch) return // replayed: no-op
-    Stage("Importance.removeBatch") { st =>
+      fenceTag: String = ""): Unit =
+    Generation.mutate("Importance.removeBatch", dir, epoch, fenceTag) {
+        (st, _) =>
       val braw = buckets.groupBy(col("bucket")).agg(sum(col("c")).as("_br"))
       val btgt = buckets.filter(targetPred)
         .groupBy(col("bucket")).agg(sum(col("c")).as("_bt"))
@@ -207,11 +194,6 @@ object Importance {
         s"Importance.removeBatch: $bad bucket counts would go negative " +
           "(or hit buckets the model never saw) — the removal batch is " +
           "not a subset of the trained corpus")
-      TextIndex.withGenClaim(dir, gen) {
-        writeCounts(merged.filter(col("cr") > 0), dir, gen + 1)
-        TextIndex.advance(dir, gen + 1, epoch.max(lastEpoch), fenceTag,
-          basedOnGen = gen)
-      }
+      writeCounts(merged.filter(col("cr") > 0), dir, _)
     }
-  }
 }

@@ -20,8 +20,7 @@ import org.apache.spark.sql.functions._
   *    document's lines arrive in exactly one batch — the [[RecModel]]
   *    disjoint-user contract); then per-line distinct-doc counts are
   *    SUMS and the merge is [[LmIndex]]'s left-join + batch-only-
-  *    remainder fold under [[TextIndex]]'s generation pointer with the
-  *    replayed-epoch no-op guard.
+  *    remainder fold, one [[Generation.mutate]].
   *  - [[serve]]: clean an incoming batch from the STORED table only —
   *    the archive appears nowhere in the plan. A line the index has
   *    never seen coalesces to zero stored docs and is KEPT (fresh
@@ -32,10 +31,7 @@ import org.apache.spark.sql.functions._
   */
 object LineIndex {
 
-  def tablePath(dir: String): String = {
-    val (g, _) = TextIndex.current(dir)
-    s"${TextIndex.genDir(dir, g.max(0L))}/lines"
-  }
+  def tablePath(dir: String): String = Generation.path(dir, "lines")
 
   def defaultDir(corpusTag: String): String =
     "/tmp/graft_line_index/" + corpusTag.replaceAll("[^A-Za-z0-9._-]", "_")
@@ -44,7 +40,7 @@ object LineIndex {
     freq.repartitionByRange(col("_h"))
       .sortWithinPartitions(col("_h"))
       .write.mode("overwrite")
-      .parquet(s"${TextIndex.genDir(dir, gen)}/lines")
+      .parquet(s"${Generation.genDir(dir, gen)}/lines")
 
   /** One corpus pass → (_h, _nd) as generation 0. */
   def build(corpus: DataFrame, idCol: String, textCol: String,
@@ -52,13 +48,13 @@ object LineIndex {
     writeGen(Curation.lineFrame(corpus, idCol, textCol)
       .groupBy(col("_h")).agg(countDistinct(col(idCol)).as("_nd")),
       dir, 0L)
-    TextIndex.advance(dir, 0L, -1L)
+    Generation.commitBuild(dir)
   }
 
   /** [[build]] unless a fingerprint-matching table exists. */
   def buildIfAbsent(corpus: DataFrame, idCol: String, textCol: String,
       dir: String, corpusTag: String): Unit =
-    TextIndex.withFingerprint(dir, corpusTag) {
+    Generation.withFingerprint(dir, corpusTag) {
       build(corpus, idCol, textCol, dir)
     }
 
@@ -75,13 +71,9 @@ object LineIndex {
     * `epoch` ≥ 0 arms the replayed-delivery no-op guard. */
   def mergeBatch(spark: SparkSession, batch: DataFrame, idCol: String,
       textCol: String, dir: String, epoch: Long = -1L,
-      fenceTag: String = ""): Unit = {
-    val (gen, _) = TextIndex.current(dir)
-    val lastEpoch = TextIndex.fenceOf(dir, fenceTag)
-    require(gen >= 0,
-      s"LineIndex.mergeBatch: no index at $dir — build() first")
-    if (epoch >= 0 && epoch <= lastEpoch) return
-    Stage("LineIndex.mergeBatch") { st =>
+      fenceTag: String = ""): Unit =
+    Generation.mutate("LineIndex.mergeBatch", dir, epoch, fenceTag) {
+        (st, _) =>
       val bc = st.checkpoint(Curation.lineFrame(batch, idCol, textCol)
         .groupBy(col("_h")).agg(countDistinct(col(idCol)).as("_bnd")), "bc")
       val stored = storedFreq(spark, dir)
@@ -93,13 +85,8 @@ object LineIndex {
           .join(stored.select(col("_h"), lit(1).as("_seen")),
             Seq("_h"), "left_anti")
           .select(col("_h"), col("_bnd").as("_nd")))
-      TextIndex.withGenClaim(dir, gen) {
-        writeGen(merged, dir, gen + 1)
-        TextIndex.advance(dir, gen + 1, epoch.max(lastEpoch), fenceTag,
-          basedOnGen = gen)
-      }
+      writeGen(merged, dir, _)
     }
-  }
 
   /** Right-to-be-forgotten removal: distinct-doc line counts are sums
     * under doc-disjointness, so forgetting documents is the exact
@@ -111,41 +98,22 @@ object LineIndex {
     * the line-frequency artifact. */
   def removeBatch(spark: SparkSession, batch: DataFrame, idCol: String,
       textCol: String, dir: String, epoch: Long = -1L,
-      fenceTag: String = ""): Unit = {
-    val (gen, _) = TextIndex.current(dir)
-    val lastEpoch = TextIndex.fenceOf(dir, fenceTag)
-    require(gen >= 0,
-      s"LineIndex.removeBatch: no index at $dir — build() first")
-    if (epoch >= 0 && epoch <= lastEpoch) return
-    Stage("LineIndex.removeBatch") { st =>
+      fenceTag: String = ""): Unit =
+    Generation.mutate("LineIndex.removeBatch", dir, epoch, fenceTag) {
+        (st, _) =>
       val bc = st.checkpoint(Curation.lineFrame(batch, idCol, textCol)
         .groupBy(col("_h")).agg(countDistinct(col(idCol)).as("_bnd")), "bc")
-      val stored = storedFreq(spark, dir)
-      val merged = stored
+      val (merged, m) = st.observed(storedFreq(spark, dir)
         .join(bc, Seq("_h"), "left")
         .select(col("_h"),
-          (col("_nd") - coalesce(col("_bnd"), lit(0L))).as("_nd"))
-      val bad = merged.filter(col("_nd") < 0).count()
+          (col("_nd") - coalesce(col("_bnd"), lit(0L))).as("_nd")),
+        "merged")(count(when(col("_nd") < 0, 1)).as("bad"))
+      val bad = m("bad").asInstanceOf[Long]
       require(bad == 0,
         s"LineIndex.removeBatch: $bad line counts would go negative — " +
           "the removal batch is not a subset of the indexed corpus")
-      TextIndex.withGenClaim(dir, gen) {
-        writeGen(merged.filter(col("_nd") > 0), dir, gen + 1)
-        TextIndex.advance(dir, gen + 1, epoch.max(lastEpoch), fenceTag,
-          basedOnGen = gen)
-      }
+      writeGen(merged.filter(col("_nd") > 0), dir, _)
     }
-  }
-
-  /** [NS] — Structured Streaming ingest hook: each doc-disjoint
-    * micro-batch folds into the stored table via [[mergeBatch]] with
-    * batchId as the epoch, so checkpoint-replayed deliveries are
-    * no-ops (the [[RecModel.foreachBatchMerge]] protocol). */
-  def foreachBatchMerge(spark: SparkSession, dir: String, idCol: String,
-      textCol: String, streamTag: String = ""): (DataFrame, Long) => Unit =
-    (batch, batchId) =>
-      mergeBatch(spark, batch, idCol, textCol, dir, epoch = batchId,
-        fenceTag = streamTag)
 
   /** Clean `batch` against the STORED line frequencies only — zero
     * archive scans in the plan; unseen lines are kept. */

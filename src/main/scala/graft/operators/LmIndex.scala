@@ -21,9 +21,8 @@ import org.apache.spark.sql.functions._
   *    the old corpus — bigram counts are SUMS, so the merge is a left
   *    join of stored rows against the batch's count table (rows of
   *    untouched bigrams pass through byte-identical) plus the
-  *    batch-only remainder, written as the next generation under
-  *    [[TextIndex]]'s pointer protocol with the same replayed-epoch
-  *    no-op guard.
+  *    batch-only remainder, written as the next generation by
+  *    [[Generation.mutate]].
   *  - [[serve]]: score a probe frame from the STORED model only — the
   *    train corpus appears NOWHERE in the plan (PlanQualitySpec-gated);
   *    scoring shares [[Curation.lmScoreFromModel]] with the in-query
@@ -32,10 +31,7 @@ import org.apache.spark.sql.functions._
   */
 object LmIndex {
 
-  def modelPath(dir: String): String = {
-    val (g, _) = TextIndex.current(dir)
-    s"${TextIndex.genDir(dir, g.max(0L))}/bigrams"
-  }
+  def modelPath(dir: String): String = Generation.path(dir, "bigrams")
 
   def defaultDir(corpusTag: String): String =
     "/tmp/graft_lm_index/" + corpusTag.replaceAll("[^A-Za-z0-9._-]", "_")
@@ -44,7 +40,7 @@ object LmIndex {
     model.repartitionByRange(col("w1"))
       .sortWithinPartitions(col("w1"), col("w2"))
       .write.mode("overwrite")
-      .parquet(s"${TextIndex.genDir(dir, gen)}/bigrams")
+      .parquet(s"${Generation.genDir(dir, gen)}/bigrams")
 
   /** One train-corpus pass → (w1, w2, c2) as generation 0. */
   def build(train: DataFrame, idCol: String, textCol: String,
@@ -52,13 +48,13 @@ object LmIndex {
     writeGen(Curation.bigramFrame(train, idCol, textCol)
       .groupBy(col("w1"), col("w2")).agg(count(lit(1)).as("c2")),
       dir, 0L)
-    TextIndex.advance(dir, 0L, -1L)
+    Generation.commitBuild(dir)
   }
 
   /** [[build]] unless a fingerprint-matching model exists. */
   def buildIfAbsent(train: DataFrame, idCol: String, textCol: String,
       dir: String, corpusTag: String): Unit =
-    TextIndex.withFingerprint(dir, corpusTag) {
+    Generation.withFingerprint(dir, corpusTag) {
       build(train, idCol, textCol, dir)
     }
 
@@ -73,16 +69,12 @@ object LmIndex {
   /** Fold a NEW train-document batch into the stored model: counts are
     * sums, so stored rows of bigrams the batch does not contain pass
     * through byte-identical and only colliding rows add. `epoch` ≥ 0
-    * gives the replayed-delivery no-op guard ([[TextIndex.mergeBatch]]'s
-    * protocol). */
+    * gives the replayed-delivery no-op guard. */
   def mergeBatch(spark: SparkSession, batch: DataFrame, idCol: String,
       textCol: String, dir: String, epoch: Long = -1L,
-      fenceTag: String = ""): Unit = {
-    val (gen, _) = TextIndex.current(dir)
-    val lastEpoch = TextIndex.fenceOf(dir, fenceTag)
-    require(gen >= 0, s"LmIndex.mergeBatch: no model at $dir — build() first")
-    if (epoch >= 0 && epoch <= lastEpoch) return
-    Stage("LmIndex.mergeBatch") { st =>
+      fenceTag: String = ""): Unit =
+    Generation.mutate("LmIndex.mergeBatch", dir, epoch, fenceTag) {
+        (st, _) =>
       val bc = st.checkpoint(Curation.bigramFrame(batch, idCol, textCol)
         .groupBy(col("w1"), col("w2")).agg(count(lit(1)).as("bc2")), "bc")
       val stored = storedModel(spark, dir)
@@ -94,13 +86,8 @@ object LmIndex {
           .join(stored.select(col("w1"), col("w2"), lit(1).as("_seen")),
             Seq("w1", "w2"), "left_anti")
           .select(col("w1"), col("w2"), col("bc2").as("c2")))
-      TextIndex.withGenClaim(dir, gen) {
-        writeGen(merged, dir, gen + 1)
-        TextIndex.advance(dir, gen + 1, epoch.max(lastEpoch), fenceTag,
-          basedOnGen = gen)
-      }
+      writeGen(merged, dir, _)
     }
-  }
 
   /** Score `probe` from the STORED model only — zero train-corpus scans
     * in the plan; identical to [[Curation.bigramLmScore]] over the same
@@ -117,16 +104,13 @@ object LmIndex {
   // A trigram model lives in its OWN dir (own pointer + fingerprint);
   // the two orders never share a generation.
 
-  def trigramPath(dir: String): String = {
-    val (g, _) = TextIndex.current(dir)
-    s"${TextIndex.genDir(dir, g.max(0L))}/trigrams"
-  }
+  def trigramPath(dir: String): String = Generation.path(dir, "trigrams")
 
   private def writeGen3(model: DataFrame, dir: String, gen: Long): Unit =
     model.repartitionByRange(col("w1"))
       .sortWithinPartitions(col("w1"), col("w2"), col("w3"))
       .write.mode("overwrite")
-      .parquet(s"${TextIndex.genDir(dir, gen)}/trigrams")
+      .parquet(s"${Generation.genDir(dir, gen)}/trigrams")
 
   /** One train-corpus pass → (w1, w2, w3, c3) as generation 0. */
   def buildTrigram(train: DataFrame, idCol: String, textCol: String,
@@ -135,13 +119,13 @@ object LmIndex {
       .groupBy(col("w1"), col("w2"), col("w3"))
       .agg(count(lit(1)).as("c3")),
       dir, 0L)
-    TextIndex.advance(dir, 0L, -1L)
+    Generation.commitBuild(dir)
   }
 
   /** [[buildTrigram]] unless a fingerprint-matching model exists. */
   def buildTrigramIfAbsent(train: DataFrame, idCol: String,
       textCol: String, dir: String, corpusTag: String): Unit =
-    TextIndex.withFingerprint(dir, corpusTag) {
+    Generation.withFingerprint(dir, corpusTag) {
       buildTrigram(train, idCol, textCol, dir)
     }
 
@@ -159,13 +143,9 @@ object LmIndex {
     * rows pass through byte-identical, replayed epochs are no-ops. */
   def mergeTrigramBatch(spark: SparkSession, batch: DataFrame,
       idCol: String, textCol: String, dir: String,
-      epoch: Long = -1L, fenceTag: String = ""): Unit = {
-    val (gen, _) = TextIndex.current(dir)
-    val lastEpoch = TextIndex.fenceOf(dir, fenceTag)
-    require(gen >= 0,
-      s"LmIndex.mergeTrigramBatch: no model at $dir — buildTrigram() first")
-    if (epoch >= 0 && epoch <= lastEpoch) return
-    Stage("LmIndex.mergeTrigramBatch") { st =>
+      epoch: Long = -1L, fenceTag: String = ""): Unit =
+    Generation.mutate("LmIndex.mergeTrigramBatch", dir, epoch, fenceTag) {
+        (st, _) =>
       val bc = st.checkpoint(Curation.trigramFrame(batch, idCol, textCol)
         .groupBy(col("w1"), col("w2"), col("w3"))
         .agg(count(lit(1)).as("bc3")), "bc")
@@ -178,13 +158,8 @@ object LmIndex {
           .join(stored.select(col("w1"), col("w2"), col("w3"),
             lit(1).as("_seen")), Seq("w1", "w2", "w3"), "left_anti")
           .select(col("w1"), col("w2"), col("w3"), col("bc3").as("c3")))
-      TextIndex.withGenClaim(dir, gen) {
-        writeGen3(merged, dir, gen + 1)
-        TextIndex.advance(dir, gen + 1, epoch.max(lastEpoch), fenceTag,
-          basedOnGen = gen)
-      }
+      writeGen3(merged, dir, _)
     }
-  }
 
   /** Score `probe` from the STORED trigram model only — zero
     * train-corpus scans; identical to [[Curation.trigramLmScore]] over
@@ -214,43 +189,23 @@ object LmIndex {
     * decremental ≡ rebuild-on-the-remaining) to count-table models. */
   def removeTrigramBatch(spark: SparkSession, batch: DataFrame,
       idCol: String, textCol: String, dir: String,
-      epoch: Long = -1L, fenceTag: String = ""): Unit = {
-    val (gen, _) = TextIndex.current(dir)
-    val lastEpoch = TextIndex.fenceOf(dir, fenceTag)
-    require(gen >= 0,
-      s"LmIndex.removeTrigramBatch: no model at $dir — buildTrigram() first")
-    if (epoch >= 0 && epoch <= lastEpoch) return
-    Stage("LmIndex.removeTrigramBatch") { st =>
+      epoch: Long = -1L, fenceTag: String = ""): Unit =
+    Generation.mutate("LmIndex.removeTrigramBatch", dir, epoch, fenceTag) {
+        (st, _) =>
       val bc = st.checkpoint(Curation.trigramFrame(batch, idCol, textCol)
         .groupBy(col("w1"), col("w2"), col("w3"))
         .agg(count(lit(1)).as("bc3")), "bc")
-      val stored = storedTrigram(spark, dir)
-      val merged = stored
+      val (merged, m) = st.observed(storedTrigram(spark, dir)
         .join(bc, Seq("w1", "w2", "w3"), "left")
         .select(col("w1"), col("w2"), col("w3"),
-          (col("c3") - coalesce(col("bc3"), lit(0L))).as("c3"))
+          (col("c3") - coalesce(col("bc3"), lit(0L))).as("c3")), "merged")(
+        count(when(col("c3") < 0, 1)).as("bad"))
       // a negative count means the batch was NOT a training subset —
       // fail loudly rather than persist a corrupt model
-      val bad = merged.filter(col("c3") < 0).count()
+      val bad = m("bad").asInstanceOf[Long]
       require(bad == 0,
         s"removeTrigramBatch: $bad trigram counts would go negative — " +
           "the removal batch is not a subset of the trained corpus")
-      TextIndex.withGenClaim(dir, gen) {
-        writeGen3(merged.filter(col("c3") > 0), dir, gen + 1)
-        TextIndex.advance(dir, gen + 1, epoch.max(lastEpoch), fenceTag,
-          basedOnGen = gen)
-      }
+      writeGen3(merged.filter(col("c3") > 0), dir, _)
     }
-  }
-
-  /** Structured Streaming ingest hook for the trigram tier: each
-    * doc-disjoint micro-batch folds via [[mergeTrigramBatch]] with
-    * batchId as the epoch, so checkpoint-replayed deliveries are
-    * no-ops ([[LineIndex.foreachBatchMerge]]'s protocol). */
-  def foreachBatchMergeTrigram(spark: SparkSession, dir: String,
-      idCol: String, textCol: String,
-      streamTag: String = ""): (DataFrame, Long) => Unit =
-    (batch, batchId) =>
-      mergeTrigramBatch(spark, batch, idCol, textCol, dir,
-        epoch = batchId, fenceTag = streamTag)
 }

@@ -36,19 +36,16 @@ import org.apache.spark.sql.functions._
   * numeric-keyed caller compares after casting the operator's key to
   * string (or re-casts the served key).
   *
-  * Storage rides [[TextIndex]]'s generation/atomic-pointer protocol
-  * (crash-safe rewrites, epoch replay fences — subtraction and
-  * addition are NOT idempotent without them).
+  * Storage rides the [[Generation]] protocol (crash-safe rewrites,
+  * epoch replay fences — subtraction and addition are NOT idempotent
+  * without them).
   */
 object MomentsState {
 
   def defaultDir(tag: String): String =
     "/tmp/graft_moments/" + tag.replaceAll("[^A-Za-z0-9._-]", "_")
 
-  def tablePath(dir: String): String = {
-    val (g, _) = TextIndex.current(dir)
-    s"${TextIndex.genDir(dir, g.max(0L))}/sums"
-  }
+  def tablePath(dir: String): String = Generation.path(dir, "sums")
 
   /** Legacy-layout verdicts, keyed by GENERATION path (r11 ADVICE): a
     * generation dir is written exactly once and then only ever replaced
@@ -113,13 +110,13 @@ object MomentsState {
 
   private def writeGen(state: DataFrame, dir: String, gen: Long): Unit =
     state.coalesce(1).write.mode("overwrite")
-      .parquet(s"${TextIndex.genDir(dir, gen)}/sums")
+      .parquet(s"${Generation.genDir(dir, gen)}/sums")
 
   /** One pass → generation 0. */
   def build(df: DataFrame, keyCol: String, valCol: String,
       dir: String): Unit = {
     writeGen(sums(df, keyCol, valCol), dir, 0L)
-    TextIndex.advance(dir, 0L, -1L)
+    Generation.commitBuild(dir)
   }
 
   /** Fold a NEW batch in: sums add (no disjointness contract needed —
@@ -127,24 +124,18 @@ object MomentsState {
     * arms the replay fence. */
   def mergeBatch(spark: SparkSession, batch: DataFrame, keyCol: String,
       valCol: String, dir: String, epoch: Long = -1L,
-      fenceTag: String = ""): Unit = {
-    val (gen, _) = TextIndex.current(dir)
-    val lastEpoch = TextIndex.fenceOf(dir, fenceTag)
-    require(gen >= 0, s"mergeBatch: no state at $dir — build() first")
-    if (epoch >= 0 && epoch <= lastEpoch) return // replayed: no-op
-    val merged = storedSums(spark, dir)
-      .unionByName(sums(batch, keyCol, valCol))
-      .groupBy(col("_k"))
-      .agg(sum(col("n")).as("n"), sum(col("s1")).as("s1"),
-        sum(col("s2")).cast("decimal(38,0)").as("s2"),
-        sum(col("s3")).cast("decimal(38,0)").as("s3"),
-        sum(col("s4")).cast("decimal(38,0)").as("s4"))
-    TextIndex.withGenClaim(dir, gen) {
-      writeGen(merged, dir, gen + 1)
-      TextIndex.advance(dir, gen + 1, epoch.max(lastEpoch), fenceTag,
-        basedOnGen = gen)
+      fenceTag: String = ""): Unit =
+    Generation.mutate("MomentsState.mergeBatch", dir, epoch, fenceTag) {
+        (_, _) =>
+      val merged = storedSums(spark, dir)
+        .unionByName(sums(batch, keyCol, valCol))
+        .groupBy(col("_k"))
+        .agg(sum(col("n")).as("n"), sum(col("s1")).as("s1"),
+          sum(col("s2")).cast("decimal(38,0)").as("s2"),
+          sum(col("s3")).cast("decimal(38,0)").as("s3"),
+          sum(col("s4")).cast("decimal(38,0)").as("s4"))
+      writeGen(merged, dir, _)
     }
-  }
 
   /** Right-to-be-forgotten removal: subtract the forgotten rows' power
     * sums — the exact inverse of [[mergeBatch]]. The batch must be the
@@ -155,12 +146,9 @@ object MomentsState {
     * n = 0 leave the state. */
   def removeBatch(spark: SparkSession, batch: DataFrame, keyCol: String,
       valCol: String, dir: String, epoch: Long = -1L,
-      fenceTag: String = ""): Unit = {
-    val (gen, _) = TextIndex.current(dir)
-    val lastEpoch = TextIndex.fenceOf(dir, fenceTag)
-    require(gen >= 0, s"removeBatch: no state at $dir — build() first")
-    if (epoch >= 0 && epoch <= lastEpoch) return // replayed: no-op
-    Stage("MomentsState.removeBatch") { st =>
+      fenceTag: String = ""): Unit =
+    Generation.mutate("MomentsState.removeBatch", dir, epoch, fenceTag) {
+        (st, _) =>
       val b = st.checkpoint(sums(batch, keyCol, valCol)
         .select(col("_k"), col("n").as("_bn"), col("s1").as("_b1"),
           col("s2").as("_b2"), col("s3").as("_b3"), col("s4").as("_b4")), "b")
@@ -183,27 +171,8 @@ object MomentsState {
       require(bad == 0,
         s"MomentsState.removeBatch: $bad groups would go negative — " +
           "the removal batch is not a subset of the folded facts")
-      TextIndex.withGenClaim(dir, gen) {
-        writeGen(merged.filter(col("n") > 0), dir, gen + 1)
-        TextIndex.advance(dir, gen + 1, epoch.max(lastEpoch), fenceTag,
-          basedOnGen = gen)
-      }
+      writeGen(merged.filter(col("n") > 0), dir, _)
     }
-  }
-
-  /** Streaming fold: exactly-once moment maintenance over
-    * at-least-once delivery (epochId rides the pointer fence).
-    * `streamTag` names this WRITER's replay fence — REQUIRED to be
-    * distinct per stream when more than one ingest stream maintains
-    * the same artifact (Spark epochIds are per-checkpoint counters;
-    * see [[TextIndex.fenceOf]]); the default keeps the classic
-    * single-writer shape.
-    */
-  def foreachBatchMerge(spark: SparkSession, dir: String,
-      keyCol: String, valCol: String,
-      streamTag: String = ""): (DataFrame, Long) => Unit =
-    (batch, epoch) => mergeBatch(spark, batch, keyCol, valCol, dir,
-      epoch, streamTag)
 
   /** Derive the [[Analytics.momentsExact]] readout from STORED sums —
     * byte-identical by the D-identities in the object doc, same fixed

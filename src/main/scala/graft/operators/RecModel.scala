@@ -22,9 +22,9 @@ import org.apache.spark.sql.functions._
   *    train item, w desc / item asc — the per-user serving state).
   *  - [[buildIfAbsent]]: fingerprint guard, the build-once half.
   *  - [[mergeBatch]]: incremental maintenance under the
-  *    versioned-generation protocol ([[TextIndex.mergeBatch]]'s):
+  *    versioned-generation protocol ([[Generation.mutate]]):
   *    read generation K, write K+1, atomically advance the pointer; a
-  *    replayed epoch ≤ lastEpoch is a no-op. Contract: the batch's
+  *    replayed epoch is a no-op. Contract: the batch's
   *    USERS are new (disjoint from the trained log) — pair counts are
   *    user-local (the cap is per user), so co-occurrence over disjoint
   *    user sets is ADDITIVE: merged n_users = stored + batch via one
@@ -39,7 +39,6 @@ object RecModel {
   /** Bump when the on-disk layout changes (v2: generation dirs). */
   private val FormatVersion = 2
 
-  private def genDir(dir: String, gen: Long) = s"$dir/gen=$gen"
   private def metaPath(dir: String) =
     java.nio.file.Paths.get(dir, "_graft_rec_meta.json")
 
@@ -49,27 +48,8 @@ object RecModel {
   private def fingerprint(tag: String): String =
     s"""{"version":$FormatVersion,"model":"$tag"}"""
 
-  /** (generation, lastEpoch) from the pointer file; (-1, -1) if none —
-    * SHARED with [[TextIndex.current]] as of round 10: same `_current`
-    * file and, through the tag overload of advance, the same
-    * per-writer replay fences (an ingest stream and a purge stream on
-    * one model never collide on epoch counters — see
-    * [[TextIndex.fenceOf]]). */
-  def current(dir: String): (Long, Long) = TextIndex.current(dir)
-
-  private def advance(dir: String, gen: Long, epoch: Long,
-      fenceTag: String = "",
-      basedOnGen: Long = TextIndex.Unguarded): Unit =
-    TextIndex.advance(dir, gen, epoch, fenceTag, basedOnGen)
-
-  def simsPath(dir: String): String = {
-    val (g, _) = current(dir)
-    s"${genDir(dir, g.max(0L))}/sims"
-  }
-  def anchorsPath(dir: String): String = {
-    val (g, _) = current(dir)
-    s"${genDir(dir, g.max(0L))}/anchors"
-  }
+  def simsPath(dir: String): String = Generation.path(dir, "sims")
+  def anchorsPath(dir: String): String = Generation.path(dir, "anchors")
   /** The current generation's stored anchors (userCol, anchor, ...). */
   def storedAnchors(spark: SparkSession, dir: String): DataFrame =
     spark.read.parquet(anchorsPath(dir))
@@ -79,10 +59,17 @@ object RecModel {
     sims.repartitionByRange(col("anchor"))
       .sortWithinPartitions(col("anchor"), col("n_users").desc,
         col("nb"))
-      .write.mode("overwrite").parquet(s"${genDir(dir, gen)}/sims")
+      .write.mode("overwrite")
+      .parquet(s"${Generation.genDir(dir, gen)}/sims")
     anchors.write.mode("overwrite")
-      .parquet(s"${genDir(dir, gen)}/anchors")
+      .parquet(s"${Generation.genDir(dir, gen)}/anchors")
   }
+
+  /** Generation `gen`'s stored sims and anchors. */
+  private def readGen(spark: SparkSession, dir: String,
+      gen: Long): (DataFrame, DataFrame) =
+    (spark.read.parquet(s"${Generation.genDir(dir, gen)}/sims"),
+      spark.read.parquet(s"${Generation.genDir(dir, gen)}/anchors"))
 
   /** Per-user strongest item (w desc, item asc — q201/q244's rule). */
   private def anchorsOf(interactions: DataFrame, userCol: String,
@@ -114,7 +101,7 @@ object RecModel {
       capM: Int, minCount: Long, dir: String): Unit = {
     writeGen(symPairs(interactions, userCol, itemCol, capM, minCount),
       anchorsOf(interactions, userCol, itemCol), dir, 0L)
-    advance(dir, 0L, -1L)
+    Generation.commitBuild(dir)
   }
 
   /** [[build]] unless a fingerprint-matching model already exists. */
@@ -128,17 +115,8 @@ object RecModel {
   /** Run `work` unless `dir`'s fingerprint already records `tag` — the
     * idempotence guard for build + merge sequences (model state, not a
     * view; a repeated invocation must not re-apply a merge). */
-  def withFingerprint(dir: String, tag: String)(work: => Unit): Unit = {
-    val fp = fingerprint(tag)
-    val meta = metaPath(dir)
-    val fresh = java.nio.file.Files.exists(meta) &&
-      java.nio.file.Files.readString(meta) == fp
-    if (!fresh) {
-      work
-      java.nio.file.Files.createDirectories(meta.getParent)
-      java.nio.file.Files.writeString(meta, fp)
-    }
-  }
+  def withFingerprint(dir: String, tag: String)(work: => Unit): Unit =
+    Generation.withFingerprint(metaPath(dir), fingerprint(tag))(work)
 
   /** Fold a DISJOINT-USER interaction batch into the stored model:
     * batch pairs sum into stored sims (full-outer on (anchor, nb) —
@@ -147,30 +125,24 @@ object RecModel {
   def mergeBatch(spark: SparkSession, batch: DataFrame, userCol: String,
       itemCol: String, capM: Int, minCount: Long, dir: String,
       epoch: Long = -1L, fenceTag: String = ""): Unit = {
-    val (gen, _) = current(dir)
-    val lastEpoch = TextIndex.fenceOf(dir, fenceTag)
-    require(gen >= 0, s"mergeBatch: no model at $dir — build() first")
     // minCount > 1 drops pairs per-half that would survive jointly —
     // additivity (merge ≡ rebuild) holds only for the unfiltered model
     require(minCount == 1L,
       s"mergeBatch requires minCount=1 (got $minCount): thresholding " +
         "must happen at serve time for merge ≡ rebuild to hold")
-    if (epoch >= 0 && epoch <= lastEpoch) return // replayed: no-op
-    val stored = spark.read.parquet(s"${genDir(dir, gen)}/sims")
-    val sAnchors = spark.read.parquet(s"${genDir(dir, gen)}/anchors")
-    val bSims = symPairs(batch, userCol, itemCol, capM, minCount)
-      .withColumnRenamed("n_users", "_bn")
-    val mergedSims = stored
-      .join(bSims, Seq("anchor", "nb"), "full_outer")
-      .select(col("anchor"), col("nb"),
-        (coalesce(col("n_users"), lit(0L)) +
-          coalesce(col("_bn"), lit(0L))).as("n_users"))
-    val mergedAnchors = sAnchors
-      .unionByName(anchorsOf(batch, userCol, itemCol))
-    TextIndex.withGenClaim(dir, gen) {
-      writeGen(mergedSims, mergedAnchors, dir, gen + 1)
-      advance(dir, gen + 1, if (epoch >= 0) epoch else lastEpoch,
-        fenceTag, basedOnGen = gen)
+    Generation.mutate("RecModel.mergeBatch", dir, epoch, fenceTag) {
+        (_, gen) =>
+      val (stored, sAnchors) = readGen(spark, dir, gen)
+      val bSims = symPairs(batch, userCol, itemCol, capM, minCount)
+        .withColumnRenamed("n_users", "_bn")
+      val mergedSims = stored
+        .join(bSims, Seq("anchor", "nb"), "full_outer")
+        .select(col("anchor"), col("nb"),
+          (coalesce(col("n_users"), lit(0L)) +
+            coalesce(col("_bn"), lit(0L))).as("n_users"))
+      val mergedAnchors = sAnchors
+        .unionByName(anchorsOf(batch, userCol, itemCol))
+      writeGen(mergedSims, mergedAnchors, dir, _)
     }
   }
 
@@ -192,16 +164,12 @@ object RecModel {
   def removeBatch(spark: SparkSession, batch: DataFrame, userCol: String,
       itemCol: String, capM: Int, minCount: Long, dir: String,
       epoch: Long = -1L, fenceTag: String = ""): Unit = {
-    val (gen, _) = current(dir)
-    val lastEpoch = TextIndex.fenceOf(dir, fenceTag)
-    require(gen >= 0, s"removeBatch: no model at $dir — build() first")
     require(minCount == 1L,
       s"removeBatch requires minCount=1 (got $minCount): subtraction " +
         "is exact only for the unfiltered model (mergeBatch's contract)")
-    if (epoch >= 0 && epoch <= lastEpoch) return // replayed: no-op
-    Stage("RecModel.removeBatch") { st =>
-      val stored = spark.read.parquet(s"${genDir(dir, gen)}/sims")
-      val sAnchors = spark.read.parquet(s"${genDir(dir, gen)}/anchors")
+    Generation.mutate("RecModel.removeBatch", dir, epoch, fenceTag) {
+        (st, gen) =>
+      val (stored, sAnchors) = readGen(spark, dir, gen)
       val bSims = st.checkpoint(
         symPairs(batch, userCol, itemCol, capM, minCount)
           .withColumnRenamed("n_users", "_bn"), "bSims")
@@ -218,25 +186,9 @@ object RecModel {
       val newAnchors = sAnchors.join(
         broadcast(batch.select(col(userCol)).distinct()),
         Seq(userCol), "left_anti")
-      TextIndex.withGenClaim(dir, gen) {
-        writeGen(merged.filter(col("n_users") > 0), newAnchors, dir, gen + 1)
-        advance(dir, gen + 1, epoch.max(lastEpoch), fenceTag,
-          basedOnGen = gen)
-      }
+      writeGen(merged.filter(col("n_users") > 0), newAnchors, dir, _)
     }
   }
-
-  /** foreachBatch adapter: exactly-once model maintenance over
-    * at-least-once streaming delivery — Spark's epochId rides into
-    * [[mergeBatch]]'s replay guard, the [[TextIndex.foreachBatchMerge]]
-    * protocol. Batches must honor the disjoint-user contract (a user's
-    * interactions arrive in one batch — sessionized upstream). */
-  def foreachBatchMerge(spark: SparkSession, dir: String, userCol: String,
-      itemCol: String, capM: Int,
-      streamTag: String = ""): (DataFrame, Long) => Unit =
-    (batch, epoch) =>
-      mergeBatch(spark, batch, userCol, itemCol, capM, 1L, dir, epoch,
-        streamTag)
 
   /** Stored anchors ⋈ stored sims → per-user top-k recommendations
     * (n_users desc, nb asc — the q201/q244 ranking), as

@@ -19,8 +19,8 @@ import org.apache.spark.sql.functions._
   *    in a config file — a merge with mismatched (depth, width) would
   *    corrupt silently, so it refuses loudly instead.
   *  - [[mergeBatch]]: CMS cells are COUNTS, so a row-disjoint batch
-  *    folds in by cell sum ([[LineIndex]]'s left-join + remainder fold)
-  *    under the generation pointer with the replayed-epoch no-op guard.
+  *    folds in by cell sum ([[LineIndex]]'s left-join + remainder fold),
+  *    one [[Generation.mutate]].
   *  - [[removeBatch]]: the exact inverse — subtract the batch's cells,
   *    refuse if any cell would go negative (the batch wasn't a subset),
   *    drop zeros. Forget ≡ rebuild-on-the-remaining, certified by spec
@@ -39,16 +39,13 @@ object StatsIndex {
   def defaultDir(tag: String): String =
     "/tmp/graft_stats_index/" + tag.replaceAll("[^A-Za-z0-9._-]", "_")
 
-  def tablePath(dir: String): String = {
-    val (g, _) = TextIndex.current(dir)
-    s"${TextIndex.genDir(dir, g.max(0L))}/cells"
-  }
+  def tablePath(dir: String): String = Generation.path(dir, "cells")
 
   private def writeGen(cells: DataFrame, dir: String, gen: Long): Unit =
     cells.repartitionByRange(col("h"), col("cell"))
       .sortWithinPartitions(col("h"), col("cell"))
       .write.mode("overwrite")
-      .parquet(s"${TextIndex.genDir(dir, gen)}/cells")
+      .parquet(s"${Generation.genDir(dir, gen)}/cells")
 
   // --- geometry pin: (depth, width) must never drift across mutations ---
   private def configPath(dir: String) =
@@ -74,12 +71,12 @@ object StatsIndex {
       width: Int): Unit = {
     writeConfig(dir, depth, width)
     writeGen(Analytics.cmsSketch(df, keyCol, depth, width), dir, 0L)
-    TextIndex.advance(dir, 0L, -1L)
+    Generation.commitBuild(dir)
   }
 
   def buildIfAbsent(df: DataFrame, keyCol: String, dir: String,
       depth: Int, width: Int, tag: String): Unit =
-    TextIndex.withFingerprint(dir, tag) {
+    Generation.withFingerprint(dir, tag) {
       build(df, keyCol, dir, depth, width)
     }
 
@@ -97,12 +94,8 @@ object StatsIndex {
       dir: String, depth: Int, width: Int, epoch: Long = -1L,
       fenceTag: String = ""): Unit = {
     requireConfig(dir, depth, width, "mergeBatch")
-    val (gen, _) = TextIndex.current(dir)
-    val lastEpoch = TextIndex.fenceOf(dir, fenceTag)
-    require(gen >= 0,
-      s"StatsIndex.mergeBatch: no index at $dir — build() first")
-    if (epoch >= 0 && epoch <= lastEpoch) return
-    Stage("StatsIndex.mergeBatch") { st =>
+    Generation.mutate("StatsIndex.mergeBatch", dir, epoch, fenceTag) {
+        (st, _) =>
       val bc = st.checkpoint(Analytics.cmsSketch(batch, keyCol, depth, width)
         .withColumnRenamed("cnt", "_bc"), "bc")
       val stored = storedCells(spark, dir)
@@ -114,11 +107,7 @@ object StatsIndex {
           .join(stored.select(col("h"), col("cell"), lit(1).as("_seen")),
             Seq("h", "cell"), "left_anti")
           .select(col("h"), col("cell"), col("_bc").as("cnt")))
-      TextIndex.withGenClaim(dir, gen) {
-        writeGen(merged, dir, gen + 1)
-        TextIndex.advance(dir, gen + 1, epoch.max(lastEpoch), fenceTag,
-          basedOnGen = gen)
-      }
+      writeGen(merged, dir, _)
     }
   }
 
@@ -130,42 +119,24 @@ object StatsIndex {
       dir: String, depth: Int, width: Int, epoch: Long = -1L,
       fenceTag: String = ""): Unit = {
     requireConfig(dir, depth, width, "removeBatch")
-    val (gen, _) = TextIndex.current(dir)
-    val lastEpoch = TextIndex.fenceOf(dir, fenceTag)
-    require(gen >= 0,
-      s"StatsIndex.removeBatch: no index at $dir — build() first")
-    if (epoch >= 0 && epoch <= lastEpoch) return
-    Stage("StatsIndex.removeBatch") { st =>
+    Generation.mutate("StatsIndex.removeBatch", dir, epoch, fenceTag) {
+        (st, _) =>
       val bc = st.checkpoint(Analytics.cmsSketch(batch, keyCol, depth, width)
         .withColumnRenamed("cnt", "_bc"), "bc")
-      val merged = storedCells(spark, dir)
+      // the guard and the write read the same checkpoint, so both see
+      // the one generation the claim then pins
+      val (merged, m) = st.observed(storedCells(spark, dir)
         .join(bc, Seq("h", "cell"), "full_outer")
         .select(col("h"), col("cell"),
           (coalesce(col("cnt"), lit(0L)) - coalesce(col("_bc"), lit(0L)))
-            .as("cnt"))
-      TextIndex.withGenClaim(dir, gen) {
-        // subset guard runs INSIDE the claim (r12 ADVICE): the guard's
-        // read of the stored cells and the write below are then pinned to
-        // the same claimed generation — a concurrent mutation between
-        // guard and write is refused up front, not first at flip time
-        val bad = merged.filter(col("cnt") < 0).count()
-        require(bad == 0,
-          s"StatsIndex.removeBatch: $bad cells would go negative — the " +
-            "removal batch is not a subset of the sketched rows")
-        writeGen(merged.filter(col("cnt") > 0), dir, gen + 1)
-        TextIndex.advance(dir, gen + 1, epoch.max(lastEpoch), fenceTag,
-          basedOnGen = gen)
-      }
+            .as("cnt")), "merged")(count(when(col("cnt") < 0, 1)).as("bad"))
+      val bad = m("bad").asInstanceOf[Long]
+      require(bad == 0,
+        s"StatsIndex.removeBatch: $bad cells would go negative — the " +
+          "removal batch is not a subset of the sketched rows")
+      writeGen(merged.filter(col("cnt") > 0), dir, _)
     }
   }
-
-  /** Streaming ingest hook: batchId as epoch, replays no-op. */
-  def foreachBatchMerge(spark: SparkSession, dir: String, keyCol: String,
-      depth: Int, width: Int,
-      streamTag: String = ""): (DataFrame, Long) => Unit =
-    (batch, batchId) =>
-      mergeBatch(spark, batch, keyCol, dir, depth, width,
-        epoch = batchId, fenceTag = streamTag)
 
   /** Point-frequency estimates for `probes` from the STORED cells only
     * (the data the sketch describes appears nowhere in the plan). */

@@ -20,17 +20,13 @@ import org.apache.spark.sql.functions._
   *    Denormalizing dl and df into each posting costs 2 longs/row and
   *    removes BOTH serving-time joins — the impact-file trade every
   *    production engine takes.
-  *  - [[mergeBatch]] / [[foreachBatchMerge]]: incremental maintenance
-  *    under a VERSIONED-GENERATION protocol — every merge reads
-  *    generation K and writes K+1, then atomically advances a pointer
-  *    file recording (gen, lastEpoch). A crash mid-merge leaves the
-  *    pointer at K (the half-written K+1 is invisible and simply
-  *    rewritten on retry), and a replayed streaming epoch ≤ lastEpoch
-  *    is a no-op — exactly-once index state over at-least-once
-  *    foreachBatch delivery, the same protocol as the durable
-  *    heavy-hitter state. Input gen ≠ output gen also means no eager
-  *    materialization before the write (Spark never overwrites its own
-  *    input here).
+  *  - [[mergeBatch]]: incremental maintenance under the
+  *    versioned-generation protocol ([[Generation.mutate]]) — every
+  *    merge reads generation K and writes K+1, then atomically advances
+  *    the pointer; a replayed streaming epoch is a no-op — exactly-once
+  *    index state over at-least-once foreachBatch delivery. Input gen ≠
+  *    output gen also means no eager materialization before the write
+  *    (Spark never overwrites its own input here).
   *  - [[serveBm25]]: scan the CURRENT generation's postings with the
   *    term predicate PUSHED to the scan, broadcast the 1-row stats,
   *    score with [[Curation.bm25Rank]] (the exact expression tree
@@ -51,72 +47,13 @@ import org.apache.spark.sql.functions._
   */
 object TextIndex {
 
-  /** Bump when the on-disk layout or scoring semantics change. */
-  private val FormatVersion = 2
-
-  private[operators] def genDir(dir: String, gen: Long) = s"$dir/gen=$gen"
-  private def pointerPath(dir: String) = java.nio.file.Paths.get(dir, "_current")
-  private def metaPath(dir: String) = java.nio.file.Paths.get(dir, "_graft_index_meta.json")
-
-  /** (generation, lastEpoch) from the pointer file; (-1, -1) if none.
-    * `lastEpoch` here is the DEFAULT (untagged) replay fence — see
-    * [[fenceOf]] for per-writer tagged fences. */
-  def current(dir: String): (Long, Long) = {
-    val (g, e, _) = currentAll(dir)
-    (g, e)
-  }
-
-  /** (generation, default fence, tagged fences) from the pointer file.
-    * Format: `gen,epoch[,tag=epoch...]` — field 2 is the untagged
-    * fence (every pre-round-10 pointer), extra fields are per-writer
-    * fences. All fences flip ATOMICALLY with the generation, which is
-    * what makes replay protection crash-safe (a ledger written beside
-    * the data has a double-apply window; the pointer does not). */
-  private[operators] def currentAll(
-      dir: String): (Long, Long, Map[String, Long]) = {
-    val p = pointerPath(dir)
-    if (!java.nio.file.Files.exists(p)) (-1L, -1L, Map.empty)
-    else {
-      java.nio.file.Files.readString(p).trim.split(",") match {
-        // pre-epoch single-field pointer (round ≤ 4 AggView stores wrote
-        // bare "gen"): gen with the default no-fence sentinel — dropping
-        // this case made a legacy store read as UNBUILT (gen -1), so
-        // serve silently fell back to generation 0 (r10 ADVICE)
-        // strict integer shape (r11 ADVICE): the earlier char-set guard
-        // accepted "1-2" / "-" and then threw from toLong — garbage
-        // pointers must degrade to the (-1,-1) unbuilt sentinel instead
-        case Array(g) if g.matches("-?\\d+") =>
-          (g.toLong, -1L, Map.empty)
-        case f if f.length >= 2 =>
-          (f(0).toLong, f(1).toLong,
-            f.drop(2).iterator.map(_.split("=", 2)).collect {
-              case Array(t, e) => t -> e.toLong
-            }.toMap)
-        case _ => (-1L, -1L, Map.empty)
-      }
-    }
-  }
-
-  /** The replay fence for `tag`; "" addresses the default (untagged)
-    * scalar. Distinct epoch-bearing WRITERS on one artifact — an
-    * ingest stream and a deletion stream, say — MUST use distinct
-    * tags: Spark epochIds are per-checkpoint counters, so a deletion
-    * stream restarting at epoch 0 against an artifact whose default
-    * fence an ingest stream advanced to 5 would otherwise silently
-    * no-op every purge (and a high-epoch purge would drop later
-    * ingest merges). */
-  private[operators] def fenceOf(dir: String, tag: String): Long = {
-    val (_, e0, tags) = currentAll(dir)
-    if (tag.isEmpty) e0 else tags.getOrElse(tag, -1L)
-  }
-
   /** Atomically (re)write an applied-batches ledger file: temp file +
     * ATOMIC_MOVE, so a crash mid-write can never leave a torn ledger
     * (shared by [[AnnIndex.appendIfAbsent]] / [[BqIndex.appendIfAbsent]];
-    * same idiom as [[advance]]). Note the lifecycle-level crash window
-    * those callers document: the parquet append commits BEFORE the
-    * ledger records the batch, so a crash between the two re-appends the
-    * batch on replay — the ledger itself is never torn. */
+    * same idiom as [[Generation.advance]]). Note the lifecycle-level
+    * crash window those callers document: the parquet append commits
+    * BEFORE the ledger records the batch, so a crash between the two
+    * re-appends the batch on replay — the ledger itself is never torn. */
   private[operators] def writeLedger(path: java.nio.file.Path,
       entries: Set[String]): Unit = {
     import java.nio.file.{Files, StandardCopyOption}
@@ -127,234 +64,13 @@ object TextIndex {
       StandardCopyOption.REPLACE_EXISTING)
   }
 
-  /** Atomically advance the pointer: temp file + ATOMIC_MOVE, so readers
-    * see either the old generation or the new, never a torn value.
-    * Advances the DEFAULT fence; other tags' fences are preserved. */
-  private[operators] def advance(dir: String, gen: Long,
-      epoch: Long): Unit = advance(dir, gen, epoch, "")
-
-  /** [[advance]] for a TAGGED writer: sets `tag`'s fence to `epoch`
-    * and carries every other fence (and, for tagged writers, the
-    * default fence) through unchanged — so an ingest stream and a
-    * purge stream maintaining the same artifact each replay against
-    * their OWN epoch counter (see [[fenceOf]]).
-    *
-    * `basedOnGen` is the lost-update guard (r10 ADVICE): pass the
-    * generation the mutation READ at its start and the flip aborts
-    * loudly if another writer advanced the pointer in between — see
-    * [[writePointer]] for the full concurrency contract. */
-  private[operators] def advance(dir: String, gen: Long,
-      epoch: Long, tag: String,
-      basedOnGen: Long = Unguarded): Unit = {
-    writePointer(dir, gen, epoch, tag, basedOnGen)
-    // best-effort GC: generations older than the previous one are
-    // unreachable (the pointer is the only entry point)
-    val stale = new java.io.File(dir).listFiles()
-    if (stale != null) stale.filter(f => f.getName.startsWith("gen=") &&
-        f.getName.stripPrefix("gen=").toLong < gen - 1)
-      .foreach(f => scala.reflect.io.Directory(
-        scala.reflect.io.File(f).toDirectory.path).deleteRecursively())
-  }
-
-  /** Sentinel for an UNGUARDED pointer write (builds/rebuilds, which
-    * replace whatever is there by design). */
-  private[operators] val Unguarded: Long = Long.MinValue
-
-  /** Canonical monitor/claim key for an artifact dir (r11 ADVICE): two
-    * spellings of one directory (trailing slash, relative vs absolute)
-    * must share a monitor, or the second thread trips FileChannel.lock's
-    * JVM-wide OverlappingFileLockException instead of blocking. */
-  private def normDir(dir: String): String =
-    java.nio.file.Paths.get(dir).toAbsolutePath.normalize.toString
-
-  /** Per-dir JVM monitors for the pointer critical section — foreachBatch
-    * writers run on stream execution threads inside ONE JVM, so the
-    * cross-process file lock below never sees them contend. Keyed on the
-    * NORMALIZED path (see [[normDir]]); one Object per distinct artifact
-    * dir the JVM ever touches (bounded by the artifact count, not the
-    * mutation count). */
-  private val ptrMonitors =
-    new java.util.concurrent.ConcurrentHashMap[String, Object]()
-
-  /** In-flight mutation claims: normalized dir → the target generation a
-    * guarded mutation is currently deriving/writing (see [[withGenClaim]]). */
-  private val genClaims =
-    new java.util.concurrent.ConcurrentHashMap[String, java.lang.Long]()
-
-  /** This JVM's claim identity — a fresh UUID per process, so a claim
-    * file left by a CRASHED writer can never be mistaken for our own
-    * (pids recycle; UUIDs do not). */
-  private val claimWriterId = java.util.UUID.randomUUID().toString
-
-  private def claimPath(dir: String) =
-    java.nio.file.Paths.get(dir, "_claim")
-
-  /** A foreign claim older than this is treated as a crashed writer's
-    * leftover and overwritten (the crashed process can never resume —
-    * its in-JVM claim died with it; its flip would fail the CAS anyway).
-    * Overridable for tests via -Dgraft.genclaim.stale.ms. */
-  private def claimStaleMs: Long =
-    sys.props.get("graft.genclaim.stale.ms").map(_.toLong)
-      .getOrElse(15L * 60L * 1000L)
-
-  /** Best-effort parse of a claim file: (writerId, targetGen, wallMs). */
-  private def readClaim(
-      p: java.nio.file.Path): Option[(String, Long, Long)] =
-    try {
-      java.nio.file.Files.readString(p).trim.split("\n") match {
-        case Array(w, g, t) if g.matches("-?\\d+") && t.matches("\\d+") =>
-          Some((w, g.toLong, t.toLong))
-        case _ => None // torn/garbage claim: treat as stale, overwrite
-      }
-    } catch { case _: java.io.IOException => None }
-
-  /** Run a guarded mutation's write phase (gen-data write + pointer flip)
-    * holding a CLAIM on `basedOnGen + 1` — in-JVM via [[genClaims]] AND
-    * cross-process via a `_claim` file written under the same per-dir
-    * `FileChannel` lock the pointer flip takes.
-    *
-    * Closes the r11 ADVICE window: the CAS in [[writePointer]] aborts
-    * only at FLIP time, after the loser already wrote into the same
-    * gen+1 data directory the winner flipped to — the loser failed
-    * loudly, but the winner's store was silently co-written. Claiming
-    * the generation BEFORE any data byte lands makes the second mutator
-    * fail up front, so the winner's data dir is never shared. Round 13
-    * (r12 verdict): the claim is also cross-JVM — under the pointer
-    * lock we verify the generation, refuse if a LIVE foreign claim file
-    * is present, and write our own; a racing mutator in another process
-    * now aborts before writing, same as an in-JVM racer. A claim left
-    * by a crashed writer goes stale after [[claimStaleMs]] and is
-    * overwritten (the crash's half-written gen dir was never flipped
-    * to, so it is invisible and simply rewritten). */
-  private[operators] def withGenClaim[T](dir: String, basedOnGen: Long)(
-      body: => T): T = {
-    import java.nio.file.{Files, StandardCopyOption}
-    val key = normDir(dir)
-    val target = java.lang.Long.valueOf(basedOnGen + 1)
-    val prev = genClaims.putIfAbsent(key, target)
-    if (prev != null)
-      throw new java.util.ConcurrentModificationException(
-        s"mutation on $dir aborted BEFORE writing: another mutation in " +
-          s"this JVM is already in flight (target gen=$prev). Writers " +
-          "must be serialized per artifact; nothing was written.")
-    var claimed = false
-    try {
-      withPointerLock(dir) {
-        val (curGen, _, _) = currentAll(dir)
-        if (curGen != basedOnGen)
-          throw new java.util.ConcurrentModificationException(
-            s"mutation on $dir aborted BEFORE writing: derived from " +
-              s"gen=$basedOnGen but the store is now at gen=$curGen — " +
-              "re-derive from the current generation; nothing was written.")
-        val cp = claimPath(dir)
-        if (Files.exists(cp)) readClaim(cp) match {
-          case Some((w, g, t)) if w != claimWriterId &&
-              System.currentTimeMillis() - t < claimStaleMs =>
-            throw new java.util.ConcurrentModificationException(
-              s"mutation on $dir aborted BEFORE writing: a mutation in " +
-                s"ANOTHER process holds the claim (writer=$w target " +
-                s"gen=$g). Writers must be serialized per artifact; " +
-                "nothing was written.")
-          case _ => // stale, torn, or (impossibly) our own: overwrite
-        }
-        val tmp = cp.resolveSibling("_claim.tmp")
-        Files.writeString(tmp,
-          s"$claimWriterId\n${basedOnGen + 1}\n${System.currentTimeMillis()}")
-        Files.move(tmp, cp, StandardCopyOption.ATOMIC_MOVE,
-          StandardCopyOption.REPLACE_EXISTING)
-        claimed = true
-      }
-      body
-    } finally {
-      if (claimed) withPointerLock(dir) {
-        val cp = claimPath(dir)
-        // remove only OUR claim — a stale takeover may have replaced it
-        if (readClaim(cp).exists(_._1 == claimWriterId))
-          Files.deleteIfExists(cp)
-      }
-      genClaims.remove(key, target)
-    }
-  }
-
-  /** JVM monitor + cross-process file lock around a pointer read/verify/
-    * flip — makes the compare-and-swap below atomic against every other
-    * GUARDED writer on `dir`. */
-  private def withPointerLock[T](dir: String)(f: => T): T = {
-    import java.nio.file.{Files, Paths, StandardOpenOption}
-    val mon = ptrMonitors.computeIfAbsent(normDir(dir), _ => new Object)
-    mon.synchronized {
-      Files.createDirectories(Paths.get(dir))
-      val ch = java.nio.channels.FileChannel.open(
-        Paths.get(dir, "_ptr.lock"),
-        StandardOpenOption.CREATE, StandardOpenOption.WRITE)
-      try {
-        val l = ch.lock()
-        try f finally l.release()
-      } finally ch.close()
-    }
-  }
-
-  /** The atomic pointer flip alone, no generation GC — for stores that
-    * keep every generation readable ([[AggView.serveAt]] time travel).
-    *
-    * Concurrency contract (r10 ADVICE adjudication): ATOMIC_MOVE
-    * protects READERS from torn pointers; it never protected two
-    * WRITERS from losing an update (both read gen K, both write K+1 —
-    * one generation's data and fences silently vanish, and worse, both
-    * raced on the gen=K+1 data directory before the flip). Epoch-bearing
-    * writers on one artifact must therefore be EXTERNALLY SERIALIZED —
-    * the round-10 tagged fences fix replay-counter collisions between
-    * serialized streams, not write-write races. `basedOnGen` turns a
-    * violation from silent loss into a loud failure: under a per-dir
-    * lock (JVM monitor + file lock) the pointer is re-read and the flip
-    * aborts with ConcurrentModificationException when the current
-    * generation no longer matches what the mutation was derived from —
-    * the caller must then treat the artifact's new generation data as
-    * suspect (the data dir may have been co-written) and re-derive. */
-  private[operators] def writePointer(dir: String, gen: Long,
-      epoch: Long, tag: String,
-      basedOnGen: Long = Unguarded): Unit = withPointerLock(dir) {
-    import java.nio.file.{Files, Paths, StandardCopyOption}
-    require(!tag.contains(",") && !tag.contains("=") &&
-      !tag.exists(_.isWhitespace),
-      s"fence tag must be free of ',', '=' and whitespace: '$tag'")
-    val (curGen, e0, tags) = currentAll(dir)
-    if (basedOnGen != Unguarded && curGen != basedOnGen)
-      throw new java.util.ConcurrentModificationException(
-        s"pointer flip for $dir aborted: mutation was derived from " +
-          s"gen=$basedOnGen but the store is now at gen=$curGen — a " +
-          "concurrent writer advanced this artifact (writers must be " +
-          "serialized per artifact; fence tags only protect replay " +
-          "counters). Re-derive the mutation from the current " +
-          "generation; treat any gen data this mutation wrote as suspect.")
-    val (ne0, ntags) =
-      if (tag.isEmpty) (epoch, tags) else (e0, tags + (tag -> epoch))
-    val body = (Seq(s"$gen", s"$ne0") ++
-      ntags.toSeq.sortBy(_._1).map { case (t, e) => s"$t=$e" })
-      .mkString(",")
-    val tmp = Paths.get(dir, s"_current.tmp.$gen")
-    Files.writeString(tmp, body)
-    Files.move(tmp, pointerPath(dir),
-      StandardCopyOption.ATOMIC_MOVE,
-      StandardCopyOption.REPLACE_EXISTING)
-  }
-
-  def postingsPath(dir: String): String = {
-    val (g, _) = current(dir)
-    s"${genDir(dir, g.max(0L))}/postings"
-  }
-  def statsPath(dir: String): String = {
-    val (g, _) = current(dir)
-    s"${genDir(dir, g.max(0L))}/stats"
-  }
+  def postingsPath(dir: String): String = Generation.path(dir, "postings")
+  def statsPath(dir: String): String = Generation.path(dir, "stats")
 
   /** Per-corpus location, one directory per corpus tag (same contract as
     * [[AnnIndex.defaultDir]] — concurrent scale factors never clobber). */
   def defaultDir(corpusTag: String): String =
     "/tmp/graft_text_index/" + corpusTag.replaceAll("[^A-Za-z0-9._-]", "_")
-
-  private def fingerprint(corpus: String): String =
-    s"""{"version":$FormatVersion,"corpus":"$corpus"}"""
 
   /** Generation `gen`'s stored postings and stats, under the schema
     * [[writeGen]] wrote. */
@@ -365,10 +81,10 @@ object TextIndex {
         StructField("term", StringType), StructField(idCol, LongType),
         StructField("tf", LongType), StructField("dl", LongType),
         StructField("df", LongType))))
-      .parquet(s"${genDir(dir, gen)}/postings")
+      .parquet(s"${Generation.genDir(dir, gen)}/postings")
     (postings, spark.read.schema(StructType(Seq(
         StructField("_L", LongType), StructField("_N", LongType))))
-      .parquet(s"${genDir(dir, gen)}/stats"))
+      .parquet(s"${Generation.genDir(dir, gen)}/stats"))
   }
 
   private def writeGen(postings: DataFrame, stats: DataFrame, dir: String,
@@ -376,9 +92,10 @@ object TextIndex {
     postings
       .repartitionByRange(col("term"))
       .sortWithinPartitions(col("term"), col(idCol))
-      .write.mode("overwrite").parquet(s"${genDir(dir, gen)}/postings")
+      .write.mode("overwrite")
+      .parquet(s"${Generation.genDir(dir, gen)}/postings")
     stats.coalesce(1).write.mode("overwrite")
-      .parquet(s"${genDir(dir, gen)}/stats")
+      .parquet(s"${Generation.genDir(dir, gen)}/stats")
   }
 
   /** One corpus pass → postings + stats as generation 0. Whitespace
@@ -399,23 +116,7 @@ object TextIndex {
       .join(dl, Seq(idCol))
       .select(col("term"), col(idCol), col("tf"), col("dl"), col("df"))
     writeGen(postings, stats, dir, 0L, idCol)
-    advance(dir, 0L, -1L)
-  }
-
-  /** Run `work` unless `dir`'s fingerprint already records `tag` — the
-    * idempotence guard shared by [[buildIfAbsent]] and callers composing
-    * build + [[mergeBatch]] sequences (a repeated invocation must not
-    * re-apply a merge: postings are state, not a view). */
-  def withFingerprint(dir: String, tag: String)(work: => Unit): Unit = {
-    val fp = fingerprint(tag)
-    val meta = metaPath(dir)
-    val fresh = java.nio.file.Files.exists(meta) &&
-      java.nio.file.Files.readString(meta) == fp
-    if (!fresh) {
-      work
-      java.nio.file.Files.createDirectories(meta.getParent)
-      java.nio.file.Files.writeString(meta, fp)
-    }
+    Generation.commitBuild(dir)
   }
 
   /** [[build]] unless a fingerprint-matching index already exists — the
@@ -423,7 +124,9 @@ object TextIndex {
     * pass entirely. */
   def buildIfAbsent(df: DataFrame, idCol: String, textCol: String,
       dir: String, corpusTag: String): Unit =
-    withFingerprint(dir, corpusTag) { build(df, idCol, textCol, dir) }
+    Generation.withFingerprint(dir, corpusTag) {
+      build(df, idCol, textCol, dir)
+    }
 
   /** Incremental maintenance: fold a NEW document batch into the stored
     * index without re-reading the old corpus — the ops-side reason the
@@ -435,17 +138,14 @@ object TextIndex {
     * Contract: batch doc ids are NEW (disjoint from the indexed corpus)
     * — an id-overwriting upsert is [[build]]'s job, not a merge's.
     *
-    * `epoch` ≥ 0 enables replay protection: a merge whose epoch is ≤ the
-    * pointer's lastEpoch is a committed delivery replayed by the stream
+    * `epoch` ≥ 0 enables replay protection: a merge whose epoch is ≤ its
+    * writer's fence is a committed delivery replayed by the stream
     * runner and returns without touching state. */
   def mergeBatch(spark: SparkSession, batch: DataFrame, idCol: String,
       textCol: String, dir: String, epoch: Long = -1L,
-      fenceTag: String = ""): Unit = {
-    val (gen, _) = current(dir)
-    val lastEpoch = fenceOf(dir, fenceTag)
-    require(gen >= 0, s"mergeBatch: no index at $dir — build() first")
-    if (epoch >= 0 && epoch <= lastEpoch) return // replayed epoch: no-op
-    Stage("TextIndex.mergeBatch") { st =>
+      fenceTag: String = ""): Unit =
+    Generation.mutate("TextIndex.mergeBatch", dir, epoch, fenceTag) {
+        (st, gen) =>
       val (stored, stats) = readGen(spark, dir, gen, idCol)
 
       val words = split(col(textCol), " ")
@@ -476,26 +176,8 @@ object TextIndex {
           bdl.agg(sum(col("dl")).as("_bL"), count(lit(1)).as("_bN"))))
         .select((col("_L") + col("_bL")).as("_L"),
           (col("_N") + col("_bN")).as("_N"))
-
-      withGenClaim(dir, gen) {
-        writeGen(mergedPostings, mergedStats, dir, gen + 1, idCol)
-        advance(dir, gen + 1, epoch.max(lastEpoch), fenceTag, basedOnGen = gen)
-      }
+      writeGen(mergedPostings, mergedStats, dir, _, idCol)
     }
-  }
-
-  /** foreachBatch adapter: streamed document batches fold into the index
-    * exactly once (the epoch id rides the pointer — see [[mergeBatch]]).
-    * `streamTag` names this WRITER's replay fence — REQUIRED to be
-    * distinct per stream when more than one ingest stream maintains
-    * the same artifact (Spark epochIds are per-checkpoint counters;
-    * see [[TextIndex.fenceOf]]); the default keeps the classic
-    * single-writer shape.
-    * Usage: `.writeStream.foreachBatch(TextIndex.foreachBatchMerge(...))`. */
-  def foreachBatchMerge(spark: SparkSession, dir: String, idCol: String,
-      textCol: String, streamTag: String = ""): (DataFrame, Long) => Unit =
-    (batch, epoch) => mergeBatch(spark, batch, idCol, textCol, dir,
-      epoch, streamTag)
 
   /** Decremental maintenance — document DELETION from the stored index,
     * the [[mergeBatch]] inverse and the index half of the
@@ -514,12 +196,9 @@ object TextIndex {
     * reader never sees a half-forgotten index. Certified decremental ≡
     * rebuild by q267's from-scratch oracle. */
   def removeDocs(spark: SparkSession, ids: DataFrame, idCol: String,
-      dir: String, epoch: Long = -1L, fenceTag: String = ""): Unit = {
-    val (gen, _) = current(dir)
-    val lastEpoch = fenceOf(dir, fenceTag)
-    require(gen >= 0, s"removeDocs: no index at $dir — build() first")
-    if (epoch >= 0 && epoch <= lastEpoch) return // replayed: no-op
-    Stage("TextIndex.removeDocs") { st =>
+      dir: String, epoch: Long = -1L, fenceTag: String = ""): Unit =
+    Generation.mutate("TextIndex.removeDocs", dir, epoch, fenceTag) {
+        (st, gen) =>
       val (stored, stats) = readGen(spark, dir, gen, idCol)
 
       val rm = st.checkpoint(ids.select(col(idCol)).distinct(), "rm")
@@ -536,19 +215,13 @@ object TextIndex {
       val newStats = stats.crossJoin(broadcast(rstats))
         .select((col("_L") - col("_rL")).as("_L"),
           (col("_N") - col("_rN")).as("_N"))
-      withGenClaim(dir, gen) {
-        writeGen(newPostings, newStats, dir, gen + 1, idCol)
-        advance(dir, gen + 1, epoch.max(lastEpoch), fenceTag, basedOnGen = gen)
-      }
+      writeGen(newPostings, newStats, dir, _, idCol)
     }
-  }
 
   // ---- positional index (phrase serving) ----------------------------
 
-  def posPostingsPath(dir: String): String = {
-    val (g, _) = current(dir)
-    s"${genDir(dir, g.max(0L))}/pospostings"
-  }
+  def posPostingsPath(dir: String): String =
+    Generation.path(dir, "pospostings")
 
   /** One corpus pass → flat positional postings (term, id, pos) as
     * generation 0, range-partitioned and sorted by term so a phrase
@@ -565,14 +238,15 @@ object TextIndex {
       .select(col("term"), col(idCol), (col("_p") + 1).cast("long").as("pos"))
       .repartitionByRange(col("term"))
       .sortWithinPartitions(col("term"), col(idCol), col("pos"))
-      .write.mode("overwrite").parquet(s"${genDir(dir, 0L)}/pospostings")
-    advance(dir, 0L, -1L)
+      .write.mode("overwrite")
+      .parquet(s"${Generation.genDir(dir, 0L)}/pospostings")
+    Generation.commitBuild(dir)
   }
 
   /** [[buildPositional]] unless a fingerprint-matching index exists. */
   def buildPositionalIfAbsent(df: DataFrame, idCol: String,
       textCol: String, dir: String, corpusTag: String): Unit =
-    withFingerprint(dir, corpusTag) {
+    Generation.withFingerprint(dir, corpusTag) {
       buildPositional(df, idCol, textCol, dir)
     }
 
@@ -583,29 +257,23 @@ object TextIndex {
     * APPEND into the current generation — zero stored rows read, zero
     * rewritten, O(batch) total. Contract: batch doc ids are new;
     * `epoch` ≥ 0 gives the same replayed-delivery no-op protection as
-    * [[mergeBatch]] (the pointer keeps its generation, only lastEpoch
-    * advances). */
+    * [[mergeBatch]] (the pointer keeps its generation, only the fence
+    * advances: [[Generation.append]]). */
   def mergePositionalBatch(spark: SparkSession, batch: DataFrame,
       idCol: String, textCol: String, dir: String,
-      epoch: Long = -1L, fenceTag: String = ""): Unit = {
-    val (gen, _) = current(dir)
-    val lastEpoch = fenceOf(dir, fenceTag)
-    require(gen >= 0,
-      s"mergePositionalBatch: no index at $dir — buildPositional() first")
-    if (epoch >= 0 && epoch <= lastEpoch) return
-    batch.select(col(idCol),
-        posexplode(split(col(textCol), " ")).as(Seq("_p", "term")))
-      .filter(length(col("term")) > 0)
-      .select(col("term"), col(idCol), (col("_p") + 1).cast("long").as("pos"))
-      .repartitionByRange(col("term"))
-      .sortWithinPartitions(col("term"), col(idCol), col("pos"))
-      .write.mode("append").parquet(s"${genDir(dir, gen)}/pospostings")
-    // deliberately NOT withGenClaim: this is a same-generation APPEND
-    // (unique part files, no gen+1 dir to co-write) + a fence-only flip;
-    // concurrent appenders with distinct fence tags are legal here, and
-    // the CAS still catches a generation move under our feet
-    advance(dir, gen, epoch.max(lastEpoch), fenceTag, basedOnGen = gen)
-  }
+      epoch: Long = -1L, fenceTag: String = ""): Unit =
+    Generation.append("TextIndex.mergePositionalBatch", dir, epoch,
+        fenceTag) { gen =>
+      batch.select(col(idCol),
+          posexplode(split(col(textCol), " ")).as(Seq("_p", "term")))
+        .filter(length(col("term")) > 0)
+        .select(col("term"), col(idCol),
+          (col("_p") + 1).cast("long").as("pos"))
+        .repartitionByRange(col("term"))
+        .sortWithinPartitions(col("term"), col(idCol), col("pos"))
+        .write.mode("append")
+        .parquet(s"${Generation.genDir(dir, gen)}/pospostings")
+    }
 
   /** Exact phrase search from the STORED positional index —
     * [[Curation.phraseSearch]]'s anchor-vote algebra with the corpus

@@ -60,7 +60,7 @@ object TokenizerIndex {
   /** [[build]] unless a fingerprint-matching artifact exists. */
   def buildIfAbsent(corpus: DataFrame, textCol: String, rounds: Int,
       dir: String, corpusTag: String): Unit =
-    TextIndex.withFingerprint(dir, s"$corpusTag#rounds=$rounds") {
+    Generation.withFingerprint(dir, s"$corpusTag#rounds=$rounds") {
       build(corpus, textCol, rounds, dir)
     }
 

@@ -784,7 +784,7 @@ object CurationQueries {
     (s, d) => {
       val docs = Tables.documents(s, d)
       val dir = graft.operators.TextIndex.defaultDir(d + "_incr")
-      graft.operators.TextIndex.withFingerprint(dir, d + "#base90+merge10") {
+      graft.operators.Generation.withFingerprint(dir, d + "#base90+merge10") {
         graft.operators.TextIndex.build(
           docs.filter(col("doc_id") % 10 =!= 0), "doc_id", "text", dir)
         graft.operators.TextIndex.mergeBatch(s,
@@ -834,7 +834,7 @@ object CurationQueries {
     (s, d) => {
       val docs = Tables.documents(s, d)
       val dir = graft.operators.TextIndex.defaultDir(d + "_pos_incr")
-      graft.operators.TextIndex.withFingerprint(dir, d + "#pos90+append10") {
+      graft.operators.Generation.withFingerprint(dir, d + "#pos90+append10") {
         graft.operators.TextIndex.buildPositional(
           docs.filter(col("doc_id") % 10 =!= 0), "doc_id", "text", dir)
         graft.operators.TextIndex.mergePositionalBatch(s,
@@ -1049,7 +1049,7 @@ object CurationQueries {
       val docs = Tables.documents(s, d)
       val train = docs.filter(col("doc_id") % 10 =!= 0)
       val dir = graft.operators.LmIndex.defaultDir(d + "_lm_incr")
-      graft.operators.TextIndex.withFingerprint(dir, d + "#lm80+merge") {
+      graft.operators.Generation.withFingerprint(dir, d + "#lm80+merge") {
         graft.operators.LmIndex.build(
           train.filter(col("doc_id") % 5 =!= 4), "doc_id", "text", dir)
         graft.operators.LmIndex.mergeBatch(s,
@@ -1154,7 +1154,7 @@ object CurationQueries {
       val docs = Tables.documents(s, d)
       val train = docs.filter(col("doc_id") % 10 =!= 0)
       val dir = graft.operators.LmIndex.defaultDir(d + "_tri_incr")
-      graft.operators.TextIndex.withFingerprint(dir, d + "#tri80+merge") {
+      graft.operators.Generation.withFingerprint(dir, d + "#tri80+merge") {
         graft.operators.LmIndex.buildTrigram(
           train.filter(col("doc_id") % 5 =!= 4), "doc_id", "text", dir)
         graft.operators.LmIndex.mergeTrigramBatch(s,
@@ -1275,7 +1275,7 @@ object CurationQueries {
       val docs = Tables.documents(s, d)
       val train = docs.filter(col("doc_id") % 10 =!= 0)
       val dir = graft.operators.LmIndex.defaultDir(d + "_tri_forget")
-      graft.operators.TextIndex.withFingerprint(dir, d + "#tri+forget") {
+      graft.operators.Generation.withFingerprint(dir, d + "#tri+forget") {
         graft.operators.LmIndex.buildTrigram(train, "doc_id", "text",
           dir)
         graft.operators.LmIndex.removeTrigramBatch(s,
@@ -1305,7 +1305,7 @@ object CurationQueries {
       val ex = Curation.extractText(
         DocQueries.crawlPage(Tables.documents(s, d)), "doc_id", "html")
       val dir = graft.operators.LineIndex.defaultDir(d + "#lines_forget")
-      graft.operators.TextIndex.withFingerprint(dir,
+      graft.operators.Generation.withFingerprint(dir,
         d + "#lines+forget") {
         graft.operators.LineIndex.build(ex, "doc_id", "clean_text", dir)
         graft.operators.LineIndex.removeBatch(s,
@@ -1361,7 +1361,7 @@ object CurationQueries {
     (s, d) => {
       import s.implicits._
       import graft.operators.{Forget, TextIndex, DedupIndex, LmIndex,
-        LineIndex, Importance, BqIndex}
+        LineIndex, Importance, BqIndex, Generation}
       val docs = Tables.documents(s, d)
       val emb = Tables.embeddings(s, d)
       val textDir = TextIndex.defaultDir(d + "#rtbf_text")
@@ -1378,7 +1378,7 @@ object CurationQueries {
         Forget.ImportanceTarget(impDir, "text", 64,
           col("lang") === "en", Seq("lang")),
         Forget.BqTarget(bqDir))
-      TextIndex.withFingerprint(
+      Generation.withFingerprint(
           TextIndex.defaultDir(d + "#rtbf_guard"), d + "#rtbf-v1") {
         TextIndex.build(docs, "doc_id", "text", textDir)
         DedupIndex.build(docs, "doc_id", "text", 3, 8, 4, dedupDir)
@@ -2273,7 +2273,7 @@ object CurationQueries {
       import s.implicits._
       val docs = Tables.documents(s, d)
       val dir = graft.operators.TextIndex.defaultDir(d + "_rm")
-      graft.operators.TextIndex.withFingerprint(dir, d + "#full-rm10") {
+      graft.operators.Generation.withFingerprint(dir, d + "#full-rm10") {
         graft.operators.TextIndex.build(docs, "doc_id", "text", dir)
         graft.operators.TextIndex.removeDocs(s,
           docs.filter($"doc_id" % 10 === 0).select($"doc_id"),

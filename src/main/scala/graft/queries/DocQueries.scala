@@ -1101,7 +1101,7 @@ object DocQueries {
       val docs = Tables.documents(s, d)
       val arc = docs.filter(col("doc_id") % 5 =!= 0)
       val dir = graft.operators.DedupIndex.defaultDir(d + "#forget")
-      graft.operators.TextIndex.withFingerprint(dir, d + "#dedup+forget") {
+      graft.operators.Generation.withFingerprint(dir, d + "#dedup+forget") {
         graft.operators.DedupIndex.build(arc, "doc_id", "text",
           shingleN = 3, k = 8, bands = 4, dir = dir)
         graft.operators.DedupIndex.removeDocs(s, dir,
@@ -2787,7 +2787,7 @@ object DocQueries {
         Tables.documents(s, d), "doc_id", "text", 64,
         carryCols = Seq("lang"))
         .localCheckpoint(true)
-      graft.operators.TextIndex.withFingerprint(dir, s"imp64f_$d#v1") {
+      graft.operators.Generation.withFingerprint(dir, s"imp64f_$d#v1") {
         graft.operators.Importance.buildModel(tb, $"lang" === "en", 64,
           dir)
         graft.operators.Importance.removeBatch(s,
@@ -3358,7 +3358,7 @@ object DocQueries {
     (s, d) => {
       val docs = Tables.documents(s, d)
       val dir = graft.operators.DedupIndex.defaultDir(d + "#reshard")
-      graft.operators.TextIndex.withFingerprint(dir, d + "#reshard13") {
+      graft.operators.Generation.withFingerprint(dir, d + "#reshard13") {
         graft.operators.DedupIndex.buildSharded(
           docs.filter(col("doc_id") % 5 =!= 0), "doc_id", "text",
           shingleN = 3, k = 8, bands = 4, dir = dir, nShards = 8)
@@ -3432,7 +3432,7 @@ object DocQueries {
       val docs = Tables.documents(s, d)
       val arc = docs.filter(col("doc_id") % 5 =!= 0)
       val dir = graft.operators.DedupIndex.defaultDir(d + "#shforget")
-      graft.operators.TextIndex.withFingerprint(dir, d + "#shforget13") {
+      graft.operators.Generation.withFingerprint(dir, d + "#shforget13") {
         graft.operators.DedupIndex.buildSharded(arc, "doc_id", "text",
           shingleN = 3, k = 8, bands = 4, dir = dir, nShards = 8)
         graft.operators.DedupIndex.removeDocsSharded(s, dir,

@@ -1874,7 +1874,7 @@ object EventQueries {
       val ev = Tables.events(s, d).filter($"value".isNotNull)
         .withColumn("v_i", round($"value").cast("long"))
       val dir = graft.operators.MomentsState.defaultDir(d + "#mom")
-      graft.operators.TextIndex.withFingerprint(dir, d + "#mom-v2") {
+      graft.operators.Generation.withFingerprint(dir, d + "#mom-v2") {
         graft.operators.MomentsState.build(
           ev.filter($"event_id" % 2 === 0), "event_type", "v_i", dir)
         graft.operators.MomentsState.mergeBatch(s,
@@ -1902,7 +1902,7 @@ object EventQueries {
       val ev = Tables.events(s, d).filter($"value".isNotNull)
         .withColumn("v_i", round($"value").cast("long"))
       val dir = graft.operators.MomentsState.defaultDir(d + "#momf")
-      graft.operators.TextIndex.withFingerprint(dir, d + "#momf-v2") {
+      graft.operators.Generation.withFingerprint(dir, d + "#momf-v2") {
         graft.operators.MomentsState.build(ev, "event_type", "v_i", dir)
         graft.operators.MomentsState.removeBatch(s,
           ev.filter($"user_id" % 9 === 4), "event_type", "v_i", dir,
@@ -2001,7 +2001,7 @@ object EventQueries {
       val docs = Tables.documents(s, d)
         .withColumn("len_i", length($"text").cast("long"))
       val dir = graft.operators.MomentsState.defaultDir(d + "#momrtbf")
-      graft.operators.TextIndex.withFingerprint(dir, d + "#momrtbf-v1") {
+      graft.operators.Generation.withFingerprint(dir, d + "#momrtbf-v1") {
         graft.operators.MomentsState.build(docs, "lang", "len_i", dir)
         graft.operators.Forget.purgeDocs(s,
           docs.filter($"doc_id" % 7 === 3), "doc_id",
@@ -2053,7 +2053,7 @@ object EventQueries {
       val ev = Tables.events(s, d).filter($"value".isNotNull)
         .withColumn("v_i", round($"value").cast("long"))
       val dir = graft.operators.MomentsState.defaultDir(d + "#momp")
-      graft.operators.TextIndex.withFingerprint(dir, d + "#momp-v1") {
+      graft.operators.Generation.withFingerprint(dir, d + "#momp-v1") {
         graft.operators.MomentsState.build(ev, "event_type", "v_i",
           dir)
       }

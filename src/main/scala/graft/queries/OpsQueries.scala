@@ -158,7 +158,7 @@ object OpsQueries {
       val scaled = round($"value" * 100.0, 0).cast("long")
       val keys = Seq("user_id", "event_type")
       val dir = graft.operators.AggView.defaultDir(d + "_ev")
-      graft.operators.TextIndex.withFingerprint(dir, d + "#base-even+cdc") {
+      graft.operators.Generation.withFingerprint(dir, d + "#base-even+cdc") {
         graft.operators.AggView.build(
           ev.filter($"event_id" % 2 === 0), keys, scaled, dir)
         val delta = ev.filter($"event_id" % 2 === 1)
@@ -204,7 +204,7 @@ object OpsQueries {
       val scaled = round($"value" * 100.0, 0).cast("long")
       val keys = Seq("user_id", "event_type")
       val dir = graft.operators.AggView.defaultDir(d + "_ev_forget")
-      graft.operators.TextIndex.withFingerprint(dir, d + "#full+purge") {
+      graft.operators.Generation.withFingerprint(dir, d + "#full+purge") {
         graft.operators.AggView.build(ev, keys, scaled, dir)
         graft.operators.Forget.purgeDocs(s,
           ev.filter($"user_id" % 9 === 4), "event_id",
@@ -3316,7 +3316,7 @@ object OpsQueries {
       import s.implicits._
       val ev = Tables.events(s, d)
       val dir = graft.operators.StatsIndex.defaultDir(d + "#stats_merge")
-      graft.operators.TextIndex.withFingerprint(dir, d + "#stats_merge") {
+      graft.operators.Generation.withFingerprint(dir, d + "#stats_merge") {
         graft.operators.StatsIndex.build(
           ev.filter($"event_id" % 2 === 0), "user_id", dir, 4, 256)
         graft.operators.StatsIndex.mergeBatch(s,
@@ -3366,7 +3366,7 @@ object OpsQueries {
       import s.implicits._
       val ev = Tables.events(s, d)
       val dir = graft.operators.StatsIndex.defaultDir(d + "#stats_forget")
-      graft.operators.TextIndex.withFingerprint(dir, d + "#stats_forget") {
+      graft.operators.Generation.withFingerprint(dir, d + "#stats_forget") {
         graft.operators.StatsIndex.build(ev, "user_id", dir, 4, 256)
         graft.operators.StatsIndex.removeBatch(s,
           ev.filter($"user_id" % 9 === 0), "user_id", dir, 4, 256)
@@ -3417,7 +3417,7 @@ object OpsQueries {
       import s.implicits._
       val ev = Tables.events(s, d)
       val dir = graft.operators.StatsIndex.defaultDir(d + "#stats_rtbf")
-      graft.operators.TextIndex.withFingerprint(dir, d + "#stats_rtbf") {
+      graft.operators.Generation.withFingerprint(dir, d + "#stats_rtbf") {
         graft.operators.StatsIndex.build(ev, "user_id", dir, 4, 256)
         graft.operators.Forget.purgeDocs(s,
           ev.filter($"user_id" % 11 === 3), "user_id",

@@ -724,11 +724,11 @@ class CurationSpec extends AnyFunSuite {
         train.filter($"doc_id" % 5 =!= 4), probe, "doc_id", "text")),
       "forget must equal the remaining-only rebuild")
     // replayed removal epoch: state untouched
-    val before = graft.operators.TextIndex.current(dir)
+    val before = graft.operators.Generation.current(dir)
     graft.operators.LmIndex.removeTrigramBatch(spark,
       train.filter($"doc_id" % 5 === 4), "doc_id", "text", dir,
       epoch = 1L)
-    assert(graft.operators.TextIndex.current(dir) === before)
+    assert(graft.operators.Generation.current(dir) === before)
     // over-removal: subtracting more copies than the model holds
     val tiny = java.nio.file.Files
       .createTempDirectory("lm3_guard").toString
@@ -764,10 +764,10 @@ class CurationSpec extends AnyFunSuite {
       scratch)
     assert(freq(dir) === freq(scratch),
       "forget must equal the remaining-only rebuild")
-    val before = graft.operators.TextIndex.current(dir)
+    val before = graft.operators.Generation.current(dir)
     LineIndex.removeBatch(spark, all4.filter($"doc_id" <= 2),
       "doc_id", "text", dir, epoch = 1L)
-    assert(graft.operators.TextIndex.current(dir) === before)
+    assert(graft.operators.Generation.current(dir) === before)
     intercept[IllegalArgumentException] {
       LineIndex.removeBatch(spark, all4, "doc_id", "text", dir)
     }
@@ -1345,9 +1345,9 @@ class CurationSpec extends AnyFunSuite {
       "merged table must equal the rebuilt table")
 
     // replayed epoch: generation must not advance, table unchanged
-    val genBefore = graft.operators.TextIndex.current(dir)._1
+    val genBefore = graft.operators.Generation.current(dir)._1
     LineIndex.mergeBatch(spark, b, "doc_id", "text", dir, epoch = 1L)
-    assert(graft.operators.TextIndex.current(dir)._1 === genBefore,
+    assert(graft.operators.Generation.current(dir)._1 === genBefore,
       "replayed epoch must be a no-op")
 
     // serving fresh content: unseen line kept, stored boilerplate dropped

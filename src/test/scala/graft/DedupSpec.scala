@@ -304,9 +304,9 @@ class DedupSpec extends AnyFunSuite {
       "compaction must not change gate semantics")
     assert(gBefore === Set(11L))
     // replayed epoch: no-op (no new generation)
-    val gen = graft.operators.TextIndex.current(dir)._1
+    val gen = graft.operators.Generation.current(dir)._1
     DedupIndex.compact(spark, dir, epoch = 5L)
-    assert(graft.operators.TextIndex.current(dir)._1 === gen)
+    assert(graft.operators.Generation.current(dir)._1 === gen)
   }
 
   test("keepBest: one survivor per transitive cluster, best score wins, " +

@@ -1,6 +1,7 @@
 package graft
 
 import org.scalatest.funsuite.AnyFunSuite
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Cross-artifact RTBF orchestrator (q350/q363/q368): one purgeDocs
@@ -240,8 +241,8 @@ class ForgetSpec extends AnyFunSuite {
         .json(srcDir)
         .writeStream.option("checkpointLocation", ckpt)
         .trigger(Trigger.AvailableNow())
-        .foreachBatch(Forget.foreachBatchPurge(spark, "doc_id",
-          targetsA))
+        .foreachBatch((b: DataFrame, e: Long) =>
+          Forget.purgeDocs(spark, b, "doc_id", targetsA, e))
         .start()
       q.awaitTermination()
     }

@@ -1,10 +1,11 @@
 package graft
 
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import graft.streaming.{EventStream, HistoryPipeline}
-import graft.operators.Stage
+import graft.operators.{Generation, Stage}
 
 /** SURVEY §2.9 — streaming semantics: watch-history dedup at the keyed
   * sink, windowed aggregation, custom stateful totals; MemoryStream
@@ -703,8 +704,8 @@ class StreamingSpec extends AnyFunSuite {
         .writeStream
         .option("checkpointLocation", ckpt)
         .trigger(Trigger.AvailableNow())
-        .foreachBatch(TextIndex.foreachBatchMerge(spark, idxDir,
-          "doc_id", "text"))
+        .foreachBatch((b: DataFrame, e: Long) =>
+          TextIndex.mergeBatch(spark, b, "doc_id", "text", idxDir, e))
         .start()
       q.awaitTermination()
     }
@@ -723,11 +724,11 @@ class StreamingSpec extends AnyFunSuite {
     runOnce()
 
     // replaying a committed epoch must not touch state: pointer unchanged
-    val before = TextIndex.current(idxDir)
+    val before = Generation.current(idxDir)
     TextIndex.mergeBatch(spark,
       Seq((99L, "would double count spark")).toDF("doc_id", "text"),
       "doc_id", "text", idxDir, epoch = before._2)
-    assert(TextIndex.current(idxDir) === before,
+    assert(Generation.current(idxDir) === before,
       "replayed epoch must be a no-op")
 
     val terms = Seq("spark", "dup", "window", "merge")
@@ -1056,7 +1057,8 @@ class StreamingSpec extends AnyFunSuite {
 
     val schema = StructType(Seq(StructField("k", StringType),
       StructField("v", LongType), StructField("op", StringType)))
-    val hook = AggView.foreachBatchCdc(spark, Seq("k"), col("v"), "op", mvDir)
+    val hook: (DataFrame, Long) => Unit = (b, e) =>
+      AggView.mergeCdc(spark, b, Seq("k"), col("v"), "op", mvDir, e)
     def runOnce(): Unit = {
       val q = spark.readStream.schema(schema).json(srcDir)
         .writeStream.option("checkpointLocation", ckpt)
@@ -1086,10 +1088,10 @@ class StreamingSpec extends AnyFunSuite {
     assert(state() === truth, s"state after two epochs: ${state()}")
 
     // replay the committed last epoch verbatim — the fence must no-op
-    val (genBefore, lastEpoch) = AggView.current(mvDir)
+    val (genBefore, lastEpoch) = Generation.current(mvDir)
     hook(Seq(("a", 50L, "D"), ("c", 4L, "I")).toDF("k", "v", "op"),
       lastEpoch)
-    assert(AggView.current(mvDir) === ((genBefore, lastEpoch)),
+    assert(Generation.current(mvDir) === ((genBefore, lastEpoch)),
       "replayed epoch must not advance the generation")
     assert(state() === truth, "replayed epoch must not change state")
   }
@@ -1170,8 +1172,8 @@ class StreamingSpec extends AnyFunSuite {
         .writeStream
         .option("checkpointLocation", ckpt)
         .trigger(Trigger.AvailableNow())
-        .foreachBatch(RecModel.foreachBatchMerge(spark, modDir,
-          "user_id", "item", 10))
+        .foreachBatch((b: DataFrame, e: Long) => RecModel.mergeBatch(spark,
+          b, "user_id", "item", 10, 1L, modDir, e))
         .start()
       q.awaitTermination()
     }
@@ -1188,10 +1190,10 @@ class StreamingSpec extends AnyFunSuite {
     runOnce()
 
     // replaying a committed epoch must not touch state
-    val before = RecModel.current(modDir)
+    val before = Generation.current(modDir)
     RecModel.mergeBatch(spark, Seq((9L, 1L)).toDF("user_id", "item"),
       "user_id", "item", 10, 1L, modDir, epoch = before._2)
-    assert(RecModel.current(modDir) === before,
+    assert(Generation.current(modDir) === before,
       "replayed epoch must be a no-op")
 
     val all = seed.unionByName(Seq((3L, 1L), (3L, 2L), (4L, 2L),
@@ -1229,8 +1231,8 @@ class StreamingSpec extends AnyFunSuite {
         .writeStream
         .option("checkpointLocation", ckpt)
         .trigger(Trigger.AvailableNow())
-        .foreachBatch(LineIndex.foreachBatchMerge(spark, idxDir,
-          "doc_id", "text"))
+        .foreachBatch((b: DataFrame, e: Long) =>
+          LineIndex.mergeBatch(spark, b, "doc_id", "text", idxDir, e))
         .start()
       q.awaitTermination()
     }
@@ -1248,10 +1250,10 @@ class StreamingSpec extends AnyFunSuite {
     runOnce()
 
     // replaying a committed epoch must not touch state
-    val genBefore = graft.operators.TextIndex.current(idxDir)
+    val genBefore = graft.operators.Generation.current(idxDir)
     LineIndex.mergeBatch(spark, Seq((9L, "zeta")).toDF("doc_id", "text"),
       "doc_id", "text", idxDir, epoch = genBefore._2)
-    assert(graft.operators.TextIndex.current(idxDir) === genBefore,
+    assert(graft.operators.Generation.current(idxDir) === genBefore,
       "replayed epoch must be a no-op")
 
     val allDocs = seed.unionByName(Seq((3L, "gamma\nboiler"),
@@ -1295,8 +1297,8 @@ class StreamingSpec extends AnyFunSuite {
         .writeStream
         .option("checkpointLocation", ckpt)
         .trigger(Trigger.AvailableNow())
-        .foreachBatch(StatsIndex.foreachBatchMerge(spark, idxDir,
-          "user_id", 4, 64))
+        .foreachBatch((b: DataFrame, e: Long) => StatsIndex.mergeBatch(
+          spark, b, "user_id", idxDir, 4, 64, e))
         .start()
       q.awaitTermination()
     }
@@ -1311,10 +1313,10 @@ class StreamingSpec extends AnyFunSuite {
     runOnce()
 
     // replaying a committed epoch must not touch state
-    val genBefore = graft.operators.TextIndex.current(idxDir)
+    val genBefore = graft.operators.Generation.current(idxDir)
     StatsIndex.mergeBatch(spark, Seq(99L).toDF("user_id"), "user_id",
       idxDir, 4, 64, epoch = genBefore._2)
-    assert(graft.operators.TextIndex.current(idxDir) === genBefore,
+    assert(graft.operators.Generation.current(idxDir) === genBefore,
       "replayed epoch must be a no-op")
 
     val all = seed.unionByName(
@@ -1598,8 +1600,8 @@ class StreamingSpec extends AnyFunSuite {
       val q = spark.readStream.schema(schema).json(srcDir)
         .writeStream.option("checkpointLocation", ckpt)
         .trigger(Trigger.AvailableNow())
-        .foreachBatch(LmIndex.foreachBatchMergeTrigram(spark, idxDir,
-          "doc_id", "text"))
+        .foreachBatch((b: DataFrame, e: Long) => LmIndex.mergeTrigramBatch(
+          spark, b, "doc_id", "text", idxDir, e))
         .start()
       q.awaitTermination()
     }
@@ -1625,11 +1627,11 @@ class StreamingSpec extends AnyFunSuite {
         "doc_id", "text")),
       "KN serve diverged from the from-scratch twin")
     // replaying the last committed epoch must not touch state
-    val before = graft.operators.TextIndex.current(idxDir)
+    val before = graft.operators.Generation.current(idxDir)
     LmIndex.mergeTrigramBatch(spark,
       Seq((9L, "q r s")).toDF("doc_id", "text"), "doc_id", "text",
       idxDir, epoch = before._2)
-    assert(graft.operators.TextIndex.current(idxDir) === before,
+    assert(graft.operators.Generation.current(idxDir) === before,
       "replayed epoch must be a no-op")
   }
 
@@ -1649,8 +1651,8 @@ class StreamingSpec extends AnyFunSuite {
       val q = spark.readStream.schema("g STRING, v LONG").json(srcDir)
         .writeStream.option("checkpointLocation", ckpt)
         .trigger(Trigger.AvailableNow())
-        .foreachBatch(MomentsState.foreachBatchMerge(spark, dir,
-          "g", "v"))
+        .foreachBatch((b: DataFrame, e: Long) =>
+          MomentsState.mergeBatch(spark, b, "g", "v", dir, e))
         .start()
       q.awaitTermination()
     }
@@ -1679,10 +1681,10 @@ class StreamingSpec extends AnyFunSuite {
       "q362's profile served from streamed state must equal the " +
         "batch shapeDriftProfile of the full union")
     // replaying the last committed epoch must not touch state
-    val before = graft.operators.TextIndex.current(dir)
+    val before = graft.operators.Generation.current(dir)
     MomentsState.mergeBatch(spark, Seq(("z", 9L)).toDF("g", "v"),
       "g", "v", dir, epoch = before._2)
-    assert(graft.operators.TextIndex.current(dir) === before,
+    assert(graft.operators.Generation.current(dir) === before,
       "replayed epoch must be a no-op")
   }
 
@@ -1706,8 +1708,8 @@ class StreamingSpec extends AnyFunSuite {
       val q = spark.readStream.schema("g STRING, v LONG").json(src)
         .writeStream.option("checkpointLocation", ckpt)
         .trigger(Trigger.AvailableNow())
-        .foreachBatch(MomentsState.foreachBatchMerge(spark, dir,
-          "g", "v", streamTag = tag))
+        .foreachBatch((b: DataFrame, e: Long) =>
+          MomentsState.mergeBatch(spark, b, "g", "v", dir, e, tag))
         .start()
       q.awaitTermination()
     }

@@ -11,7 +11,9 @@ import org.scalatest.funsuite.AnyFunSuite
   * Observation anywhere else in `graft/operators` means an operator is
   * growing its own lifecycle again (the hand-rolled loops these
   * primitives replaced leaked on error paths and made storage depend on
-  * ContextCleaner timing). */
+  * ContextCleaner timing). Likewise stored artifacts commit through
+  * [[Generation]]: a pointer flip, claim or replay-fence check anywhere
+  * else is a hand-rolled copy of its protocol. */
 class LifecycleSourceSpec extends AnyFunSuite {
   private val dir = new File("src/main/scala/graft/operators")
 
@@ -41,6 +43,14 @@ class LifecycleSourceSpec extends AnyFunSuite {
   test("only Stage checkpoints a frame") {
     val found = hits(Set("Stage.scala"), """\.\s*localCheckpoint\s*\(""".r)
     assert(found.isEmpty, "checkpoint in a Stage instead:\n" +
+      found.mkString("\n"))
+  }
+
+  test("only Generation commits an artifact") {
+    val found = hits(Set("Generation.scala"),
+      ("""\b(withGenClaim|writePointer|advance|fenceOf)\s*\(""" +
+        """|epoch\s*<=\s*lastEpoch""").r)
+    assert(found.isEmpty, "mutate through Generation instead:\n" +
       found.mkString("\n"))
   }
 

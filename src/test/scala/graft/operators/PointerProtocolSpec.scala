@@ -22,34 +22,34 @@ class PointerProtocolSpec extends AnyFunSuite {
 
   test("guarded pointer flip aborts on a stale basedOnGen") {
     val dir = tmp("ptr_guard")
-    TextIndex.advance(dir, 0L, -1L) // build
+    Generation.advance(dir, 0L, -1L) // build
     // writer derived from gen 0 advances — fine
-    TextIndex.advance(dir, 1L, 3L, "", basedOnGen = 0L)
-    assert(TextIndex.current(dir) === ((1L, 3L)))
+    Generation.advance(dir, 1L, 3L, "", basedOnGen = 0L)
+    assert(Generation.current(dir) === ((1L, 3L)))
     // a second writer ALSO derived from gen 0 must fail loudly — the
     // pre-r11 behavior silently rewrote the pointer, dropping writer
     // A's generation data and fence advance
     val e = intercept[java.util.ConcurrentModificationException] {
-      TextIndex.advance(dir, 1L, 7L, "", basedOnGen = 0L)
+      Generation.advance(dir, 1L, 7L, "", basedOnGen = 0L)
     }
     assert(e.getMessage.contains("gen=0") && e.getMessage.contains("gen=1"))
     // the winning writer's state is untouched
-    assert(TextIndex.current(dir) === ((1L, 3L)))
+    assert(Generation.current(dir) === ((1L, 3L)))
     // an up-to-date writer proceeds
-    TextIndex.advance(dir, 2L, 4L, "", basedOnGen = 1L)
-    assert(TextIndex.current(dir) === ((2L, 4L)))
+    Generation.advance(dir, 2L, 4L, "", basedOnGen = 1L)
+    assert(Generation.current(dir) === ((2L, 4L)))
     // unguarded (build/rebuild) writes still replace unconditionally
-    TextIndex.advance(dir, 0L, -1L)
-    assert(TextIndex.current(dir)._1 === 0L)
+    Generation.advance(dir, 0L, -1L)
+    assert(Generation.current(dir)._1 === 0L)
   }
 
   test("guarded flip preserves other writers' tagged fences") {
     val dir = tmp("ptr_guard_tags")
-    TextIndex.advance(dir, 0L, -1L)
-    TextIndex.advance(dir, 1L, 5L, "purge", basedOnGen = 0L)
-    TextIndex.advance(dir, 2L, 9L, "", basedOnGen = 1L)
-    assert(TextIndex.fenceOf(dir, "purge") === 5L)
-    assert(TextIndex.fenceOf(dir, "") === 9L)
+    Generation.advance(dir, 0L, -1L)
+    Generation.advance(dir, 1L, 5L, "purge", basedOnGen = 0L)
+    Generation.advance(dir, 2L, 9L, "", basedOnGen = 1L)
+    assert(Generation.fenceOf(dir, "purge") === 5L)
+    assert(Generation.fenceOf(dir, "") === 9L)
   }
 
   test("mutators pass their read generation: replayed mergeBatch chain " +
@@ -61,10 +61,10 @@ class PointerProtocolSpec extends AnyFunSuite {
     TextIndex.build(docs, "doc_id", "text", dir)
     val b1 = Seq((3L, "delta")).toDF("doc_id", "text")
     TextIndex.mergeBatch(spark, b1, "doc_id", "text", dir, epoch = 1L)
-    assert(TextIndex.current(dir) === ((1L, 1L)))
+    assert(Generation.current(dir) === ((1L, 1L)))
     // direct stale flip (what a concurrent merge's final step would do)
     intercept[java.util.ConcurrentModificationException] {
-      TextIndex.writePointer(dir, 1L, 2L, "", basedOnGen = 0L)
+      Generation.writePointer(dir, 1L, 2L, "", basedOnGen = 0L)
     }
   }
 
@@ -73,12 +73,12 @@ class PointerProtocolSpec extends AnyFunSuite {
     java.nio.file.Files.createDirectories(java.nio.file.Paths.get(dir))
     java.nio.file.Files.writeString(
       java.nio.file.Paths.get(dir, "_current"), "3")
-    assert(TextIndex.current(dir) === ((3L, -1L)))
-    assert(AggView.current(dir) === ((3L, -1L)))
+    assert(Generation.current(dir) === ((3L, -1L)))
+    assert(Generation.current(dir) === ((3L, -1L)))
     // an empty/garbage pointer still reads as missing
     java.nio.file.Files.writeString(
       java.nio.file.Paths.get(dir, "_current"), "")
-    assert(TextIndex.current(dir) === ((-1L, -1L)))
+    assert(Generation.current(dir) === ((-1L, -1L)))
   }
 
   test("garbage pointer bodies degrade to the unbuilt sentinel, " +
@@ -88,19 +88,19 @@ class PointerProtocolSpec extends AnyFunSuite {
     for (garbage <- Seq("1-2", "-", "--3", "x", "3x"))
       withClue(s"pointer body '$garbage': ") {
         java.nio.file.Files.writeString(p, garbage)
-        assert(TextIndex.current(dir) === ((-1L, -1L)))
+        assert(Generation.current(dir) === ((-1L, -1L)))
       }
     // negative gen (a legal legacy shape) still parses
     java.nio.file.Files.writeString(p, "-1")
-    assert(TextIndex.current(dir) === ((-1L, -1L)))
+    assert(Generation.current(dir) === ((-1L, -1L)))
     java.nio.file.Files.writeString(p, "7")
-    assert(TextIndex.current(dir) === ((7L, -1L)))
+    assert(Generation.current(dir) === ((7L, -1L)))
   }
 
   test("path aliases of one dir share a monitor: concurrent guarded " +
       "flips through different spellings serialize (r11 ADVICE)") {
     val dir = tmp("ptr_alias")
-    TextIndex.advance(dir, 0L, -1L)
+    Generation.advance(dir, 0L, -1L)
     // pre-fix: 'dir' and 'dir/' got DIFFERENT JVM monitors, so two
     // threads reached FileChannel.lock concurrently and the second got
     // a JVM-wide OverlappingFileLockException instead of blocking
@@ -111,9 +111,9 @@ class PointerProtocolSpec extends AnyFunSuite {
       new Thread(() => {
         var done = 0
         while (done < 10) {
-          val (g, _) = TextIndex.current(d)
+          val (g, _) = Generation.current(d)
           try {
-            TextIndex.advance(d, g + 1, done.toLong, s"t$i",
+            Generation.advance(d, g + 1, done.toLong, s"t$i",
               basedOnGen = g)
             done += 1; flips.incrementAndGet()
           } catch {
@@ -127,37 +127,37 @@ class PointerProtocolSpec extends AnyFunSuite {
     assert(errs.isEmpty, s"unexpected failure (pre-fix: " +
       s"OverlappingFileLockException): ${errs.peek()}")
     assert(flips.get() === 30L)
-    assert(TextIndex.current(dir)._1 === 30L)
+    assert(Generation.current(dir)._1 === 30L)
   }
 
   test("withGenClaim rejects a stale generation BEFORE the body runs") {
     val dir = tmp("ptr_claim_stale")
-    TextIndex.advance(dir, 0L, -1L)
-    TextIndex.advance(dir, 1L, 1L, "", basedOnGen = 0L)
+    Generation.advance(dir, 0L, -1L)
+    Generation.advance(dir, 1L, 1L, "", basedOnGen = 0L)
     var ran = false
     val e = intercept[java.util.ConcurrentModificationException] {
-      TextIndex.withGenClaim(dir, 0L) { ran = true }
+      Generation.withGenClaim(dir, 0L) { ran = true }
     }
     assert(!ran, "body must never run for a stale claim — pre-r12 the " +
       "loser only failed AFTER co-writing the winner's gen+1 data dir")
     assert(e.getMessage.contains("BEFORE writing"))
     // an up-to-date claim runs and releases
     var ok = false
-    TextIndex.withGenClaim(dir, 1L) { ok = true }
+    Generation.withGenClaim(dir, 1L) { ok = true }
     assert(ok)
   }
 
   test("withGenClaim: second in-flight mutation aborts up front; claim " +
       "is released on success AND on failure") {
     val dir = tmp("ptr_claim_race")
-    TextIndex.advance(dir, 0L, -1L)
+    Generation.advance(dir, 0L, -1L)
     val inBody = new java.util.concurrent.CountDownLatch(1)
     val release = new java.util.concurrent.CountDownLatch(1)
     val holder = new Thread(() => {
-      TextIndex.withGenClaim(dir, 0L) {
+      Generation.withGenClaim(dir, 0L) {
         inBody.countDown()
         release.await(30, java.util.concurrent.TimeUnit.SECONDS)
-        TextIndex.advance(dir, 1L, 1L, "", basedOnGen = 0L)
+        Generation.advance(dir, 1L, 1L, "", basedOnGen = 0L)
       }
     })
     holder.start()
@@ -165,25 +165,25 @@ class PointerProtocolSpec extends AnyFunSuite {
     // while the first mutation is in flight, a second claimant fails
     // immediately — nothing written, no shared data dir
     val e = intercept[java.util.ConcurrentModificationException] {
-      TextIndex.withGenClaim(dir, 0L) {
+      Generation.withGenClaim(dir, 0L) {
         fail("loser's body must not run")
       }
     }
     assert(e.getMessage.contains("in flight"))
     release.countDown(); holder.join(30000)
-    assert(TextIndex.current(dir) === ((1L, 1L)))
+    assert(Generation.current(dir) === ((1L, 1L)))
     // claim released by the winner: a fresh mutation claims fine
-    TextIndex.withGenClaim(dir, 1L) {
-      TextIndex.advance(dir, 2L, 2L, "", basedOnGen = 1L)
+    Generation.withGenClaim(dir, 1L) {
+      Generation.advance(dir, 2L, 2L, "", basedOnGen = 1L)
     }
     // ...and a FAILED body also releases its claim
     intercept[RuntimeException] {
-      TextIndex.withGenClaim(dir, 2L) { throw new RuntimeException("boom") }
+      Generation.withGenClaim(dir, 2L) { throw new RuntimeException("boom") }
     }
-    TextIndex.withGenClaim(dir, 2L) {
-      TextIndex.advance(dir, 3L, 3L, "", basedOnGen = 2L)
+    Generation.withGenClaim(dir, 2L) {
+      Generation.advance(dir, 3L, 3L, "", basedOnGen = 2L)
     }
-    assert(TextIndex.current(dir)._1 === 3L)
+    assert(Generation.current(dir)._1 === 3L)
   }
 
   test("racing mergeBatch mutations: exactly one writes, the loser " +
@@ -211,7 +211,7 @@ class PointerProtocolSpec extends AnyFunSuite {
     // both may win if they happened to serialize; at most one aborts,
     // and an abort means NOTHING of the loser's reached the store
     assert(res.count(_ == "ok") >= 1 && res.size === 2)
-    val (gen, _) = TextIndex.current(dir)
+    val (gen, _) = Generation.current(dir)
     assert(gen.toInt === res.count(_ == "ok"))
     val n = spark.read.parquet(TextIndex.postingsPath(dir))
       .select("doc_id").distinct().count()
@@ -223,7 +223,7 @@ class PointerProtocolSpec extends AnyFunSuite {
   test("cross-process claim: a LIVE foreign claim file aborts the " +
       "mutation BEFORE the body runs (r12 verdict)") {
     val dir = tmp("ptr_claim_foreign")
-    TextIndex.advance(dir, 0L, -1L)
+    Generation.advance(dir, 0L, -1L)
     // simulate a mutator in ANOTHER JVM: a fresh claim file with a
     // writer id that is not ours (UUIDs never collide with ours)
     java.nio.file.Files.writeString(
@@ -231,7 +231,7 @@ class PointerProtocolSpec extends AnyFunSuite {
       s"foreign-jvm-writer\n1\n${System.currentTimeMillis()}")
     var ran = false
     val e = intercept[java.util.ConcurrentModificationException] {
-      TextIndex.withGenClaim(dir, 0L) { ran = true }
+      Generation.withGenClaim(dir, 0L) { ran = true }
     }
     assert(!ran, "pre-r13 a second-JVM racer passed the in-JVM claim " +
       "and co-wrote the winner's gen+1 dir, failing only at flip time")
@@ -244,37 +244,37 @@ class PointerProtocolSpec extends AnyFunSuite {
   test("cross-process claim: a STALE foreign claim (crashed writer) is " +
       "overwritten; success and failure both release our claim file") {
     val dir = tmp("ptr_claim_stale_foreign")
-    TextIndex.advance(dir, 0L, -1L)
+    Generation.advance(dir, 0L, -1L)
     val cp = java.nio.file.Paths.get(dir, "_claim")
     // a claim older than the stale window = a crashed writer's leftover
     java.nio.file.Files.writeString(cp,
       s"crashed-jvm-writer\n1\n${System.currentTimeMillis() - 16L * 60L * 1000L}")
     var ran = false
-    TextIndex.withGenClaim(dir, 0L) {
+    Generation.withGenClaim(dir, 0L) {
       ran = true
       // while the body runs, the claim file is OURS
       val held = java.nio.file.Files.readString(cp)
       assert(!held.startsWith("crashed-jvm-writer"))
-      TextIndex.advance(dir, 1L, 1L, "", basedOnGen = 0L)
+      Generation.advance(dir, 1L, 1L, "", basedOnGen = 0L)
     }
     assert(ran)
     assert(!java.nio.file.Files.exists(cp),
       "a successful mutation must remove its claim file")
     // torn/garbage claim bodies also count as stale, never throw
     java.nio.file.Files.writeString(cp, "not a claim")
-    TextIndex.withGenClaim(dir, 1L) {
-      TextIndex.advance(dir, 2L, 2L, "", basedOnGen = 1L)
+    Generation.withGenClaim(dir, 1L) {
+      Generation.advance(dir, 2L, 2L, "", basedOnGen = 1L)
     }
     assert(!java.nio.file.Files.exists(cp))
     // a FAILED body also releases the claim file
     intercept[RuntimeException] {
-      TextIndex.withGenClaim(dir, 2L) { throw new RuntimeException("boom") }
+      Generation.withGenClaim(dir, 2L) { throw new RuntimeException("boom") }
     }
     assert(!java.nio.file.Files.exists(cp))
-    TextIndex.withGenClaim(dir, 2L) {
-      TextIndex.advance(dir, 3L, 3L, "", basedOnGen = 2L)
+    Generation.withGenClaim(dir, 2L) {
+      Generation.advance(dir, 3L, 3L, "", basedOnGen = 2L)
     }
-    assert(TextIndex.current(dir)._1 === 3L)
+    assert(Generation.current(dir)._1 === 3L)
   }
 
   test("legacy long-typed MomentsState footer upcasts on read and " +
@@ -285,8 +285,8 @@ class PointerProtocolSpec extends AnyFunSuite {
     Seq(("a", 2L, 3L, 5L, 9L, 17L), ("b", 1L, 4L, 16L, 64L, 256L))
       .toDF("_k", "n", "s1", "s2", "s3", "s4")
       .coalesce(1).write.mode("overwrite")
-      .parquet(s"${TextIndex.genDir(dir, 0L)}/sums")
-    TextIndex.advance(dir, 0L, -1L)
+      .parquet(s"${Generation.genDir(dir, 0L)}/sums")
+    Generation.advance(dir, 0L, -1L)
     // pre-fix this read failed at scan time with a parquet type error
     val st = MomentsState.storedSums(spark, dir)
     assert(st.schema("s2").dataType ===

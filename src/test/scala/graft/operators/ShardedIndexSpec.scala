@@ -127,10 +127,25 @@ class ShardedIndexSpec extends AnyFunSuite {
     assert(post.contains(31L),
       "doc 2's text is fully purged — its twin must be ADMITTED")
     // replayed epoch: no-op (generation unchanged)
-    val gen = TextIndex.current(sh)
+    val gen = Generation.current(sh)
     DedupIndex.removeDocsSharded(spark, sh,
       Seq(4L).toDF("doc_id"), "doc_id", epoch = 1L, fenceTag = "rtbf")
-    assert(TextIndex.current(sh) === gen)
+    assert(Generation.current(sh) === gen)
+  }
+
+  test("reshardSharded keeps the replay fence: a re-delivered removal " +
+      "stays a no-op after the reshard") {
+    val sh = tmp("dedup_sh_reshard_fence")
+    DedupIndex.buildSharded(archive, "doc_id", "text", 3, 8, 4, sh, 8)
+    val purge = Seq(2L).toDF("doc_id")
+    DedupIndex.removeDocsSharded(spark, sh, purge, "doc_id", epoch = 5L)
+    DedupIndex.reshardSharded(spark, sh, nTo = 10)
+    assert(Generation.fenceOf(sh, "") === 5L,
+      "the reshard must carry the untagged fence through")
+    val gen = Generation.current(sh)
+    DedupIndex.removeDocsSharded(spark, sh, purge, "doc_id", epoch = 5L)
+    assert(Generation.current(sh) === gen,
+      "a replay of epoch 5 must not write a generation")
   }
 
   test("reshardSharded 8 -> 10: zero illegal moves per table, movement " +
