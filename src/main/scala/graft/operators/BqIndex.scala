@@ -2,6 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.streaming.Hookup
 
 /** [NS] — stored BINARY-QUANTIZATION index: the ninth stored-artifact
   * lifecycle (ANN, dedup, text, LM, tokenizer, rec, importance, line —
@@ -101,9 +102,10 @@ object BqIndex {
     * the [[Generation]] stores, kept as a ledger at the 8-byte tier. */
   def foreachBatchAppend(spark: SparkSession, dir: String,
       idCol: String, vecCol: String): (DataFrame, Long) => Unit =
-    (batch, batchId) =>
+    Hookup(spark) { (batch, batchId) =>
       appendIfAbsent(spark, dir, batch, idCol, vecCol,
         batchTag = s"epoch$batchId")
+    }
 
   /** Right-to-be-forgotten removal: rewrite the code table without the
     * given ids (anti-join against the broadcast removal list). The

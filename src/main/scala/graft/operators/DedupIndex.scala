@@ -2,6 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.streaming.Hookup
 
 /** DEDUP index lifecycle — derive once, persist, probe every batch.
   *
@@ -187,13 +188,15 @@ object DedupIndex {
   def foreachBatchIngest(spark: SparkSession, dir: String, idCol: String,
       textCol: String, shingleN: Int = 3, k: Int = 8, bands: Int = 4)(
       commit: DataFrame => Unit): (DataFrame, Long) => Unit =
-    (batch, _) => Stage("DedupIndex.foreachBatchIngest") { st =>
-      // one eager materialization: commit and append must see the SAME
-      // admitted set (a lazy plan could re-read the index mid-epoch)
-      val admitted = st.checkpoint(gate(spark, dir, batch, idCol, textCol,
-        shingleN, k, bands), "admitted")
-      commit(admitted)
-      append(admitted, idCol, textCol, shingleN, k, bands, dir)
+    Hookup(spark) { (batch, _) =>
+      Stage("DedupIndex.foreachBatchIngest") { st =>
+        // one eager materialization: commit and append must see the SAME
+        // admitted set (a lazy plan could re-read the index mid-epoch)
+        val admitted = st.checkpoint(gate(spark, dir, batch, idCol, textCol,
+          shingleN, k, bands), "admitted")
+        commit(admitted)
+        append(admitted, idCol, textCol, shingleN, k, bands, dir)
+      }
     }
 
   /** Fold a committed batch's keys into the index (append-only; probes

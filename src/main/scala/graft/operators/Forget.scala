@@ -43,10 +43,12 @@ import org.apache.spark.sql.functions._
   * Streaming purge intake: RTBF requests arrive as a stream in
   * production (the deletion queue); each micro-batch of forgotten-doc
   * rows fans out through [[purgeDocs]] with Spark's epoch id as
-  * `epoch`, `.foreachBatch((batch, epochId) => purgeDocs(spark, batch,
-  * idCol, targets, epochId))`, so an at-least-once redelivery after a
-  * restart is a no-op on every guarded artifact and an identical
-  * rewrite on the idempotent ones.
+  * `epoch`: `.foreachBatch(Hookup(spark)((batch, epochId) =>
+  * purgeDocs(spark, batch, idCol, targets, epochId)))`. An
+  * at-least-once redelivery after a restart is then a no-op on every
+  * guarded artifact and an identical rewrite on the idempotent ones;
+  * [[graft.streaming.Hookup]] runs each epoch on `spark`, so a
+  * restarted stream reuses its compiled classes.
   *
   * [[TokenizerIndex]] is deliberately NOT a target: BPE merge rules
   * are an argmax chain, not a sum — no local inverse exists, so its

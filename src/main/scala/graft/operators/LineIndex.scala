@@ -19,8 +19,8 @@ import org.apache.spark.sql.functions._
   *    re-reading the archive. Batches must be doc-DISJOINT (each
   *    document's lines arrive in exactly one batch — the [[RecModel]]
   *    disjoint-user contract); then per-line distinct-doc counts are
-  *    SUMS and the merge is [[LmIndex]]'s left-join + batch-only-
-  *    remainder fold, one [[Generation.mutate]].
+  *    SUMS and the merge is one full outer join that adds the counts
+  *    (the stored table read once), one [[Generation.mutate]].
   *  - [[serve]]: clean an incoming batch from the STORED table only —
   *    the archive appears nowhere in the plan. A line the index has
   *    never seen coalesces to zero stored docs and is KEPT (fresh
@@ -76,15 +76,12 @@ object LineIndex {
         (st, _) =>
       val bc = st.checkpoint(Curation.lineFrame(batch, idCol, textCol)
         .groupBy(col("_h")).agg(countDistinct(col(idCol)).as("_bnd")), "bc")
-      val stored = storedFreq(spark, dir)
-      val merged = stored
-        .join(bc, Seq("_h"), "left")
-        .select(col("_h"),
-          (col("_nd") + coalesce(col("_bnd"), lit(0L))).as("_nd"))
-        .unionByName(bc
-          .join(stored.select(col("_h"), lit(1).as("_seen")),
-            Seq("_h"), "left_anti")
-          .select(col("_h"), col("_bnd").as("_nd")))
+      // one read of the stored table; the write's range sample reads
+      // the checkpoint, not the stored table again
+      val merged = st.checkpoint(storedFreq(spark, dir)
+        .join(bc, Seq("_h"), "full_outer")
+        .select(col("_h"), (coalesce(col("_nd"), lit(0L)) +
+          coalesce(col("_bnd"), lit(0L))).as("_nd")), "merged")
       writeGen(merged, dir, _)
     }
 

@@ -18,10 +18,10 @@ import org.apache.spark.sql.functions._
   *    keeps the stored table single-sourced: a merge only ever touches
   *    c2 rows, and c1 can never drift out of sync with them.
   *  - [[mergeBatch]]: fold NEW train documents in without re-reading
-  *    the old corpus — bigram counts are SUMS, so the merge is a left
-  *    join of stored rows against the batch's count table (rows of
-  *    untouched bigrams pass through byte-identical) plus the
-  *    batch-only remainder, written as the next generation by
+  *    the old corpus — bigram counts are SUMS, so the merge is one
+  *    full outer join of stored rows with the batch's count table that
+  *    adds the counts (rows of untouched bigrams pass through
+  *    byte-identical), written as the next generation by
   *    [[Generation.mutate]].
   *  - [[serve]]: score a probe frame from the STORED model only — the
   *    train corpus appears NOWHERE in the plan (PlanQualitySpec-gated);
@@ -77,15 +77,11 @@ object LmIndex {
         (st, _) =>
       val bc = st.checkpoint(Curation.bigramFrame(batch, idCol, textCol)
         .groupBy(col("w1"), col("w2")).agg(count(lit(1)).as("bc2")), "bc")
-      val stored = storedModel(spark, dir)
-      val merged = stored
-        .join(bc, Seq("w1", "w2"), "left")
-        .select(col("w1"), col("w2"),
-          (col("c2") + coalesce(col("bc2"), lit(0L))).as("c2"))
-        .unionByName(bc
-          .join(stored.select(col("w1"), col("w2"), lit(1).as("_seen")),
-            Seq("w1", "w2"), "left_anti")
-          .select(col("w1"), col("w2"), col("bc2").as("c2")))
+      // one read of the stored model ([[LineIndex.mergeBatch]])
+      val merged = st.checkpoint(storedModel(spark, dir)
+        .join(bc, Seq("w1", "w2"), "full_outer")
+        .select(col("w1"), col("w2"), (coalesce(col("c2"), lit(0L)) +
+          coalesce(col("bc2"), lit(0L))).as("c2")), "merged")
       writeGen(merged, dir, _)
     }
 
@@ -149,15 +145,12 @@ object LmIndex {
       val bc = st.checkpoint(Curation.trigramFrame(batch, idCol, textCol)
         .groupBy(col("w1"), col("w2"), col("w3"))
         .agg(count(lit(1)).as("bc3")), "bc")
-      val stored = storedTrigram(spark, dir)
-      val merged = stored
-        .join(bc, Seq("w1", "w2", "w3"), "left")
+      // one read of the stored model ([[LineIndex.mergeBatch]])
+      val merged = st.checkpoint(storedTrigram(spark, dir)
+        .join(bc, Seq("w1", "w2", "w3"), "full_outer")
         .select(col("w1"), col("w2"), col("w3"),
-          (col("c3") + coalesce(col("bc3"), lit(0L))).as("c3"))
-        .unionByName(bc
-          .join(stored.select(col("w1"), col("w2"), col("w3"),
-            lit(1).as("_seen")), Seq("w1", "w2", "w3"), "left_anti")
-          .select(col("w1"), col("w2"), col("w3"), col("bc3").as("c3")))
+          (coalesce(col("c3"), lit(0L)) + coalesce(col("bc3"), lit(0L)))
+            .as("c3")), "merged")
       writeGen3(merged, dir, _)
     }
 

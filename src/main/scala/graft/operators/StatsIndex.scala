@@ -19,7 +19,7 @@ import org.apache.spark.sql.functions._
   *    in a config file — a merge with mismatched (depth, width) would
   *    corrupt silently, so it refuses loudly instead.
   *  - [[mergeBatch]]: CMS cells are COUNTS, so a row-disjoint batch
-  *    folds in by cell sum ([[LineIndex]]'s left-join + remainder fold),
+  *    folds in by cell sum ([[LineIndex]]'s full-outer-join fold),
   *    one [[Generation.mutate]].
   *  - [[removeBatch]]: the exact inverse — subtract the batch's cells,
   *    refuse if any cell would go negative (the batch wasn't a subset),
@@ -98,15 +98,11 @@ object StatsIndex {
         (st, _) =>
       val bc = st.checkpoint(Analytics.cmsSketch(batch, keyCol, depth, width)
         .withColumnRenamed("cnt", "_bc"), "bc")
-      val stored = storedCells(spark, dir)
-      val merged = stored
-        .join(bc, Seq("h", "cell"), "left")
-        .select(col("h"), col("cell"),
-          (col("cnt") + coalesce(col("_bc"), lit(0L))).as("cnt"))
-        .unionByName(bc
-          .join(stored.select(col("h"), col("cell"), lit(1).as("_seen")),
-            Seq("h", "cell"), "left_anti")
-          .select(col("h"), col("cell"), col("_bc").as("cnt")))
+      // one read of the stored cells ([[LineIndex.mergeBatch]])
+      val merged = st.checkpoint(storedCells(spark, dir)
+        .join(bc, Seq("h", "cell"), "full_outer")
+        .select(col("h"), col("cell"), (coalesce(col("cnt"), lit(0L)) +
+          coalesce(col("_bc"), lit(0L))).as("cnt")), "merged")
       writeGen(merged, dir, _)
     }
   }

@@ -4,6 +4,7 @@ import java.sql.{Connection, DatabaseMetaData, DriverManager, PreparedStatement,
   SQLException}
 import java.util.Locale
 import org.apache.spark.sql.{DataFrame, Row}
+import graft.streaming.Hookup
 
 /** The sink of record (north star: Structured Streaming + JDBC): the
   * reference's write semantics executed transactionally against a JDBC
@@ -293,7 +294,7 @@ final case class JdbcUpsertSink(
     * neither deleted nor merged — silent data loss on malformed
     * changelog input (round-5 ADVICE). */
   def foreachBatchCdc(opCol: String = "op"): (DataFrame, Long) => Unit =
-    (batch: DataFrame, _: Long) => {
+    Hookup.onActive { (batch, _) =>
       import org.apache.spark.sql.functions.{concat_ws, lit, raise_error, when}
       val op = when(batch(opCol).isNull,
           raise_error(concat_ws("", lit("foreachBatchCdc: NULL "),
@@ -310,7 +311,7 @@ final case class JdbcUpsertSink(
     * — each epoch is one idempotent keyed upsert (exactly-once on replay). */
   def foreachBatch(guard: Row => Boolean = _ => true)
       : (DataFrame, Long) => Unit =
-    (batch: DataFrame, _: Long) => upsert(batch, guard)
+    Hookup.onActive((batch, _) => upsert(batch, guard))
 
   /** Streaming hookup for the set-based scale path: each epoch runs the
     * staged MERGE (one transaction per partition). A MERGE source is a
@@ -324,9 +325,9 @@ final case class JdbcUpsertSink(
   def foreachBatchStagedMerge(guardSql: String = "1=1",
       setExprs: Map[String, String] = Map.empty)
       : (DataFrame, Long) => Unit =
-    (batch: DataFrame, _: Long) => upsertStagedMerge(
+    Hookup.onActive((batch, _) => upsertStagedMerge(
       batch.repartition(keyCols.map(batch(_)): _*).distinct(),
-      guardSql, setExprs)
+      guardSql, setExprs))
 }
 
 object JdbcUpsertSink {

@@ -1,6 +1,7 @@
 package graft.streaming
 
 import java.util.concurrent.ConcurrentLinkedQueue
+import scala.jdk.CollectionConverters._
 import org.apache.spark.sql.streaming.StreamingQueryListener
 import org.apache.spark.sql.streaming.StreamingQueryListener._
 
@@ -16,9 +17,13 @@ object Progress {
     elapsedSec * (total.toDouble / position - 1.0)
   }
 
-  /** Per-batch progress record captured by [[Listener]]. */
+  /** Per-batch progress record captured by [[Listener]]. `durationMs`
+    * holds the batch's time by phase as Spark reports it (`addBatch`,
+    * `queryPlanning`, `walCommit`, `latestOffset`, `commitOffsets`,
+    * `getBatch`, `triggerExecution`); a phase the batch did not run is
+    * absent. */
   final case class BatchProgress(batchId: Long, numInputRows: Long,
-      inputRowsPerSecond: Double)
+      inputRowsPerSecond: Double, durationMs: Map[String, Long])
 
   /** Collects micro-batch progress; attach via
     * spark.streams.addListener(new Progress.Listener). */
@@ -28,6 +33,8 @@ object Progress {
     override def onQueryTerminated(e: QueryTerminatedEvent): Unit = ()
     override def onQueryProgress(e: QueryProgressEvent): Unit =
       batches.add(BatchProgress(e.progress.batchId,
-        e.progress.numInputRows, e.progress.inputRowsPerSecond))
+        e.progress.numInputRows, e.progress.inputRowsPerSecond,
+        e.progress.durationMs.asScala.map { case (k, v) => k -> v.longValue }
+          .toMap))
   }
 }

@@ -68,7 +68,7 @@ object SketchState {
     * stored summary under the versioned-replay protocol above. */
   def foreachBatchHeavyHitters(spark: SparkSession, dir: String,
       tokenCol: String, capacity: Int): (DataFrame, Long) => Unit =
-    (batch, batchId) => {
+    Hookup(spark) { (batch, batchId) =>
       val mg = udaf(graft.functions.MisraGriesAggregator(capacity))
       val batchSketch = batch
         .agg(mg(col(tokenCol)).as("m"))
@@ -106,7 +106,7 @@ object SketchState {
     * stored longs. */
   def foreachBatchKmv(spark: SparkSession, dir: String,
       hashCol: String, k: Int): (DataFrame, Long) => Unit =
-    (batch, batchId) => {
+    Hookup(spark) { (batch, batchId) =>
       val kmv = udaf(graft.functions.KmvSketchAggregator(k))
       val batchSketch = batch
         .agg(kmv(col(hashCol)).as("sk"))
@@ -138,7 +138,7 @@ object SketchState {
     * epochs are no-ops. */
   def foreachBatchKmvSample(spark: SparkSession, dir: String,
       hashCol: String, valCol: String, k: Int): (DataFrame, Long) => Unit =
-    (batch, batchId) => {
+    Hookup(spark) { (batch, batchId) =>
       val agg = udaf(graft.functions.KmvSampleAggregator(k))
       val batchPairs = batch
         .agg(agg(col(hashCol), col(valCol)).as("sk"))
@@ -176,7 +176,7 @@ object SketchState {
   def foreachBatchCalibration(spark: SparkSession, dir: String,
       confPpmCol: String, labelCol: String,
       buckets: Int): (DataFrame, Long) => Unit =
-    (batch, batchId) => {
+    Hookup(spark) { (batch, batchId) =>
       val b = graft.operators.Analytics.calibrationBandAggregate(
         batch, confPpmCol, labelCol, buckets)
       val prev = readCalibrationState(spark, dir, beforeBatch = batchId)
@@ -221,7 +221,7 @@ object SketchState {
   def foreachBatchImportance(spark: SparkSession, dir: String,
       modelDir: String, idCol: String, textCol: String, nBuckets: Int,
       thresholdPpm: Long): (DataFrame, Long) => Unit =
-    (batch, batchId) => {
+    Hookup(spark) { (batch, batchId) =>
       val lam = graft.operators.Importance.storedLambda(spark, modelDir)
       val bands = importanceBands(batch, lam, idCol, textCol, nBuckets,
         thresholdPpm)
@@ -269,7 +269,7 @@ object SketchState {
       sideCol: String, valCol: String,
       bucketWidth: Double): (DataFrame, Long) => Unit = {
     require(bucketWidth > 0, s"bucketWidth must be positive")
-    (batch, batchId) => {
+    Hookup(spark) { (batch, batchId) =>
       val b = batch
         .filter(col(valCol).isNotNull && col(sideCol).isNotNull)
         .select(col(sideCol).cast("string").as("side"),
@@ -304,7 +304,7 @@ object SketchState {
     * rating — the same stance as every sketch fold here. */
   def foreachBatchDuels(spark: SparkSession, dir: String,
       winCol: String, loseCol: String): (DataFrame, Long) => Unit =
-    (batch, batchId) => {
+    Hookup(spark) { (batch, batchId) =>
       val b = batch
         .filter(col(winCol).isNotNull && col(loseCol).isNotNull)
         .groupBy(col(winCol).cast("string").as("i"),

@@ -56,4 +56,16 @@ object Bridge {
       : org.apache.spark.sql.DataFrame =
     org.apache.spark.sql.classic.Dataset.ofRows(
       spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession], plan)
+
+  /** `df`'s analyzed plan as a frame of `owner`, so every query it runs
+    * executes through `owner`'s session state and carries `owner`'s
+    * artifact UUID. `df` itself when it already belongs to `owner`. A
+    * foreachBatch epoch is a `LogicalRDD` over the epoch's RDD, so the
+    * re-rooted frame reads the same rows without planning the stream's
+    * query again. */
+  def reroot(owner: org.apache.spark.sql.SparkSession,
+      df: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame =
+    if (df.sparkSession eq owner) df
+    else ofRows(owner, df.asInstanceOf[org.apache.spark.sql.classic.Dataset[_]]
+      .queryExecution.analyzed)
 }

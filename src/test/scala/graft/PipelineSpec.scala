@@ -93,6 +93,31 @@ class PipelineSpec extends AnyFunSuite {
     assert(math.abs(Progress.etaSeconds(30.0, 3L, 4L) - 10.0) < 1e-9)
   }
 
+  test("Progress.Listener keeps each batch's duration by phase") {
+    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
+    import org.apache.spark.sql.graftbridge.ListenerBus
+    import scala.jdk.CollectionConverters._
+    implicit val sq = spark.sqlContext
+    import spark.implicits._
+    val listener = new Progress.Listener
+    spark.streams.addListener(listener)
+    val mem = MemoryStream[Int]
+    val q = mem.toDF().writeStream.format("noop").start()
+    try {
+      mem.addData(1, 2, 3)
+      q.processAllAvailable()
+    } finally {
+      q.stop()
+      ListenerBus.drain(spark.sparkContext)
+      spark.streams.removeListener(listener)
+    }
+    val fed = listener.batches.asScala.filter(_.numInputRows == 3L)
+    assert(fed.size === 1, listener.batches.asScala.mkString("\n"))
+    val phases = fed.head.durationMs
+    assert(phases.get("addBatch").exists(_ >= 0L), phases)
+    assert(phases.keySet.contains("triggerExecution"), phases)
+  }
+
   test("lost-retry job: recovers and marks availability (S7, cmds/archive.py:355-366)") {
     import spark.implicits._
     implicit val s = spark

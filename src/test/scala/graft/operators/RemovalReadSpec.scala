@@ -9,10 +9,11 @@ import org.apache.spark.sql.util.QueryExecutionListener
 import org.scalatest.funsuite.AnyFunSuite
 import graft.TestSpark
 
-/** A removal from a count artifact reads its stored generation once: the
-  * subset guard's count rides the checkpoint of the subtracted table, and
-  * the write reads that checkpoint instead of joining the stored table a
-  * second time. */
+/** A merge into or a removal from a count artifact reads its stored
+  * generation once. A removal's subset guard rides the checkpoint of the
+  * subtracted table; a merge is one full outer join, checkpointed. Either
+  * way the write (and its range sample) reads the checkpoint instead of
+  * the stored table again. */
 class RemovalReadSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
   lazy val spark = TestSpark.spark
   import spark.implicits._
@@ -47,12 +48,12 @@ class RemovalReadSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
     rows.get
   }
 
-  /** `remove` scans the stored table at `table` exactly once. */
-  private def readsOnce(table: String)(remove: => Unit): Unit = {
+  /** `mutate` scans the stored table at `table` exactly once. */
+  private def readsOnce(table: String)(mutate: => Unit): Unit = {
     val stored = spark.read.parquet(table).count()
     assert(stored > 0)
-    assert(rowsScanned(table)(remove) === stored,
-      s"rows read from $table during the removal (stored: $stored)")
+    assert(rowsScanned(table)(mutate) === stored,
+      s"rows read from $table during the mutation (stored: $stored)")
   }
 
   test("a removal reads the stored generation once: line index, " +
@@ -85,5 +86,49 @@ class RemovalReadSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
         StatsIndex.removeBatch(spark, Seq("c").toDF("k"), "k", stats, 4, 16)
       }
     }
+  }
+
+  test("a merge reads the stored generation once: line index, bigram " +
+      "and trigram LM, stats index") {
+    val docs = Seq((1L, "alpha beta gamma delta\nshared line"),
+      (2L, "beta gamma delta epsilon\nshared line")).toDF("doc_id", "text")
+    val batch = Seq((3L, "gamma delta epsilon zeta\nshared line"))
+      .toDF("doc_id", "text")
+
+    val line = tmp("merge_once_line")
+    LineIndex.build(docs, "doc_id", "text", line)
+    withClue("LineIndex.mergeBatch: ") {
+      readsOnce(LineIndex.tablePath(line)) {
+        LineIndex.mergeBatch(spark, batch, "doc_id", "text", line)
+      }
+    }
+    assert(LineIndex.storedFreq(spark, line)
+      .filter($"_nd" === 3L).count() === 1, "the shared line's count")
+
+    val lm = tmp("merge_once_lm")
+    LmIndex.build(docs, "doc_id", "text", lm)
+    withClue("LmIndex.mergeBatch: ") {
+      readsOnce(LmIndex.modelPath(lm)) {
+        LmIndex.mergeBatch(spark, batch, "doc_id", "text", lm)
+      }
+    }
+
+    val lm3 = tmp("merge_once_lm3")
+    LmIndex.buildTrigram(docs, "doc_id", "text", lm3)
+    withClue("LmIndex.mergeTrigramBatch: ") {
+      readsOnce(LmIndex.trigramPath(lm3)) {
+        LmIndex.mergeTrigramBatch(spark, batch, "doc_id", "text", lm3)
+      }
+    }
+
+    val stats = tmp("merge_once_stats")
+    StatsIndex.build(Seq("a", "a", "b").toDF("k"), "k", stats, 4, 16)
+    withClue("StatsIndex.mergeBatch: ") {
+      readsOnce(StatsIndex.tablePath(stats)) {
+        StatsIndex.mergeBatch(spark, Seq("c", "a").toDF("k"), "k", stats,
+          4, 16)
+      }
+    }
+    assert(StatsIndex.storedRowCount(spark, stats).head().getLong(0) === 5L)
   }
 }
